@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /**
  * Benchmark main: headline queries (SURVEY.md §6) against
@@ -74,37 +73,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // optional comma-separated subset for targeted profiling runs
     val selected = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(headline)
-    val builder = SparkSession.builder()
-      // analysis-time rules (SQL UPDATE/MERGE routing, TVFs, native
-      // functions) can only register at session construction
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // graft's bounded-heap top-k agg (TopKExprs) keeps one k-sized
-      // buffer per query id; the 128-group default would push it into
-      // sort-based fallback (re-sorting the candidate frame — the
-      // exact spill this agg exists to remove). Catalog sketch aggs
-      // (HLL/CMS/DDSketch) only ever group by low-cardinality keys,
-      // so the raised cap never bites them.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // A/B tuning hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overlays
-    // session confs for conf experiments (unset — the driver's case —
-    // is a no-op; committed artifacts never rely on it)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.local("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     def runOnce(name: String): Double = {

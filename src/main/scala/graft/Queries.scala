@@ -33,10 +33,8 @@ object Queries {
     * valid global order; it only shapes candidate counts (results are
     * rescored exactly), so a set computed on the full corpus serves
     * filtered subsets of it too. */
-  private val freqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.ShingleStats]()
   private def corpusStats(s: SparkSession, dir: String): Option[Dedup.ShingleStats] =
-    Some(freqMemo.computeIfAbsent(dir, _ =>
+    Some(fixture("freq", dir)(
       Dedup.shingleStats(t(s, dir, "documents"), col("text"), col("doc_id"))))
 
   /** Exact money: double → decimal(12,2). */
@@ -74,6 +72,19 @@ object Queries {
     * files, and parallel JVMs must not touch each other's at all. */
   private def scratch(tag: String, dir: String): String =
     s"$scratchRoot/${tag}_${Integer.toHexString(dir.hashCode)}"
+
+  /** Build-once catalog fixture (a snapshot table, a persisted index or
+    * codebook, corpus statistics), memoized per (fixture name, input
+    * dir) for the JVM's lifetime. The map only hands out the cell, so a
+    * fixture's build may itself use other fixtures; concurrent callers
+    * of one fixture wait on its single build, and a build that throws
+    * is retried on the next call. */
+  private final class Fixture(build: => Any) { lazy val value: Any = build }
+  private val fixtures =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Fixture]()
+  private def fixture[T](name: String, dir: String)(build: => T): T =
+    fixtures.computeIfAbsent((name, dir), _ => new Fixture(build))
+      .value.asInstanceOf[T]
 
   /** JSON-lines source round-trip (reference: src/reader.py:25-27). */
   def srcJson(s: SparkSession, dir: String): DataFrame = {
@@ -858,16 +869,15 @@ object Queries {
     * path is measured in RECALL.md. Null embeddings don't enter a
     * store (filtered at quantization — a store row without a vector
     * means nothing). */
-  private val int8StoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def simIvfInt8(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val store = int8StoreMemo.computeIfAbsent(dir, _ => {
+    val store = fixture("int8Store", dir) {
       val p = scratch("int8_store", dir)
       Similarity.quantizeInt8(e.filter(col("embedding").isNotNull),
           "vec_id", "embedding")
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     val recon = s.read.parquet(store).select(col("vec_id"),
       transform(col("q").cast("array<double>"),
         x => x * col("q_scale")).as("embedding"))
@@ -890,9 +900,8 @@ object Queries {
     * exactly and (b) partition-pruned serving never changes
     * semantics. SimilaritySpec adds the time-travel and
     * pruning-bound assertions a SQL oracle cannot express. */
-  private val vecIndexMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def vecIndexPath(s: SparkSession, dir: String): String =
-    vecIndexMemo.computeIfAbsent(dir, _ => {
+    fixture("vecIndex", dir) {
       val p = scratch("vec_index", dir) // per-JVM root → always fresh
       val e = t(s, dir, "embeddings")
       val cb = ivfAnchorCodebook(e)
@@ -910,7 +919,7 @@ object Queries {
         e.filter(col("vec_id") % 19 === 4).select(col("vec_id")),
         attrs = Seq(shard))
       p
-    })
+    }
 
   def simIndexSnapshot(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
@@ -1107,9 +1116,9 @@ object Queries {
 
   /** PINNED 50-merge BPE table for the `bpe_tokens` catalog query —
     * the `sim_ivf` pinned-codebook pattern applied to tokenization:
-    * train once ([[graft.dev.BpeTrainDump]] reproduces this literal
-    * from the sf0.01 documents table), then serve the table as a plan
-    * literal so both engines tokenize identically. The DuckDB oracle
+    * train once (BpeSpec checks that the trainer reproduces this
+    * literal from the sf0.01 documents table), then serve the table
+    * as a plan literal so both engines tokenize identically. The DuckDB oracle
     * replays these merges in rank order over sentinel-wrapped symbol
     * strings — valid because rank-priority encoding
     * ([[graft.functions.BpeExprs.BpeEncodeExpr]]) equals sequential
@@ -1806,9 +1815,8 @@ object Queries {
     * 100 TB production shape (train once, persist, serve forever).
     * Result-identical to [[simPq]] (same pinned codebooks), so it
     * shares the same DuckDB oracle. */
-  private val pqPathMemo = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   def simPqServed(s: SparkSession, dir: String): DataFrame = {
-    val (cellsPath, pqPath) = pqPathMemo.computeIfAbsent(dir, _ => {
+    val (cellsPath, pqPath) = fixture("pqPath", dir) {
       val e = t(s, dir, "embeddings")
       val base = scratch("pq_codebook", dir)
       new java.io.File(base).mkdirs()
@@ -1816,7 +1824,7 @@ object Queries {
       Similarity.saveCentroids(cp, ivfAnchorCodebook(e))
       Similarity.savePqCodebook(pp, pqAnchorCodebook(e))
       (cp, pp)
-    })
+    }
     Similarity.ivfPqTopK(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), k = 10, nprobe = 4,
       cells = Similarity.loadCentroids(cellsPath),
@@ -1929,9 +1937,8 @@ object Queries {
     * corpus_merge change set, v3 = a second revision wave (every
     * doc_id%11==5 survivor revised ' [v3]'/+7 chars, every %23==7
     * deleted) — so the log holds three distinct states. */
-  private val snapshotMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def snapshotTablePath(s: SparkSession, dir: String): String =
-    snapshotMemo.computeIfAbsent(dir, _ => {
+    fixture("snapshot", dir) {
       val p = scratch("snapshot_tbl", dir) // per-JVM root → always fresh
       val docs = t(s, dir, "documents")
       Snapshot.create(s, p, docs, key = "doc_id", partitionCol = "source",
@@ -1966,10 +1973,7 @@ object Queries {
       Snapshot.deleteWhereMor(s, p, Seq(("doc_id", 400, 449)))
       Snapshot.deleteWhereMor(s, p, Seq(("doc_id", 430, 480)))
       p
-    })
-
-  private val snapshotEvoMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** The NON-ADDITIVE evolution commit sequence, replayed onto `p`:
     * create → rename text→body (v2, metadata-only) → drop lang (v3) →
@@ -2002,8 +2006,8 @@ object Queries {
   }
 
   private def snapshotEvoPath(s: SparkSession, dir: String): String =
-    snapshotEvoMemo.computeIfAbsent(dir,
-      _ => buildEvolutionTable(s, dir, scratch("snapshot_evo", dir)))
+    fixture("snapshotEvo", dir)(
+      buildEvolutionTable(s, dir, scratch("snapshot_evo", dir)))
 
   /** NON-ADDITIVE SCHEMA EVOLUTION end state: the tip after rename /
     * drop / widen (all metadata-only — zero data files rewritten) and
@@ -2018,9 +2022,6 @@ object Queries {
     Snapshot.readLatest(s, snapshotEvoPath(s, dir))
       .select("doc_id", "body", "source", "n_chars", "n_small", "lang")
 
-  private val snapshotEvoCompactMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** EVOLUTION COMPACTION PURGE as a physical-identity replay (the
     * `snapshot_relayout` pattern applied to the one evolution path a
     * relational oracle can reach): the same six evolution commits,
@@ -2032,17 +2033,14 @@ object Queries {
     * the full-table physical rewrite changed bytes, never rows —
     * dropped-column purge included. */
   def snapshotEvolutionCompact(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotEvoCompactMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotEvoCompact", dir) {
       val path = buildEvolutionTable(s, dir, scratch("snapshot_evo_compact", dir))
       Snapshot.compact(s, path, maxFilesPerPartition = 0) // v7: full purge rewrite
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "body", "source", "n_chars", "n_small", "lang")
   }
-
-  private val snapshotRelayoutMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** RELAYOUT is a pure PHYSICAL transformation: create (range layout)
     * → merge → MoR delete → `relayout` to z-order — the full rewrite
@@ -2052,7 +2050,7 @@ object Queries {
     * applied to the table format: hash equality proves layout moves
     * bytes, never rows. */
   def snapshotRelayout(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotRelayoutMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotRelayout", dir) {
       val path = scratch("snapshot_relayout", dir)
       val docs = t(s, dir, "documents")
       Snapshot.create(s, path, docs, key = "doc_id", partitionCol = "source",
@@ -2064,7 +2062,7 @@ object Queries {
       Snapshot.deleteWhereMor(s, path, Seq(("doc_id", 200, 260)))
       Snapshot.relayout(s, path, 8, "zorder", Seq("doc_id", "n_chars"))
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
@@ -2212,9 +2210,6 @@ object Queries {
       "FROM graft_dsv2_docs_agg_r WHERE source BETWEEN 'src2' AND 'src5'")
   }
 
-  private val snapshotDsv2WriteMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** DATASOURCE-V2 WRITE through the session catalog: `CREATE TABLE …
     * USING graft LOCATION …` then one plain-SQL `INSERT INTO …
     * SELECT` — the V1Write bridge lands the frame driver-side and
@@ -2225,7 +2220,7 @@ object Queries {
     * proves SQL INSERT ≡ the Scala merge commit, key semantics
     * included. */
   def snapshotDsv2Write(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2WriteMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2Write", dir) {
       val path = scratch("snapshot_dsv2w", dir)
       val docs = t(s, dir, "documents")
       Snapshot.create(s, path, docs, key = "doc_id", partitionCol = "source")
@@ -2237,13 +2232,10 @@ object Queries {
         .createOrReplaceTempView("graft_dsv2_ins_batch")
       s.sql("INSERT INTO graft_dsv2_docs_w SELECT * FROM graft_dsv2_ins_batch")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotDsv2DeleteMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** DATASOURCE-V2 DELETE through the session catalog: plain-SQL
     * `DELETE FROM … WHERE` rides `SupportsDelete` into the
@@ -2253,7 +2245,7 @@ object Queries {
     * delete; the oracle replays both relationally, so hash equality
     * proves SQL DELETE ≡ the transactional Scala DML. */
   def snapshotDsv2Delete(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2DeleteMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2Delete", dir) {
       val path = scratch("snapshot_dsv2d", dir)
       Snapshot.create(s, path, t(s, dir, "documents"), key = "doc_id",
         partitionCol = "source", statsCols = Seq("doc_id"), fileRanges = 8)
@@ -2262,13 +2254,10 @@ object Queries {
       s.sql("DELETE FROM graft_dsv2_docs_d WHERE doc_id >= 150 AND doc_id <= 199")
       s.sql("DELETE FROM graft_dsv2_docs_d WHERE doc_id = 301")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotDsv2DmlInMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** SQL DELETE/UPDATE with IN-LIST conditions through the connector:
     * `WHERE key IN (…)` — the erasure-batch shape — routes onto the
@@ -2280,7 +2269,7 @@ object Queries {
     * relationally, so hash equality proves IN-list DML ≡ the
     * transactional Scala DML. */
   def snapshotDsv2DmlIn(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2DmlInMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2DmlIn", dir) {
       val path = scratch("snapshot_dsv2in", dir)
       Snapshot.create(s, path, t(s, dir, "documents"), key = "doc_id",
         partitionCol = "source", statsCols = Seq("doc_id"), fileRanges = 8,
@@ -2295,13 +2284,10 @@ object Queries {
       s.sql("UPDATE graft_dsv2_docs_in SET lang = 'zz' " +
         "WHERE doc_id IN (200, 201, 202, 203) AND doc_id BETWEEN 202 AND 900")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotDsv2DmlOpenMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** SQL DELETE/UPDATE with HALF-OPEN and STRICT bounds — the
     * retention-sweep shape (`DELETE WHERE ts < horizon`): one-sided
@@ -2311,7 +2297,7 @@ object Queries {
     * predicate keeps the result exact). The oracle replays the sweep
     * and the strict/inclusive updates relationally. */
   def snapshotDsv2DmlOpen(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2DmlOpenMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2DmlOpen", dir) {
       val path = scratch("snapshot_dsv2op", dir)
       Snapshot.create(s, path, t(s, dir, "documents"), key = "doc_id",
         partitionCol = "source", statsCols = Seq("doc_id"), fileRanges = 8)
@@ -2323,13 +2309,11 @@ object Queries {
       s.sql("UPDATE graft_dsv2_docs_op SET lang = 'yy' " +
         "WHERE doc_id > 380 AND doc_id <= 390")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
 
-  private val snapshotCatalogMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   // one catalog tree per JVM — catalogs read their conf once at first
   // name reference, so the root must be session-stable
   private lazy val catalogRoot: String =
@@ -2346,7 +2330,7 @@ object Queries {
     * the name surface is the same transactional engine the path
     * surface is. */
   def snapshotCatalog(s: SparkSession, dir: String): DataFrame = {
-    val tbl = snapshotCatalogMemo.computeIfAbsent(dir, _ => {
+    val tbl = fixture("snapshotCatalog", dir) {
       s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft_cat.root", catalogRoot)
       val ns = "c" + math.abs(dir.hashCode).toString
@@ -2358,7 +2342,7 @@ object Queries {
       s.sql(s"UPDATE graft_cat.$ns.docs SET n_chars = n_chars + 11 " +
         "WHERE doc_id BETWEEN 200 AND 249")
       s"graft_cat.$ns.docs"
-    })
+    }
     s.table(tbl).select("doc_id", "text", "lang", "source", "n_chars")
   }
 
@@ -2375,9 +2359,6 @@ object Queries {
       s"FROM graft_cat.$ns.docs VERSION AS OF 1")
   }
 
-  private val snapshotSqlTrackingMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** SQL-DECLARED TRACKING: a table created ENTIRELY through SQL —
     * CTAS with TBLPROPERTIES declaring per-file stats on a non-key
     * column, a BLOOM filter on `n_chars` (high-ish cardinality,
@@ -2390,7 +2371,7 @@ object Queries {
     * proves bloom pruning is IO-only; the SQL-created table loses
     * nothing the Scala create has. */
   def snapshotSqlTracking(s: SparkSession, dir: String): DataFrame = {
-    val tbl = snapshotSqlTrackingMemo.computeIfAbsent(dir, _ => {
+    val tbl = fixture("snapshotSqlTracking", dir) {
       s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft_cat.root", catalogRoot)
       val ns = "t" + math.abs(dir.hashCode).toString
@@ -2401,13 +2382,10 @@ object Queries {
         "'statsCols'='lang','bloom.n_chars'='65536,6','hll.lang'='12') " +
         "AS SELECT * FROM graft_trk_docs_src")
       s"graft_cat.$ns.docs"
-    })
+    }
     s.sql(s"SELECT doc_id, text, lang, source, n_chars FROM $tbl " +
       "WHERE n_chars = 500")
   }
-
-  private val snapshotSubstringMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val SubstringNeedles =
     Seq("vector join vector", "merge slow join", "the the")
@@ -2423,21 +2401,18 @@ object Queries {
     * absence without opening a single file). The oracle is the bare
     * LIKE union, so hash equality proves gram pruning is IO-only. */
   def snapshotSubstring(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotSubstringMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotSubstring", dir) {
       val path = scratch("snapshot_substr", dir)
       Snapshot.create(s, path, t(s, dir, "documents"), key = "doc_id",
         partitionCol = "source", fileRanges = 4,
         bloomCols = Seq(Snapshot.TriPrefix + "text"))
       path
-    })
+    }
     SubstringNeedles.map { nd =>
       Snapshot.readWhereContains(s, p, "text", nd)
         .select(lit(nd).as("needle"), col("doc_id"), col("n_chars"))
     }.reduce(_ unionByName _)
   }
-
-  private val snapshotPrefixMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** PREFIX-RANGE pruning (r16, the stats sibling of the trigram
     * substring index): a documents snapshot keyed by (source, doc_id)
@@ -2448,19 +2423,16 @@ object Queries {
     * rule would mis-order digit prefixes). The oracle is the bare
     * LIKE, so hash equality proves prefix pruning is IO-only. */
   def snapshotPrefix(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotPrefixMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotPrefix", dir) {
       val path = scratch("snapshot_prefix", dir)
       Snapshot.createMulti(s, path, t(s, dir, "documents"),
         keys = Seq("source", "doc_id"), partitionCols = Seq("lang"),
         fileRanges = 4)
       path
-    })
+    }
     Snapshot.readWhereStartsWith(s, p, "source", "src1")
       .select("doc_id", "source", "n_chars")
   }
-
-  private val snapshotDsv2UpdateMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** SQL `UPDATE` through the connector: the analysis-time routing
     * ([[sources.GraftDmlRule]]) turns the statement into the pruned
@@ -2470,7 +2442,7 @@ object Queries {
     * oracle replays both relationally, so hash equality proves SQL
     * UPDATE ≡ the transactional Scala DML. */
   def snapshotDsv2Update(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2UpdateMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2Update", dir) {
       val path = scratch("snapshot_dsv2u", dir)
       Snapshot.create(s, path, t(s, dir, "documents"), key = "doc_id",
         partitionCol = "source", statsCols = Seq("doc_id"), fileRanges = 8)
@@ -2481,13 +2453,10 @@ object Queries {
       s.sql("UPDATE graft_dsv2_docs_u SET text = concat(text, ' [u]') " +
         "WHERE doc_id = 42")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotDsv2MergeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** SQL `MERGE INTO` through the connector: the canonical keyed
     * upsert (`ON t.key = s.key WHEN MATCHED THEN UPDATE SET * WHEN
@@ -2498,7 +2467,7 @@ object Queries {
     * relationally — hash equality proves SQL MERGE ≡ the Scala merge
     * commit, matched/not-matched routing included. */
   def snapshotDsv2Merge(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2MergeMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2Merge", dir) {
       val path = scratch("snapshot_dsv2m", dir)
       val docs = t(s, dir, "documents")
       Snapshot.create(s, path, docs, key = "doc_id", partitionCol = "source")
@@ -2515,13 +2484,10 @@ object Queries {
         "ON t.doc_id = s.doc_id " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotDsv2MergeCondMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** SQL `MERGE INTO` with the FULL action surface: conditioned
     * actions cascading in SQL first-match-wins order (a matched
@@ -2536,7 +2502,7 @@ object Queries {
     * every branch relationally, so hash equality proves the cascade,
     * the join-side completion, and the by-source routing. */
   def snapshotDsv2MergeCond(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2MergeCondMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2MergeCond", dir) {
       val path = scratch("snapshot_dsv2mc", dir)
       val docs = t(s, dir, "documents")
       Snapshot.create(s, path, docs, key = "doc_id", partitionCol = "source")
@@ -2559,13 +2525,10 @@ object Queries {
         WHEN NOT MATCHED BY SOURCE AND t.doc_id BETWEEN 100 AND 140 THEN
           DELETE""")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotDsv2MergeOnMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** SQL `MERGE INTO` with a COMPOUND ON condition — key equality
     * AND-ed with a cross-side conjunct (`t.source = s.src2`, the Delta
@@ -2578,7 +2541,7 @@ object Queries {
     * membership under the full ON relationally, so hash equality
     * proves compound-ON semantics end to end. */
   def snapshotDsv2MergeOn(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2MergeOnMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2MergeOn", dir) {
       val path = scratch("snapshot_dsv2mo", dir)
       val docs = t(s, dir, "documents")
       Snapshot.create(s, path, docs, key = "doc_id", partitionCol = "source")
@@ -2599,13 +2562,10 @@ object Queries {
         WHEN NOT MATCHED THEN
           INSERT (doc_id, source, n_chars) VALUES (s.doc_id, s.src2, s.nc)""")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotMultikeyMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** COMPOSITE KEY + MULTI-COLUMN PARTITIONING end to end: a table
     * keyed (lang, doc_id) and partitioned (source, lang), upserted by
@@ -2619,7 +2579,7 @@ object Queries {
     * composite anchor, the composite dup-key gate and the two-column
     * partition routing in one artifact. */
   def snapshotMultikey(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotMultikeyMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotMultikey", dir) {
       val path = scratch("snapshot_mk", dir)
       val docs = t(s, dir, "documents")
       // fileRanges bounds files-per-partition (range layout on
@@ -2643,13 +2603,10 @@ object Queries {
         "ON t.lang = s.lang AND t.doc_id = s.doc_id " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotDaysPruneMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** HIDDEN PARTITIONING, the `days(ts)` transform: events partition
     * by the UTC day DERIVED from their timestamp — no materialized
@@ -2659,7 +2616,7 @@ object Queries {
     * scan plans. The oracle is the bare relational filter, so hash
     * equality proves pruning changed IO, never semantics. */
   def snapshotDaysPrune(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDaysPruneMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDaysPrune", dir) {
       val path = scratch("snapshot_days", dir)
       val ev = t(s, dir, "events")
       Snapshot.createMulti(s, path, ev,
@@ -2668,15 +2625,12 @@ object Queries {
       s.sql("DROP TABLE IF EXISTS graft_days_events")
       s.sql(s"CREATE TABLE graft_days_events USING graft LOCATION '$path'")
       path
-    })
+    }
     s.sql("""SELECT event_id, ts, user_id, event_type, value
       FROM graft_days_events
       WHERE ts >= TIMESTAMP'2024-01-10 00:00:00'
         AND ts < TIMESTAMP'2024-01-13 00:00:00'""")
   }
-
-  private val snapshotBucketPruneMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** HIDDEN PARTITIONING, the `bucket(n, col)` transform: documents
     * partition by a stable 8-way hash bucket of `doc_id`, and an
@@ -2686,18 +2640,15 @@ object Queries {
     * oracle is the bare IN filter; hash equality proves the bucket
     * mapping is exactly the write-side hash. */
   def snapshotBucketPrune(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotBucketPruneMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotBucketPrune", dir) {
       val path = scratch("snapshot_bkt", dir)
       Snapshot.createMulti(s, path, t(s, dir, "documents"),
         keys = Seq("doc_id"), partitionCols = Seq("bucket(8,doc_id)"))
       path
-    })
+    }
     Snapshot.readWhereIn(s, p, "doc_id", Seq(7L, 42L, 103L, 999999L))
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotHoursPruneMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** HIDDEN PARTITIONING, the `hours(ts)` transform — the hour-grain
     * event table `days(ts)` can't serve: partitions derive as the UTC
@@ -2707,7 +2658,7 @@ object Queries {
     * hour). The oracle is the bare range filter, so hash equality
     * proves the hour mapping is exactly the write-side derivation. */
   def snapshotHoursPrune(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotHoursPruneMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotHoursPrune", dir) {
       val path = scratch("snapshot_hours", dir)
       // the first WEEK of events: hour-grain partitioning is for hot
       // recent windows — a month of hours (720 dirs) is the
@@ -2721,15 +2672,12 @@ object Queries {
       s.sql("DROP TABLE IF EXISTS graft_hours_events")
       s.sql(s"CREATE TABLE graft_hours_events USING graft LOCATION '$path'")
       path
-    })
+    }
     s.sql("""SELECT event_id, ts, user_id, event_type, value
       FROM graft_hours_events
       WHERE ts >= TIMESTAMP'2024-01-03 06:00:00'
         AND ts < TIMESTAMP'2024-01-03 18:00:00'""")
   }
-
-  private val snapshotRepartitionMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** PARTITION-SPEC EVOLUTION: a table created partitioned by
     * `source` migrates to `(lang)` as ONE rewrite commit
@@ -2738,19 +2686,16 @@ object Queries {
     * the NEW spec's partition values. The oracle is the bare filter
     * over the base data — the respec moved bytes, never rows. */
   def snapshotRepartition(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotRepartitionMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotRepartition", dir) {
       val path = scratch("snapshot_resp", dir)
       Snapshot.create(s, path, t(s, dir, "documents"),
         key = "doc_id", partitionCol = "source")
       Snapshot.repartitionTable(s, path, Seq("lang"))
       path
-    })
+    }
     Snapshot.readWhereEq(s, p, "lang", "fr")
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotDsv2OverwriteMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** SQL `INSERT OVERWRITE` through the connector: ONE transactional
     * REPLACE commit ([[graft.operators.Snapshot.overwrite]]) — the
@@ -2761,7 +2706,7 @@ object Queries {
     * the SELECT the overwrite landed, so hash equality proves replace
     * semantics end-to-end. */
   def snapshotDsv2Overwrite(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2OverwriteMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2Overwrite", dir) {
       val path = scratch("snapshot_dsv2ow", dir)
       val docs = t(s, dir, "documents")
       Snapshot.create(s, path, docs, key = "doc_id", partitionCol = "source")
@@ -2772,13 +2717,10 @@ object Queries {
         "SELECT doc_id, concat(text, ' [ow]') AS text, lang, source, " +
         "n_chars + 10 AS n_chars FROM graft_dsv2_ow_src WHERE doc_id % 3 = 0")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
-
-  private val snapshotDsv2OverwritePartMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** PARTITION-SCOPED `INSERT OVERWRITE … PARTITION (source = 'src3')`
     * — the daily-refresh verb: exactly one partition's rows replace
@@ -2789,7 +2731,7 @@ object Queries {
     * refresh relationally: src3 rows are the transformed re-delivery,
     * everything else untouched. */
   def snapshotDsv2OverwritePart(s: SparkSession, dir: String): DataFrame = {
-    val p = snapshotDsv2OverwritePartMemo.computeIfAbsent(dir, _ => {
+    val p = fixture("snapshotDsv2OverwritePart", dir) {
       val path = scratch("snapshot_dsv2owp", dir)
       val docs = t(s, dir, "documents")
       Snapshot.create(s, path, docs, key = "doc_id", partitionCol = "source")
@@ -2801,7 +2743,7 @@ object Queries {
         "n_chars * 2 AS n_chars FROM graft_dsv2_owp_src " +
         "WHERE source = 'src3' AND doc_id % 2 = 0")
       path
-    })
+    }
     Snapshot.readLatest(s, p)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }

@@ -128,26 +128,7 @@ object RunPipeline {
     val args = argsIn.filterNot(_.startsWith("--"))
     require(args.nonEmpty,
       "usage: RunPipeline <metadata.json> [dataflowName] [inputPathOverride] [--verbose]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // analysis-time rules (SQL UPDATE/MERGE routing, TVFs, native
-      // functions) can only register at session construction
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // graft's bounded-heap top-k agg (TopKExprs) keeps one k-sized
-      // buffer per query id; the 128-group default would push it into
-      // sort-based fallback (re-sorting the candidate frame — the
-      // exact spill this agg exists to remove). Catalog sketch aggs
-      // (HLL/CMS/DDSketch) only ever group by low-cardinality keys,
-      // so the raised cap never bites them.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args(0), args.lift(1), args.lift(2), verbose)
     finally spark.stop()

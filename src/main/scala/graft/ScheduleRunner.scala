@@ -187,21 +187,7 @@ object ScheduleRunner {
     val args = argsIn.filterNot(_.startsWith("--"))
     require(args.length >= 2,
       "usage: ScheduleRunner <metadata.json> <state-file> [dataflowName] [--now=ISO] [--dry-run]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-schedule")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // graft's bounded-heap top-k agg (TopKExprs) keeps one k-sized
-      // buffer per query id; the 128-group default would push it into
-      // sort-based fallback (re-sorting the candidate frame — the
-      // exact spill this agg exists to remove). Catalog sketch aggs
-      // (HLL/CMS/DDSketch) only ever group by low-cardinality keys,
-      // so the raised cap never bites them.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-schedule")
     spark.sparkContext.setLogLevel("WARN")
     try runDue(spark, args(0), args(1), args.lift(2), now, dryRun)
     finally spark.stop()

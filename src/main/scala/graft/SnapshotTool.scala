@@ -211,14 +211,7 @@ object SnapshotTool {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-snapshot-tool")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-snapshot-tool")
     spark.sparkContext.setLogLevel("WARN")
     try {
       val (lines, code) = run(spark, args.toSeq)

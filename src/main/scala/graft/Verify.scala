@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // analysis-time rules (SQL UPDATE/MERGE routing, TVFs, native
-      // functions) can only register at session construction
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // graft's bounded-heap top-k agg (TopKExprs) keeps one k-sized
-      // buffer per query id; the 128-group default would push it into
-      // sort-based fallback (re-sorting the candidate frame — the
-      // exact spill this agg exists to remove). Catalog sketch aggs
-      // (HLL/CMS/DDSketch) only ever group by low-cardinality keys,
-      // so the raised cap never bites them.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-loop subset: SPARK_GRAFT_VERIFY_QUERIES=a,b reruns just those

@@ -323,12 +323,8 @@ object ConcurrencyBench {
     val commitsPerWriter =
       sys.env.getOrElse("SPARK_GRAFT_CONCBENCH_COMMITS", "6").toInt
     val rttMs = sys.env.getOrElse("SPARK_GRAFT_CONCBENCH_RTT_MS", "2").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-concurrency-bench",
+      extra = Map("spark.sql.shuffle.partitions" -> "8"))
     spark.sparkContext.setLogLevel("ERROR")
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     for (mode <- Seq("inline", "seg"); writers <- Seq(1, 4, 16)) {

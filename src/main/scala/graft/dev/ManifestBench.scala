@@ -223,13 +223,7 @@ object ManifestBench {
       lines += line
     }
     sys.props -= "graft.manifest.segmentThreshold"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-manifest-bench")
     spark.sparkContext.setLogLevel("WARN")
     val anchor = realAnchor(spark)
     println(anchor)

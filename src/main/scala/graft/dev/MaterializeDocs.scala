@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -22,14 +22,8 @@ object MaterializeDocs {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = args.headOption.getOrElse("/tmp/graft_sf10_docs")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "100").toInt
-    val spark = SparkSession.builder()
-      .appName("graft-materialize-docs")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-materialize-docs",
+      extra = Map("spark.sql.shuffle.partitions" -> "32"))
     spark.sparkContext.setLogLevel("WARN")
     try {
       def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

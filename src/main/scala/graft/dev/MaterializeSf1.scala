@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 
 /**
  * Materialize the sf~1 probe dataset once (VERDICT r5 #7: a real sf1
@@ -20,14 +19,8 @@ object MaterializeSf1 {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
-    val spark = SparkSession.builder()
-      .appName("graft-materialize-sf1")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-materialize-sf1",
+      extra = Map("spark.sql.shuffle.partitions" -> "32"))
     spark.sparkContext.setLogLevel("WARN")
     try {
       ScaleBench.materialize(spark, src, out, mult)

@@ -1,7 +1,6 @@
 package graft.dev
 
 import graft.operators.Snapshot
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -50,13 +49,7 @@ object MorBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = args.headOption.getOrElse("MORBENCH.md")
     val work = s"${System.getProperty("java.io.tmpdir")}/graft_morbench"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-mor-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.sources.Readers.table(spark, sfDir, "documents")

@@ -98,25 +98,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // analysis-time rules (SQL UPDATE/MERGE routing, TVFs, native
-      // functions) can only register at session construction
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // graft's bounded-heap top-k agg (TopKExprs) keeps one k-sized
-      // buffer per query id; the 128-group default would push it into
-      // sort-based fallback (re-sorting the candidate frame — the
-      // exact spill this agg exists to remove). Catalog sketch aggs
-      // (HLL/CMS/DDSketch) only ever group by low-cardinality keys,
-      // so the raised cap never bites them.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-plan-audit")
     spark.sparkContext.setLogLevel("WARN")
     val names = if (args.nonEmpty) args.toSeq else graft.Bench.headline
     // steady-state audit: one unmeasured warmup run per query first, so

@@ -1,7 +1,7 @@
 package graft.dev
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -28,19 +28,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val k = 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // graft's bounded-heap top-k agg (TopKExprs) keeps one k-sized
-      // buffer per query id; the 128-group default would push it into
-      // sort-based fallback (re-sorting the candidate frame — the
-      // exact spill this agg exists to remove). Catalog sketch aggs
-      // (HLL/CMS/DDSketch) only ever group by low-cardinality keys,
-      // so the raised cap never bites them.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 20).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-recall-probe")
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -46,13 +46,8 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val runSecs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "45").toInt
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.metricsEnabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-stream-bench",
+      extra = Map("spark.sql.streaming.metricsEnabled" -> "true"))
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1414,8 +1414,8 @@ object Dedup {
     * (the same bucket structure both cluster strategies join on),
     * `pairMass` = Σ C(size,2) — what one-wave verification pays — and
     * `starMass` = Σ (2·size−3)⁺ — what the star seed pays. Their ratio
-    * IS the decision variable between the strategies (ProfileCc,
-    * measured: ordinary corpora ratio ≈ 1–2 and one-wave wins wall
+    * IS the decision variable between the strategies (SURVEY.md rows
+    * #184/#185, measured: ordinary corpora ratio ≈ 1–2 and one-wave wins wall
     * time because star's repair wave re-checks junk collisions
     * serially; a 250-clone clique corpus has ratio ≈ 62 and star wins
     * 2.74 GB → 115 MB). Cost: one signature pass + one count
@@ -1524,10 +1524,10 @@ object Dedup {
    *  - `"auto"` (default): prefix, flipping to banded past the same
    *    candidate-volume pre-flight as [[ngramJaccard]].
    *
-   * WHEN TO USE WHICH (measured, ProfileCc): on ordinary corpora the
-   * one-wave [[nearDupClusters]] wins wall time — junk bucket
-   * collisions are cross-label forever, so the repair wave re-checks
-   * them serially (×10 corpus: 10.4 s here vs 3.4 s one-wave, same
+   * WHEN TO USE WHICH (measured, SURVEY.md rows #184/#185): on
+   * ordinary corpora the one-wave [[nearDupClusters]] wins wall time
+   * — junk bucket collisions are cross-label forever, so the repair
+   * wave re-checks them serially (×10 corpus: 10.4 s here vs 3.4 s one-wave, same
    * shuffle order). This operator is for the CLIQUE-HEAVY regime — a
    * boilerplate page cloned 10⁵–10⁶ times makes every banded bucket
    * quadratic in clones, one-wave verification is C(c,2) per family

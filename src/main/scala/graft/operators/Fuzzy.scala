@@ -85,16 +85,7 @@ object Fuzzy {
                           saltBuckets: Int = 1): DataFrame = {
     require(blocks.nonEmpty, "need at least one blocking pass")
     dedupPasses(blocks.map(b =>
-      selfFuzzyPairs(df, id, key, b, maxDist, saltBuckets)), "dist")
-  }
-
-  /** Similarity-mode sibling of [[multiPassFuzzyPairs]]. */
-  def multiPassSimilarityPairs(df: DataFrame, id: Column, key: Column,
-                               blocks: Seq[Column => Column], minSim: Double,
-                               saltBuckets: Int = 1): DataFrame = {
-    require(blocks.nonEmpty, "need at least one blocking pass")
-    dedupPasses(blocks.map(b =>
-      selfSimilarityPairs(df, id, key, b, minSim, saltBuckets)), "sim")
+      selfFuzzyPairs(df, id, key, b, maxDist, saltBuckets)))
   }
 
   /** Cross-pass dedup keyed on the ids ONLY: keys and score are
@@ -103,11 +94,11 @@ object Fuzzy {
     * within-partition repeats before the exchange) instead of a
     * distinct() that hashes and compares the full row including both
     * key strings. */
-  private def dedupPasses(passes: Seq[DataFrame], scoreCol: String): DataFrame =
+  private def dedupPasses(passes: Seq[DataFrame]): DataFrame =
     passes.reduce(_.unionAll(_))
       .groupBy("id_a", "id_b")
       .agg(first(col("key_a")).as("key_a"), first(col("key_b")).as("key_b"),
-        first(col(scoreCol)).as(scoreCol))
+        first(col("dist")).as("dist"))
 
   /** Blocked (and optionally grid-salted) candidate pairs
     * (id_a < id_b): the shared core of both scoring modes. */

@@ -82,6 +82,12 @@ class BpeSpec extends SparkSpecBase {
     assert(toks === Seq(s"a$supp"))
   }
 
+  test("pinned catalog merges are what the trainer learns from the sf0.01 documents") {
+    // provenance of Queries.BpePinnedMerges, the bpe_tokens serving table
+    val docs = graft.sources.Readers.table(spark, sf("sf0.01"), "documents")
+    assert(Bpe.trainMerges(docs, col("text"), 50) === Queries.BpePinnedMerges)
+  }
+
   test("encoding empty/whitespace text yields an empty token array") {
     val merges = Seq("e" -> "s")
     val out = Seq("", "   ").toDF("text")

@@ -1056,28 +1056,38 @@ class DataflowSpec extends SparkSpecBase {
   }
 
   test("fieldStats auto-switches distinct counting to HLL above the size threshold") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Join}
     val df = spark.read.parquet(sf() + "/lineitem.parquet")
     def planOf(thresholdBytes: Long) = {
       spark.conf.set(graft.operators.StatsOp.ApproxThresholdConf, thresholdBytes.toString)
       try graft.operators.StatsOp.fieldStats(df, Seq("l_orderkey"))
-        .queryExecution.optimizedPlan.toString
+        .queryExecution.optimizedPlan
       finally spark.conf.unset(graft.operators.StatsOp.ApproxThresholdConf)
     }
-    val small = planOf(1L)             // everything is "big" → HLL
-    val large = planOf(1L << 40)       // everything is "small" → exact
+    val smallPlan = planOf(1L)         // everything is "big" → HLL
+    val largePlan = planOf(1L << 40)   // everything is "small" → exact
+    val (small, large) = (smallPlan.toString, largePlan.toString)
     assert(small.contains("approx_count_distinct"), s"expected HLL plan:\n$small")
-    // exact path: the per-field split aggregates below the split bound
-    // (a `__v`-keyed value pre-aggregation) or the unpivoted
-    // (field, value) distinct above it — never approximate, and since
-    // r17 never the multi-distinct Expand either (the real structural
-    // signature, not the distinct_count output alias every plan has)
-    assert(!large.contains("approx_count_distinct") &&
-        (large.contains("__v") || large.contains("posexplode")),
-      s"expected exact-distinct plan (split __v agg or unpivot):\n$large")
+    // exact path: distinct counts come from `__v`-keyed value
+    // aggregates (per field below the split bound, unpivoted above
+    // it), broadcast-joined back onto the wide aggregate — never
+    // approximate, and since r17 never the multi-distinct Expand
+    val valueAggJoins = largePlan.collect {
+      case j: Join if j.hint.rightHint.exists(_.strategy.contains(BROADCAST)) &&
+          j.right.exists {
+            case a: Aggregate =>
+              a.groupingExpressions.exists(_.references.exists(_.name == "__v"))
+            case _ => false
+          } => j
+    }
+    assert(!large.contains("approx_count_distinct") && valueAggJoins.nonEmpty,
+      s"expected __v value aggregates broadcast-joined back:\n$large")
     assert(!large.contains("Expand"),
       s"exact path must never plan the multi-distinct Expand:\n$large")
-    // the HLL plan must stay a single pass: no Expand node
-    assert(!small.contains("Expand"), s"HLL path should not Expand:\n$small")
+    // the HLL plan must stay a single pass: no Expand, no side
+    // aggregate joined back
+    assert(!small.contains("Expand") && smallPlan.collect { case j: Join => j }.isEmpty,
+      s"HLL path should be one aggregate pass:\n$small")
   }
 
   test("metadata dedup mode=keep_best: best-scored cluster member survives") {

@@ -1,0 +1,49 @@
+package graft
+
+import graft.operators.Snapshot
+import graft.sources.GraftUpdateCommand
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** The one session factory: tests run the conf the mains measure, the
+  * graft analysis rules are live in it, and no main builds its own. */
+class GraftSessionSpec extends SparkSpecBase {
+  import spark.implicits._
+
+  test("the spec session carries every key of GraftSession.conf") {
+    GraftSession.conf(4).foreach { case (k, v) =>
+      assert(spark.conf.get(k) === v, s"conf key $k")
+    }
+  }
+
+  test("SQL UPDATE on a graft table routes through GraftDmlRule") {
+    val t = freshDir("graft_session_update")
+    Snapshot.create(spark, t,
+      (0 until 20).map(i => (i.toLong, s"v$i", s"p${i % 2}")).toDF("id", "payload", "part"),
+      key = "id", partitionCol = "part", statsCols = Seq("id"))
+    spark.sql("DROP TABLE IF EXISTS graft_session_u")
+    spark.sql(s"CREATE TABLE graft_session_u USING graft LOCATION '$t'")
+    try {
+      val update = "UPDATE graft_session_u SET payload = 'x' WHERE id <= 4"
+      val analyzed = spark.sessionState
+        .executePlan(spark.sessionState.sqlParser.parsePlan(update)).analyzed
+      assert(analyzed.isInstanceOf[GraftUpdateCommand], analyzed.treeString)
+      spark.sql(update)
+      assert(Snapshot.history(t).last._2 === "update")
+      assert(Snapshot.readLatest(spark, t).filter($"payload" === "x").count() === 5L)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_session_u")
+  }
+
+  test("no main source builds a SparkSession outside GraftSession.scala") {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val offenders =
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "GraftSession.scala")
+        .filter((p: Path) => Files.readString(p).contains("SparkSession.builder"))
+        .map(_.toString).toList
+      finally walk.close()
+    assert(offenders.isEmpty, s"build sessions through GraftSession.local: $offenders")
+  }
+}

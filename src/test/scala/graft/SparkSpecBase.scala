@@ -28,19 +28,8 @@ trait SparkSpecBase extends AnyFunSuite {
 
 object SparkSpecBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // analysis-time rules (SQL UPDATE/MERGE routing, TVFs, native
-      // functions) can only register at session construction
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .appName("graft-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      // match the production builders: keep TopKExprs' per-query heap
-      // aggregation hash-based past 128 groups (see Bench.scala)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the production conf (GraftSession.conf) on four local cores
+    val s = GraftSession.local("graft-spec", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
