@@ -532,24 +532,84 @@ object Dataflow {
       .first().getLong(0)
   }
 
-  /** Plan + write all sinks and stats JSON outputs. Returns the
-    * frames for inspection. */
+  /**
+   * Plan, then run the flow's terminal actions: every `compute_stats`
+   * report with an `output_path`, then every sink. Returns the frames
+   * for inspection.
+   *
+   * The actions run side by side in LANES ([[operators.Concurrently]]).
+   * An action whose target paths overlap an earlier action's — the same
+   * qualified path, or one an ancestor directory of the other — runs
+   * after that action's lane, so the last declared write to a path wins,
+   * as before. An action a retry cannot safely repeat (any saveMode but
+   * overwrite, ignore and merge: an append or agg_maintain would count
+   * its rows twice, an errorifexists would fail for good, a snapshot or
+   * erase commit would add a version) runs after EVERY earlier lane, so
+   * only once everything declared before it has succeeded, as in a
+   * serial run. The lanes it waits for still run side by side; the
+   * other lanes run at the same time.
+   *
+   * Failures: a failing action stops only what runs after it in its
+   * lane. Every other lane runs to completion, then the failure of the
+   * lane whose first action is declared first is rethrown with the
+   * others suppressed — so `run` returns or throws only once no action
+   * is still writing. A failing stats report no longer stops the
+   * re-runnable sinks in other lanes. As before, actions that completed
+   * are not undone: an append sink retried by [[ScheduleRunner]] writes
+   * its rows again when an action declared after it failed.
+   */
   def run(spark: SparkSession, flow: DataflowSpec,
           inputs: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] = {
     val frames = plan(spark, flow, inputs)
-    flow.transformations.foreach {
+    val reports = flow.transformations.collect {
       case s: ComputeStatsSpec if s.outputPath.isDefined =>
-        StatsOp.writeStatsJson(s.name, s.outputPath.get,
-          frames(s"${s.name}_fields"),
-          frames.get(s"${s.name}_validation"),
-          frames.get(s"${s.name}_top_errors"))
-      case _ =>
+        (Seq(s.outputPath.get), false, () =>
+          StatsOp.writeStatsJson(s.name, s.outputPath.get,
+            frames(s"${s.name}_fields"),
+            frames.get(s"${s.name}_validation"),
+            frames.get(s"${s.name}_top_errors")))
     }
-    flow.sinks.foreach { sink =>
-      val df = frames.getOrElse(sink.input,
-        throw new IllegalArgumentException(s"sink '${sink.name}': unknown input '${sink.input}'"))
-      Writers.write(df, sink)
+    val sinks = flow.sinks.map { sink =>
+      (sink.paths, !RerunSafeModes(sink.saveMode.toLowerCase), () => {
+        val df = frames.getOrElse(sink.input,
+          throw new IllegalArgumentException(s"sink '${sink.name}': unknown input '${sink.input}'"))
+        Writers.write(df, sink)
+      })
     }
+    Concurrently(lanes(spark, reports ++ sinks))
     frames
+  }
+
+  /** Sink saveModes whose write a retry may repeat with the same result. */
+  private val RerunSafeModes = Set("overwrite", "ignore", "merge")
+
+  /** Build lanes from `(target paths, after every earlier action,
+    * action)` triples: an action's lane first runs, side by side, every
+    * earlier lane one of its targets overlaps — every earlier lane at
+    * all when it must run after them — then the action. Lanes come in
+    * the order of their first action. A path Hadoop cannot qualify
+    * overlaps nothing — its own write reports the error. */
+  private def lanes(spark: SparkSession,
+                    actions: Seq[(Seq[String], Boolean, () => Any)]): Seq[() => Any] = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualified(p: String): Option[Path] = scala.util.Try {
+      val path = new Path(p)
+      path.getFileSystem(conf).makeQualified(path)
+    }.toOption
+    def within(a: Path, b: Path): Boolean =
+      Iterator.iterate(b)(_.getParent).takeWhile(_ != null).contains(a)
+    def overlaps(a: Path, b: Path): Boolean = within(a, b) || within(b, a)
+    case class Lane(first: Int, targets: Seq[Path], run: () => Any)
+    actions.zipWithIndex.foldLeft(Vector.empty[Lane]) {
+      case (acc, ((paths, afterAll, action), i)) =>
+        val targets = paths.flatMap(qualified)
+        val (before, rest) = acc.partition(l =>
+          afterAll || l.targets.exists(p => targets.exists(overlaps(p, _))))
+        val lane = Lane(before.headOption.fold(i)(_.first),
+          before.flatMap(_.targets) ++ targets,
+          () => { Concurrently(before.map(_.run)); action() })
+        (rest :+ lane).sortBy(_.first)
+    }.map(_.run)
   }
 }

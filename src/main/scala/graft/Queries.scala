@@ -682,18 +682,17 @@ object Queries {
     // (31 sequential jobs, executor time ≪ wall × cores), and the
     // batch-pair delta does not depend on the old-corpus labels until
     // the final CC fold. The delta frame (lazy — stats come from the
-    // train-once memo) is cached and materialized on a background
-    // thread while nearDupClusters blocks on its own actions; Spark's
-    // scheduler runs the two job chains concurrently (FIFO back-fill).
-    // Results are unchanged — same frames, same fold.
+    // train-once memo) is cached and materialized side by side with
+    // nearDupClusters' own actions; Spark's scheduler runs the two job
+    // chains concurrently (FIFO back-fill). Results are unchanged —
+    // same frames, same fold.
     val newPairs = operators.OpCache.cache(
       Dedup.ngramJaccardIncremental(old, batch,
         col("text"), col("doc_id"), statsIn = corpusStats(s, dir)))
-    val warm = scala.concurrent.Future(newPairs.count())(
-      scala.concurrent.ExecutionContext.global)
-    val existing = Dedup.nearDupClusters(old, col("text"), col("doc_id"))
-    scala.concurrent.Await.result(warm,
-      scala.concurrent.duration.Duration.Inf)
+    val existing = operators.Concurrently[Any](Seq(
+      () => newPairs.count(),
+      () => Dedup.nearDupClusters(old, col("text"), col("doc_id"))))(1)
+      .asInstanceOf[DataFrame]
     Dedup.duplicateClustersIncremental(existing, newPairs)
   }
 

@@ -128,15 +128,19 @@ object GraftFunctions {
       f.build(args)
     }
 
-  /** Register every graft function in the session's catalog. */
+  /** Register every graft function in the session's catalog. A name
+    * that already carries graft's `ExpressionInfo` (a `GraftExtensions`
+    * session, or an earlier call) is skipped; any other function of
+    * that name is replaced. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
     fns.foreach { f =>
-      registry.registerFunction(
-        FunctionIdentifier(f.name),
-        new ExpressionInfo("graft", f.name, f.usage),
-        builderOf(f))
+      val id = FunctionIdentifier(f.name)
+      if (!registry.lookupFunction(id).exists(_.getClassName == "graft"))
+        registry.registerFunction(id,
+          new ExpressionInfo("graft", f.name, f.usage),
+          builderOf(f))
     }
   }
 

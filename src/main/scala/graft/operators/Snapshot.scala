@@ -3078,6 +3078,14 @@ object Snapshot {
     }
   }
 
+  /** A read that pruning left with no file: the manifest-schema empty
+    * frame, built without opening or listing a single data file. Only
+    * a manifest with no recorded schema still derives its schema from
+    * the files. */
+  private def emptyRead(spark: SparkSession, table: String, m: Manifest): DataFrame =
+    if (m.schemaDdl.nonEmpty) readManifestFiles(spark, table, m, Nil)
+    else readManifestFiles(spark, table, m).limit(0)
+
   /** The table as of `version` (time travel). */
   def readAt(spark: SparkSession, table: String, version: Int): DataFrame =
     readManifestFiles(spark, table, readManifest(table, version))
@@ -3472,7 +3480,7 @@ object Snapshot {
     val m = readManifest(table, v)
     val (kept, _) = pruneAll(table, preds, v)
     val base =
-      if (kept.isEmpty) readManifestFiles(spark, table, m).limit(0)
+      if (kept.isEmpty) emptyRead(spark, table, m)
       else readManifestFiles(spark, table, m, kept)
     preds.foldLeft(base) { case (df, (c, lo, hi)) =>
       df.filter(col(c) >= lit(lo) && col(c) <= lit(hi)) }
@@ -3527,7 +3535,7 @@ object Snapshot {
     val m = readManifest(table, v)
     val (kept, _) = pruneEq(table, column, value, v)
     val base =
-      if (kept.isEmpty) readManifestFiles(spark, table, m).limit(0)
+      if (kept.isEmpty) emptyRead(spark, table, m)
       else readManifestFiles(spark, table, m, kept)
     base.filter(col(column) === lit(value))
   }
@@ -3568,7 +3576,7 @@ object Snapshot {
     val m = readManifest(table, v)
     val (kept, _) = pruneContains(table, column, needle, v)
     val base =
-      if (kept.isEmpty) readManifestFiles(spark, table, m).limit(0)
+      if (kept.isEmpty) emptyRead(spark, table, m)
       else readManifestFiles(spark, table, m, kept)
     base.filter(col(column).contains(needle))
   }
@@ -3630,7 +3638,7 @@ object Snapshot {
     val m = readManifest(table, v)
     val (kept, _) = prunePrefix(table, column, prefix, v)
     val base =
-      if (kept.isEmpty) readManifestFiles(spark, table, m).limit(0)
+      if (kept.isEmpty) emptyRead(spark, table, m)
       else readManifestFiles(spark, table, m, kept)
     base.filter(col(column).startsWith(prefix))
   }
@@ -3708,7 +3716,7 @@ object Snapshot {
                                  version: Int,
                                  only: Seq[FileEntry]): DataFrame = {
     val m = readManifest(table, version)
-    if (only != null && only.isEmpty) readManifestFiles(spark, table, m).limit(0)
+    if (only != null && only.isEmpty) emptyRead(spark, table, m)
     else readManifestFiles(spark, table, m, only)
   }
 
@@ -3720,7 +3728,7 @@ object Snapshot {
     val m = readManifest(table, v)
     val (kept, _) = pruneIn(table, column, values, v)
     val base =
-      if (kept.isEmpty) readManifestFiles(spark, table, m).limit(0)
+      if (kept.isEmpty) emptyRead(spark, table, m)
       else readManifestFiles(spark, table, m, kept)
     base.filter(col(column).isin(values: _*))
   }
@@ -3751,7 +3759,7 @@ object Snapshot {
   def changeSet(spark: SparkSession, table: String,
                 version: Int): (DataFrame, DataFrame) = {
     val m = readManifest(table, version)
-    val empty = readManifestFiles(spark, table, m).limit(0)
+    val empty = emptyRead(spark, table, m)
     if (m.parent <= 0) (empty, readManifestFiles(spark, table, m))
     else {
       require(store(table).exists(manifestPath(table, m.parent)),
@@ -3767,7 +3775,7 @@ object Snapshot {
       val cIdent = m.files.map(entryIdent).toSet
       val removed = mP.files.filterNot(f => cIdent.contains(entryIdent(f)))
       val added = m.files.filterNot(f => pIdent.contains(entryIdent(f)))
-      (if (removed.isEmpty) readManifestFiles(spark, table, mP).limit(0)
+      (if (removed.isEmpty) emptyRead(spark, table, mP)
        else readManifestFiles(spark, table, mP, removed),
        if (added.isEmpty) empty
        else readManifestFiles(spark, table, m, added))

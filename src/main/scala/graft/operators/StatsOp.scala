@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -303,7 +303,10 @@ object StatsOp {
    * (reference: src/stats.py:145-170 `format_stats_json` /
    * `generate_stats_filename`). Stats frames are tiny (one row per
    * field / one summary row), so a driver-side collect + write is the
-   * right tool — no distributed job for a kilobyte of JSON.
+   * right tool — no distributed job for a kilobyte of JSON. The section
+   * collects are independent one-task jobs, so they run side by side
+   * ([[Concurrently]]); the JSON is rendered in section order after all
+   * of them returned.
    */
   def writeStatsJson(name: String, dir: String, fieldStats: DataFrame,
                      validationStats: Option[DataFrame],
@@ -313,8 +316,13 @@ object StatsOp {
     root.put("stats_name", name)
     root.put("generated_at", java.time.Instant.now().toString)
 
-    def rowsToArray(df: DataFrame, target: com.fasterxml.jackson.databind.node.ArrayNode): Unit =
-      df.collect().foreach { row =>
+    // collected in section order; consumed below in the same order
+    val collected = Concurrently(Seq(Some(fieldStats), validationStats, topErrors)
+      .flatten.map(df => () => df.collect())).iterator
+
+    def rowsToArray(df: DataFrame, rows: Array[Row],
+                    target: com.fasterxml.jackson.databind.node.ArrayNode): Unit =
+      rows.foreach { row =>
         val o = target.addObject()
         df.schema.fieldNames.zipWithIndex.foreach { case (f, i) =>
           row.get(i) match {
@@ -328,13 +336,14 @@ object StatsOp {
         }
       }
 
-    rowsToArray(fieldStats, root.putArray("field_stats"))
+    rowsToArray(fieldStats, collected.next(), root.putArray("field_stats"))
     validationStats.foreach { vs =>
       val arr = mapper.createArrayNode()
-      rowsToArray(vs, arr)
+      rowsToArray(vs, collected.next(), arr)
       if (!arr.isEmpty) root.set[com.fasterxml.jackson.databind.JsonNode]("validation_stats", arr.get(0))
     }
-    topErrors.foreach(te => rowsToArray(te, root.putArray("top_validation_errors")))
+    topErrors.foreach(te =>
+      rowsToArray(te, collected.next(), root.putArray("top_validation_errors")))
 
     val store = LogStore.forPath(dir)
     store.mkdirs(dir)

@@ -13,8 +13,12 @@ import org.apache.spark.sql.functions._
  * partition columns become directory pruning for downstream readers.
  * A validated stream is best written ONCE, partitioned by validity
  * (see Validate.tagged), instead of two filtered passes.
+ *
+ * Per-sink summaries go to log4j (`graft.sinks.Writers`, INFO): sinks
+ * of one dataflow run on concurrent threads (see `Dataflow.run`).
  */
 object Writers {
+  private lazy val log = org.apache.logging.log4j.LogManager.getLogger("graft.sinks.Writers")
 
   def write(df: DataFrame, spec: SinkSpec): Unit = {
     // keyed copy-on-write merge (operators.Merge): incoming rows with
@@ -41,7 +45,7 @@ object Writers {
       spec.paths.foreach { path =>
         val stats = graft.operators.Merge.mergeInto(df.sparkSession, path,
           ups, del, spec.mergeKey, spec.partitionBy.head, fmt)
-        println(s"[sink ${spec.name}] merged into $path: " +
+        log.info(s"[sink ${spec.name}] merged into $path: " +
           s"${stats.upsertRows} upserts, ${stats.deleteKeys} delete keys, " +
           s"rewrote ${stats.rewritten.size} partition(s), " +
           s"dropped ${stats.dropped.size}")
@@ -106,7 +110,7 @@ object Writers {
             graft.operators.Snapshot.merge(df.sparkSession, path, ups, del)
         if (spec.snapshotTag.nonEmpty)
           graft.operators.Snapshot.tag(path, spec.snapshotTag, st.version)
-        println(s"[sink ${spec.name}] snapshot $path now v${st.version}" +
+        log.info(s"[sink ${spec.name}] snapshot $path now v${st.version}" +
           (if (spec.snapshotTag.nonEmpty) s" (tagged '${spec.snapshotTag}')"
            else "") + ": " +
           s"rewrote ${st.rewrittenPartitions.size} partition(s), " +
@@ -145,11 +149,11 @@ object Writers {
         if (!exists) {
           graft.operators.IncrementalAgg.build(add, spec.aggGroupBy, spec.aggSums)
             .write.mode("overwrite").parquet(path)
-          println(s"[sink ${spec.name}] bootstrapped aggregate table at $path")
+          log.info(s"[sink ${spec.name}] bootstrapped aggregate table at $path")
         } else {
           graft.operators.IncrementalAgg.maintain(df.sparkSession, path,
             spec.aggGroupBy, spec.aggSums, rem, add)
-          println(s"[sink ${spec.name}] maintained aggregate table at $path")
+          log.info(s"[sink ${spec.name}] maintained aggregate table at $path")
         }
       }
       return
@@ -174,7 +178,7 @@ object Writers {
         val st = graft.operators.Snapshot.deleteMorKeys(df.sparkSession, path, df)
         if (spec.snapshotTag.nonEmpty)
           graft.operators.Snapshot.tag(path, spec.snapshotTag, st.version)
-        println(s"[sink ${spec.name}] erased into $path: now v${st.version}, " +
+        log.info(s"[sink ${spec.name}] erased into $path: now v${st.version}, " +
           s"${st.filesWritten} data file(s) written (deletion vectors only)")
       }
       return
@@ -246,18 +250,18 @@ object Writers {
           // (even if a column named `from` was later re-added — a
           // re-run must skip, not fail on its own migration)
           if (has(to))
-            println(s"[sink ${spec.name}] evolve '$step': already applied")
+            log.info(s"[sink ${spec.name}] evolve '$step': already applied")
           else if (has(from)) Snapshot.renameColumn(spark, path, from, to)
           else throw new IllegalArgumentException(
             s"sink '${spec.name}': evolve '$step' — neither '$from' nor '$to' exists")
         case Array("drop", c) =>
           if (has(c)) Snapshot.dropColumn(spark, path, c)
-          else println(s"[sink ${spec.name}] evolve '$step': already applied")
+          else log.info(s"[sink ${spec.name}] evolve '$step': already applied")
         case Array("widen", c, t) =>
           if (!has(c)) throw new IllegalArgumentException(
             s"sink '${spec.name}': evolve '$step' — no column '$c'")
           else if (fields.find(_.name == c).get.dataType.simpleString == t)
-            println(s"[sink ${spec.name}] evolve '$step': already applied")
+            log.info(s"[sink ${spec.name}] evolve '$step': already applied")
           else Snapshot.widenColumn(spark, path, c, t)
         case _ => throw new IllegalArgumentException(
           s"sink '${spec.name}': bad evolve step '$step' " +

@@ -1263,4 +1263,167 @@ class DataflowSpec extends SparkSpecBase {
     assert(shape(frames("out")) === shape(plain("out")),
       "the hint must not change the plan")
   }
+
+  // ---- terminal actions run side by side in lanes (Dataflow.run)
+
+  /** A one-row frame whose single task sleeps `ms` before yielding `v`. */
+  private def slowFrame(v: String, ms: Long): org.apache.spark.sql.DataFrame = {
+    val slow = udf((s: String) => { Thread.sleep(ms); s }).asNondeterministic()
+    Seq(v).toDF("v").coalesce(1).select(slow(col("v")).as("v"))
+  }
+
+  private def parquetSink(input: String, name: String, path: String,
+                          saveMode: String = "overwrite") =
+    graft.meta.SinkSpec(input, name, Seq(path), "parquet", saveMode)
+
+  private def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
+
+  test("stats JSON equals the per-section collect() rendering, apart from generated_at") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stats_json").toString
+    Seq(
+      """{"policy_id":1,"driver":{"age":34},"premium":"120.5"}""",
+      """{"policy_id":2,"driver":{"age":15},"premium":"99.0"}""",
+      """{"policy_id":3,"driver":{"age":null},"premium":"oops"}""",
+      """{"policy_id":4,"driver":{"age":40},"premium":"7"}""")
+      .toDS().coalesce(1).write.mode("overwrite").text(s"$dir/in")
+    val spec =
+      s"""{"dataflows":[{
+         |"name":"motor",
+         |"sources":[{"name":"raw","path":"$dir/in","format":"json"}],
+         |"transformations":[
+         |  {"name":"norm","type":"normalize_fields","params":{"input":"raw","output":"n","fields":[]}},
+         |  {"name":"val","type":"validate_fields","params":{"input":"n",
+         |    "validations":[{"field":"driver_age","validations":["notNull","min:18"]},
+         |                   {"field":"premium","validations":["isNumeric"]}],
+         |    "ok_output":"ok","ko_output":"ko"}},
+         |  {"name":"policy_stats","type":"compute_stats","params":{
+         |    "input":"n","fields":["driver_age","premium"],
+         |    "include_validation_stats":true,"ok_input":"ok","ko_input":"ko",
+         |    "output_path":"$dir/stats"}}],
+         |"sinks":[
+         |  {"input":"ok","name":"okSink","paths":["$dir/ok"],"format":"parquet","saveMode":"overwrite"}]
+         |}]}""".stripMargin
+    val frames = Dataflow.run(spark, MetaLoader.loadString(spec).dataflow("motor"))
+
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def rendered(df: org.apache.spark.sql.DataFrame) = {
+      val arr = mapper.createArrayNode()
+      df.collect().foreach { row =>
+        val o = arr.addObject()
+        df.schema.fieldNames.zipWithIndex.foreach { case (f, i) =>
+          row.get(i) match {
+            case null => o.putNull(f)
+            case v: Long => o.put(f, v)
+            case v: Int => o.put(f, v)
+            case v: Double => o.put(f, v)
+            case v: Boolean => o.put(f, v)
+            case v => o.put(f, v.toString)
+          }
+        }
+      }
+      arr
+    }
+    val expected = mapper.createObjectNode()
+    expected.put("stats_name", "policy_stats")
+    expected.set[com.fasterxml.jackson.databind.JsonNode]("field_stats",
+      rendered(frames("policy_stats_fields")))
+    expected.set[com.fasterxml.jackson.databind.JsonNode]("validation_stats",
+      rendered(frames("policy_stats_validation")).get(0))
+    expected.set[com.fasterxml.jackson.databind.JsonNode]("top_validation_errors",
+      rendered(frames("policy_stats_top_errors")))
+
+    val actual = mapper.readTree(new java.io.File(s"$dir/stats/policy_stats.json"))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(actual.remove("generated_at") != null)
+    // compared as printed text: same keys, same order, same values
+    val pretty = mapper.writerWithDefaultPrettyPrinter()
+    assert(pretty.writeValueAsString(actual) === pretty.writeValueAsString(expected))
+    assert(actual.get("field_stats").size() === 2)
+    assert(actual.get("top_validation_errors").size() > 0)
+  }
+
+  test("a failing sink is rethrown only after a slow sink in another lane completed") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lanes_fail").toString
+    val flow = graft.meta.DataflowSpec("lanes", Nil, Nil, Seq(
+      // saveMode merge without mergeKey: fails before any Spark work
+      parquetSink("fast", "badMerge", s"$dir/bad1", saveMode = "merge"),
+      parquetSink("slow", "slowSink", s"$dir/slow"),
+      parquetSink("fast", "badMerge2", s"$dir/bad2", saveMode = "merge")))
+    val e = intercept[IllegalArgumentException] {
+      Dataflow.run(spark, flow,
+        Map("fast" -> Seq("x").toDF("v"), "slow" -> slowFrame("s", 1500)))
+    }
+    // the first failure in declared order; the later one rides along
+    assert(e.getMessage.contains("sink 'badMerge': saveMode merge needs mergeKey"))
+    assert(e.getSuppressed.map(_.getMessage).toSeq ===
+      Seq("requirement failed: sink 'badMerge2': saveMode merge needs mergeKey"))
+    assert(exists(s"$dir/slow/_SUCCESS"),
+      "run threw before the slow sink's output was complete")
+  }
+
+  test("a sink a retry cannot safely repeat runs only after every earlier action succeeded") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lanes_retry").toString
+    val inputs = Map("rows" -> Seq("x").toDF("v"))
+    val flow = graft.meta.DataflowSpec("lanes", Nil, Nil, Seq(
+      // saveMode merge without mergeKey: fails before any Spark work
+      parquetSink("rows", "badMerge", s"$dir/bad", saveMode = "merge"),
+      parquetSink("rows", "okSink", s"$dir/ok"),
+      parquetSink("rows", "appendSink", s"$dir/appended", saveMode = "append"),
+      parquetSink("rows", "aggSink", s"$dir/agg", saveMode = "agg_maintain")
+        .copy(aggGroupBy = Seq("v")),
+      parquetSink("rows", "lateSink", s"$dir/late")))
+    val e = intercept[IllegalArgumentException](Dataflow.run(spark, flow, inputs))
+    assert(e.getMessage.contains("sink 'badMerge': saveMode merge needs mergeKey"))
+    // re-runnable sinks in other lanes still ran, before and after
+    assert(exists(s"$dir/ok/_SUCCESS") && exists(s"$dir/late/_SUCCESS"))
+    assert(!exists(s"$dir/appended") && !exists(s"$dir/agg"),
+      "an append/agg_maintain sink ran although an earlier action failed")
+
+    // the retry (the failing sink fixed) applies the delta exactly once
+    Dataflow.run(spark,
+      flow.copy(sinks = parquetSink("rows", "fixed", s"$dir/bad") +: flow.sinks.tail), inputs)
+    assert(spark.read.parquet(s"$dir/appended").as[String].collect().toSeq === Seq("x"))
+    assert(spark.read.parquet(s"$dir/agg").select("n").as[Long].collect().toSeq === Seq(1L))
+  }
+
+  test("sinks on the same or nested paths keep declared order; the last declared write wins") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lanes_order").toString
+    val flow = graft.meta.DataflowSpec("lanes", Nil, Nil, Seq(
+      // the same path spelled two ways: one qualified target, one lane
+      parquetSink("slowFirst", "first", s"$dir/same"),
+      parquetSink("fastSecond", "second", s"file:$dir/same/"),
+      // a write below a directory a later sink overwrites
+      parquetSink("slowFirst", "inner", s"$dir/nest/inner"),
+      parquetSink("fastSecond", "outer", s"$dir/nest")))
+    Dataflow.run(spark, flow, Map(
+      "slowFirst" -> slowFrame("first", 1000), "fastSecond" -> Seq("second").toDF("v")))
+    assert(spark.read.parquet(s"$dir/same").as[String].collect().toSeq === Seq("second"))
+    assert(spark.read.parquet(s"$dir/nest").as[String].collect().toSeq === Seq("second"))
+    assert(!exists(s"$dir/nest/inner"), "the outer overwrite ran before the inner write")
+  }
+
+  test("Dataflow.run returns only after every action finished; lanes inherit the caller's local properties") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lanes_wait").toString
+    Seq(1, 2, 3).toDF("x").coalesce(1).write.mode("overwrite").parquet(s"$dir/in")
+    val sleeps = Seq(300L, 900L, 600L)
+    val flow = MetaLoader.loadString(
+      s"""{"dataflows":[{"name":"lanes",
+         |"sources":[{"name":"src","path":"$dir/in","format":"parquet"}],
+         |"transformations":[{"name":"st","type":"compute_stats","params":{
+         |  "input":"src","fields":["x"],"output_path":"$dir/stats"}}],
+         |"sinks":[]}]}""".stripMargin).dataflow("lanes")
+      .copy(sinks = sleeps.indices.map(i => parquetSink(s"slow$i", s"sink$i", s"$dir/out$i")))
+    val inputs = sleeps.zipWithIndex
+      .map { case (ms, i) => s"slow$i" -> slowFrame(s"v$i", ms) }.toMap
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.spec.caller", "lanes-spec")
+    val (_, jobs) =
+      try jobsStarted(Dataflow.run(spark, flow, inputs))
+      finally sc.setLocalProperty("graft.spec.caller", null)
+    sleeps.indices.foreach(i => assert(exists(s"$dir/out$i/_SUCCESS"), s"sink$i unfinished"))
+    assert(exists(s"$dir/stats/st.json"))
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.getProperty("graft.spec.caller") == "lanes-spec"),
+      "a lane's job lost the caller's local properties")
+  }
 }

@@ -46,4 +46,28 @@ class GraftSessionSpec extends SparkSpecBase {
       finally walk.close()
     assert(offenders.isEmpty, s"build sessions through GraftSession.local: $offenders")
   }
+
+  test("GraftFunctions.register keeps graft's own registrations and replaces anything else") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // a session of its own: same extensions, its own function registry
+    val s = spark.newSession()
+    val registry = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val id = FunctionIdentifier("vec_norm")
+    def info = registry.lookupFunction(id).map(_.getClassName)
+    // the extensions already registered it: register leaves it alone
+    val injected = registry.lookupFunctionBuilder(id).get
+    graft.functions.GraftFunctions.register(s)
+    assert(registry.lookupFunctionBuilder(id).get eq injected)
+    // a user's function of the same name is replaced, as before
+    s.udf.register("vec_norm", (x: String) => x)
+    assert(!info.contains("graft"))
+    graft.functions.GraftFunctions.register(s)
+    assert(info.contains("graft"))
+    // a session without it gets it
+    registry.dropFunction(id)
+    graft.functions.GraftFunctions.register(s)
+    assert(info.contains("graft"))
+    assert(s.sql("SELECT vec_norm(array(3.0D, 4.0D))").head().getDouble(0) === 5.0)
+  }
 }

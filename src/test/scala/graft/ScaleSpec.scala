@@ -84,19 +84,8 @@ class ScaleSpec extends SparkSpecBase {
     // runs a schema-inference job — force analysis BEFORE listening)
     val df = spark.read.parquet(sf() + "/documents.parquet").select("doc_id")
     df.queryExecution.analyzed
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      graft.operators.Scale.ensureParallelism(df)
-      Thread.sleep(500) // listener bus is async; give a start event time to land
-      assert(jobs.get() === 0, "ensureParallelism submitted a Spark job")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, jobs) = jobsStarted(graft.operators.Scale.ensureParallelism(df))
+    assert(jobs.isEmpty, "ensureParallelism submitted a Spark job")
   }
 
   test("ensureParallelism: file-count cap for non-splittable inputs, suffixed conf ok") {

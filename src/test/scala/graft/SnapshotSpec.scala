@@ -651,20 +651,10 @@ class SnapshotSpec extends SparkSpecBase {
     // count Spark jobs during the publish: the key-overlap probe is
     // the only job the rebase could launch, and disjoint stats must
     // disprove it driver-side
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val st = Snapshot.commitStaged(spark, staged)
-      Thread.sleep(200) // let any in-flight job-start events drain
-      assert(st.version == 3)
-      assert(jobs.get() == 0,
-        s"disjoint rebase must be pure metadata, launched ${jobs.get()} job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (st, jobs) = jobsStarted(Snapshot.commitStaged(spark, staged))
+    assert(st.version == 3)
+    assert(jobs.isEmpty,
+      s"disjoint rebase must be pure metadata, launched ${jobs.size} job(s)")
     assert(rowsOf(Snapshot.readLatest(spark, t)).contains((100L, "x", "p1")))
     assert(rowsOf(Snapshot.readLatest(spark, t)).contains((200L, "c", "p2")))
 
@@ -995,5 +985,43 @@ class SnapshotSpec extends SparkSpecBase {
     val agg = Snapshot.aggStats(spark, t, Seq("payload")).collect().head
     assert(agg.getAs[String]("max_payload") == "😀")
     assert(agg.getAs[String]("min_payload") == "alpha")
+  }
+
+  test("reads pruned to nothing start no Spark job and keep readLatest's columns: " +
+    "40-file table, deletion vectors, renamed column under column mapping") {
+    def rows(n: Int, parts: Int): DataFrame =
+      (1 to n).map(i => (i.toLong, s"v$i", s"n$i", s"p${i % parts}"))
+        .toDF("id", "payload", "note", "part")
+    val wide = fresh("empty_read_wide")
+    Snapshot.create(spark, wide, rows(40, 40), "id", "part", statsCols = Seq("payload"))
+    val dv = fresh("empty_read_dv")
+    Snapshot.create(spark, dv, rows(8, 2), "id", "part", statsCols = Seq("payload"))
+    Snapshot.deleteMorKeys(spark, dv, Seq(3L).toDF("id"))
+    val renamed = fresh("empty_read_renamed")
+    Snapshot.create(spark, renamed, rows(8, 2), "id", "part", statsCols = Seq("payload"))
+    Snapshot.renameColumn(spark, renamed, "note", "remark")
+    // the three shapes the old `.limit(0)` read paid for: a listing job
+    // above 32 paths, a deletion-vector read, a column-mapped projection
+    val latestFiles = (t: String) => Snapshot.readManifest(t, Snapshot.currentVersion(t)).files
+    assert(latestFiles(wide).size > 32)
+    assert(latestFiles(dv).exists(_.dv.isDefined))
+    assert(Snapshot.readManifest(renamed, Snapshot.currentVersion(renamed))
+      .columnMap === Map("remark" -> "note"))
+
+    for (t <- Seq(wide, dv, renamed)) {
+      val reads = Seq(
+        "readWhereEq" -> (() => Snapshot.readWhereEq(spark, t, "id", 100000L)),
+        "readWhereIn" -> (() => Snapshot.readWhereIn(spark, t, "id", Seq(100000L, 100001L))),
+        "readWhereStartsWith" -> (() => Snapshot.readWhereStartsWith(spark, t, "payload", "zzz")),
+        "readEntries" -> (() => Snapshot.readEntries(spark, t, Snapshot.currentVersion(t), Nil)))
+      val expected = Snapshot.readLatest(spark, t).dtypes.toSeq
+      for ((what, read) <- reads) {
+        val (df, jobs) = jobsStarted(read())
+        assert(jobs.isEmpty, s"$what on $t started jobs building the frame: " +
+          jobs.map(_.getProperty("spark.job.description")).mkString("; "))
+        assert(df.dtypes.toSeq === expected, s"$what on $t")
+        assert(df.count() === 0L, s"$what on $t")
+      }
+    }
   }
 }
