@@ -2262,7 +2262,7 @@ object Queries {
     * `WHERE key IN (…)` — the erasure-batch shape — routes onto the
     * same pruned copy-on-write commits as ranges, with candidate
     * files named by the POINT-LOOKUP stack (per-file key min/max +
-    * blooms, [[graft.operators.Snapshot.pruneIn]]): an absent key in
+    * blooms, [[graft.operators.Snapshot.prune]]): an absent key in
     * the list costs no IO, and an IN AND-ed with a range intersects
     * both prunings. The oracle replays all three statements
     * relationally, so hash equality proves IN-list DML ≡ the
@@ -2365,7 +2365,7 @@ object Queries {
     * near-full-width, so only the bloom can prove absence) and a
     * manifest HLL sketch — then a plain SQL point lookup on the
     * bloomed column. The pushed equality routes through
-    * [[Snapshot.pruneEq]]: only files whose bloom admits the value
+    * [[Snapshot.prune]]: only files whose bloom admits the value
     * are scanned. The oracle is the bare filter, so hash equality
     * proves bloom pruning is IO-only; the SQL-created table loses
     * nothing the Scala create has. */
@@ -2392,7 +2392,7 @@ object Queries {
   /** TRIGRAM SUBSTRING INDEX (r16): a documents snapshot table
     * created with the `3g:text` bloom spec — per-file filters over
     * the text's code-point 3-grams — then three `LIKE '%needle%'`
-    * lookups served by [[Snapshot.readWhereContains]]: a file opens
+    * lookups served by [[Snapshot.read]]: a file opens
     * only if its filter admits EVERY 3-gram of the needle, so
     * substring search is priced by matching files, not corpus size
     * (the LIKE-pushdown analog of the value-bloom point lookup; at
@@ -2408,7 +2408,7 @@ object Queries {
       path
     }
     SubstringNeedles.map { nd =>
-      Snapshot.readWhereContains(s, p, "text", nd)
+      Snapshot.read(s, p, Seq(Snapshot.ContainsPred("text", nd)))
         .select(lit(nd).as("needle"), col("doc_id"), col("n_chars"))
     }.reduce(_ unionByName _)
   }
@@ -2429,7 +2429,7 @@ object Queries {
         fileRanges = 4)
       path
     }
-    Snapshot.readWhereStartsWith(s, p, "source", "src1")
+    Snapshot.read(s, p, Seq(Snapshot.PrefixPred("source", "src1")))
       .select("doc_id", "source", "n_chars")
   }
 
@@ -2645,7 +2645,7 @@ object Queries {
         keys = Seq("doc_id"), partitionCols = Seq("bucket(8,doc_id)"))
       path
     }
-    Snapshot.readWhereIn(s, p, "doc_id", Seq(7L, 42L, 103L, 999999L))
+    Snapshot.read(s, p, Seq(Snapshot.InPred("doc_id", Seq(7L, 42L, 103L, 999999L))))
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
 
@@ -2692,7 +2692,7 @@ object Queries {
       Snapshot.repartitionTable(s, path, Seq("lang"))
       path
     }
-    Snapshot.readWhereEq(s, p, "lang", "fr")
+    Snapshot.read(s, p, Seq(Snapshot.InPred("lang", Seq("fr"))))
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
 
@@ -2763,12 +2763,13 @@ object Queries {
     * replays both change sets and filters, so hash equality proves
     * pruning never changes semantics. */
   def snapshotPruned(s: SparkSession, dir: String): DataFrame =
-    Snapshot.readWhere(s, snapshotTablePath(s, dir), "doc_id", 100, 299,
+    Snapshot.read(s, snapshotTablePath(s, dir),
+        Seq(Snapshot.RangePred("doc_id", 100, 299)),
         version = 3) // pinned pre-DML state; snapshot_dml reads the tip
       .select("doc_id", "text", "lang", "source", "n_chars")
 
   /** POINT LOOKUPS over the snapshot table (v3 state): three
-    * `doc_id =` reads served through [[Snapshot.pruneEq]] — partition
+    * `doc_id =` reads served through [[Snapshot.read]] — partition
     * stats + per-file BLOOM filters name the files that might hold
     * the key; id 13 was deleted in v2 and comes back empty (for an
     * absent key the bloom proves absence without opening a data
@@ -2777,7 +2778,8 @@ object Queries {
   def snapshotPoint(s: SparkSession, dir: String): DataFrame = {
     val p = snapshotTablePath(s, dir)
     Seq(5L, 13L, 14L)
-      .map(id => Snapshot.readWhereEq(s, p, "doc_id", id, version = 3))
+      .map(id => Snapshot.read(s, p, Seq(Snapshot.InPred("doc_id", Seq(id))),
+        version = 3))
       .reduce(_ unionByName _)
       .select("doc_id", "text", "lang", "source", "n_chars")
   }

@@ -33,7 +33,7 @@ import org.apache.spark.sql.SparkSession
 object SnapshotTool {
 
   /** CLI values arrive as strings; predicates should compare
-    * numerically when they can (pruneRange does the same). */
+    * numerically when they can (Snapshot.prune does the same). */
   private def parseBound(s: String): Any =
     scala.util.Try(s.toLong).orElse(scala.util.Try(s.toDouble)).getOrElse(s)
 

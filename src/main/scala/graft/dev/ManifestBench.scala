@@ -27,8 +27,10 @@ import org.apache.spark.sql.functions._
  * trickle-merge shape — where segmentation changes the complexity
  * class), total log bytes, cold parse wall, memoized re-read wall
  * (the per-query planning overhead after r14's (table, version)
- * memo), and a stats-prune fold wall. Plus one REAL-table anchor at
- * ~1k files driving the DSv2 planning path end-to-end, cold vs memo.
+ * memo), a stats-prune fold wall and a three-conjunct prune wall
+ * (`prune3_s`: id bound + partition range + IN list). Plus one
+ * REAL-table anchor at ~1k files driving the DSv2 planning path
+ * end-to-end, cold vs memo.
  *
  * Emits one JSON line per row to `manifestbench_out.json` (override
  * with SPARK_GRAFT_MANIFESTBENCH_OUT) and a `summary` line.
@@ -56,6 +58,9 @@ object ManifestBench {
           val lo = (p.toLong * filesPerPart + j) * 1000
           val bloom = new Array[Byte](bloomBytes)
           rnd.nextBytes(bloom)
+          // a valid header over random bits: bloom-checking prunes
+          // (the IN conjunct) deserialize it
+          java.nio.ByteBuffer.wrap(bloom).putInt((bloomBytes - 8) * 8).putInt(6)
           Snapshot.FileEntry(
             f"files/c00000001/__part=p$p%05d/part-$j%05d.parquet",
             rows = 1000,
@@ -101,15 +106,25 @@ object ManifestBench {
     Snapshot.clearManifestCache()
     val (_, parseCold) = timed(Snapshot.readManifest(t, 2))
     val (_, readMemo) = timed(Snapshot.readManifest(t, 2))
-    val (_, pruneWall) = timed(
-      Snapshot.pruneBounds(t, "id", Some((files.toLong / 2) * 1000), None, 2))
+    val (_, pruneWall) = timed(Snapshot.prune(t,
+      Seq(Snapshot.BoundPred("id", Some((files.toLong / 2) * 1000), None)), 2))
+    // three conjuncts in one pass: an open bound on id, a partition
+    // range and a 20-value IN list (stats + bloom per value)
+    val nParts = parsed.partitions.size
+    val three = Seq(
+      Snapshot.BoundPred("id", Some((files.toLong / 2) * 1000), None),
+      Snapshot.RangePred("part", f"p${nParts / 4}%05d", f"p${3 * nParts / 4}%05d"),
+      Snapshot.InPred("id", (0 until 20).map(k =>
+        (files.toLong / 2 + k * files / 40) * 1000 + 5)))
+    val ((kept3, _), prune3Wall) = timed(Snapshot.prune(t, three, 2))
 
     rm(t)
     f"""{"files":$files,"mode":"$mode","bloom_bytes_per_file":$bloomBytes,""" +
       f""""commit_full_s":$commitFull%.4f,"commit_touch1_s":$commitTouch1%.4f,""" +
       f""""bytes_log":$bytesFull,"bytes_touch1":$bytesTouch1,""" +
       f""""parse_cold_s":$parseCold%.4f,"read_memo_s":$readMemo%.6f,""" +
-      f""""prune_s":$pruneWall%.4f}"""
+      f""""prune_s":$pruneWall%.4f,"prune3_s":$prune3Wall%.4f,""" +
+      f""""prune3_kept":${kept3.size}}"""
   }
 
   /** PARTITION-COUNT axis (r15, VERDICT r14 #3): segmentation bounded
@@ -163,8 +178,8 @@ object ManifestBench {
     val (_, parseCold) = timed(Snapshot.readManifest(t, 2))
     val (_, readMemo) = timed(Snapshot.readManifest(t, 2))
     val (_, pruneWall) = timed(
-      Snapshot.pruneRange(t, "part", f"p${nParts / 2}%06d",
-        f"p${nParts / 2 + 10}%06d", 2))
+      Snapshot.prune(t, Seq(Snapshot.RangePred("part",
+        f"p${nParts / 2}%06d", f"p${nParts / 2 + 10}%06d")), 2))
     rm(t)
     f"""{"partitions":$nParts,"files_per_part":$filesPerPart,""" +
       f""""mode":"seg","commit_full_s":$commitFull%.4f,""" +

@@ -67,7 +67,7 @@ final case class SinkSpec(
     statsCols: Seq[String] = Nil,
     // saveMode=snapshot: columns getting a per-file BLOOM filter in
     // the manifest at bootstrap (operators.Snapshot bloomCols) — the
-    // point-lookup existence index for readWhereEq/pruneEq.
+    // point-lookup existence index for Snapshot.prune/read.
     bloomCols: Seq[String] = Nil,
     // saveMode=snapshot: columns getting a per-file portable HLL
     // sketch at bootstrap (operators.Snapshot hllCols) — the

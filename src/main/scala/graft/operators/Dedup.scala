@@ -1187,14 +1187,11 @@ object Dedup {
    * by cluster_id, and the corpus itself participates only in one
    * anti join keyed by id — no full-corpus window, no payload
    * shuffle.
+   *
+   * `clusters` is a (doc_id, cluster_id) label frame — what
+   * [[nearDupComponents]] produces without ever materializing the
+   * quadratic pair set, or [[duplicateClusters]] over a pair frame.
    */
-  def dedupKeepBest(df: DataFrame, id: Column, score: Column,
-                    pairs: DataFrame): DataFrame =
-    dedupKeepBestClusters(df, id, score, duplicateClusters(pairs))
-
-  /** [[dedupKeepBest]] from an already-computed (doc_id, cluster_id)
-    * label frame — what [[nearDupComponents]] produces without ever
-    * materializing the quadratic pair set. */
   def dedupKeepBestClusters(df: DataFrame, id: Column, score: Column,
                             clusters: DataFrame): DataFrame = {
     // One (doc_id, score) row per id BEFORE the ranking window: if an

@@ -382,8 +382,8 @@ object Similarity {
    * rows (id, vec, norm, cell) partitioned by the IVF cell, so
    *
    *  - a query batch's probe set becomes a MANIFEST-pruned read
-   *    ([[Snapshot.readWhereIn]] on the partition column): serving
-   *    opens only the probed cells' files — no file listing, no
+   *    ([[Snapshot.read]] with an IN list on the partition column):
+   *    serving opens only the probed cells' files — no file listing, no
    *    footer pass, however many cells the 100 TB index holds;
    *  - index maintenance is [[Snapshot.merge]]: re-embedded docs
    *    upsert into their (possibly NEW) cell, retired docs delete —
@@ -462,7 +462,7 @@ object Similarity {
   /**
    * Serve a query batch from the versioned index: assign each query
    * to its `nprobe` cells, read ONLY those cells' files through the
-   * manifest ([[Snapshot.readWhereIn]] — the probe set is ≤ nlist
+   * manifest ([[Snapshot.read]] — the probe set is ≤ nlist
    * values, driver-bounded), rescore exactly against the STORED
    * vectors/norms, rank per query with the bounded heap. Self-matches
    * kept, as [[ivfSearch]]. `version` pins a historical index state.
@@ -484,7 +484,7 @@ object Similarity {
     val raw =
       if (cells.isEmpty)
         Snapshot.readLatest(spark, table).limit(0)
-      else Snapshot.readWhereIn(spark, table, "cell", cells, version)
+      else Snapshot.read(spark, table, Seq(Snapshot.InPred("cell", cells)), version)
     // FILTERED serving: the predicate runs over the index's stored
     // attribute columns inside the probed-cell scan (pre-filter — the
     // exact restricted-corpus result, see [[ivfSearchWhere]]); with

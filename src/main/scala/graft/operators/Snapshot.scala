@@ -24,7 +24,7 @@ import scala.jdk.CollectionConverters._
  *    version's — an O(manifest) undo that rewrites zero data;
  *  - **vacuum**: delete files unreferenced by retained versions;
  *  - **data skipping**: the manifest carries per-file min/max/null
- *    stats for declared columns, so `readWhere` hands Spark only the
+ *    stats for declared columns, so `read` hands Spark only the
  *    files whose ranges admit the predicate — pruning happens before
  *    the scan is planned, the lakehouse-format move (Delta/Iceberg
  *    file skipping) that parquet footer pruning alone cannot express
@@ -111,10 +111,10 @@ object Snapshot {
     * ranges — `mode = "range"` on (partition, key) for single-key
     * skipping, `mode = "zorder"` on the Morton interleave of
     * `zorderKeys` ([[Scale.zOrderKey]]) so per-file min/max stats are
-    * narrow on EVERY layout key at once (multi-column `readWhereAll`
-    * pruning). Declared once at create; every later commit (merge,
-    * compact) reuses it from the manifest — layout is a TABLE
-    * property, not a per-writer choice. */
+    * narrow on EVERY layout key at once (multi-column [[prune]]).
+    * Declared once at create; every later commit (merge, compact)
+    * reuses it from the manifest — layout is a TABLE property, not a
+    * per-writer choice. */
   final case class Layout(fileRanges: Int = 0, mode: String = "range",
                           zorderKeys: Seq[String] = Nil)
 
@@ -896,7 +896,7 @@ object Snapshot {
   /** The mtime-granularity window (git's racily-clean bound) —
     * tunable for tests/benchmarks that commit and immediately
     * measure memoized reads. */
-  private def mtimeGranularityMs: Long =
+  private[graft] def mtimeGranularityMs: Long =
     sys.props.get("graft.manifest.mtimeGranularityMs").map(_.toLong)
       .getOrElse(2000L)
 
@@ -1828,11 +1828,9 @@ object Snapshot {
                         case (Some(a), Some(b))
                           if a.min.isDefined && a.max.isDefined =>
                           // unparseable bounds (a float key rendering
-                          // "NaN"/"Infinity" breaks admits' BigDecimal
-                          // parse) must NOT fail the publish — they
-                          // just can't disprove overlap → exact probe
-                          scala.util.Try(admits(b, a.min.get, a.max.get))
-                            .getOrElse(true)
+                          // "NaN"/"Infinity") can't disprove overlap:
+                          // admits keeps them → exact probe
+                          admits(Bound(a.min, a.max))(b)
                         case _ => true // unknown column: can't disprove
                       }
                     }
@@ -2758,7 +2756,7 @@ object Snapshot {
 
   /** A bloom SPEC is either a bare column name (the VALUE filter —
     * point-lookup skipping) or `3g:<col>` (the TRIGRAM filter — the
-    * substring-search index of [[pruneContains]]). Two filter kinds,
+    * substring-search index of [[ContainsPred]]). Two filter kinds,
     * ONE tracking list: carry-forward, compaction backfill, REPLACE
     * inheritance, fsck and serialization treat both uniformly, and
     * only the build aggregate and the prune predicate differ. */
@@ -2769,7 +2767,7 @@ object Snapshot {
 
   /** Add a per-file TRIGRAM bloom on string column `name` — the
     * SUBSTRING index: `column LIKE '%needle%'` served by
-    * [[pruneContains]]/[[readWhereContains]] without a full scan.
+    * [[ContainsPred]] pruning without a full scan.
     * Tracked as the bloom spec `3g:<name>` (see [[bloomSpec]]), so
     * sizing is the table-wide bloom sizing and the backfill contract
     * is [[trackBloom]]'s: files index on their next rewrite,
@@ -3067,7 +3065,7 @@ object Snapshot {
       // the union is equivalent to applying each entry's own vector.
       // the mask columns get reserved __dvm_ names so a table whose
       // DATA schema contains 'file' or 'pos' still resolves unambiguously
-      val dv = spark.read.parquet(dvDirs.map(d => s"$table/$d"): _*)
+      val dv = readDv(spark, table, dvDirs)
         .select(col("file").as("__dvm_file"), col("pos").as("__dvm_pos"))
       val cols = base.columns
       logicalView(base.withColumn("__dv_file", relFileCol)
@@ -3077,6 +3075,17 @@ object Snapshot {
         .select(cols.map(col): _*))
     }
   }
+
+  /** The fixed schema of a deletion-vector dir's rows. */
+  private val dvSchema = StructType.fromDDL("file STRING, pos BIGINT")
+
+  /** The rows of deletion-vector dirs (table-relative) under
+    * [[dvSchema]]: no footer-inference job per DV-masked frame.
+    * [[fsck]] keeps its inferring read — an audit should see the
+    * bytes on disk. */
+  private def readDv(spark: SparkSession, table: String,
+                     dirs: Seq[String]): DataFrame =
+    spark.read.schema(dvSchema).parquet(dirs.map(d => s"$table/$d"): _*)
 
   /** A read that pruning left with no file: the manifest-schema empty
     * frame, built without opening or listing a single data file. Only
@@ -3122,17 +3131,50 @@ object Snapshot {
   private[graft] val utf8Ordering: Ordering[String] =
     (a: String, b: String) => cmpUtf8(a, b)
 
-  /** Does `[min,max]` (stats strings of `kind`) intersect `[lo,hi]`?
-    * All-null files (no min/max) never match a range predicate. */
-  private def admits(cs: ColStats, lo: Any, hi: Any): Boolean =
-    (cs.min, cs.max) match {
-      case (Some(mn), Some(mx)) if cs.kind == "num" =>
-        val (l, h) = (BigDecimal(lo.toString), BigDecimal(hi.toString))
-        BigDecimal(mx) >= l && BigDecimal(mn) <= h
-      case (Some(mn), Some(mx)) =>
-        cmpUtf8(mx, lo.toString) >= 0 && cmpUtf8(mn, hi.toString) <= 0
+  /** A value's numeric reading, when it has one. */
+  private def num(x: Any): Option[BigDecimal] =
+    scala.util.Try(BigDecimal(x.toString)).toOption
+
+  /** A (possibly open — `None` = unbounded on that side — possibly
+    * strict) bound on one column: what every range-like conjunct, and
+    * each value of an IN list, prunes through. */
+  private final case class Bound(lo: Option[Any], hi: Option[Any],
+                                 loStrict: Boolean = false,
+                                 hiStrict: Boolean = false)
+
+  /** The ONE stats comparator of every bounded predicate: does a
+    * file's `[min, max]` (stats strings of `cs.kind`) admit the
+    * bound? Numeric on num-kind stats ("10" is not < "9"),
+    * UTF-8-lexicographic otherwise. On num-kind stats a bound or stat
+    * with no numeric reading (a float's "Infinity"/"NaN") cannot
+    * disprove a match, so the file is kept: the string order is wrong
+    * for numbers ("20.0" < "5.0"), and the exact filter after pruning
+    * keeps the result right. Strict bounds compare strictly against
+    * the OPPOSING stat: a file whose max EQUALS a strict lower bound
+    * provably holds no matching row — skipping it saves the
+    * boundary-aligned file a daily retention sweep would otherwise
+    * rewrite verbatim every run. All-null files (no min/max) never
+    * match. The bounds parse once; the returned test runs per file. */
+  private def admits(b: Bound): ColStats => Boolean = {
+    val Bound(lo, hi, loStrict, hiStrict) = b
+    val (loN, hiN) = (lo.map(num), hi.map(num))
+    val numericBounds = loN.forall(_.isDefined) && hiN.forall(_.isDefined)
+    cs => (cs.min, cs.max) match {
+      case (Some(fMin), Some(fMax)) if cs.kind == "num" =>
+        (num(fMin), num(fMax)) match {
+          case (Some(mn), Some(mx)) if numericBounds =>
+            loN.flatten.forall(x => if (loStrict) mx > x else mx >= x) &&
+              hiN.flatten.forall(x => if (hiStrict) mn < x else mn <= x)
+          case _ => true
+        }
+      case (Some(fMin), Some(fMax)) =>
+        lo.forall { l => val c = cmpUtf8(fMax, l.toString)
+          if (loStrict) c > 0 else c >= 0 } &&
+          hi.forall { h => val c = cmpUtf8(fMin, h.toString)
+            if (hiStrict) c < 0 else c <= 0 }
       case _ => false
     }
+  }
 
   /** Partition-level pruning for a (possibly open, possibly strict)
     * bound predicate on partition SOURCE column `partFields(i)
@@ -3149,108 +3191,120 @@ object Snapshot {
     *  - bucket(n, c): only EQUALITY maps through a hash (lo == hi,
     *    non-strict); any real range keeps everything.
     *
-    * Unmappable bounds keep everything — pruning is an IO
-    * optimization, conservative by construction, never a semantics
+    * Staged so each stage runs as rarely as it can: applied to the
+    * manifest it reads the value space (once per conjunct), applied
+    * to a bound pair it maps the bounds into the component domain
+    * (once per IN value), and the test it returns runs once per
+    * partition key. Unmappable bounds keep everything — pruning is an
+    * IO optimization, conservative by construction, never a semantics
     * change. */
-  private def prunePartsBounds(m: Manifest, i: Int,
-                               lo: Option[Any], hi: Option[Any],
-                               loStrict: Boolean,
-                               hiStrict: Boolean): Seq[FileEntry] = {
-    val all = m.files
-    if (lo.isEmpty && hi.isEmpty) return all
-    def keep(f: String => Boolean): Seq[FileEntry] =
-      m.partitions.filter { case (p, _) => f(partComponent(m, p, i)) }
-        .values.flatten.toSeq
-    m.partFields(i) match {
-      case _: IdentityField =>
-        val comps = m.partitions.keys.map(p => partComponent(m, p, i)).toSeq
-        val nums = comps.map(c => c -> scala.util.Try(BigDecimal(c))).toMap
-        val numeric = nums.values.forall(_.isSuccess) &&
-          lo.forall(x => scala.util.Try(BigDecimal(x.toString)).isSuccess) &&
-          hi.forall(x => scala.util.Try(BigDecimal(x.toString)).isSuccess)
-        keep { c =>
-          if (numeric) {
-            val v = nums(c).get
-            lo.forall { l => val b = BigDecimal(l.toString)
-              if (loStrict) v > b else v >= b } &&
-              hi.forall { h => val b = BigDecimal(h.toString)
-                if (hiStrict) v < b else v <= b }
-          } else
-            lo.forall { l => val d = cmpUtf8(c, l.toString)
-              if (loStrict) d > 0 else d >= 0 } &&
-              hi.forall { h => val d = cmpUtf8(c, h.toString)
-                if (hiStrict) d < 0 else d <= 0 }
-        }
-      case tf: TimeField =>
-        val l = lo.map(timeKeyOf(tf, _))
-        val h = hi.map(timeKeyOf(tf, _))
-        if (l.exists(_.isEmpty) || h.exists(_.isEmpty)) all
-        else keep { c =>
-          l.flatten.forall(d => cmpUtf8(c, d) >= 0) &&
-            h.flatten.forall(d => cmpUtf8(c, d) <= 0)
-        }
-      case TruncateField(n, _) =>
-        // monotone like the time grains: a bound maps to its own
-        // truncation and strict bounds relax to inclusive (a strict
-        // bound still admits other rows of its truncation bucket).
-        // The MAPPING is type-dispatched (floor for integrals, prefix
-        // for strings), so the bound's runtime type must MATCH the
-        // source column's DECLARED domain — the manifest schema is
-        // authoritative (heuristics over stored components cannot
-        // distinguish a numeric-looking string prefix like "21" from
-        // an integral floor, and a cross-domain mapping is a wrong
-        // prune, not a conservative one). Integral bounds on an
-        // integral source floor and compare numerically ("100" is not
-        // < "20"); string bounds on a string source prefix and
-        // compare UTF-8; anything else keeps all files.
-        val domain = partSourceDomain(m, i)
-        val bounds = lo.toSeq ++ hi.toSeq
-        val integralBounds = bounds.forall {
-          case _: java.lang.Byte | _: java.lang.Short |
-               _: java.lang.Integer | _: java.lang.Long => true
-          case _ => false
-        }
-        val stringBounds = bounds.forall(_.isInstanceOf[String])
-        val l = lo.map(truncOf(n, _))
-        val h = hi.map(truncOf(n, _))
-        if (l.exists(_.isEmpty) || h.exists(_.isEmpty)) all
-        else if (domain.contains("int") && integralBounds) keep { c =>
-          scala.util.Try(BigDecimal(c)).toOption.forall { v =>
-            l.flatten.forall(d => v >= BigDecimal(d)) &&
-              h.flatten.forall(d => v <= BigDecimal(d))
+  private def prunePartsBounds(m: Manifest, i: Int): Bound => String => Boolean = {
+    val keepAll: String => Boolean = _ => true
+    def comp(p: String): String = partComponent(m, p, i)
+    val byBound: Bound => String => Boolean =
+      m.partFields(i) match {
+        case _: IdentityField =>
+          // a non-numeric value space stops parsing at its first
+          // component: a parse failure is an exception, and a string
+          // space of 100k partitions would otherwise throw 100k times
+          val comps = m.partitions.keys.map(comp)
+          val numericSpace = comps.forall(num(_).isDefined)
+          lazy val nums = comps.map(c => c -> BigDecimal(c)).toMap
+          lazy val strSource = partSourceDomain(m, i).contains("str")
+          b => {
+            val Bound(lo, hi, loStrict, hiStrict) = b
+            if (numericSpace && (lo ++ hi).forall(num(_).isDefined)) {
+              val (l, h) = (lo.flatMap(num), hi.flatMap(num))
+              p => { val v = nums(comp(p))
+                l.forall(x => if (loStrict) v > x else v >= x) &&
+                  h.forall(x => if (hiStrict) v < x else v <= x) }
+            } else if (numericSpace && !strSource)
+              // a bound with no numeric reading (a float's "Infinity")
+              // on a source not declared a string: the string order is
+              // wrong for numbers ("20.0" < "5.0") — keep everything
+              keepAll
+            else
+              p => { val c = comp(p)
+                lo.forall { l => val d = cmpUtf8(c, l.toString)
+                  if (loStrict) d > 0 else d >= 0 } &&
+                  hi.forall { h => val d = cmpUtf8(c, h.toString)
+                    if (hiStrict) d < 0 else d <= 0 } }
           }
-        }
-        else if (domain.contains("str") && stringBounds) keep { c =>
-          l.flatten.forall(d => cmpUtf8(c, d) >= 0) &&
-            h.flatten.forall(d => cmpUtf8(c, d) <= 0)
-        }
-        else all
-      case BucketField(n, _) =>
-        // equality maps through the hash only when the bound's
-        // runtime type matches the source domain — the hash is over
-        // the RENDERING, and a cross-domain bound can render
-        // differently than the stored value it matches after the
-        // residual filter's cast ("07" casts equal to 7 but hashes
-        // apart) — same authority as truncate: the manifest schema
-        val domain = partSourceDomain(m, i)
-        (lo, hi) match {
-          case (Some(a), Some(b)) if !loStrict && !hiStrict && a == b &&
-              bucketReplayable(a) &&
-              ((domain.contains("str") && a.isInstanceOf[String]) ||
-                (domain.contains("int") && !a.isInstanceOf[String])) =>
-            val want = bucketOf(n, a)
-            keep(_ == want)
-          case _ => all
-        }
-    }
+        case tf: TimeField =>
+          b => {
+            val l = b.lo.map(timeKeyOf(tf, _))
+            val h = b.hi.map(timeKeyOf(tf, _))
+            if (l.exists(_.isEmpty) || h.exists(_.isEmpty)) keepAll
+            else p => { val c = comp(p)
+              l.flatten.forall(d => cmpUtf8(c, d) >= 0) &&
+                h.flatten.forall(d => cmpUtf8(c, d) <= 0) }
+          }
+        case TruncateField(n, _) =>
+          // monotone like the time grains: a bound maps to its own
+          // truncation and strict bounds relax to inclusive (a strict
+          // bound still admits other rows of its truncation bucket).
+          // The MAPPING is type-dispatched (floor for integrals, prefix
+          // for strings), so the bound's runtime type must MATCH the
+          // source column's DECLARED domain — the manifest schema is
+          // authoritative (heuristics over stored components cannot
+          // distinguish a numeric-looking string prefix like "21" from
+          // an integral floor, and a cross-domain mapping is a wrong
+          // prune, not a conservative one). Integral bounds on an
+          // integral source floor and compare numerically ("100" is not
+          // < "20"); string bounds on a string source prefix and
+          // compare UTF-8; anything else keeps all files.
+          val domain = partSourceDomain(m, i)
+          b => {
+            val bounds = b.lo.toSeq ++ b.hi.toSeq
+            val integralBounds = bounds.forall {
+              case _: java.lang.Byte | _: java.lang.Short |
+                   _: java.lang.Integer | _: java.lang.Long => true
+              case _ => false
+            }
+            val stringBounds = bounds.forall(_.isInstanceOf[String])
+            val l = b.lo.map(truncOf(n, _))
+            val h = b.hi.map(truncOf(n, _))
+            if (l.exists(_.isEmpty) || h.exists(_.isEmpty)) keepAll
+            else if (domain.contains("int") && integralBounds) p =>
+              num(comp(p)).forall { v =>
+                l.flatten.forall(d => v >= BigDecimal(d)) &&
+                  h.flatten.forall(d => v <= BigDecimal(d))
+              }
+            else if (domain.contains("str") && stringBounds) p => {
+              val c = comp(p)
+              l.flatten.forall(d => cmpUtf8(c, d) >= 0) &&
+                h.flatten.forall(d => cmpUtf8(c, d) <= 0)
+            }
+            else keepAll
+          }
+        case BucketField(n, _) =>
+          // equality maps through the hash only when the bound's
+          // runtime type matches the source domain — the hash is over
+          // the RENDERING, and a cross-domain bound can render
+          // differently than the stored value it matches after the
+          // residual filter's cast ("07" casts equal to 7 but hashes
+          // apart) — same authority as truncate: the manifest schema
+          val domain = partSourceDomain(m, i)
+          b => b match {
+            case Bound(Some(a), Some(z), false, false) if a == z &&
+                bucketReplayable(a) &&
+                ((domain.contains("str") && a.isInstanceOf[String]) ||
+                  (domain.contains("int") && !a.isInstanceOf[String])) =>
+              val want = bucketOf(n, a)
+              p => comp(p) == want
+            case _ => keepAll
+          }
+      }
+    b => if (b.lo.isEmpty && b.hi.isEmpty) keepAll else byBound(b)
   }
 
   /** The DECLARED type domain of partition field `i`'s source column
     * — "str" for string, "int" for integrals, None otherwise (or for
     * a pre-schema legacy manifest: conservative keep-all). The parsed
-    * domain map is memoized per schema DDL: `pruneIn` reaches here
-    * once per IN-list element, and a Catalyst parser invocation per
-    * element per query is pure repeated work on an immutable string. */
+    * domain map is memoized per schema DDL: every pruned read on a
+    * truncate or bucket partition reaches here, and a Catalyst parser
+    * invocation per query is pure repeated work on an immutable
+    * string. */
   private val ddlDomainMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
 
@@ -3268,35 +3322,245 @@ object Snapshot {
       domains.get(m.partFields(i).source)
     }
 
-  /** The manifest entries of `version` (latest if 0) surviving a
-    * `column BETWEEN lo AND hi` predicate — partition-level pruning
-    * when `column` is a partition source column (transform-mapped,
-    * see [[prunePartsBounds]]), per-file stats pruning when it is a
-    * tracked stats column; a TRANSFORMED partition source that is
-    * also stats-tracked intersects both (day-level partition cut,
-    * then per-file ranges). Exposed for tests/diagnostics;
-    * `readWhere` is the serving path. */
-  def pruneRange(table: String, column: String, lo: Any, hi: Any,
-                 version: Int = 0): (Seq[FileEntry], Int) = {
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val total = m.files.size
-    val fIdx = m.partFields.indexWhere(_.source == column)
-    val kept =
-      if (fIdx >= 0) {
-        val byPart = prunePartsBounds(m, fIdx, Some(lo), Some(hi),
-          loStrict = false, hiStrict = false)
-        if (m.partFields(fIdx).isInstanceOf[IdentityField] ||
-            !m.statsCols.contains(column)) byPart
-        else byPart.filter(f => f.stats.get(column).forall(admits(_, lo, hi)))
-      } else {
-        require(m.statsCols.contains(column),
-          s"snapshot $table: no stats tracked for '$column' " +
-            s"(tracked: ${m.statsCols.mkString(",")})")
-        m.files.filter(f => f.stats.get(column).forall(admits(_, lo, hi)))
-      }
-    (kept, total)
+  /** One conjunct of a pruned read ([[prune]], [[read]]) or of a
+    * predicate-DML condition — the shapes the manifest can PROVE
+    * file-exhaustively (the files pruning drops really hold no
+    * matching row). */
+  sealed trait DmlPred { def column: String }
+  /** `column BETWEEN lo AND hi` over a partition or stats column:
+    * partition-level pruning through the transform-mapped domain
+    * ([[prunePartsBounds]]), per-file min/max otherwise; a
+    * TRANSFORMED partition source that is also stats-tracked checks
+    * both (day-level partition cut, then per-file ranges). */
+  final case class RangePred(column: String, lo: Any, hi: Any) extends DmlPred
+  /** `column IN (values)` — equality is the one-value list — over any
+    * indexed column: partition value, min/max stats and the per-file
+    * BLOOM filter (declared `bloomCols`) together. The bloom is what
+    * makes point lookups cheap on columns UNCORRELATED with the file
+    * layout: their per-file ranges are near-full-width, while a
+    * negative bloom test PROVES absence — an absent key touches no
+    * file (up to the documented FP rate). A file is kept iff SOME
+    * single value passes the partition, stats and bloom checks
+    * together. */
+  final case class InPred(column: String, values: Seq[Any]) extends DmlPred {
+    require(values.nonEmpty, "snapshot DML: empty IN list")
+    require(values.forall(_ != null),
+      "snapshot DML: NULL in an IN list never matches — drop it upstream")
   }
+  /** A HALF-OPEN (or strict) bound — the shape SQL pushdown and the
+    * retention sweep produce (`ts >= cutoff`, `ts < horizon`):
+    * strictness-aware, so a boundary-aligned file whose max equals a
+    * strict lower bound is provably matchless and skips. At least one
+    * side required. */
+  final case class BoundPred(column: String, lo: Option[Any], hi: Option[Any],
+                             loStrict: Boolean = false,
+                             hiStrict: Boolean = false) extends DmlPred {
+    require(lo.isDefined || hi.isDefined,
+      "snapshot DML: a bound predicate needs at least one side")
+    require(lo.forall(_ != null) && hi.forall(_ != null),
+      "snapshot DML: a NULL bound never matches — drop it upstream")
+  }
+  /** SUBSTRING `column LIKE '%needle%'` via the per-file TRIGRAM
+    * filter (`3g:<column>` in bloomCols — [[trackTrigram]]): a file
+    * holding an occurrence of the needle holds every one of its
+    * code-point 3-grams, so any gram the file's filter provably lacks
+    * is a proof of absence. Conservative everywhere else: needles
+    * under 3 code points have no grams (keep all), files from before
+    * tracking carry no filter (keep), and an all-null/all-short file
+    * aggregates an EMPTY filter that correctly tests negative for
+    * every gram. */
+  final case class ContainsPred(column: String, needle: String) extends DmlPred {
+    require(needle != null, "snapshot: a NULL needle never matches")
+  }
+  /** PREFIX `column LIKE 'prefix%'` via per-file min/max stats: every
+    * matching value sits in `[prefix, nextPrefix)` under UTF-8 order,
+    * so a file whose max < prefix or min >= nextPrefix holds no match.
+    * Sound ONLY with the lexicographic comparator on STRING-kind stats
+    * — [[admits]]' numeric-when-parseable rule would order a digit
+    * prefix numerically ("2" admits "100" but not "21"), so the span
+    * check is keyed on the per-file stat KIND (numeric-kind stats keep
+    * conservatively; an all-null file never LIKE-matches and skips). */
+  final case class PrefixPred(column: String, prefix: String) extends DmlPred {
+    require(prefix != null && prefix.nonEmpty,
+      "snapshot: an empty prefix matches everything — read plainly")
+  }
+
+  /** The smallest string GREATER (UTF-8 order) than every string
+    * with prefix `p`: last code point incremented (skipping the
+    * surrogate gap — an unpaired surrogate would mangle through
+    * UTF-8); max-code-point tails drop and carry; an all-max prefix
+    * has no upper bound (None). */
+  private[graft] def nextPrefix(p: String): Option[String] = {
+    val cps = p.codePoints().toArray
+    var i = cps.length - 1
+    while (i >= 0 && cps(i) == Character.MAX_CODE_POINT) i -= 1
+    if (i < 0) None
+    else {
+      val inc0 = cps(i) + 1
+      val inc = if (inc0 >= 0xD800 && inc0 <= 0xDFFF) 0xE000 else inc0
+      Some(new String(cps, 0, i) + new String(Array(inc), 0, 1))
+    }
+  }
+
+  /** One conjunct compiled against one manifest: `rank` orders the
+    * per-file checks cheapest first (min/max, bloom, trigram, prefix
+    * span), and `inPartition(p)` is None when the conjunct rules out
+    * partition `p` whole, else the test each of its files must pass. */
+  private final case class Conjunct(rank: Int,
+                                    inPartition: String => Option[FileEntry => Boolean])
+
+  private def compile(table: String, m: Manifest, pred: DmlPred): Conjunct = {
+    def requireStats(c: String): Unit =
+      require(m.statsCols.contains(c),
+        s"snapshot $table: no stats tracked for '$c' " +
+          s"(tracked: ${m.statsCols.mkString(",")})")
+    // the partition-domain test and the min/max file test of one
+    // bound on `c`: an identity partition value IS the column value,
+    // while a transformed one (or no partition) narrows by per-file
+    // stats when the column is tracked
+    def bounded(c: String): Bound => (String => Boolean, FileEntry => Boolean) = {
+      val fIdx = m.partFields.indexWhere(_.source == c)
+      val inParts: Bound => String => Boolean =
+        if (fIdx >= 0) prunePartsBounds(m, fIdx) else _ => _ => true
+      val byStats = m.statsCols.contains(c) &&
+        (fIdx < 0 || !m.partFields(fIdx).isInstanceOf[IdentityField])
+      b => {
+        val inRange = admits(b)
+        (inParts(b), if (byStats) f => f.stats.get(c).forall(inRange) else _ => true)
+      }
+    }
+    def range(c: String, b: Bound): Conjunct = {
+      if (!m.partSources.contains(c)) requireStats(c)
+      val (inPart, inFile) = bounded(c)(b)
+      Conjunct(0, p => if (inPart(p)) Some(inFile) else None)
+    }
+    pred match {
+      case RangePred(c, lo, hi) => range(c, Bound(Some(lo), Some(hi)))
+      case BoundPred(c, lo, hi, loStrict, hiStrict) =>
+        range(c, Bound(lo, hi, loStrict, hiStrict))
+      case InPred(c, values) =>
+        val hasBloom = m.bloomCols.contains(c)
+        require(m.partSources.contains(c) || m.statsCols.contains(c) || hasBloom,
+          s"snapshot $table: no index for '$c' (partition: ${m.partitionLabel}; " +
+            s"stats: ${m.statsCols.mkString(",")}; blooms: ${m.bloomCols.mkString(",")})")
+        val point = bounded(c)
+        val perValue = values.map { v =>
+          val (inPart, inStats) = point(Bound(Some(v), Some(v)))
+          val s = v.toString
+          // missing bloom on a bloom-tracked column = conservative keep
+          // (an all-null file aggregates an EMPTY bloom, which correctly
+          // tests negative for every value)
+          (inPart, (f: FileEntry) => inStats(f) && (!hasBloom ||
+            f.blooms.get(c).forall(graft.functions.BloomExprs.mightContain(_, s))))
+        }
+        Conjunct(1, p => {
+          val admitted = perValue.collect { case (inPart, inFile) if inPart(p) => inFile }
+          if (admitted.isEmpty) None else Some(f => admitted.exists(_(f)))
+        })
+      case ContainsPred(c, needle) =>
+        val spec = TriPrefix + c
+        require(m.bloomCols.contains(spec),
+          s"snapshot $table: no trigram index for '$c' (blooms: " +
+            s"${m.bloomCols.mkString(",")}) — trackTrigram() + compact() to index")
+        // hash the needle's grams ONCE; per file only deserialize + test
+        val hs = graft.functions.BloomExprs.substringHashes(needle)
+        val inFile: FileEntry => Boolean = f => f.blooms.get(spec).forall(
+          graft.functions.BloomExprs.mightContainHashes(_, hs))
+        Conjunct(2, _ => Some(inFile))
+      case PrefixPred(c, prefix) =>
+        requireStats(c)
+        val hi = nextPrefix(prefix)
+        val inFile: FileEntry => Boolean = f => f.stats.get(c).forall { cs =>
+          if (cs.kind != "str") true
+          else (cs.min, cs.max) match {
+            case (Some(mn), Some(mx)) =>
+              cmpUtf8(mx, prefix) >= 0 && hi.forall(h => cmpUtf8(mn, h) < 0)
+            case _ => false
+          }
+        }
+        Conjunct(3, _ => Some(inFile))
+    }
+  }
+
+  /** [[prune]]'s pass over an already-read manifest: every conjunct
+    * compiled once, its partition-domain check run once per partition,
+    * then one walk over the surviving partitions' files that applies
+    * the per-file checks cheapest first. A file is kept only if EVERY
+    * conjunct admits it. Kept entries come back in `m.files` order. */
+  private[graft] def keptFiles(table: String, m: Manifest,
+                               preds: Seq[DmlPred]): Seq[FileEntry] = {
+    require(preds.nonEmpty, "snapshot prune needs at least one predicate")
+    val conjuncts = preds.map(compile(table, m, _)).sortBy(_.rank)
+    m.partitions.iterator.flatMap { case (p, fs) =>
+      val tests = conjuncts.map(_.inPartition(p))
+      if (tests.exists(_.isEmpty)) Iterator.empty
+      else {
+        val inFile = tests.flatten
+        fs.iterator.filter(f => inFile.forall(_(f)))
+      }
+    }.toVector
+  }
+
+  /** The manifest entries of `version` (latest if 0) that may hold a
+    * row matching the CONJUNCTION `preds`, and the version's total
+    * file count. Resolves the version and reads the manifest once,
+    * then checks every conjunct in one pass ([[keptFiles]]): a file is
+    * read only if all of its indexes admit all conjuncts. Under a
+    * zorder [[Layout]] the per-file ranges are narrow on every layout
+    * key at once, so multi-predicate selectivities multiply
+    * (SnapshotSpec quantifies). A conjunct on a column with no usable
+    * index refuses, naming what the table tracks. */
+  def prune(table: String, preds: Seq[DmlPred],
+            version: Int = 0): (Seq[FileEntry], Int) = {
+    val m = readManifest(table, if (version > 0) version else currentVersion(table))
+    (keptFiles(table, m, preds), m.files.size)
+  }
+
+  /** A conjunct as the plain comparison a pruned read filters by (no
+    * NULL wrapper, so parquet filter pushdown sees it). */
+  private def exactCol(p: DmlPred): Column = p match {
+    case RangePred(c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi)
+    case InPred(c, Seq(v)) => col(c) === lit(v)
+    case InPred(c, vs) => col(c).isin(vs: _*)
+    case BoundPred(c, lo, hi, loStrict, hiStrict) =>
+      (lo.map(v => if (loStrict) col(c) > lit(v) else col(c) >= lit(v)).toSeq ++
+        hi.map(v => if (hiStrict) col(c) < lit(v) else col(c) <= lit(v)))
+        .reduce(_ && _)
+    case ContainsPred(c, needle) => col(c).contains(needle)
+    case PrefixPred(c, prefix) => col(c).startsWith(prefix)
+  }
+
+  /**
+   * Pruned read: only the files [[prune]] keeps are handed to the
+   * scan, and every conjunct is ALSO applied as a filter, so the
+   * result is exact — pruning is an IO optimization, never a
+   * semantics change (a bloom or gram false positive is filtered
+   * away). Reads the manifest once, as [[prune]] does; zero kept files
+   * short-circuit to an empty frame without touching storage.
+   */
+  def read(spark: SparkSession, table: String, preds: Seq[DmlPred],
+           version: Int = 0): DataFrame = {
+    val m = readManifest(table, if (version > 0) version else currentVersion(table))
+    val kept = keptFiles(table, m, preds)
+    val base =
+      if (kept.isEmpty) emptyRead(spark, table, m)
+      else readManifestFiles(spark, table, m, kept)
+    base.filter(preds.map(exactCol).reduce(_ && _))
+  }
+
+  /** [[prune]] of `column = value`. Kept only because the benchmark
+    * harness (perfbench/src/main/scala/perfbench/Workloads.scala)
+    * compiles against it; new callers use [[prune]]. */
+  def pruneEq(table: String, column: String, value: Any,
+              version: Int = 0): (Seq[FileEntry], Int) =
+    prune(table, Seq(InPred(column, Seq(value))), version)
+
+  /** [[read]] of `column = value`. Kept only because the benchmark
+    * harness (perfbench/src/main/scala/perfbench/Workloads.scala)
+    * compiles against it; new callers use [[read]]. */
+  def readWhereEq(spark: SparkSession, table: String, column: String,
+                  value: Any, version: Int = 0): DataFrame =
+    read(spark, table, Seq(InPred(column, Seq(value))), version)
 
   /** One [[fsck]] finding: what is wrong with which file. */
   final case class FsckIssue(version: Int, file: String, problem: String)
@@ -3443,272 +3707,6 @@ object Snapshot {
     issues.result()
   }
 
-  /** CONJUNCTIVE multi-column pruning: the manifest entries surviving
-    * every `(column, lo, hi)` predicate at once — a file is read only
-    * if ALL its ranges intersect. Under a zorder [[Layout]] the
-    * per-file ranges are narrow on every layout key simultaneously,
-    * so multi-predicate selectivities multiply instead of the
-    * second predicate pruning nothing (SnapshotSpec quantifies). */
-  def pruneAll(table: String, preds: Seq[(String, Any, Any)],
-               version: Int = 0): (Seq[FileEntry], Int) = {
-    require(preds.nonEmpty, "pruneAll needs at least one predicate")
-    val v = if (version > 0) version else currentVersion(table)
-    val total = readManifest(table, v).files.size
-    val kept = preds.map { case (c, lo, hi) =>
-      pruneRange(table, c, lo, hi, v)._1.map(_.path).toSet }
-      .reduce(_ intersect _)
-    val m = readManifest(table, v)
-    (m.files.filter(f => kept.contains(f.path)), total)
-  }
-
-  /**
-   * Stats-pruned range read: only files whose manifest stats admit
-   * `column ∈ [lo, hi]` are handed to the scan (the predicate is ALSO
-   * applied, so the result is exact — pruning is an IO optimization,
-   * never a semantics change). Zero matching files short-circuits to
-   * an empty frame without touching storage.
-   */
-  def readWhere(spark: SparkSession, table: String, column: String,
-                lo: Any, hi: Any, version: Int = 0): DataFrame =
-    readWhereAll(spark, table, Seq((column, lo, hi)), version)
-
-  /** [[readWhere]] for a CONJUNCTION of range predicates (see
-    * [[pruneAll]]); every predicate is also applied as a filter. */
-  def readWhereAll(spark: SparkSession, table: String,
-                   preds: Seq[(String, Any, Any)], version: Int = 0): DataFrame = {
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val (kept, _) = pruneAll(table, preds, v)
-    val base =
-      if (kept.isEmpty) emptyRead(spark, table, m)
-      else readManifestFiles(spark, table, m, kept)
-    preds.foldLeft(base) { case (df, (c, lo, hi)) =>
-      df.filter(col(c) >= lit(lo) && col(c) <= lit(hi)) }
-  }
-
-  /**
-   * POINT-LOOKUP pruning: the manifest entries that might contain
-   * `column = value`, combining every index the manifest has for the
-   * column — partition pruning (partition column), min/max stats
-   * (tracked stats columns), and the per-file BLOOM filter (declared
-   * `bloomCols`). The bloom is what makes point lookups cheap on
-   * columns UNCORRELATED with the file layout: their per-file ranges
-   * are near-full-width (stats keep everything), while a negative
-   * bloom test PROVES absence — an existence check or a point read
-   * touches only the files that really might hold the key, and an
-   * absent key touches none (up to the documented FP rate) without a
-   * single data-file open.
-   */
-  def pruneEq(table: String, column: String, value: Any,
-              version: Int = 0): (Seq[FileEntry], Int) = {
-    require(value != null, "pruneEq: a point lookup is never `= NULL`")
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val total = m.files.size
-    val hasStats = m.partFields.exists(_.source == column) ||
-      m.statsCols.contains(column)
-    val hasBloom = m.bloomCols.contains(column)
-    require(hasStats || hasBloom,
-      s"snapshot $table: no index for '$column' (partition: ${m.partitionLabel}; " +
-        s"stats: ${m.statsCols.mkString(",")}; blooms: ${m.bloomCols.mkString(",")})")
-    val statsKept: Set[String] =
-      if (hasStats) pruneRange(table, column, value, value, v)._1.map(_.path).toSet
-      else m.files.map(_.path).toSet
-    val s = value.toString
-    val kept = m.files.filter { f =>
-      statsKept.contains(f.path) &&
-        // missing bloom on a bloom-tracked column = conservative keep
-        // (an all-null file aggregates an EMPTY bloom, which correctly
-        // tests negative for every value)
-        (!hasBloom || f.blooms.get(column).forall(
-          graft.functions.BloomExprs.mightContain(_, s)))
-    }
-    (kept, total)
-  }
-
-  /** Point read `column = value`: [[pruneEq]] file skipping + the
-    * exact filter (pruning is an IO optimization, never a semantics
-    * change — a bloom false positive is filtered away). */
-  def readWhereEq(spark: SparkSession, table: String, column: String,
-                  value: Any, version: Int = 0): DataFrame = {
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val (kept, _) = pruneEq(table, column, value, v)
-    val base =
-      if (kept.isEmpty) emptyRead(spark, table, m)
-      else readManifestFiles(spark, table, m, kept)
-    base.filter(col(column) === lit(value))
-  }
-
-  /** SUBSTRING prune `column LIKE '%needle%'` via the per-file
-    * TRIGRAM filter (`3g:<column>` in bloomCols — [[trackTrigram]]):
-    * a file holding an occurrence of the needle holds every one of
-    * its code-point 3-grams, so any gram the file's filter provably
-    * lacks is a proof of absence and the file is skipped — substring
-    * search priced by matching files, not table size. Conservative
-    * everywhere else: needles under 3 code points have no grams
-    * (keep all), files from before tracking carry no filter (keep),
-    * and an all-null/all-short file aggregates an EMPTY filter that
-    * correctly tests negative for every gram. */
-  def pruneContains(table: String, column: String, needle: String,
-                    version: Int = 0): (Seq[FileEntry], Int) = {
-    require(needle != null, "pruneContains: null needle")
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val spec = TriPrefix + column
-    require(m.bloomCols.contains(spec),
-      s"snapshot $table: no trigram index for '$column' (blooms: " +
-        s"${m.bloomCols.mkString(",")}) — trackTrigram() + compact() to index")
-    // hash the needle's grams ONCE; per file only deserialize + test
-    val hs = graft.functions.BloomExprs.substringHashes(needle)
-    val kept = m.files.filter(f => f.blooms.get(spec).forall(
-      graft.functions.BloomExprs.mightContainHashes(_, hs)))
-    (kept, m.files.size)
-  }
-
-  /** Substring read `column LIKE '%needle%'`: [[pruneContains]] file
-    * skipping + the exact `contains` filter (pruning is an IO
-    * optimization, never a semantics change — a gram false positive
-    * is filtered away). */
-  def readWhereContains(spark: SparkSession, table: String, column: String,
-                        needle: String, version: Int = 0): DataFrame = {
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val (kept, _) = pruneContains(table, column, needle, v)
-    val base =
-      if (kept.isEmpty) emptyRead(spark, table, m)
-      else readManifestFiles(spark, table, m, kept)
-    base.filter(col(column).contains(needle))
-  }
-
-  /** The smallest string GREATER (UTF-8 order) than every string
-    * with prefix `p`: last code point incremented (skipping the
-    * surrogate gap — an unpaired surrogate would mangle through
-    * UTF-8); max-code-point tails drop and carry; an all-max prefix
-    * has no upper bound (None). */
-  private[graft] def nextPrefix(p: String): Option[String] = {
-    val cps = p.codePoints().toArray
-    var i = cps.length - 1
-    while (i >= 0 && cps(i) == Character.MAX_CODE_POINT) i -= 1
-    if (i < 0) None
-    else {
-      val inc0 = cps(i) + 1
-      val inc = if (inc0 >= 0xD800 && inc0 <= 0xDFFF) 0xE000 else inc0
-      Some(new String(cps, 0, i) + new String(Array(inc), 0, 1))
-    }
-  }
-
-  /** PREFIX prune `column LIKE 'prefix%'` via per-file min/max stats:
-    * every matching value sits in `[prefix, nextPrefix)` under UTF-8
-    * order, so a file whose max < prefix or min >= nextPrefix holds
-    * no match. Sound ONLY with the lexicographic comparator on
-    * STRING-kind stats — [[pruneBounds]]' numeric-when-parseable rule
-    * would order a digit prefix numerically ("2" admits "100" but
-    * not "21"), so prefix pruning has its own compare keyed on the
-    * per-file stat KIND (numeric-kind stats keep conservatively; an
-    * all-null file never LIKE-matches and skips). */
-  def prunePrefix(table: String, column: String, prefix: String,
-                  version: Int = 0): (Seq[FileEntry], Int) = {
-    require(prefix != null && prefix.nonEmpty,
-      "prunePrefix: an empty prefix matches everything — read plainly")
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    require(m.statsCols.contains(column),
-      s"snapshot $table: no stats tracked for '$column' " +
-        s"(tracked: ${m.statsCols.mkString(",")})")
-    val hi = nextPrefix(prefix)
-    val kept = m.files.filter { f =>
-      f.stats.get(column).forall { cs =>
-        if (cs.kind != "str") true
-        else (cs.min, cs.max) match {
-          case (Some(mn), Some(mx)) =>
-            cmpUtf8(mx, prefix) >= 0 && hi.forall(h => cmpUtf8(mn, h) < 0)
-          case _ => false
-        }
-      }
-    }
-    (kept, m.files.size)
-  }
-
-  /** Prefix read `column LIKE 'prefix%'`: [[prunePrefix]] file
-    * skipping + the exact `startsWith` filter. */
-  def readWhereStartsWith(spark: SparkSession, table: String, column: String,
-                          prefix: String, version: Int = 0): DataFrame = {
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val (kept, _) = prunePrefix(table, column, prefix, v)
-    val base =
-      if (kept.isEmpty) emptyRead(spark, table, m)
-      else readManifestFiles(spark, table, m, kept)
-    base.filter(col(column).startsWith(prefix))
-  }
-
-  /** [[pruneEq]] over a VALUE SET: the union of each value's kept
-    * files — the IN-list lookup (e.g. an IVF query batch's probed
-    * cells). Bounded driver work: |values| × manifest scans, no IO. */
-  def pruneIn(table: String, column: String, values: Seq[Any],
-              version: Int = 0): (Seq[FileEntry], Int) = {
-    require(values.nonEmpty, "pruneIn: empty value set")
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val kept = values.flatMap(x => pruneEq(table, column, x, v)._1.map(_.path)).toSet
-    (m.files.filter(f => kept.contains(f.path)), m.files.size)
-  }
-
-  /** [[pruneRange]] with OPEN bounds (`None` = unbounded on that
-    * side) — the shape SQL pushdown produces (`c > v` has no upper
-    * bound). `(None, None)` keeps every file. Same comparison rules
-    * as [[pruneRange]]: numeric when the value space and bounds all
-    * parse numerically, lexicographic otherwise; all-null files never
-    * match. Serves [[graft.sources.GraftDataSource]]'s file skipping. */
-  def pruneBounds(table: String, column: String, lo: Option[Any],
-                  hi: Option[Any], version: Int = 0,
-                  loStrict: Boolean = false,
-                  hiStrict: Boolean = false): (Seq[FileEntry], Int) = {
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val total = m.files.size
-    if (lo.isEmpty && hi.isEmpty) return (m.files, total)
-    // strict bounds compare strictly against the OPPOSING stat: a file
-    // whose max EQUALS a strict lower bound provably holds no matching
-    // row — skipping it saves the boundary-aligned file a daily
-    // retention sweep would otherwise rewrite verbatim every run
-    def admitsOpen(kind: String, mn: Option[String], mx: Option[String]): Boolean =
-      (mn, mx) match {
-        case (Some(fMin), Some(fMax)) =>
-          val numeric = kind == "num" &&
-            lo.forall(x => scala.util.Try(BigDecimal(x.toString)).isSuccess) &&
-            hi.forall(x => scala.util.Try(BigDecimal(x.toString)).isSuccess)
-          if (numeric)
-            lo.forall { l => val b = BigDecimal(l.toString)
-              if (loStrict) BigDecimal(fMax) > b else BigDecimal(fMax) >= b } &&
-              hi.forall { h => val b = BigDecimal(h.toString)
-                if (hiStrict) BigDecimal(fMin) < b else BigDecimal(fMin) <= b }
-          else
-            lo.forall { l => val c = cmpUtf8(fMax, l.toString)
-              if (loStrict) c > 0 else c >= 0 } &&
-              hi.forall { h => val c = cmpUtf8(fMin, h.toString)
-                if (hiStrict) c < 0 else c <= 0 }
-        case _ => false
-      }
-    val fIdx = m.partFields.indexWhere(_.source == column)
-    val kept =
-      if (fIdx >= 0) {
-        val byPart = prunePartsBounds(m, fIdx, lo, hi, loStrict, hiStrict)
-        if (m.partFields(fIdx).isInstanceOf[IdentityField] ||
-            !m.statsCols.contains(column)) byPart
-        else byPart.filter(f => f.stats.get(column)
-          .forall(cs => admitsOpen(cs.kind, cs.min, cs.max)))
-      } else {
-        require(m.statsCols.contains(column),
-          s"snapshot $table: no stats tracked for '$column' " +
-            s"(tracked: ${m.statsCols.mkString(",")})")
-        m.files.filter(f => f.stats.get(column)
-          .forall(cs => admitsOpen(cs.kind, cs.min, cs.max)))
-      }
-    (kept, total)
-  }
-
   /** Connector read entry: `version`'s frame restricted to `only`
     * manifest entries (all when null) — the same DV-masked,
     * column-mapped, manifest-schema scan [[readAt]] produces. */
@@ -3718,19 +3716,6 @@ object Snapshot {
     val m = readManifest(table, version)
     if (only != null && only.isEmpty) emptyRead(spark, table, m)
     else readManifestFiles(spark, table, m, only)
-  }
-
-  /** Read `column IN (values)` through [[pruneIn]] file skipping + the
-    * exact filter. */
-  def readWhereIn(spark: SparkSession, table: String, column: String,
-                  values: Seq[Any], version: Int = 0): DataFrame = {
-    val v = if (version > 0) version else currentVersion(table)
-    val m = readManifest(table, v)
-    val (kept, _) = pruneIn(table, column, values, v)
-    val base =
-      if (kept.isEmpty) emptyRead(spark, table, m)
-      else readManifestFiles(spark, table, m, kept)
-    base.filter(col(column).isin(values: _*))
   }
 
   // ------------------------------------------------------- change feed
@@ -3806,71 +3791,15 @@ object Snapshot {
 
   // ------------------------------------------------------ predicate DML
 
-  /** One conjunct of a predicate-DML condition — the shapes the
-    * manifest can PROVE file-exhaustively (the untouched files really
-    * hold no matching rows): a bounded range over a partition/stats
-    * column ([[pruneRange]]), or an IN list over any indexed column —
-    * partition, stats, or bloom ([[pruneIn]], so a bloom-only column
-    * prunes point sets too). Equality is a degenerate range. */
-  sealed trait DmlPred { def column: String }
-  final case class RangePred(column: String, lo: Any, hi: Any) extends DmlPred
-  final case class InPred(column: String, values: Seq[Any]) extends DmlPred {
-    require(values.nonEmpty, "snapshot DML: empty IN list")
-    require(values.forall(_ != null),
-      "snapshot DML: NULL in an IN list never matches — drop it upstream")
-  }
-  /** A HALF-OPEN (or strict) bound — the retention-sweep shape
-    * (`ts >= cutoff`, `ts < horizon`): file pruning is the
-    * open-bounds stats fold ([[pruneBounds]], strictness-aware — a
-    * boundary-aligned file whose max equals a strict lower bound is
-    * provably matchless and skips). At least one side required. */
-  final case class BoundPred(column: String, lo: Option[Any], hi: Option[Any],
-                             loStrict: Boolean = false,
-                             hiStrict: Boolean = false) extends DmlPred {
-    require(lo.isDefined || hi.isDefined,
-      "snapshot DML: a bound predicate needs at least one side")
-    require(lo.forall(_ != null) && hi.forall(_ != null),
-      "snapshot DML: a NULL bound never matches — drop it upstream")
-  }
-
   private def toDml(preds: Seq[(String, Any, Any)]): Seq[DmlPred] =
     preds.map { case (c, lo, hi) => RangePred(c, lo, hi) }
 
   /** The conjunction of DML predicates as a Column (NULL-safe: a
     * NULL operand makes the predicate false — SQL DML semantics, a
-    * NULL never matches `BETWEEN` or `IN`). */
+    * NULL never matches `BETWEEN` or `IN`, also under the NOT a
+    * delete filters by). */
   private def predCol(preds: Seq[DmlPred]): Column =
-    preds.map {
-      case RangePred(c, lo, hi) =>
-        coalesce(col(c) >= lit(lo) && col(c) <= lit(hi), lit(false))
-      case InPred(c, vs) =>
-        coalesce(col(c).isin(vs: _*), lit(false))
-      case BoundPred(c, lo, hi, loS, hiS) =>
-        val sides =
-          lo.map(v => if (loS) col(c) > lit(v) else col(c) >= lit(v)).toSeq ++
-          hi.map(v => if (hiS) col(c) < lit(v) else col(c) <= lit(v))
-        coalesce(sides.reduce(_ && _), lit(false))
-    }.reduce(_ && _)
-
-  /** [[pruneAll]] over the DML conjunct forms: per-conjunct kept sets
-    * intersect (a file is a candidate only if EVERY conjunct admits
-    * it) — ranges through the stats fold, IN lists through the full
-    * point-lookup stack (partition value / min-max / bloom). */
-  private def pruneDml(table: String, preds: Seq[DmlPred],
-                       version: Int): Seq[FileEntry] = {
-    require(preds.nonEmpty, "snapshot DML needs at least one predicate")
-    val m = readManifest(table, version)
-    val kept = preds.map {
-      case RangePred(c, lo, hi) =>
-        pruneRange(table, c, lo, hi, version)._1.map(_.path).toSet
-      case InPred(c, vs) =>
-        pruneIn(table, c, vs, version)._1.map(_.path).toSet
-      case BoundPred(c, lo, hi, loS, hiS) =>
-        pruneBounds(table, c, lo, hi, version,
-          loStrict = loS, hiStrict = hiS)._1.map(_.path).toSet
-    }.reduce(_ intersect _)
-    m.files.filter(f => kept.contains(f.path))
-  }
+    preds.map(p => coalesce(exactCol(p), lit(false))).reduce(_ && _)
 
   /** Shared commit machinery of [[deleteWhere]] and [[updateWhere]]:
     * rewrite ONLY the candidate files through `transform`, carry every
@@ -3882,7 +3811,7 @@ object Snapshot {
       val cur = currentVersion(table)
       require(cur > 0, s"snapshot $table does not exist")
       val m = readManifest(table, cur)
-      val candidates = pruneDml(table, preds, cur)
+      val candidates = keptFiles(table, m, preds)
       val v = cur + 1
       if (candidates.isEmpty) { // proven no-match: audit-only commit
         writeManifest(table, m.copy(version = v, parent = cur, op = op,
@@ -3923,7 +3852,7 @@ object Snapshot {
 
   /**
    * `DELETE FROM table WHERE <conjunction of range predicates>` as a
-   * copy-on-write commit at FILE granularity: [[pruneAll]] names the
+   * copy-on-write commit at FILE granularity: [[prune]] names the
    * files whose stats admit the predicate; ONLY those are rewritten
    * (minus the matching rows — NULL predicate rows survive, SQL
    * semantics); every other file carries forward verbatim in the new
@@ -4022,9 +3951,9 @@ object Snapshot {
       val cur = currentVersion(table)
       require(cur > 0, s"snapshot $table does not exist")
       val m = readManifest(table, cur)
-      val (candidates, _) = pruneAll(table, preds, cur)
-      commitDv(spark, table, m, candidates,
-        raw => raw.filter(predCol(toDml(preds))))
+      val dml = toDml(preds)
+      commitDv(spark, table, m, keptFiles(table, m, dml),
+        raw => raw.filter(predCol(dml)))
     }
 
   /**
@@ -4052,15 +3981,12 @@ object Snapshot {
       val candidates =
         if (sample.isEmpty) Nil // no keys: audit-only commit
         else if (sample.length <= maxPrunableKeys) {
-          // composite keys prune per COLUMN and intersect: a file can
-          // hold a listed key tuple only if every column's value set
-          // admits it — each column's own index (stats/bloom) applies,
-          // and the intersection stays a sound candidate superset
-          val kept = m.keys.zipWithIndex.map { case (kc, i) =>
-            pruneIn(table, kc, sample.map(_.get(i)).distinct.toSeq, cur)
-              ._1.map(_.path).toSet
-          }.reduce(_ intersect _)
-          m.files.filter(f => kept.contains(f.path))
+          // composite keys prune as one IN conjunct per COLUMN: a file
+          // can hold a listed key tuple only if every column's value
+          // set admits it — each column's own index (stats/bloom)
+          // applies, and the conjunction stays a sound candidate superset
+          keptFiles(table, m, m.keys.zipWithIndex.map { case (kc, i) =>
+            InPred(kc, sample.map(_.get(i)).distinct.toSeq) })
         } else m.files
       val out = commitDv(spark, table, m, candidates,
         raw => raw.join(k, m.keys, "left_semi"))
@@ -4099,7 +4025,7 @@ object Snapshot {
           // the plan; the path frame broadcasts)
           import spark.implicits._
           val candFrame = candidates.map(_.path).toDF("file")
-          spark.read.parquet(priorDirs.map(d => s"$table/$d"): _*)
+          readDv(spark, table, priorDirs)
             .join(broadcast(candFrame), Seq("file"), "left_semi")
             .select("file", "pos")
         }
@@ -4107,7 +4033,7 @@ object Snapshot {
       fresh.unionByName(prior).distinct()
         .write.mode("error").parquet(s"$table/$dvDir")
       // bounded collect: one row per candidate file
-      val counts = spark.read.parquet(s"$table/$dvDir")
+      val counts = readDv(spark, table, Seq(dvDir))
         .groupBy("file").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getAs[String]("file") -> r.getAs[Long]("n")).toMap
       val candSet = candidates.map(_.path).toSet

@@ -34,12 +34,11 @@ import java.util.{OptionalLong, Map => JMap, Set => JSet}
  * second engine. The [[GraftScanBuilder]] receives Spark's pushdown
  * (required columns + data filters), turns the prunable conjuncts
  * into manifest file skipping — partition values, per-file min/max
- * stats ([[Snapshot.pruneBounds]]), and per-file bloom filters for
- * point/IN lookups ([[Snapshot.pruneEq]]/[[Snapshot.pruneIn]]) — and
- * builds the same DV-masked, column-mapped, manifest-schema frame
- * `Snapshot.readAt` serves, restricted to the surviving entries with
- * the filters re-applied (pruning is an IO optimization, never a
- * semantics change). The scan hands that frame to Spark as a
+ * stats and per-file bloom filters for point/IN lookups, checked in
+ * one [[Snapshot.prune]] pass — and builds the same DV-masked,
+ * column-mapped, manifest-schema frame `Snapshot.readAt` serves,
+ * restricted to the surviving entries with the filters re-applied
+ * (pruning is an IO optimization, never a semantics change). The scan hands that frame to Spark as a
  * [[V1Scan]] (the JDBC-connector pattern): the INNER plan keeps the
  * vectorized parquet scan, parquet-level predicate pushdown and
  * whole-stage codegen, while the outer query composes it like any
@@ -1154,47 +1153,44 @@ private[graft] object GraftFilters {
   }
 
   /** Manifest entries surviving the filters' prunable conjuncts, or
-    * None when nothing prunes (read everything). Intersects per-leaf
-    * kept sets, exactly [[Snapshot.pruneAll]]'s conjunction shape. */
+    * None when nothing prunes (read everything). The prunable leaves
+    * become one [[Snapshot.DmlPred]] list checked in one
+    * [[Snapshot.prune]] pass over the manifest. */
   def prune(path: String, version: Int,
             filters: Array[Filter]): Option[Seq[Snapshot.FileEntry]] = {
     val m = Snapshot.readManifest(path, version)
     val rangeable = (c: String) => m.partSources.contains(c) ||
       m.statsCols.contains(c)
     val eqable = (c: String) => rangeable(c) || m.bloomCols.contains(c)
-    val keptSets: Seq[Set[String]] = filters.toSeq.flatMap {
+    val preds: Seq[Snapshot.DmlPred] = filters.toSeq.flatMap {
       case EqualTo(c, v) if eqable(c) && v != null =>
-        Some(Snapshot.pruneEq(path, c, v, version)._1.map(_.path).toSet)
+        Some(Snapshot.InPred(c, Seq(v)))
       case In(c, vs) if eqable(c) && vs.nonEmpty && !vs.contains(null) =>
-        Some(Snapshot.pruneIn(path, c, vs.toIndexedSeq, version)._1.map(_.path).toSet)
+        Some(Snapshot.InPred(c, vs.toIndexedSeq))
       case GreaterThan(c, v) if rangeable(c) && v != null =>
-        Some(Snapshot.pruneBounds(path, c, Some(v), None, version)._1.map(_.path).toSet)
+        Some(Snapshot.BoundPred(c, Some(v), None))
       case GreaterThanOrEqual(c, v) if rangeable(c) && v != null =>
-        Some(Snapshot.pruneBounds(path, c, Some(v), None, version)._1.map(_.path).toSet)
+        Some(Snapshot.BoundPred(c, Some(v), None))
       case LessThan(c, v) if rangeable(c) && v != null =>
-        Some(Snapshot.pruneBounds(path, c, None, Some(v), version)._1.map(_.path).toSet)
+        Some(Snapshot.BoundPred(c, None, Some(v)))
       case LessThanOrEqual(c, v) if rangeable(c) && v != null =>
-        Some(Snapshot.pruneBounds(path, c, None, Some(v), version)._1.map(_.path).toSet)
+        Some(Snapshot.BoundPred(c, None, Some(v)))
       // `LIKE '%needle%'` compiles to StringContains: when the column
       // carries the trigram index (the `3g:` bloom spec), prune to the
       // files whose gram filter admits every 3-gram of the needle —
       // substring pushdown priced by matching files
       case StringContains(c, v)
           if m.bloomCols.contains(Snapshot.TriPrefix + c) && v != null =>
-        Some(Snapshot.pruneContains(path, c, v, version)._1.map(_.path).toSet)
+        Some(Snapshot.ContainsPred(c, v))
       // `LIKE 'prefix%'` compiles to StringStartsWith: prefix pruning
       // rides the per-file string min/max under the FORCED
-      // lexicographic compare (prunePrefix — the numeric-when-
+      // lexicographic compare (PrefixPred — the numeric-when-
       // parseable range rule would mis-order digit prefixes)
       case StringStartsWith(c, v)
           if m.statsCols.contains(c) && v != null && v.nonEmpty =>
-        Some(Snapshot.prunePrefix(path, c, v, version)._1.map(_.path).toSet)
+        Some(Snapshot.PrefixPred(c, v))
       case _ => None
     }
-    if (keptSets.isEmpty) None
-    else {
-      val kept = keptSets.reduce(_ intersect _)
-      Some(m.files.filter(f => kept.contains(f.path)))
-    }
+    if (preds.isEmpty) None else Some(Snapshot.keptFiles(path, m, preds))
   }
 }

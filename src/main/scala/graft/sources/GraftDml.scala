@@ -532,9 +532,9 @@ case class GraftMergeCommand(path: String, keys: Seq[String],
           // any target pair (NULL never equals) — same as empty
           if (keys.indices.exists(i => bounds.isNullAt(2 * i)))
             target.limit(0)
-          else Snapshot.readWhereAll(spark, path,
-            keys.indices.map(i =>
-              (keys(i), bounds.get(2 * i), bounds.get(2 * i + 1))))
+          else Snapshot.read(spark, path,
+            keys.indices.map(i => Snapshot.RangePred(
+              keys(i), bounds.get(2 * i), bounds.get(2 * i + 1))))
         }
       tgtRows.select(tCols.map(c => col(c).as(GraftDml.TgtPrefix + c)): _*)
     }

@@ -168,7 +168,11 @@ object Readers {
     * declares its schema once (this file's own scale note: "at
     * 100 TB always pass an explicit schema"). The memo is pure
     * METADATA (never rows, never results), keyed on the file's
-    * (mtime, length) so any rewrite of the input re-infers. */
+    * (mtime, length) so any rewrite of the input re-infers. The
+    * manifest memo's racily-fresh guard applies: a file younger than
+    * the mtime granularity is not memoized (a same-length rewrite in
+    * the same mtime tick would otherwise serve a stale schema), and
+    * the map is cleared past 256 entries. */
   private val tableSchemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, StructType)]()
 
@@ -206,7 +210,11 @@ object Readers {
             if (hit != null && hit._1 == s.getModificationTime && hit._2 == s.getLen) hit._3
             else {
               val inferred = parquet(spark, pathStr).schema
-              tableSchemaMemo.put(key, (s.getModificationTime, s.getLen, inferred))
+              if (System.currentTimeMillis() - s.getModificationTime >=
+                  graft.operators.Snapshot.mtimeGranularityMs) {
+                if (tableSchemaMemo.size > 256) tableSchemaMemo.clear()
+                tableSchemaMemo.put(key, (s.getModificationTime, s.getLen, inferred))
+              }
               inferred
             }
           // the conf is still required at EXECUTION time for NANOS

@@ -101,12 +101,12 @@ class CompositeKeySpec extends SparkSpecBase {
       keys = Seq("tenant", "entity"), partitionCols = Seq("region", "tenant"))
     val total = Snapshot.readManifest(t, 1).files.size
     // region = "eu" keeps only eu/* partitions
-    val (euFiles, _) = Snapshot.pruneRange(t, "region", "eu", "eu")
+    val (euFiles, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("region", "eu", "eu")))
     assert(euFiles.nonEmpty && euFiles.size < total)
-    assert(rowsOf(Snapshot.readWhereEq(spark, t, "region", "eu")) ==
+    assert(rowsOf(Snapshot.read(spark, t, Seq(Snapshot.InPred("region", Seq("eu"))))) ==
       rowsOf(seedDf.filter($"region" === "eu")))
     // tenant = "t2" spans two regions; component-2 pruning keeps both
-    assert(rowsOf(Snapshot.readWhereEq(spark, t, "tenant", "t2")) ==
+    assert(rowsOf(Snapshot.read(spark, t, Seq(Snapshot.InPred("tenant", Seq("t2"))))) ==
       rowsOf(seedDf.filter($"tenant" === "t2")))
     // predicate DML on a partition component: delete all of region us
     Snapshot.deleteWhere(spark, t, Seq(("region", "us", "us")))
@@ -130,21 +130,21 @@ class CompositeKeySpec extends SparkSpecBase {
       Set("2024-01-01", "2024-01-02", "2024-01-05", "2024-02-01"))
     // range on the SOURCE column prunes to exactly the matching days'
     // files (a multi-row day may hold several files — compare sets)
-    val (kept, total) = Snapshot.pruneRange(t, "ts",
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.RangePred("ts",
       Timestamp.valueOf("2024-01-02 00:00:00"),
-      Timestamp.valueOf("2024-01-06 00:00:00"))
+      Timestamp.valueOf("2024-01-06 00:00:00"))))
     val wantFiles = (m.partitions("2024-01-02") ++ m.partitions("2024-01-05"))
       .map(_.path).toSet
     assert(total == m.files.size && kept.map(_.path).toSet == wantFiles)
-    val got = Snapshot.readWhere(spark, t, "ts",
+    val got = Snapshot.read(spark, t, Seq(Snapshot.RangePred("ts",
       Timestamp.valueOf("2024-01-02 00:00:00"),
-      Timestamp.valueOf("2024-01-06 00:00:00"))
+      Timestamp.valueOf("2024-01-06 00:00:00"))))
       .select("id").as[Long].collect().toSet
     assert(got == Set(3L, 4L))
     // a strict bound inside a day keeps that day's file (conservative)
     // and the re-applied filter stays exact
-    val (keptOpen, _) = Snapshot.pruneBounds(t, "ts",
-      Some(Timestamp.valueOf("2024-01-01 12:00:00")), None, loStrict = true)
+    val (keptOpen, _) = Snapshot.prune(t, Seq(Snapshot.BoundPred("ts",
+      Some(Timestamp.valueOf("2024-01-01 12:00:00")), None, loStrict = true)))
     assert(keptOpen.map(_.path).toSet == m.files.map(_.path).toSet)
   }
 
@@ -159,19 +159,19 @@ class CompositeKeySpec extends SparkSpecBase {
     // every row — the prune mapping IS the write-side hash
     (1L to 64L).foreach { i =>
       val want = Snapshot.bucketOf(4, i)
-      val (kept, total) = Snapshot.pruneEq(t, "id", i)
+      val (kept, total) = Snapshot.prune(t, Seq(Snapshot.InPred("id", Seq(i))))
       assert(kept.nonEmpty && kept.size < total)
-      val viaRead = Snapshot.readWhereEq(spark, t, "id", i)
+      val viaRead = Snapshot.read(spark, t, Seq(Snapshot.InPred("id", Seq(i))))
         .select("payload").as[String].collect().toSeq
       assert(viaRead == Seq(s"p$i"), s"id=$i bucket=$want")
     }
     // absent key: bucket pruning keeps one bucket, the filter finds none
-    assert(Snapshot.readWhereEq(spark, t, "id", 999L).count() == 0)
-    val (keptAbsent, total) = Snapshot.pruneEq(t, "id", 999L)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("id", Seq(999L)))).count() == 0)
+    val (keptAbsent, total) = Snapshot.prune(t, Seq(Snapshot.InPred("id", Seq(999L))))
     assert(keptAbsent.size < total)
     // a real RANGE cannot map through a hash: conservative keep-all
     // at the partition layer (stats still prune if tracked)
-    val (keptRange, _) = Snapshot.pruneRange(t, "id", 10L, 20L)
+    val (keptRange, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("id", 10L, 20L)))
     assert(keptRange.size == total || keptRange.size < total) // sound either way
   }
 
@@ -295,9 +295,9 @@ class CompositeKeySpec extends SparkSpecBase {
     assert(Snapshot.readManifest(t, 1).partitionCols == Seq("region"))
     assert(Snapshot.readAt(spark, t, 1).count() == 4)
     // the new spec prunes on the transform source
-    val (kept, total) = Snapshot.pruneRange(t, "ts",
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.RangePred("ts",
       Timestamp.valueOf("2024-01-03 00:00:00"),
-      Timestamp.valueOf("2024-01-04 00:00:00"))
+      Timestamp.valueOf("2024-01-04 00:00:00"))))
     assert(kept.map(_.path).toSet ==
       m2.partitions("2024-01-03~us").map(_.path).toSet && total == m2.files.size)
     // invariants carry: the CHECK still gates post-respec merges

@@ -604,7 +604,8 @@ class DataflowSpec extends SparkSpecBase {
     // a composite-tuple point read prunes through the bucket transform
     val someId = docs.filter(col("doc_id") % 7 === 1 && col("doc_id") % 11 =!= 3)
       .select("doc_id").head().getLong(0)
-    val (kept, total) = graft.operators.Snapshot.pruneEq(t, "doc_id", someId)
+    val (kept, total) = graft.operators.Snapshot.prune(t,
+      Seq(graft.operators.Snapshot.InPred("doc_id", Seq(someId))))
     assert(kept.size < total)
   }
 

@@ -62,15 +62,16 @@ class DedupSpec extends SparkSpecBase {
       (4L, "unrelated", 5.0), (5L, "also here", 7.0)).toDF("doc_id", "text", "q")
     // planted pair graph: {1,2,3} one cluster via 1-2, 2-3; 4 and 5 untouched
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    val out = Dedup.dedupKeepBest(d, col("doc_id"), col("q"), pairs)
+    val out = Dedup.dedupKeepBestClusters(d, col("doc_id"), col("q"),
+        Dedup.duplicateClusters(pairs))
       .select("doc_id").as[Long].collect().toSet
     assert(out === Set(3L, 4L, 5L),
       s"cluster {1,2,3} must survive through its best member only, got $out")
 
     // tie on score: lowest id wins
     val tied = Seq((1L, "a", 1.0), (2L, "b", 1.0)).toDF("doc_id", "text", "q")
-    val out2 = Dedup.dedupKeepBest(tied, col("doc_id"), col("q"),
-        Seq((1L, 2L)).toDF("doc_a", "doc_b"))
+    val out2 = Dedup.dedupKeepBestClusters(tied, col("doc_id"), col("q"),
+        Dedup.duplicateClusters(Seq((1L, 2L)).toDF("doc_a", "doc_b")))
       .select("doc_id").as[Long].collect().toSet
     assert(out2 === Set(1L))
   }
@@ -84,7 +85,8 @@ class DedupSpec extends SparkSpecBase {
       (1L, "short", 10.0), (2L, "longer", 20.0),
       (3L, "best copy a", 30.0), (3L, "best copy b", 30.0)).toDF("doc_id", "text", "q")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    val out = Dedup.dedupKeepBest(d, col("doc_id"), col("q"), pairs)
+    val out = Dedup.dedupKeepBestClusters(d, col("doc_id"), col("q"),
+        Dedup.duplicateClusters(pairs))
       .select("doc_id").as[Long].collect()
     assert(out.toSet === Set(3L) && out.length === 2,
       s"both rows of best doc 3 must survive, got ${out.toSeq}")

@@ -21,16 +21,16 @@ class PrefixPruneSpec extends SparkSpecBase {
       .toDF("code_s", "id", "part")
     Snapshot.createMulti(spark, t, df, keys = Seq("code_s", "id"),
       partitionCols = Seq("part"), fileRanges = 8)
-    val (kept, total) = Snapshot.prunePrefix(t, "code_s", "2")
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.PrefixPred("code_s", "2")))
     assert(total >= 8 && kept.size < total, s"kept ${kept.size} of $total")
-    val got = Snapshot.readWhereStartsWith(spark, t, "code_s", "2")
+    val got = Snapshot.read(spark, t, Seq(Snapshot.PrefixPred("code_s", "2")))
       .select("id").as[Long].collect().sorted.toSeq
     assert(got == (200L to 299L))
     // an absent prefix proves absence from the spans alone
-    assert(Snapshot.prunePrefix(t, "code_s", "zz")._1.isEmpty)
+    assert(Snapshot.prune(t, Seq(Snapshot.PrefixPred("code_s", "zz")))._1.isEmpty)
     // untracked columns refuse with the tracked list
     val e = intercept[IllegalArgumentException] {
-      Snapshot.prunePrefix(t, "part", "a")
+      Snapshot.prune(t, Seq(Snapshot.PrefixPred("part", "a")))
     }
     assert(e.getMessage.contains("no stats tracked"))
   }
@@ -47,7 +47,7 @@ class PrefixPruneSpec extends SparkSpecBase {
       .toDF("code_s", "id", "part")
     Snapshot.createMulti(spark, t, df, keys = Seq("code_s", "id"),
       partitionCols = Seq("part"))
-    assert(Snapshot.readWhereStartsWith(spark, t, "code_s", maxCp)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.PrefixPred("code_s", maxCp)))
       .select("id").as[Long].collect().toSeq == Seq(2L))
   }
 

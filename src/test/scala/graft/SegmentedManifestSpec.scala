@@ -102,7 +102,7 @@ class SegmentedManifestSpec extends SparkSpecBase {
           .toDF("id", "payload", "part"),
         deleteKeys = Seq(17L).toDF("id"))
       assert(rowsOf(Snapshot.readAt(spark, t, 1)) == rowsOf(seedDf))
-      assert(Snapshot.readWhere(spark, t, "id", 0, 9)
+      assert(Snapshot.read(spark, t, Seq(Snapshot.RangePred("id", 0, 9)))
         .select("id").collect().map(_.getLong(0)).toSet ==
         (0L to 9L).toSet)
       val agg = Snapshot.aggStats(spark, t, Seq("id"), sums = Seq("id"))

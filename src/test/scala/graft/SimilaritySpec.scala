@@ -301,9 +301,9 @@ class SimilaritySpec extends SparkSpecBase {
     // strict subset of cells, so a strict subset of files is opened
     val m1 = Snapshot.readManifest(table, 1)
     val probedCells = m1.partitions.keySet.toSeq.sorted
-    val (keptAll, total) = Snapshot.pruneIn(table, "cell", probedCells)
+    val (keptAll, total) = Snapshot.prune(table, Seq(Snapshot.InPred("cell", probedCells)))
     assert(keptAll.size == total) // sanity: all cells = all files
-    val (kept2, _) = Snapshot.pruneIn(table, "cell", probedCells.take(2))
+    val (kept2, _) = Snapshot.prune(table, Seq(Snapshot.InPred("cell", probedCells.take(2))))
     assert(kept2.nonEmpty && kept2.size < total,
       s"2-cell probe kept ${kept2.size} of $total files")
 

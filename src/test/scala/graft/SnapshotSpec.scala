@@ -152,17 +152,17 @@ class SnapshotSpec extends SparkSpecBase {
       concat(lit("doc "), col("id")).as("payload"),
       (col("id") % 4).cast("string").as("part"))
     Snapshot.create(spark, t, wide, "id", "part", fileRanges = 16)
-    val (kept, total) = Snapshot.pruneRange(t, "id", 100, 299)
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.RangePred("id", 100, 299)))
     assert(total >= 16, s"expected >=16 files, got $total")
     assert(kept.size < total / 2, s"pruning kept ${kept.size} of $total")
-    val got = Snapshot.readWhere(spark, t, "id", 100, 299)
+    val got = Snapshot.read(spark, t, Seq(Snapshot.RangePred("id", 100, 299)))
     assert(got.count() == 200)
     assert(got.agg(sum("id")).as[Long].head ==
       (100L to 299L).sum)
     // partition-column pruning path
-    val (keptP, totalP) = Snapshot.pruneRange(t, "part", "2", "2")
+    val (keptP, totalP) = Snapshot.prune(t, Seq(Snapshot.RangePred("part", "2", "2")))
     assert(keptP.size < totalP)
-    assert(Snapshot.readWhere(spark, t, "part", "2", "2").count() == 1000)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.RangePred("part", "2", "2"))).count() == 1000)
   }
 
   test("numeric partition values prune numerically, not lexicographically") {
@@ -171,12 +171,36 @@ class SnapshotSpec extends SparkSpecBase {
     val df = spark.range(0, 1300).select(
       col("id"), (col("id") % 13).cast("string").as("part"))
     Snapshot.create(spark, t, df, "id", "part")
-    val (kept, _) = Snapshot.pruneRange(t, "part", 2, 10)
+    val (kept, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("part", 2, 10)))
     val keptParts = kept.map(_.path.split("/")(2)).toSet // files/cN/__part=V/...
     assert((2 to 10).forall(v => keptParts.contains(s"__part=$v")),
       s"numeric range must keep partitions 2..10, got $keptParts")
     assert(!keptParts.contains("__part=1") && !keptParts.contains("__part=11"))
-    assert(Snapshot.readWhere(spark, t, "part", 2, 10).count() == 900)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.RangePred("part", 2, 10))).count() == 900)
+  }
+
+  test("numeric stats never compare as strings: an infinite bound or a NaN stat keeps the file") {
+    val t = fresh("numinf")
+    val df = ((10 to 20).map(i => (i.toLong, i.toDouble, "p1")) ++
+      Seq((100L, 1.0, "p2"), (101L, Double.NaN, "p2"))).toDF("id", "score", "part")
+    Snapshot.create(spark, t, df, "id", "part", statsCols = Seq("score"))
+    // "20.0" < "5.0" in UTF-8 order: a string compare would drop p1's file
+    val upToInf = Seq(Snapshot.RangePred("score", 5.0, Double.PositiveInfinity))
+    val (kept, _) = Snapshot.prune(t, upToInf)
+    assert(kept.exists(_.path.contains("__part=p1")), s"p1 pruned: $kept")
+    assert(Snapshot.read(spark, t, upToInf).count() == 11)
+    // p2's NaN max has no numeric reading: kept, not an error
+    assert(Snapshot.read(spark, t, Seq(Snapshot.RangePred("score", 0.5, 1.5)))
+      .select("id").as[Long].collect().toSeq == Seq(100L))
+    Snapshot.deleteWhere(spark, t, Seq(("score", 5.0, Double.PositiveInfinity)))
+    assert(Snapshot.readLatest(spark, t).select("id").as[Long].collect().toSet ==
+      Set(100L, 101L))
+    // the same bound on a double identity partition column
+    val tp = fresh("numinfpart")
+    Snapshot.create(spark, tp, Seq((1L, 10.0), (2L, 20.0), (3L, 3.0))
+      .toDF("id", "score"), "id", "score")
+    assert(Snapshot.read(spark, tp, upToInf).select("id").as[Long].collect().toSet ==
+      Set(1L, 2L))
   }
 
   test("zorder layout: multi-column pruning beats the range layout's second key; layout persists across merge commits") {
@@ -196,18 +220,19 @@ class SnapshotSpec extends SparkSpecBase {
     }
     val ranged = mk("zo_range", "range", Nil)
     val zorded = mk("zo_z", "zorder", Seq("id", "b"))
-    val preds = Seq(("id", 1000L, 1999L), ("b", 1000L, 1999L))
-    val (keptR, totR) = Snapshot.pruneAll(ranged, preds)
-    val (keptZ, totZ) = Snapshot.pruneAll(zorded, preds)
+    val preds = Seq(Snapshot.RangePred("id", 1000L, 1999L),
+      Snapshot.RangePred("b", 1000L, 1999L))
+    val (keptR, totR) = Snapshot.prune(ranged, preds)
+    val (keptZ, totZ) = Snapshot.prune(zorded, preds)
     assert(totR >= 16 && totZ >= 16)
     // range layout: id prunes to ~1/8, b prunes nothing within those
     // files; zorder: both predicates prune — strictly fewer files
     assert(keptZ.size < keptR.size,
       s"zorder kept ${keptZ.size}, range kept ${keptR.size} of $totZ/$totR")
     // results identical (and identical to a full-scan filter)
-    val a = Snapshot.readWhereAll(spark, zorded, preds)
+    val a = Snapshot.read(spark, zorded, preds)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    val b = Snapshot.readWhereAll(spark, ranged, preds)
+    val b = Snapshot.read(spark, ranged, preds)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     val full = Snapshot.readLatest(spark, zorded)
       .filter(col("id").between(1000, 1999) && col("b").between(1000, 1999))
@@ -231,10 +256,11 @@ class SnapshotSpec extends SparkSpecBase {
     Snapshot.deleteWhereMor(spark, t, Seq(("id", 7000L, 7999L)))
     val visibleBefore = Snapshot.readLatest(spark, t)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    val preds = Seq(("id", 1000L, 1999L), ("b", 1000L, 1999L))
+    val preds = Seq(Snapshot.RangePred("id", 1000L, 1999L),
+      Snapshot.RangePred("b", 1000L, 1999L))
     // the range layout (sorted by id) cannot prune on b AT ALL: every
     // file's b-range spans the full domain
-    val (keptBefore, totBefore) = Snapshot.pruneAll(t, Seq(("b", 1000L, 1999L)))
+    val (keptBefore, totBefore) = Snapshot.prune(t, Seq(Snapshot.RangePred("b", 1000L, 1999L)))
     assert(keptBefore.size === totBefore,
       "fixture: the range layout must be blind to the second key")
 
@@ -248,10 +274,10 @@ class SnapshotSpec extends SparkSpecBase {
       .select("id").collect().map(_.getLong(0)).sorted.toSeq === visibleBefore)
     // the new layout genuinely narrows the second key's file ranges:
     // the same b-only predicate now prunes where range kept everything
-    val (keptAfter, tot) = Snapshot.pruneAll(t, Seq(("b", 1000L, 1999L)))
+    val (keptAfter, tot) = Snapshot.prune(t, Seq(Snapshot.RangePred("b", 1000L, 1999L)))
     assert(keptAfter.size < keptBefore.size / 2,
       s"zorder relayout kept ${keptAfter.size} vs range's ${keptBefore.size} of $tot")
-    assert(Snapshot.readWhereAll(spark, t, preds)
+    assert(Snapshot.read(spark, t, preds)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq ===
       visibleBefore.filter(id => id >= 1000 && id <= 1999 &&
         { val b = (id * 2654435761L) % 8000; b >= 1000 && b <= 1999 }))
@@ -348,9 +374,9 @@ class SnapshotSpec extends SparkSpecBase {
     // bloom column declared in JSON serves point lookups
     assert(Snapshot.readManifest(t, 2).statsCols == Seq("id"))
     assert(Snapshot.readManifest(t, 2).bloomCols == Seq("payload"))
-    assert(Snapshot.readWhereEq(spark, t, "payload", "bravo-meta")
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("payload", Seq("bravo-meta"))))
       .select("id").as[Long].collect().toSeq == Seq(2L))
-    assert(Snapshot.pruneEq(t, "payload", "no-such-payload")._1.isEmpty)
+    assert(Snapshot.prune(t, Seq(Snapshot.InPred("payload", Seq("no-such-payload"))))._1.isEmpty)
   }
 
   test("metadata reach: snapshotTag pins the committed version; source option tag reads it past later commits") {
@@ -775,16 +801,16 @@ class SnapshotSpec extends SparkSpecBase {
     assert(m.files.forall(_.blooms.contains("token")))
 
     // absent key: bloom proves absence — no data file is opened at all
-    val (keptAbsent, total) = Snapshot.pruneEq(t, "token", "nope")
+    val (keptAbsent, total) = Snapshot.prune(t, Seq(Snapshot.InPred("token", Seq("nope"))))
     assert(keptAbsent.isEmpty, s"absent key kept ${keptAbsent.size} of $total files")
-    assert(Snapshot.readWhereEq(spark, t, "token", "nope").count() == 0)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("token", Seq("nope")))).count() == 0)
 
     // present key: pruned to a strict subset, result exact
     val probe = s"w${17L * 2654435761L % 997}"
-    val (kept, _) = Snapshot.pruneEq(t, "token", probe)
+    val (kept, _) = Snapshot.prune(t, Seq(Snapshot.InPred("token", Seq(probe))))
     assert(kept.nonEmpty && kept.size < total,
       s"present key kept ${kept.size} of $total files — bloom pruned nothing")
-    val got = Snapshot.readWhereEq(spark, t, "token", probe)
+    val got = Snapshot.read(spark, t, Seq(Snapshot.InPred("token", Seq(probe))))
       .select("id").as[Long].collect().toSet
     assert(got == Set(17L))
   }
@@ -793,9 +819,9 @@ class SnapshotSpec extends SparkSpecBase {
     val t = fresh("bloom_key")
     Snapshot.create(spark, t, bloomSeed, "id", "part", statsCols = Seq("id"),
       fileRanges = 8, bloomCols = Seq("id"), bloomBits = 4096)
-    val (kept, total) = Snapshot.pruneEq(t, "id", 33L)
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.InPred("id", Seq(33L))))
     assert(kept.nonEmpty && kept.size < total)
-    assert(Snapshot.readWhereEq(spark, t, "id", 33L)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("id", Seq(33L))))
       .select("token").as[String].collect().toSeq ==
       Seq(s"w${33L * 2654435761L % 997}"))
   }
@@ -817,12 +843,12 @@ class SnapshotSpec extends SparkSpecBase {
         before.partitions(p).map(f => (f.path, f.blooms("token").toSeq)), p)
     }
     // the new tokens are findable, the deleted id's token is gone
-    assert(Snapshot.readWhereEq(spark, t, "token", "tok_new")
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("token", Seq("tok_new"))))
       .select("id").as[Long].collect().toSeq == Seq(101L))
     val deletedTok = s"w${9L * 2654435761L % 997}"
-    assert(Snapshot.readWhereEq(spark, t, "token", deletedTok).count() == 0)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("token", Seq(deletedTok)))).count() == 0)
     // ...but still present when time-traveling to v1
-    assert(Snapshot.readWhereEq(spark, t, "token", deletedTok, version = 1)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("token", Seq(deletedTok))), version = 1)
       .select("id").as[Long].collect().toSeq == Seq(9L))
   }
 
@@ -840,7 +866,7 @@ class SnapshotSpec extends SparkSpecBase {
     val after = Snapshot.readManifest(t, 2)
     assert(after.op == "delete")
     // untouched files (id ranges outside [1000,1399]) carried verbatim
-    val candPaths = Snapshot.pruneRange(t, "id", 1000, 1399, 1)._1.map(_.path).toSet
+    val candPaths = Snapshot.prune(t, Seq(Snapshot.RangePred("id", 1000, 1399)), 1)._1.map(_.path).toSet
     assert(candPaths.nonEmpty && candPaths.size < before.files.size,
       "fixture must prune to a strict subset")
     before.files.filterNot(f => candPaths.contains(f.path)).foreach { f =>
@@ -961,7 +987,7 @@ class SnapshotSpec extends SparkSpecBase {
     // EF BF BF) but BELOW it in Java's UTF-16 code-unit order (D83D <
     // FFFF). A file whose payload max is '😀' must therefore ADMIT a
     // range starting at '￿￿' — Java-order comparison would
-    // prune it and silently lose the matching row (the readWhere
+    // prune it and silently lose the matching row (the read's
     // re-applied filter cannot resurrect a pruned file).
     val t = fresh("utf8ord")
     val df = Seq(
@@ -974,11 +1000,11 @@ class SnapshotSpec extends SparkSpecBase {
     assert(Snapshot.readLatest(spark, t)
       .filter(col("payload") >= lit(lo) && col("payload") <= lit(hi))
       .count() == 1)
-    // bounded range (admits), open bound (pruneBounds) and the served
+    // bounded range, open bound (both through admits) and the served
     // read all keep the file and the row
-    assert(Snapshot.pruneRange(t, "payload", lo, hi)._1.nonEmpty)
-    assert(Snapshot.pruneBounds(t, "payload", Some(lo), None)._1.nonEmpty)
-    assert(Snapshot.readWhere(spark, t, "payload", lo, hi)
+    assert(Snapshot.prune(t, Seq(Snapshot.RangePred("payload", lo, hi)))._1.nonEmpty)
+    assert(Snapshot.prune(t, Seq(Snapshot.BoundPred("payload", Some(lo), None)))._1.nonEmpty)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.RangePred("payload", lo, hi)))
       .select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
     // the manifest-only MIN/MAX fold picks winners in UTF-8 order too:
     // max over {'￿','😀','alpha'} is '😀', not '￿'
@@ -1010,9 +1036,12 @@ class SnapshotSpec extends SparkSpecBase {
 
     for (t <- Seq(wide, dv, renamed)) {
       val reads = Seq(
-        "readWhereEq" -> (() => Snapshot.readWhereEq(spark, t, "id", 100000L)),
-        "readWhereIn" -> (() => Snapshot.readWhereIn(spark, t, "id", Seq(100000L, 100001L))),
-        "readWhereStartsWith" -> (() => Snapshot.readWhereStartsWith(spark, t, "payload", "zzz")),
+        "read =" -> (() => Snapshot.read(spark, t,
+          Seq(Snapshot.InPred("id", Seq(100000L))))),
+        "read IN" -> (() => Snapshot.read(spark, t,
+          Seq(Snapshot.InPred("id", Seq(100000L, 100001L))))),
+        "read LIKE prefix" -> (() => Snapshot.read(spark, t,
+          Seq(Snapshot.PrefixPred("payload", "zzz")))),
         "readEntries" -> (() => Snapshot.readEntries(spark, t, Snapshot.currentVersion(t), Nil)))
       val expected = Snapshot.readLatest(spark, t).dtypes.toSeq
       for ((what, read) <- reads) {
@@ -1023,5 +1052,59 @@ class SnapshotSpec extends SparkSpecBase {
         assert(df.count() === 0L, s"$what on $t")
       }
     }
+  }
+
+  test("prune and read read the manifest once, whatever the number of conjuncts or IN values") {
+    val t = s"file://${fresh("one_manifest_read")}"
+    val df = (0 until 400).map(i => (i.toLong, s"tok$i", s"p${i % 4}"))
+      .toDF("id", "token", "part")
+    Snapshot.create(spark, t, df, "id", "part", fileRanges = 8,
+      bloomCols = Seq("token"))
+    val granule = "graft.manifest.mtimeGranularityMs"
+    def calls[T](body: => T): (T, Long) = {
+      CountingLogStore.calls.set(0)
+      val r = body
+      (r, CountingLogStore.calls.get())
+    }
+    try {
+      // a manifest memoized at once: every call below is a memo hit,
+      // so a call count is the same however old the manifest is
+      sys.props(granule) = "0"
+      spark.conf.set("spark.graft.logstore.file", "graft.CountingLogStore")
+      val one = Seq(Snapshot.RangePred("id", 100L, 199L))
+      val three = one ++ Seq(Snapshot.BoundPred("part", Some("p1"), None),
+        Snapshot.InPred("token", Seq("tok150", "tok151")))
+      Snapshot.prune(t, one)
+      val (_, c1) = calls(Snapshot.prune(t, one))
+      val (_, c3) = calls(Snapshot.prune(t, three))
+      assert(c1 > 0, "the table's metadata IO must flow through the counting store")
+      assert(c3 == c1, s"3 conjuncts made $c3 LogStore calls, 1 conjunct $c1")
+      val values = (0 until 50).map(i => s"tok${i * 7}")
+      val (_, cIn1) = calls(Snapshot.prune(t, Seq(Snapshot.InPred("token", values.take(1)))))
+      val ((keptIn, _), cIn50) = calls(Snapshot.prune(t, Seq(Snapshot.InPred("token", values))))
+      assert(cIn50 == cIn1, s"50 IN values made $cIn50 LogStore calls, 1 value $cIn1")
+      val (read3, cRead) = calls(Snapshot.read(spark, t, three))
+      assert(cRead == c3, s"read made $cRead LogStore calls, its prune $c3")
+      assert(read3.select("id").as[Long].collect().sorted.toSeq == Seq(150L, 151L))
+      // an IN list keeps exactly the union of its single-value prunes
+      val union = values.flatMap(v =>
+        Snapshot.prune(t, Seq(Snapshot.InPred("token", Seq(v))))._1.map(_.path)).toSet
+      assert(keptIn.map(_.path).toSet == union)
+    } finally {
+      spark.conf.unset("spark.graft.logstore.file")
+      sys.props -= granule
+    }
+  }
+
+  test("a deletion-vector-masked read is built without a Spark job") {
+    val t = fresh("dv_read_no_job")
+    Snapshot.create(spark, t, seedDf, "id", "part")
+    Snapshot.deleteWhereMor(spark, t, Seq(("id", 2L, 3L)))
+    assert(Snapshot.readManifest(t, 2).files.exists(_.dv.isDefined))
+    val (df, jobs) = jobsStarted(Snapshot.readLatest(spark, t))
+    assert(jobs.isEmpty, "building the masked frame started jobs: " +
+      jobs.map(_.getProperty("spark.job.description")).mkString("; "))
+    assert(df.select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 4L, 5L, 6L, 7L, 8L))
   }
 }

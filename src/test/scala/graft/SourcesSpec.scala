@@ -29,4 +29,31 @@ class SourcesSpec extends SparkSpecBase {
       assert(ex.getMessage.contains("spark-avro"))
     }
   }
+
+  test("Readers.table re-infers the schema of a racily fresh file rewritten with the same length and mtime") {
+    import spark.implicits._
+    val dir = freshDir("graft_readers_schema_memo")
+    val target = java.nio.file.Paths.get(s"$dir/t.parquet")
+    // an mtime inside the racily-fresh granule, set ahead of the clock
+    // so the memo check cannot race a slow first read
+    val mtime = System.currentTimeMillis() + 60000L
+    def writeWithColumn(c: String): Long = {
+      val tmp = s"$dir/tmp_$c"
+      Seq(1L, 2L, 3L).toDF(c).coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, target,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      target.toFile.setLastModified(mtime)
+      target.toFile.length()
+    }
+    val lenA = writeWithColumn("a")
+    assert(Readers.table(spark, dir, "t").columns.toSeq == Seq("a"))
+    val lenB = writeWithColumn("b")
+    assert(lenB == lenA && target.toFile.lastModified() == mtime,
+      "fixture: the rewrite must keep the file's (mtime, length) memo key")
+    val reread = Readers.table(spark, dir, "t")
+    assert(reread.columns.toSeq == Seq("b"))
+    assert(reread.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
 }

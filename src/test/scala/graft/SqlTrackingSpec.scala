@@ -37,14 +37,14 @@ class SqlTrackingSpec extends SparkSpecBase {
     assert(m.bloomCols == Seq("text") && m.bloomBits == 65536 && m.bloomK == 5)
     assert(m.hllCols == Seq("code") && m.hllP == 13)
     // bloom point lookup on the uncorrelated text column prunes files
-    val (kept, total) = Snapshot.pruneEq(dir, "text", "payload-7")
+    val (kept, total) = Snapshot.prune(dir, Seq(Snapshot.InPred("text", Seq("payload-7"))))
     assert(total >= 2 && kept.size < total)
-    assert(Snapshot.readWhereEq(spark, dir, "text", "payload-7")
+    assert(Snapshot.read(spark, dir, Seq(Snapshot.InPred("text", Seq("payload-7"))))
       .select("id").as[Long].collect().toSeq == Seq(7L))
     // an absent value proves absence through the blooms
-    assert(Snapshot.pruneEq(dir, "text", "nope")._1.isEmpty)
+    assert(Snapshot.prune(dir, Seq(Snapshot.InPred("text", Seq("nope"))))._1.isEmpty)
     // stats range skipping on the declared non-key column works
-    assert(Snapshot.readWhere(spark, dir, "code", 3, 3).count() ==
+    assert(Snapshot.read(spark, dir, Seq(Snapshot.RangePred("code", 3, 3))).count() ==
       docsDf.filter($"code" === 3).count())
     // manifest-HLL distincts work from create (every file tracked)
     val nd = Snapshot.aggStats(spark, dir, Nil, distincts = Seq("code"))
@@ -57,9 +57,9 @@ class SqlTrackingSpec extends SparkSpecBase {
     Snapshot.create(spark, t, docsDf, key = "id", partitionCol = "part")
     val m1 = Snapshot.readManifest(t, 1)
     assert(m1.bloomCols.isEmpty && m1.hllCols.isEmpty)
-    // no index on text yet: pruneEq refuses (nothing to prune by)
+    // no index on text yet: a point prune refuses (nothing to prune by)
     intercept[IllegalArgumentException] {
-      Snapshot.pruneEq(t, "text", "payload-7")
+      Snapshot.prune(t, Seq(Snapshot.InPred("text", Seq("payload-7"))))
     }
     // start tracking: ONE metadata commit (zero files rewritten)
     Snapshot.trackBloom(spark, t, "text", bits = 65536, k = 5)
@@ -71,12 +71,12 @@ class SqlTrackingSpec extends SparkSpecBase {
     assert(m2.files.map(_.path).toSet == m1.files.map(_.path).toSet)
     // pre-backfill: every consumer is CONSERVATIVE — bloom pruning
     // keeps the untracked files (forall on a missing bloom = keep)...
-    val (keptPre, totalPre) = Snapshot.pruneEq(t, "text", "payload-7")
+    val (keptPre, totalPre) = Snapshot.prune(t, Seq(Snapshot.InPred("text", Seq("payload-7"))))
     assert(keptPre.size == totalPre)
-    assert(Snapshot.readWhereEq(spark, t, "text", "payload-7")
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("text", Seq("payload-7"))))
       .select("id").as[Long].collect().toSeq == Seq(7L))
     // ...range prune on the newly stats-tracked column keeps all...
-    val (keptR, totalR) = Snapshot.pruneRange(t, "code", 3, 3)
+    val (keptR, totalR) = Snapshot.prune(t, Seq(Snapshot.RangePred("code", 3, 3)))
     assert(keptR.size == totalR)
     // ...and the manifest-HLL aggregate REFUSES rather than undercount
     val e = intercept[IllegalArgumentException] {
@@ -86,10 +86,10 @@ class SqlTrackingSpec extends SparkSpecBase {
     // compact(maxFilesPerPartition = 0) forces the whole-table
     // rewrite — the documented one-shot backfill
     Snapshot.compact(spark, t, maxFilesPerPartition = 0)
-    val (keptPost, totalPost) = Snapshot.pruneEq(t, "text", "payload-7")
+    val (keptPost, totalPost) = Snapshot.prune(t, Seq(Snapshot.InPred("text", Seq("payload-7"))))
     assert(keptPost.size < totalPost)
-    assert(Snapshot.pruneEq(t, "text", "nope")._1.isEmpty)
-    val (keptR2, totalR2) = Snapshot.pruneRange(t, "code", 3, 3)
+    assert(Snapshot.prune(t, Seq(Snapshot.InPred("text", Seq("nope"))))._1.isEmpty)
+    val (keptR2, totalR2) = Snapshot.prune(t, Seq(Snapshot.RangePred("code", 3, 3)))
     assert(keptR2.size <= totalR2 && keptR2.nonEmpty)
     val nd = Snapshot.aggStats(spark, t, Nil, distincts = Seq("code"))
       .select("nd_code").as[Long].head()
@@ -102,7 +102,7 @@ class SqlTrackingSpec extends SparkSpecBase {
         (m: Snapshot.Manifest) => Snapshot.dropBloomXform(t, "text")(m))))
     assert(Snapshot.currentVersion(t) == vBefore + 1)
     intercept[IllegalArgumentException] {
-      Snapshot.pruneEq(t, "text", "payload-7")
+      Snapshot.prune(t, Seq(Snapshot.InPred("text", Seq("payload-7"))))
     }
   }
 

@@ -34,14 +34,14 @@ class TransformFamilySpec extends SparkSpecBase {
       keys = Seq("id"), partitionCols = Seq("years(ts)"))
     val m = Snapshot.readManifest(t, 1)
     assert(m.partitions.keySet == Set("2023", "2024", "2025"))
-    val (kept, total) = Snapshot.pruneRange(t, "ts",
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.RangePred("ts",
       Timestamp.valueOf("2024-01-01 00:00:00"),
-      Timestamp.valueOf("2024-12-31 23:59:59"))
+      Timestamp.valueOf("2024-12-31 23:59:59"))))
     assert(total == m.files.size)
     assert(kept.map(_.path).toSet == m.partitions("2024").map(_.path).toSet)
-    val got = Snapshot.readWhere(spark, t, "ts",
+    val got = Snapshot.read(spark, t, Seq(Snapshot.RangePred("ts",
       Timestamp.valueOf("2024-01-01 00:00:00"),
-      Timestamp.valueOf("2024-12-31 23:59:59"))
+      Timestamp.valueOf("2024-12-31 23:59:59"))))
       .select("id").as[Long].collect().toSet
     assert(got == Set(2L, 3L, 4L))
   }
@@ -53,15 +53,15 @@ class TransformFamilySpec extends SparkSpecBase {
     val m = Snapshot.readManifest(t, 1)
     assert(m.partitions.keySet ==
       Set("2023-12", "2024-01", "2024-03", "2025-06"))
-    val (kept, _) = Snapshot.pruneRange(t, "ts",
+    val (kept, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("ts",
       Timestamp.valueOf("2024-01-01 00:00:00"),
-      Timestamp.valueOf("2024-03-31 00:00:00"))
+      Timestamp.valueOf("2024-03-31 00:00:00"))))
     val want = (m.partitions("2024-01") ++ m.partitions("2024-03"))
       .map(_.path).toSet
     assert(kept.map(_.path).toSet == want)
-    val got = Snapshot.readWhere(spark, t, "ts",
+    val got = Snapshot.read(spark, t, Seq(Snapshot.RangePred("ts",
       Timestamp.valueOf("2024-01-01 00:00:00"),
-      Timestamp.valueOf("2024-03-31 00:00:00"))
+      Timestamp.valueOf("2024-03-31 00:00:00"))))
       .select("id").as[Long].collect().toSet
     assert(got == Set(2L, 3L, 4L))
   }
@@ -83,15 +83,15 @@ class TransformFamilySpec extends SparkSpecBase {
       "2024-01-10-07", "2024-01-10-18", "2024-01-11-06"))
     // [06:00, 08:00): hours 06 and 07 of the 10th only — the 11th's
     // hour 06 sorts AFTER the whole 10th (full-prefix lexicographic)
-    val (kept, _) = Snapshot.pruneRange(t, "ts",
+    val (kept, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("ts",
       Timestamp.valueOf("2024-01-10 06:00:00"),
-      Timestamp.valueOf("2024-01-10 07:59:59"))
+      Timestamp.valueOf("2024-01-10 07:59:59"))))
     val want = (m.partitions("2024-01-10-06") ++ m.partitions("2024-01-10-07"))
       .map(_.path).toSet
     assert(kept.map(_.path).toSet == want)
-    val got = Snapshot.readWhere(spark, t, "ts",
+    val got = Snapshot.read(spark, t, Seq(Snapshot.RangePred("ts",
       Timestamp.valueOf("2024-01-10 06:00:00"),
-      Timestamp.valueOf("2024-01-10 07:59:59"))
+      Timestamp.valueOf("2024-01-10 07:59:59"))))
       .select("id").as[Long].collect().toSet
     assert(got == Set(2L, 3L, 4L))
   }
@@ -105,8 +105,8 @@ class TransformFamilySpec extends SparkSpecBase {
       .toDF("id", "ts", "payload")
     Snapshot.createMulti(spark, t, df,
       keys = Seq("id"), partitionCols = Seq("hours(ts)"))
-    val (kept, total) = Snapshot.pruneBounds(t, "ts",
-      Some(java.time.LocalDate.parse("2024-01-10")), None)
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.BoundPred("ts",
+      Some(java.time.LocalDate.parse("2024-01-10")), None)))
     val m = Snapshot.readManifest(t, 1)
     assert(kept.map(_.path).toSet ==
       (m.partitions("2024-01-10-00") ++ m.partitions("2024-01-10-09"))
@@ -126,14 +126,14 @@ class TransformFamilySpec extends SparkSpecBase {
     assert(m.partitions.keySet == Set("alp", "al", "bet", "gam"))
     // name BETWEEN "alpha" AND "bz": truncations "alp".."bz" — keeps
     // alp and bet, drops al (< "alp") and gam
-    val (kept, _) = Snapshot.pruneRange(t, "name", "alpha", "bz")
+    val (kept, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("name", "alpha", "bz")))
     val want = (m.partitions("alp") ++ m.partitions("bet")).map(_.path).toSet
     assert(kept.map(_.path).toSet == want)
-    val got = Snapshot.readWhere(spark, t, "name", "alpha", "bz")
+    val got = Snapshot.read(spark, t, Seq(Snapshot.RangePred("name", "alpha", "bz")))
       .select("id").as[Long].collect().toSet
     assert(got == Set(1L, 2L, 3L))
     // equality routes through the same mapping
-    assert(Snapshot.readWhereEq(spark, t, "name", "alps")
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("name", Seq("alps"))))
       .select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
@@ -153,22 +153,22 @@ class TransformFamilySpec extends SparkSpecBase {
     assert(m.partitions.keySet == Set("-20", "-10", "0", "10", "20", "100"))
     // v BETWEEN 5 AND 21: floors 0..10 plus 20's file is dropped
     // (trunc(21) = 20 keeps it — 23 shares the bucket; conservative)
-    val (kept, _) = Snapshot.pruneRange(t, "v", 5L, 21L)
+    val (kept, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("v", 5L, 21L)))
     val want = (m.partitions("0") ++ m.partitions("10") ++ m.partitions("20"))
       .map(_.path).toSet
     assert(kept.map(_.path).toSet == want)
-    val got = Snapshot.readWhere(spark, t, "v", 5L, 21L)
+    val got = Snapshot.read(spark, t, Seq(Snapshot.RangePred("v", 5L, 21L)))
       .select("v").as[Long].collect().toSet
     assert(got == Set(7L, 15L))
     // v BETWEEN 99 AND 150: NUMERIC compare is load-bearing — floor
     // bounds are [90, 150] and "100" < "90" LEXICOGRAPHICALLY, so a
     // string compare would wrongly drop the file holding 101
-    val (kept99, _) = Snapshot.pruneRange(t, "v", 99L, 150L)
+    val (kept99, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("v", 99L, 150L)))
     assert(kept99.map(_.path).toSet == m.partitions("100").map(_.path).toSet)
-    assert(Snapshot.readWhere(spark, t, "v", 99L, 150L)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.RangePred("v", 99L, 150L)))
       .select("v").as[Long].collect().toSet == Set(101L))
     // negative range floors correctly: [-19, -2] keeps -20 and -10
-    assert(Snapshot.readWhere(spark, t, "v", -19L, -2L)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.RangePred("v", -19L, -2L)))
       .select("v").as[Long].collect().toSet == Set(-17L, -3L))
   }
 
@@ -183,13 +183,13 @@ class TransformFamilySpec extends SparkSpecBase {
     // a string bound would PREFIX-map ("15" stays "15") while the
     // write side FLOORED (15 -> "10") — mapping it would prune the
     // matching file, so the guard keeps everything
-    val (kept, total) = Snapshot.pruneRange(t, "v", "15", "15")
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.RangePred("v", "15", "15")))
     assert(kept.size == total && total == 3)
     // and a Double bound is not write-replayable either
-    val (keptD, totalD) = Snapshot.pruneRange(t, "v", 15.0, 15.0)
+    val (keptD, totalD) = Snapshot.prune(t, Seq(Snapshot.RangePred("v", 15.0, 15.0)))
     assert(keptD.size == totalD)
     // the typed bound prunes to the one matching floor bucket
-    val (keptL, _) = Snapshot.pruneRange(t, "v", 15L, 15L)
+    val (keptL, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("v", 15L, 15L)))
     assert(keptL.size == 1)
   }
 
@@ -208,13 +208,13 @@ class TransformFamilySpec extends SparkSpecBase {
       keys = Seq("id"), partitionCols = Seq("truncate(2,name)"))
     assert(Snapshot.readManifest(t, 1).partitions.keySet ==
       Set("21", "9", "87"))
-    val (kept, total) = Snapshot.pruneRange(t, "name", 5L, 21L)
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.RangePred("name", 5L, 21L)))
     assert(kept.size == total && total == 3)
     // the exact read still serves the row a floor-mapping would lose
-    assert(Snapshot.readWhere(spark, t, "name", 5L, 21L)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.RangePred("name", 5L, 21L)))
       .select("id").as[Long].collect().toSet == Set(1L, 2L))
     // and a string bound maps (the matching domain)
-    val (keptS, _) = Snapshot.pruneRange(t, "name", "21", "21")
+    val (keptS, _) = Snapshot.prune(t, Seq(Snapshot.RangePred("name", "21", "21")))
     assert(keptS.size == 1)
   }
 
@@ -223,10 +223,10 @@ class TransformFamilySpec extends SparkSpecBase {
     val df = (1L to 16L).map(i => (i, i, s"p$i")).toDF("id", "code", "payload")
     Snapshot.createMulti(spark, t, df,
       keys = Seq("id"), partitionCols = Seq("bucket(4,code)"))
-    val (kept, total) = Snapshot.pruneEq(t, "code", "7")
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.InPred("code", Seq("7"))))
     assert(kept.size == total)
     // the residual filter still finds the row over the unpruned set
-    assert(Snapshot.readWhereEq(spark, t, "code", "07")
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("code", Seq("07"))))
       .select("id").as[Long].collect().toSeq == Seq(7L))
   }
 
@@ -241,16 +241,16 @@ class TransformFamilySpec extends SparkSpecBase {
     // 7.0 renders "7.0" — crc32("7.0") hashes differently than
     // crc32("7"), which is exactly the silent wrong-prune the guard
     // closes; conservative keep-all instead
-    val (kept, total) = Snapshot.pruneEq(t, "code", 7.0d)
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.InPred("code", Seq(7.0d))))
     assert(kept.size == total)
     // ...and the exact read over the unpruned set still matches
-    assert(Snapshot.readWhereEq(spark, t, "code", 7.0d)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("code", Seq(7.0d))))
       .select("id").as[Long].collect().toSeq == Seq(7L))
     // the typed lookup still prunes to one bucket
-    val (keptL, totalL) = Snapshot.pruneEq(t, "code", 7L)
+    val (keptL, totalL) = Snapshot.prune(t, Seq(Snapshot.InPred("code", Seq(7L))))
     assert(keptL.size < totalL)
     // Int vs Long render identically — Int lookups stay mapped
-    val (keptI, totalI) = Snapshot.pruneEq(t, "code", 7)
+    val (keptI, totalI) = Snapshot.prune(t, Seq(Snapshot.InPred("code", Seq(7))))
     assert(keptI.size < totalI)
     assert(m.partitions.keySet.subsetOf(Set("0", "1", "2", "3")))
   }
@@ -264,11 +264,11 @@ class TransformFamilySpec extends SparkSpecBase {
       .toDF("id", "ts", "payload")
     Snapshot.createMulti(spark, t, df,
       keys = Seq("id"), partitionCols = Seq("days(ts)"))
-    val (kept, total) = Snapshot.pruneRange(t, "ts", "2024-01-10", "2024-01-10")
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.RangePred("ts", "2024-01-10", "2024-01-10")))
     assert(kept.size == 1 && total == 3)
     // "2024-01-10-backup" must NOT be treated as 2024-01-10
-    val (keptBad, totalBad) = Snapshot.pruneRange(
-      t, "ts", "2024-01-10-backup", "2024-01-10-backup")
+    val (keptBad, totalBad) = Snapshot.prune(
+      t, Seq(Snapshot.RangePred("ts", "2024-01-10-backup", "2024-01-10-backup")))
     assert(keptBad.size == totalBad)
     // timeKeyOf itself declines non-exact-ISO strings
     assert(Snapshot.timeKeyOf(Snapshot.DaysField("ts"),

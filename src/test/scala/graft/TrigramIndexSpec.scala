@@ -37,20 +37,20 @@ class TrigramIndexSpec extends SparkSpecBase {
     assert(m.bloomCols == Seq("3g:text"))
     assert(m.files.nonEmpty && m.files.forall(_.blooms.contains("3g:text")))
     // the top-range substring prunes to the files that might hold it
-    val (kept, total) = Snapshot.pruneContains(t, "text", "needle-in-haystack")
+    val (kept, total) = Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "needle-in-haystack")))
     assert(total >= 4 && kept.size < total,
       s"kept ${kept.size} of $total")
-    val got = Snapshot.readWhereContains(spark, t, "text", "needle-in-haystack")
+    val got = Snapshot.read(spark, t, Seq(Snapshot.ContainsPred("text", "needle-in-haystack")))
       .select("id").as[Long].collect().sorted.toSeq
     assert(got == (291L to 300L))
     // an absent substring is PROVEN absent — zero files open
-    assert(Snapshot.pruneContains(t, "text", "zq9xv7 never occurs")._1.isEmpty)
-    assert(Snapshot.readWhereContains(spark, t, "text",
-      "zq9xv7 never occurs").count() == 0)
+    assert(Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "zq9xv7 never occurs")))._1.isEmpty)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.ContainsPred("text",
+      "zq9xv7 never occurs"))).count() == 0)
     // a needle under 3 code points has no grams: keep all (and the
     // exact filter still serves the right rows)
-    assert(Snapshot.pruneContains(t, "text", "ab")._1.size == total)
-    assert(Snapshot.readWhereContains(spark, t, "text", "om").count() == 10)
+    assert(Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "ab")))._1.size == total)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.ContainsPred("text", "om"))).count() == 10)
   }
 
   test("the two bloom kinds coexist in one tracking list and prune independently") {
@@ -63,41 +63,41 @@ class TrigramIndexSpec extends SparkSpecBase {
     assert(m.files.forall(f =>
       f.blooms.contains("text") && f.blooms.contains("3g:text")))
     // the VALUE filter proves a full-text point lookup
-    assert(Snapshot.readWhereEq(spark, t, "text",
-      "plain filler content row 1").select("id").as[Long].head() == 1L)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.InPred("text",
+      Seq("plain filler content row 1")))).select("id").as[Long].head() == 1L)
     // the TRIGRAM filter serves the substring the value bloom cannot
-    assert(Snapshot.readWhereContains(spark, t, "text", "ipsum dolor")
+    assert(Snapshot.read(spark, t, Seq(Snapshot.ContainsPred("text", "ipsum dolor")))
       .count() == (1L to 290L).count(_ % 7 == 0))
   }
 
   test("lifecycle: trackTrigram is conservative until compact backfills, exact after; untrackTrigram stops; non-string and renamed columns refuse") {
     val t = fresh("life")
     Snapshot.create(spark, t, docsDf, key = "id", partitionCol = "part")
-    // not yet tracked: pruneContains refuses with the pointer
+    // not yet tracked: a ContainsPred prune refuses with the pointer
     val e0 = intercept[IllegalArgumentException] {
-      Snapshot.pruneContains(t, "text", "ipsum")
+      Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "ipsum")))
     }
     assert(e0.getMessage.contains("trackTrigram"))
     Snapshot.trackTrigram(spark, t, "text")
     // pre-backfill: files predate tracking, every file is kept
     // (conservative) and the result is still exact
-    val (kept0, total0) = Snapshot.pruneContains(t, "text", "ipsum")
+    val (kept0, total0) = Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "ipsum")))
     assert(kept0.size == total0)
-    assert(Snapshot.readWhereContains(spark, t, "text", "ipsum").count() ==
+    assert(Snapshot.read(spark, t, Seq(Snapshot.ContainsPred("text", "ipsum"))).count() ==
       (1L to 290L).count(_ % 7 == 0))
     // the documented one-shot whole-table backfill: afterwards the
     // absence proof works — which REQUIRES every file to carry a
     // filter (pre-backfill the same prune kept everything)
     Snapshot.compact(spark, t, maxFilesPerPartition = 0)
-    val (_, total1) = Snapshot.pruneContains(t, "text", "ipsum")
+    val (_, total1) = Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "ipsum")))
     assert(total1 > 0)
-    assert(Snapshot.pruneContains(t, "text", "zq9xv7 never")._1.isEmpty)
+    assert(Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "zq9xv7 never")))._1.isEmpty)
     // history records the verbs
     val ops = Snapshot.history(t).map(_._2)
     assert(ops.exists(_.contains("track_trigram(text)")))
     Snapshot.untrackTrigram(spark, t, "text")
     intercept[IllegalArgumentException] {
-      Snapshot.pruneContains(t, "text", "ipsum")
+      Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "ipsum")))
     }
     // refusals: non-string column, renamed column
     val eNum = intercept[IllegalArgumentException] {
@@ -124,7 +124,7 @@ class TrigramIndexSpec extends SparkSpecBase {
     val dir = s"$root/db/docs"
     assert(Snapshot.readManifest(dir, Snapshot.currentVersion(dir))
       .bloomCols == Seq("3g:text"))
-    assert(Snapshot.pruneContains(dir, "text", "zq9xv7 never")._1.isEmpty)
+    assert(Snapshot.prune(dir, Seq(Snapshot.ContainsPred("text", "zq9xv7 never")))._1.isEmpty)
     // SHOW CREATE TABLE renders the trigram family and re-executes
     val ddl = spark.sql("SHOW CREATE TABLE tricat.db.docs").head().getString(0)
     assert(ddl.contains("trigram.text"), ddl)
@@ -172,7 +172,7 @@ class TrigramIndexSpec extends SparkSpecBase {
     val m2 = Snapshot.readManifest(t, Snapshot.currentVersion(t))
     assert(m2.bloomCols == Seq("3g:text"))
     assert(m2.files.nonEmpty && m2.files.forall(_.blooms.contains("3g:text")))
-    assert(Snapshot.pruneContains(t, "text", "zq9xv7 never")._1.isEmpty)
+    assert(Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "zq9xv7 never")))._1.isEmpty)
     // the SQL REPLACE drift gate sees a LONE trigram property: a
     // differing declaration refuses instead of being silently ignored
     val root = fresh("replsql")
@@ -235,8 +235,8 @@ class TrigramIndexSpec extends SparkSpecBase {
     // a needle crossing the emoji boundary prunes to file(s) holding
     // it and the read returns the exact row
     val needle = "c😀d"
-    assert(Snapshot.readWhereContains(spark, t, "text", needle)
+    assert(Snapshot.read(spark, t, Seq(Snapshot.ContainsPred("text", needle)))
       .select("id").as[Long].collect().toSeq == Seq(1L))
-    assert(Snapshot.pruneContains(t, "text", "c😂d")._1.isEmpty)
+    assert(Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "c😂d")))._1.isEmpty)
   }
 }
