@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
  * memo), a stats-prune fold wall and a three-conjunct prune wall
  * (`prune3_s`: id bound + partition range + IN list). Plus one
  * REAL-table anchor at ~1k files driving the DSv2 planning path
- * end-to-end, cold vs memo.
+ * end-to-end, cold vs memo, plus the plan of an unfiltered scan.
  *
  * Emits one JSON line per row to `manifestbench_out.json` (override
  * with SPARK_GRAFT_MANIFESTBENCH_OUT) and a `summary` line.
@@ -211,9 +211,13 @@ object ManifestBench {
     Snapshot.clearManifestCache()
     val (_, cold) = timed(planOnce())
     val (_, warm) = timed(planOnce())
+    // an unfiltered scan hands every file to the read: its file index
+    // is the part of planning that grows with the table
+    val (_, full) = timed(spark.read.format("graft").load(t)
+      .select("id", "payload").queryExecution.executedPlan)
     rm(t)
     f"""{"real_table_files":$nFiles,"plan_cold_s":$cold%.4f,""" +
-      f""""plan_memo_s":$warm%.4f}"""
+      f""""plan_memo_s":$warm%.4f,"plan_full_s":$full%.4f}"""
   }
 
   def main(args: Array[String]): Unit = {

@@ -95,10 +95,11 @@ object Snapshot {
     * removed (logical rows = `rows - dv.rows`). `bytes` is the file's
     * on-disk size, captured at commit time from `_metadata.file_size`
     * (zero extra filesystem calls) so PLANNING-time size estimates
-    * fold from the manifest instead of stat-ing every file — at 100k
-    * files on an object store that walk would be 100k metadata
-    * round-trips per optimizer pass. 0 = legacy manifest predating
-    * the field (readers fall back to the walk). */
+    * and every read's file index ([[ManifestFileIndex]]) come from the
+    * manifest instead of stat-ing every file — at 100k files on an
+    * object store that walk would be 100k metadata round-trips per
+    * read. 0 = legacy manifest predating the field (readers stat
+    * those files). */
   final case class FileEntry(path: String, rows: Long,
                              stats: Map[String, ColStats],
                              blooms: Map[String, Array[Byte]] = Map.empty,
@@ -1145,8 +1146,10 @@ object Snapshot {
     * column-pruned scan of the NEW files only) the row count and
     * min/max/nulls of each tracked column. Entry paths are relative to
     * `dir` (the part AFTER `marker`) — callers prefix the final commit
-    * location. */
+    * location. `written` is the physical schema the commit wrote
+    * ([[writeArranged]]'s result). */
   private def entriesOf(spark: SparkSession, dir: String, marker: String,
+                        written: StructType,
                         statsCols: Seq[String], bloomCols: Seq[String] = Nil,
                         bloomBits: Int = 0, bloomK: Int = 6,
                         hllCols: Seq[String] = Nil,
@@ -1156,7 +1159,10 @@ object Snapshot {
     val hasParts = LogStore.forPath(dir).list(dir)
       .exists { case (n, isDir) => isDir && n.startsWith("__part=") }
     if (!hasParts) return Map.empty
-    val df = spark.read.parquet(dir) // partition discovery restores __part
+    // read back under the written schema with __part a STRING:
+    // inference would type "007"/"010" as int 7/10 and key the
+    // manifest wrong, and costs a footer job per commit
+    val df = spark.read.schema(written.add("__part", StringType)).parquet(dir)
     val tracked = statsCols.flatMap(c =>
       statKind(df.schema(c).dataType).map(c -> _))
     val summed = tracked.collect {
@@ -1222,12 +1228,13 @@ object Snapshot {
   }
 
   private def commitEntries(spark: SparkSession, table: String, v: Int,
+                            written: StructType,
                             statsCols: Seq[String], bloomCols: Seq[String] = Nil,
                             bloomBits: Int = 0, bloomK: Int = 6,
                             hllCols: Seq[String] = Nil,
                             hllP: Int = 12): Map[String, Seq[FileEntry]] = {
     val prefix = f"files/c$v%08d/"
-    entriesOf(spark, commitDir(table, v), s"/$prefix", statsCols,
+    entriesOf(spark, commitDir(table, v), s"/$prefix", written, statsCols,
         bloomCols, bloomBits, bloomK, hllCols, hllP)
       .map { case (p, fs) => p -> fs.map(f => f.copy(path = prefix + f.path)) }
   }
@@ -1240,7 +1247,7 @@ object Snapshot {
   private def writeCommit(df: DataFrame, table: String, v: Int,
                           partitionCols: Seq[String], keys: Seq[String],
                           layout: Layout,
-                          columnMap: Map[String, String] = Map.empty): Unit =
+                          columnMap: Map[String, String] = Map.empty): StructType =
     writeArranged(df, commitDir(table, v), partitionCols, keys, layout, columnMap)
 
   /** The (possibly composite, possibly transformed) partition IDENTITY
@@ -1296,10 +1303,12 @@ object Snapshot {
     if (columnMap.isEmpty) df
     else df.select(df.columns.map(c => col(c).as(columnMap.getOrElse(c, c))): _*)
 
+  /** Write `df0` under `dir`, partitioned by `__part`; returns the
+    * physical schema of the data files written. */
   private def writeArranged(df0: DataFrame, dir: String,
                             partitionCols: Seq[String], keys: Seq[String],
                             layout: Layout,
-                            columnMap: Map[String, String] = Map.empty): Unit = {
+                            columnMap: Map[String, String] = Map.empty): StructType = {
     // NB: partition/key/zorder columns are barred from mapping
     // (rename/drop reject them), so the arrange columns below are
     // identity-mapped by construction
@@ -1313,6 +1322,7 @@ object Snapshot {
       else shadow.repartitionByRange(layout.fileRanges,
         col("__part") +: keys.map(col): _*)
     arranged.write.mode("error").partitionBy("__part").parquet(dir)
+    df.schema
   }
 
   /** Reject the commit if any incoming row violates a table CHECK
@@ -1458,8 +1468,8 @@ object Snapshot {
         .filter(df.columns.contains)
       val layout = Layout(fileRanges, layoutMode, zorderKeys)
       val (bBits, bK) = if (bloomCols.isEmpty) (0, 6) else (bloomBits, bloomK)
-      writeCommit(df, table, 1, partitionCols, keys, layout)
-      val parts = commitEntries(spark, table, 1, tracked, bloomCols, bBits, bK,
+      val written = writeCommit(df, table, 1, partitionCols, keys, layout)
+      val parts = commitEntries(spark, table, 1, written, tracked, bloomCols, bBits, bK,
         hllCols, hllP)
       // reclaiming publish: if a guard (e.g. min_rows) rejects the
       // initial load, the freshly written files/c00000001 dir is
@@ -1636,9 +1646,9 @@ object Snapshot {
             delivery = plan.delivery))
           CommitStats(v, Nil, Nil, 0)
         case Some(merged) =>
-          writeCommit(merged, table, v, m.partitionCols, m.keys, m.layout,
-            plan.newMap)
-          val fresh = commitEntries(spark, table, v, m.statsCols,
+          val written = writeCommit(merged, table, v, m.partitionCols, m.keys,
+            m.layout, plan.newMap)
+          val fresh = commitEntries(spark, table, v, written, m.statsCols,
             m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
           val kept = m.partitions.filterNot(e => plan.affected.contains(e._1))
           val dropped = plan.affected.filterNot(fresh.contains) // emptied
@@ -1715,9 +1725,9 @@ object Snapshot {
           upserts, deleteKeys, plan.newMap, plan.delivery)
       case Some(merged) =>
         val name = "_staging-" + java.util.UUID.randomUUID().toString.take(13)
-        writeArranged(merged, s"$table/files/$name", m.partitionCols,
-          m.keys, m.layout, plan.newMap)
-        val sub = entriesOf(spark, s"$table/files/$name", s"/$name/",
+        val written = writeArranged(merged, s"$table/files/$name",
+          m.partitionCols, m.keys, m.layout, plan.newMap)
+        val sub = entriesOf(spark, s"$table/files/$name", s"/$name/", written,
           m.statsCols, m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
         StagedMerge(table, cur, Some(name), sub, plan.affected, plan.newDdl,
           upserts, deleteKeys, plan.newMap, plan.delivery)
@@ -2022,7 +2032,7 @@ object Snapshot {
           .withColumn("__part", partValueCol(m.partitionCols, compactBase))
           .repartition(col("__part"))
           .write.mode("error").partitionBy("__part").parquet(commitDir(table, v))
-        val fresh = commitEntries(spark, table, v, m.statsCols,
+        val fresh = commitEntries(spark, table, v, compactBase.schema, m.statsCols,
           m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
         // carry schemaDdl (kept pre-evolution files still need the
         // manifest schema authority) and constraints forward — a
@@ -2073,9 +2083,9 @@ object Snapshot {
       }
       val lay = Layout(fileRanges, layoutMode, zorderKeys)
       val v = cur + 1
-      writeCommit(readManifestFiles(spark, table, m), table, v,
+      val written = writeCommit(readManifestFiles(spark, table, m), table, v,
         m.partitionCols, m.keys, lay, m.columnMap)
-      val fresh = commitEntries(spark, table, v, m.statsCols,
+      val fresh = commitEntries(spark, table, v, written, m.statsCols,
         m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
       val opName = s"relayout($layoutMode x$fileRanges" +
         (if (zorderKeys.nonEmpty) s" on ${zorderKeys.mkString(",")})" else ")")
@@ -2128,9 +2138,9 @@ object Snapshot {
       val df = readManifestFiles(spark, table, m)
       validatePartitionValues(df, newPartitionCols)
       val v = cur + 1
-      writeCommit(df, table, v, newPartitionCols, m.keys, m.layout,
-        m.columnMap)
-      val fresh = commitEntries(spark, table, v, m.statsCols, m.bloomCols,
+      val written = writeCommit(df, table, v, newPartitionCols, m.keys,
+        m.layout, m.columnMap)
+      val fresh = commitEntries(spark, table, v, written, m.statsCols, m.bloomCols,
         m.bloomBits, m.bloomK, m.hllCols, m.hllP)
       writeManifestReclaiming(table, m.copy(version = v, parent = cur,
         op = s"repartition(${newPartitionCols.mkString(",")})",
@@ -2226,13 +2236,14 @@ object Snapshot {
           return CommitStats(cur, Nil, Nil, 0)
         val affected = scope.getOrElse(dfParts)
         val v = cur + 1
-        if (dfParts.nonEmpty)
-          writeCommit(cached, table, v, m.partitionCols, m.keys, m.layout,
-            m.columnMap)
         val fresh =
           if (dfParts.isEmpty) Map.empty[String, Seq[FileEntry]]
-          else commitEntries(spark, table, v, m.statsCols, m.bloomCols,
-            m.bloomBits, m.bloomK, m.hllCols, m.hllP)
+          else {
+            val written = writeCommit(cached, table, v, m.partitionCols,
+              m.keys, m.layout, m.columnMap)
+            commitEntries(spark, table, v, written, m.statsCols, m.bloomCols,
+              m.bloomBits, m.bloomK, m.hllCols, m.hllP)
+          }
         val opScope = {
           val s = affected.toSeq.sorted
           if (s.size <= 8) s.mkString(",")
@@ -2344,8 +2355,8 @@ object Snapshot {
       val hllCols = m.hllCols.filter(df.columns.contains)
       // columnMap resets: the replace writes every live byte under the
       // new logical names, so physical == logical again
-      writeCommit(df, table, v, m.partitionCols, m.keys, m.layout)
-      val fresh = commitEntries(spark, table, v, statsCols, bloomCols,
+      val written = writeCommit(df, table, v, m.partitionCols, m.keys, m.layout)
+      val fresh = commitEntries(spark, table, v, written, statsCols, bloomCols,
         m.bloomBits, m.bloomK, hllCols, m.hllP)
       writeManifestReclaiming(table, m.copy(version = v, parent = cur,
         op = "replace", partitions = fresh, schemaDdl = df.schema.toDDL,
@@ -2366,9 +2377,9 @@ object Snapshot {
     enforceExpectations(aligned, m.expects)
     validatePartitionValues(aligned, m.partitionCols)
     val v = cur + 1
-    writeCommit(aligned, table, v, m.partitionCols, m.keys, m.layout,
-      m.columnMap)
-    val fresh = commitEntries(spark, table, v, m.statsCols, m.bloomCols,
+    val written = writeCommit(aligned, table, v, m.partitionCols, m.keys,
+      m.layout, m.columnMap)
+    val fresh = commitEntries(spark, table, v, written, m.statsCols, m.bloomCols,
       m.bloomBits, m.bloomK, m.hllCols, m.hllP)
     writeManifestReclaiming(table, m.copy(version = v, parent = cur,
       op = "overwrite", partitions = fresh, delivery = None))
@@ -3044,15 +3055,13 @@ object Snapshot {
     val physSchema = if (m.schemaDdl.isEmpty) null
       else StructType(StructType.fromDDL(m.schemaDdl).fields.map(f =>
         f.copy(name = m.phys(f.name))))
-    val reader =
-      if (physSchema != null) spark.read.schema(physSchema)
-      else spark.read
-    val base0 = reader.parquet(entries.map(f => s"$table/${f.path}"): _*)
+    // the file index comes from the entries themselves: no listing
+    // job, no stat per file ([[ManifestFileIndex]])
+    val base = ManifestFileIndex.frame(spark, table, entries, physSchema)
     def logicalView(df: DataFrame): DataFrame =
       if (m.columnMap.isEmpty) df
       else df.select(StructType.fromDDL(m.schemaDdl).fields.map(f =>
         col(m.phys(f.name)).as(f.name)): _*)
-    val base = base0
     val dvDirs = entries.flatMap(_.dv).map(_.path).distinct
     if (!applyDv || dvDirs.isEmpty) logicalView(base)
     else {
@@ -3567,7 +3576,8 @@ object Snapshot {
 
   /**
    * Integrity audit of the table: for every RETAINED version, check
-   * (a) each manifest-referenced file exists on disk, (b) the current
+   * (a) each manifest-referenced file exists on disk with the size the
+   * manifest recorded (reads trust that size), (b) the current
    * version's per-file row counts match a recount, and (c) no orphan
    * data files sit under `files/` that no retained manifest references
    * (a crashed writer's droppings — vacuum reclaims them, but an
@@ -3596,13 +3606,25 @@ object Snapshot {
           s"manifest unreadable: ${e.getMessage}")
       }
     }
+    // what is wrong on disk with a referenced file, if anything; each
+    // path is stat-ed once however many versions carry it
+    val onDisk = scala.collection.mutable.Map[String, Option[Long]]()
+    def diskProblem(f: FileEntry): Option[String] =
+      onDisk.getOrElseUpdate(f.path, {
+        val p = s"$table/${f.path}"
+        if (st.exists(p)) Some(st.size(p)) else None
+      }) match {
+        case None => Some("missing on disk")
+        case Some(sz) if f.bytes > 0 && sz != f.bytes =>
+          Some(s"size $sz != manifest ${f.bytes}")
+        case _ => None
+      }
     retained.flatMap(v => readable.get(v).map(v -> _)).foreach { case (v, m) =>
       segReferenced ++= m.segRefs.values.map(_.path)
       segReferenced ++= m.listShards.values.map(_.path)
       m.files.foreach { f =>
         referenced += f.path
-        if (!st.exists(s"$table/${f.path}"))
-          issues += FsckIssue(v, f.path, "missing on disk")
+        diskProblem(f).foreach(p => issues += FsckIssue(v, f.path, p))
         f.dv.foreach { d =>
           dvReferenced += d.path + "/"
           if (!st.isDirectory(s"$table/${d.path}"))
@@ -3638,7 +3660,9 @@ object Snapshot {
     val recountable = readable.contains(cur)
     val m = if (recountable) readable(cur)
       else Manifest(cur, 0, "unreadable", Nil, Nil, Nil, Map.empty)
-    if (m.files.nonEmpty && m.files.forall(f => st.exists(s"$table/${f.path}"))) {
+    // (a read at a wrong recorded size misparses the footer, so a
+    // size finding skips the recount like a missing file does)
+    if (m.files.nonEmpty && m.files.forall(diskProblem(_).isEmpty)) {
       val counted = readManifestFiles(spark, table, m, applyDv = false)
         .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getAs[String]("f") -> r.getAs[Long]("n")).toMap
@@ -3829,8 +3853,9 @@ object Snapshot {
       // miss updated rows; unchanged rows re-pass trivially and the
       // cost is bounded by candidate mass
       enforceConstraints(out, m.constraints)
-      writeCommit(out, table, v, m.partitionCols, m.keys, m.layout, m.columnMap)
-      val fresh = commitEntries(spark, table, v, m.statsCols,
+      val written = writeCommit(out, table, v, m.partitionCols, m.keys, m.layout,
+        m.columnMap)
+      val fresh = commitEntries(spark, table, v, written, m.statsCols,
         m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
       // per partition: carried (non-candidate) files ++ replacement files
       val touched = m.partitions.collect {

@@ -1168,11 +1168,11 @@ private[graft] object GraftFilters {
       case In(c, vs) if eqable(c) && vs.nonEmpty && !vs.contains(null) =>
         Some(Snapshot.InPred(c, vs.toIndexedSeq))
       case GreaterThan(c, v) if rangeable(c) && v != null =>
-        Some(Snapshot.BoundPred(c, Some(v), None))
+        Some(Snapshot.BoundPred(c, Some(v), None, loStrict = true))
       case GreaterThanOrEqual(c, v) if rangeable(c) && v != null =>
         Some(Snapshot.BoundPred(c, Some(v), None))
       case LessThan(c, v) if rangeable(c) && v != null =>
-        Some(Snapshot.BoundPred(c, None, Some(v)))
+        Some(Snapshot.BoundPred(c, None, Some(v), hiStrict = true))
       case LessThanOrEqual(c, v) if rangeable(c) && v != null =>
         Some(Snapshot.BoundPred(c, None, Some(v)))
       // `LIKE '%needle%'` compiles to StringContains: when the column

@@ -4,7 +4,7 @@ import graft.operators.Snapshot
 import graft.sources.{GraftDataSource, GraftFilters}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -75,6 +75,30 @@ class GraftDataSourceSpec extends SparkSpecBase {
     assert(keptEq.size < total)
     assert(rowsOf(spark.read.format("graft").load(t).filter(col("id") === 23L)) ==
       Set((23L, "pay_23", "p2")))
+  }
+
+  test("pushed strict bounds skip the file whose max (min) equals the bound; inclusive bounds keep it") {
+    val t = fresh("strict")
+    seed(t)
+    val files = Snapshot.readManifest(t, 1).files
+    def kept(f: Filter): Set[String] =
+      GraftFilters.prune(t, 1, Array(f)).get.map(_.path).toSet
+    def stat(e: Snapshot.FileEntry, hi: Boolean): Long = {
+      val cs = e.stats("id")
+      (if (hi) cs.max else cs.min).get.toLong
+    }
+    val lowest = files.minBy(stat(_, hi = true))
+    val v = stat(lowest, hi = true)
+    assert(!kept(GreaterThan("id", v)).contains(lowest.path))
+    assert(kept(GreaterThanOrEqual("id", v)).contains(lowest.path))
+    val highest = files.maxBy(stat(_, hi = false))
+    val w = stat(highest, hi = false)
+    assert(!kept(LessThan("id", w)).contains(highest.path))
+    assert(kept(LessThanOrEqual("id", w)).contains(highest.path))
+    val all = Snapshot.readLatest(spark, t)
+    val scan = spark.read.format("graft").load(t)
+    for (c <- Seq(col("id") > v, col("id") >= v, col("id") < w, col("id") <= w))
+      assert(rowsOf(scan.filter(c)) == rowsOf(all.filter(c)), c.toString)
   }
 
   test("pruning is REAL io skipping: with pruned files deleted from disk, the filtered read still works") {

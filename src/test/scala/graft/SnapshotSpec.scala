@@ -1107,4 +1107,35 @@ class SnapshotSpec extends SparkSpecBase {
     assert(df.select("id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 4L, 5L, 6L, 7L, 8L))
   }
+
+  test("partition values that look like integers keep their spelling through create and merge") {
+    val t = fresh("int_looking_parts")
+    Snapshot.create(spark, t, Seq((1L, "a", "007"), (2L, "b", "007"),
+      (3L, "c", "010")).toDF("id", "payload", "part"), "id", "part")
+    Snapshot.merge(spark, t,
+      upserts = Seq((4L, "d", "007")).toDF("id", "payload", "part"),
+      deleteKeys = Seq.empty[Long].toDF("id"))
+    assert(Snapshot.readManifest(t, 2).partitions.keySet == Set("007", "010"))
+    assert(rowsOf(Snapshot.readLatest(spark, t)) == Set((1L, "a", "007"),
+      (2L, "b", "007"), (3L, "c", "010"), (4L, "d", "007")))
+  }
+
+  test("fsck reports a data file whose size differs from the manifest's") {
+    val t = fresh("fsck_size")
+    Snapshot.create(spark, t, seedDf, "id", "part")
+    assert(Snapshot.fsck(spark, t).isEmpty)
+    val f = Snapshot.readManifest(t, 1).files.head
+    // swap in another valid parquet file of a different size
+    val other = fresh("fsck_size_other")
+    seedDf.union(seedDf).coalesce(1).write.parquet(other)
+    val src = Files.list(Paths.get(other)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val dst = Paths.get(t, f.path)
+    Files.copy(src, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(dst.resolveSibling(s".${dst.getFileName}.crc"))
+    assert(Files.size(dst) != f.bytes)
+    val issues = Snapshot.fsck(spark, t)
+    assert(issues == Seq(Snapshot.FsckIssue(1, f.path,
+      s"size ${Files.size(dst)} != manifest ${f.bytes}")), issues)
+  }
 }
