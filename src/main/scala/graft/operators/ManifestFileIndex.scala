@@ -48,10 +48,16 @@ private[graft] object ManifestFileIndex {
       if (e.bytes > 0) new FileStatus(e.bytes, false, 0, 0, 0, p)
       else fs.getFileStatus(p)
     }
-    val format = new ParquetFileFormat
-    val schema = Option(dataSchema).orElse(format.inferSchema(spark, Map.empty, files))
+    val schema = Option(dataSchema)
+      .orElse(new ParquetFileFormat().inferSchema(spark, Map.empty, files))
       .getOrElse(throw new IllegalStateException(s"snapshot $table: no schema in the files"))
-    spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFileIndex(root, files),
-      new StructType(), schema.toNullable, None, format, Map.empty)(spark))
+    frame(spark, root, files, schema)
   }
+
+  /** The parquet frame over already-known `files` under the qualified
+    * `root`, read as `dataSchema`. */
+  def frame(spark: SparkSession, root: Path, files: Seq[FileStatus],
+            dataSchema: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFileIndex(root, files),
+      new StructType(), dataSchema.toNullable, None, new ParquetFileFormat, Map.empty)(spark))
 }

@@ -1154,15 +1154,28 @@ object Snapshot {
                         bloomBits: Int = 0, bloomK: Int = 6,
                         hllCols: Seq[String] = Nil,
                         hllP: Int = 12): Map[String, Seq[FileEntry]] = {
-    // a delete-only commit that empties its partitions writes no
-    // partition dirs at all — nothing to read, nothing to list
-    val hasParts = LogStore.forPath(dir).list(dir)
-      .exists { case (n, isDir) => isDir && n.startsWith("__part=") }
-    if (!hasParts) return Map.empty
-    // read back under the written schema with __part a STRING:
-    // inference would type "007"/"010" as int 7/10 and key the
-    // manifest wrong, and costs a footer job per commit
-    val df = spark.read.schema(written.add("__part", StringType)).parquet(dir)
+    // the dir's data files, listed on the driver: partition discovery
+    // would list the same, with a Spark listing job above 32 dirs. Only
+    // `__part=*/<file>`, skipping `_`/`.`-prefixed names (`_SUCCESS`,
+    // `.crc`) as Spark does. Plain `listStatus`, never the located
+    // `listFiles`: a `LocatedFileStatus` reads each file's permissions,
+    // which the local FS does by forking a process per file. A
+    // delete-only commit that empties its partitions writes no
+    // partition dirs at all
+    val root0 = new org.apache.hadoop.fs.Path(dir)
+    val fs = root0.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.makeQualified(root0)
+    val files = try fs.listStatus(root).toSeq
+        .filter(d => d.isDirectory && d.getPath.getName.startsWith("__part="))
+        .flatMap(d => fs.listStatus(d.getPath))
+        .filter { f =>
+          val name = f.getPath.getName
+          f.isFile && !name.startsWith("_") && !name.startsWith(".")
+        }
+        .map(f => new org.apache.hadoop.fs.FileStatus(f.getLen, false, 0, 0, 0, f.getPath))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (files.isEmpty) return Map.empty
+    val df = ManifestFileIndex.frame(spark, root, files, written)
     val tracked = statsCols.flatMap(c =>
       statKind(df.schema(c).dataType).map(c -> _))
     val summed = tracked.collect {
@@ -1198,18 +1211,20 @@ object Snapshot {
       // distinct-count path of aggStats, replayable by any md5 engine
       hlled.map(c => graft.functions.HllExprs
         .hllSketch(col(c).cast("string"), hllP, portable = true).as(s"__hll_$c"))
-    val rows = df.groupBy(input_file_name().as("__file"),
-        col("__part").cast("string").as("__p"))
+    val rows = df.groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // bounded: one row per data file, manifest cardinality
     // relativize via the dir marker — robust to file:/ vs file:///
-    // URI renderings of the table root
-    rows.groupBy(_.getAs[String]("__p")).map { case (p, fs) =>
-      p -> fs.map { r =>
-        val full = r.getAs[String]("__file")
-        val at = full.lastIndexOf(marker)
-        require(at >= 0, s"snapshot: unexpected file path $full")
-        val rel = full.substring(at + marker.length)
+    // URI renderings of the table root; the partition is the path's
+    // `__part=` segment (values are `[A-Za-z0-9._~-]+` by validation,
+    // so nothing is escaped)
+    rows.map { r =>
+      val full = r.getAs[String]("__file")
+      val at = full.lastIndexOf(marker)
+      require(at >= 0, s"snapshot: unexpected file path $full")
+      full.substring(at + marker.length) -> r
+    }.groupBy(_._1.takeWhile(_ != '/').stripPrefix("__part=")).map { case (p, fs) =>
+      p -> fs.map { case (rel, r) =>
         FileEntry(rel, r.getAs[Long]("__rows"),
           tracked.map { case (c, kind) =>
             c -> ColStats(kind,
@@ -1362,6 +1377,26 @@ object Snapshot {
         bad.map(r => s"${r.getString(0)} observed=${r.getLong(1)}").mkString("; "))
   }
 
+  /** The first null or hive-unsafe component among partition value
+    * columns `comps`, as `struct(i, v)` (its index and value); NULL
+    * when every component is safe. */
+  private def firstBadPart(comps: Seq[Column]): Column = {
+    val checks = comps.zipWithIndex.map { case (c, i) =>
+      (c.isNull || !c.rlike("^[A-Za-z0-9._-]+$"),
+        struct(lit(i).as("i"), c.as("v")))
+    }
+    checks.tail.foldLeft(when(checks.head._1, checks.head._2)) {
+      case (w, (bad, at)) => w.when(bad, at)
+    }
+  }
+
+  /** The rejection for a [[firstBadPart]] hit `bad`. */
+  private def badPartition(partitionCols: Seq[String], bad: org.apache.spark.sql.Row) =
+    new IllegalArgumentException(
+      s"snapshot: partition value '${bad.get(1)}' for " +
+        s"'${PartField.parse(partitionCols(bad.getInt(0))).spec}' is null or " +
+        "needs hive escaping — unsupported")
+
   private def validatePartitionValues(df: DataFrame,
                                       partitionCols: Seq[String]): Unit = {
     // every component of the (derived) partition identity must be
@@ -1369,19 +1404,12 @@ object Snapshot {
     // Building the identity column first also runs the days()-UTC
     // session gate against df's own session.
     partValueCol(partitionCols, df)
-    val fields = partitionCols.map(PartField.parse)
-    val comps = fields.zipWithIndex.map { case (f, i) =>
-      f.valueCol(df).as(s"__pv$i") }
-    val badCond = fields.indices.map(i => col(s"__pv$i").isNull ||
-      !col(s"__pv$i").rlike("^[A-Za-z0-9._-]+$")).reduce(_ || _)
-    val bad = df.select(comps: _*).distinct().filter(badCond).limit(1).collect()
-    if (bad.nonEmpty) {
-      val i = fields.indices.find(i => bad.head.isNullAt(i) ||
-        !bad.head.getString(i).matches("^[A-Za-z0-9._-]+$")).get
-      throw new IllegalArgumentException(
-        s"snapshot: partition value '${bad.head.get(i)}' for " +
-          s"'${fields(i).spec}' is null or needs hive escaping — unsupported")
-    }
+    val comps = partitionCols.map(PartField.parse).zipWithIndex.map {
+      case (f, i) => f.valueCol(df).as(s"__pv$i") }
+    val bad = df.select(comps: _*).distinct()
+      .select(firstBadPart(partitionCols.indices.map(i => col(s"__pv$i"))).as("b"))
+      .filter(col("b").isNotNull).limit(1).collect()
+    if (bad.nonEmpty) throw badPartition(partitionCols, bad.head.getStruct(0))
   }
 
   // -------------------------------------------------------------- commits
@@ -1527,69 +1555,103 @@ object Snapshot {
     enforceExpectations(upserts, m.expects)
 
     val ups = OpCache.cache(upserts)
-    val dels = OpCache.cache(deleteKeys.select(keys.map(col): _*).distinct())
-    val overlap = ups.select(keys.map(col): _*).join(dels, keys)
-      .limit(1).count()
-    require(overlap == 0,
-      "snapshot merge: key(s) present in BOTH upserts and deleteKeys — " +
-        "remove the ambiguity upstream")
-    // the keyed-format invariant gate: one row per key. Checked HERE,
-    // on the CACHED delivery every branch of the commit will read —
-    // never on a separate plan instantiation (a non-deterministic
-    // source could pass a detached probe and still deliver
-    // duplicates to the write). Duplicate keys would otherwise land
-    // as two rows and silently corrupt every keyed consumer. The
-    // aggregate name is reserved (__graft_n) so a table whose KEY is
-    // literally named 'count' still gates cleanly.
-    val dupKey = ups.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__graft_n"))
-      .filter(col("__graft_n") > 1).limit(1).collect()
-    require(dupKey.isEmpty,
-      s"snapshot merge: upserts deliver ${if (dupKey.isEmpty) 0 else dupKey.head.getLong(keys.size)} " +
-        s"rows for key '${dupKey.headOption.map(r => keys.indices.map(r.get).mkString(",")).orNull}' — the keyed " +
-        "format admits one row per key; dedupe the delivery upstream " +
-        "(SQL MERGE: a source with duplicate ON keys, or a compound-ON " +
-        "NOT MATCHED insert colliding with a BY SOURCE update)")
-    validatePartitionValues(ups, m.partitionCols)
-
-    // affected partitions = where incoming rows land ∪ where changed
-    // keys currently live (column-pruned discovery scan of the live
-    // file set — at 100 TB this reads key + partition-source columns,
-    // never payloads)
-    val allKeys = OpCache.cache(
-      ups.select(keys.map(col): _*).unionByName(dels).distinct())
-    val resident = target
-      .select((keys.map(col) :+
-        partValueCol(m.partitionCols, target).as("__p")): _*)
-      .join(allKeys, keys, "left_semi")
-      .select(col("__p").as("p"))
-    val incoming = ups.select(partValueCol(m.partitionCols, ups).as("p"))
-    val affected = resident.unionByName(incoming).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    // this commit's DELIVERY hull ([[KeyBounds]]): one small agg over
-    // the cached delivered-key frame, recorded in the manifest so a
-    // later optimistic rebase can disprove overlap without a scan.
-    // Only for deterministic source plans; never fatal.
-    val delivery: Option[KeyBounds] = try {
+    // this commit's DELIVERY hull ([[KeyBounds]]), recorded in the
+    // manifest so a later optimistic rebase can disprove overlap
+    // without a scan. Only for deterministic source plans whose key
+    // columns all have a stat kind; never fatal.
+    val hullKinds: Option[Seq[String]] = try {
       val nonDet = Seq(upserts, deleteKeys).exists(df =>
         df.queryExecution.analyzed.exists(_.expressions.exists(!_.deterministic)))
       val kinds = keys.map(k => statKind(ups.schema(k).dataType))
-      if (nonDet || kinds.exists(_.isEmpty)) None
-      else {
-        val aggs = keys.flatMap(k => Seq(
-          min(col(k)).cast("string"), max(col(k)).cast("string")))
-        val row = allKeys.agg(aggs.head, aggs.tail: _*).head()
-        // a NULL hull side means the column holds no non-null values:
-        // no delivered tuple can match on full-key equality
-        val anyAllNull = keys.indices.exists(i => row.isNullAt(2 * i))
-        if (anyAllNull) Some(KeyBounds(empty = true, Map.empty))
-        else Some(KeyBounds(empty = false,
-          keys.zipWithIndex.map { case (k, i) =>
-            k -> ColStats(kinds(i).get, Some(row.getString(2 * i)),
-              Some(row.getString(2 * i + 1)), 0L)
-          }.toMap))
-      }
+      if (nonDet || kinds.exists(_.isEmpty)) None else Some(kinds.flatten)
     } catch { case _: Exception => None }
+
+    // ONE pre-flight execution over the CACHED delivery every branch
+    // of the commit reads — never a separate plan instantiation (a
+    // non-deterministic source could pass a detached probe and still
+    // deliver duplicates to the write). The delivery side is one
+    // key-grouped aggregate over the upserts and delete keys, tagged
+    // apart (two-level, as `Merge.mergeInto`'s guards), cached: its
+    // keys are also the changed keys the survivors anti-join drops.
+    // The resident side is the column-pruned scan of the live file set
+    // semi-joined to those keys (at 100 TB it reads key +
+    // partition-source columns, never payloads). Both end in one-row
+    // aggregates, unioned so one action returns them (a cross join
+    // would add a broadcast job to the chain).
+    val fields = m.partitionCols.map(PartField.parse)
+    val kc = keys.map(col)
+    val badType = new StructType().add("i", IntegerType).add("v", StringType)
+    val tagged = ups.select(kc ++ Seq(lit(1L).as("__graft_u"),
+        partValueCol(m.partitionCols, ups).as("__graft_p"),
+        firstBadPart(fields.map(_.valueCol(ups))).as("__graft_bad")): _*)
+      .unionByName(deleteKeys.select(kc ++ Seq(lit(0L).as("__graft_u"),
+        lit(null).cast(StringType).as("__graft_p"),
+        lit(null).cast(badType).as("__graft_bad")): _*))
+    // per key: upsert rows, delete rows, where its upsert lands (one
+    // row per key once the duplicate gate passed — only then is the
+    // partition set read) and its first bad partition value
+    val perKey = OpCache.cache(tagged.groupBy(kc: _*).agg(
+      sum(col("__graft_u")).as("__graft_nu"),
+      sum(lit(1L) - col("__graft_u")).as("__graft_nd"),
+      max(col("__graft_p")).as("__graft_p"),
+      min(col("__graft_bad")).as("__graft_bad")))
+    val allKeys = perKey.select(kc: _*)
+    val nu = col("__graft_nu")
+    val delivered = perKey.agg(
+      // NULL key components never match: the overlap an inner join finds
+      coalesce(sum(when(keys.map(col(_).isNotNull).reduce(_ && _) &&
+        nu > 0 && col("__graft_nd") > 0, 1L)), lit(0L)).as("__graft_overlap"),
+      Seq(
+        max(when(nu > 1, struct(nu +: kc: _*))).as("__graft_dup"),
+        min(col("__graft_bad")).as("__graft_bad"),
+        collect_set(col("__graft_p")).as("__graft_incoming")) ++
+      hullKinds.toSeq.flatMap(_ => keys.zipWithIndex.flatMap { case (k, i) => Seq(
+        min(col(k)).cast("string").as(s"__graft_lo$i"),
+        max(col(k)).cast("string").as(s"__graft_hi$i")) }): _*)
+    val resident = target
+      .select((kc :+ partValueCol(m.partitionCols, target).as("__graft_p")): _*)
+      .join(allKeys, keys, "left_semi")
+      .agg(collect_set(col("__graft_p")).as("__graft_resident"))
+    // one row from each side; the resident row lacks every delivery
+    // column, so its overlap count reads NULL
+    val (Array(pre), Array(res)) =
+      delivered.unionByName(resident, allowMissingColumns = true).collect()
+        .partition(r => !r.isNullAt(r.fieldIndex("__graft_overlap")))
+
+    // checked in a fixed order: overlap, duplicate key, partition value
+    require(pre.getAs[Long]("__graft_overlap") == 0,
+      "snapshot merge: key(s) present in BOTH upserts and deleteKeys — " +
+        "remove the ambiguity upstream")
+    // the keyed-format invariant gate: one row per key. Duplicate keys
+    // would otherwise land as two rows and silently corrupt every
+    // keyed consumer. Internal names are reserved (__graft_*) so a
+    // table whose KEY is literally named 'count' still gates cleanly.
+    val dupKey = Option(pre.getAs[org.apache.spark.sql.Row]("__graft_dup"))
+    require(dupKey.isEmpty,
+      s"snapshot merge: upserts deliver ${dupKey.fold(0L)(_.getLong(0))} " +
+        s"rows for key '${dupKey.map(r => keys.indices.map(i => r.get(i + 1)).mkString(",")).orNull}' — the keyed " +
+        "format admits one row per key; dedupe the delivery upstream " +
+        "(SQL MERGE: a source with duplicate ON keys, or a compound-ON " +
+        "NOT MATCHED insert colliding with a BY SOURCE update)")
+    Option(pre.getAs[org.apache.spark.sql.Row]("__graft_bad"))
+      .foreach(bad => throw badPartition(m.partitionCols, bad))
+
+    // affected partitions = where incoming rows land ∪ where changed
+    // keys currently live
+    val affected = (pre.getSeq[String](pre.fieldIndex("__graft_incoming")) ++
+      res.getSeq[String](res.fieldIndex("__graft_resident"))).distinct.sorted
+    val delivery: Option[KeyBounds] = hullKinds.flatMap(kinds => try {
+      // a NULL hull side means the column holds no non-null values
+      // (or nothing was delivered): no delivered tuple can match on
+      // full-key equality
+      if (keys.indices.exists(i => pre.isNullAt(pre.fieldIndex(s"__graft_lo$i"))))
+        Some(KeyBounds(empty = true, Map.empty))
+      else Some(KeyBounds(empty = false,
+        keys.zipWithIndex.map { case (k, i) =>
+          k -> ColStats(kinds(i), Some(pre.getAs[String](s"__graft_lo$i")),
+            Some(pre.getAs[String](s"__graft_hi$i")), 0L)
+        }.toMap))
+    } catch { case _: Exception => None })
     val newDdl =
       if (added.isEmpty) m.schemaDdl
       else StructType((if (m.schemaDdl.nonEmpty)
@@ -1628,7 +1690,7 @@ object Snapshot {
           .unionByName(ups.select(newCols.map(col): _*),
             allowMissingColumns = true))
       }
-    MergePlan(affected, merged, newDdl, Seq(ups, dels, allKeys), newMap,
+    MergePlan(affected, merged, newDdl, Seq(ups, perKey), newMap,
       delivery)
   }
 

@@ -72,6 +72,29 @@ class ManifestFileIndexSpec extends SparkSpecBase {
     assert(mergeJobs(40) === mergeJobs(4))
   }
 
+  test("create and a merge that rewrite 40 partitions start no listing job") {
+    val t = fresh("wide_commit")
+    def listings(jobs: Seq[java.util.Properties]) =
+      jobs.map(_.getProperty("spark.job.description"))
+        .filter(d => d != null && d.contains("Listing leaf files"))
+    val (_, created) = jobsStarted(
+      Snapshot.create(spark, t, rows(400, 40), "id", "part", statsCols = Seq("id")))
+    assert(listings(created).isEmpty, s"create listed: ${described(created)}")
+    assert(Snapshot.readManifest(t, 1).partitions.size == 40)
+    // one upsert and one delete per partition: all 40 are rewritten
+    val (st, merged) = jobsStarted(Snapshot.merge(spark, t,
+      upserts = (0 until 40).map(i => (i.toLong, s"new$i", s"p$i"))
+        .toDF("id", "payload", "part"),
+      deleteKeys = (40 until 80).map(_.toLong).toDF("id")))
+    assert(listings(merged).isEmpty, s"merge listed: ${described(merged)}")
+    assert(st.rewrittenPartitions.size == 40)
+    assert(Snapshot.fsck(spark, t).isEmpty)
+    val expected = (0 until 400).filterNot(i => i >= 40 && i < 80)
+      .map(i => (i.toLong, if (i < 40) s"new$i" else s"v$i", s"p${i % 40}")).toSet
+    assert(Snapshot.readLatest(spark, t).select("id", "payload", "part")
+      .as[(Long, String, String)].collect().toSet === expected)
+  }
+
   test("a read whose files are gone fails when it runs, never returning partial rows") {
     val t = fresh("gone")
     Snapshot.create(spark, t, rows(40, 4), "id", "part")

@@ -305,21 +305,79 @@ class SnapshotSpec extends SparkSpecBase {
   test("merge validations: schema mismatch, upsert∩delete overlap, bad partition value") {
     val t = fresh("validate")
     Snapshot.create(spark, t, seedDf, "id", "part")
-    intercept[IllegalArgumentException] {
-      Snapshot.merge(spark, t,
-        Seq((1L, "x")).toDF("id", "payload"), Seq.empty[Long].toDF("id"))
-    }
-    intercept[IllegalArgumentException] {
-      Snapshot.merge(spark, t,
-        Seq((1L, "x", "p1")).toDF("id", "payload", "part"),
-        Seq(1L).toDF("id"))
-    }
-    intercept[IllegalArgumentException] {
-      Snapshot.merge(spark, t,
-        Seq((9L, "x", "bad value!")).toDF("id", "payload", "part"),
-        Seq.empty[Long].toDF("id"))
+    val noKeys = Seq.empty[Long].toDF("id")
+    def ups(rows: (Long, String, String)*): DataFrame =
+      rows.toDF("id", "payload", "part")
+    val overlap = "requirement failed: snapshot merge: key(s) present in " +
+      "BOTH upserts and deleteKeys — remove the ambiguity upstream"
+    def dup(n: Int, key: String) = s"requirement failed: snapshot merge: " +
+      s"upserts deliver $n rows for key '$key' — the keyed format admits " +
+      "one row per key; dedupe the delivery upstream (SQL MERGE: a source " +
+      "with duplicate ON keys, or a compound-ON NOT MATCHED insert " +
+      "colliding with a BY SOURCE update)"
+    def badPart(v: String) = s"snapshot: partition value '$v' for 'part' " +
+      "is null or needs hive escaping — unsupported"
+    // each delivery with the one message it must fail with; several
+    // guards failing at once report the first of overlap, duplicate
+    // key, partition value
+    val cases: Seq[(String, DataFrame, DataFrame, String)] = Seq(
+      ("schema", Seq((1L, "x")).toDF("id", "payload"), noKeys,
+        "requirement failed: snapshot merge: upserts lack table column(s) part"),
+      ("overlap", ups((1L, "x", "p1")), Seq(1L).toDF("id"), overlap),
+      ("duplicate", ups((9L, "x", "p1"), (9L, "y", "p2")), noKeys, dup(2, "9")),
+      ("partition", ups((9L, "x", "bad value!")), noKeys, badPart("bad value!")),
+      ("null partition", ups((9L, "x", null)), noKeys, badPart("null")),
+      ("overlap+duplicate+partition",
+        ups((1L, "x", "p1"), (1L, "y", "bad value!")), Seq(1L, 2L).toDF("id"), overlap),
+      ("overlap+partition", ups((9L, "x", "bad value!")), Seq(9L).toDF("id"), overlap),
+      ("duplicate+partition",
+        ups((9L, "x", "bad value!"), (9L, "y", "p1"), (9L, "z", "p1")), noKeys,
+        dup(3, "9")))
+    for ((name, u, d, msg) <- cases) {
+      val merged = intercept[IllegalArgumentException](Snapshot.merge(spark, t, u, d))
+      assert(merged.getMessage === msg, s"merge: $name")
+      val staged = intercept[IllegalArgumentException](Snapshot.stageMerge(spark, t, u, d))
+      assert(staged.getMessage === msg, s"stageMerge: $name")
     }
     assert(Snapshot.currentVersion(t) == 1) // no partial commits
+    val dirs = Files.list(Paths.get(t, "files"))
+    try assert(!dirs.iterator().asScala.exists(_.getFileName.toString.startsWith("_staging-")),
+      "a refused stage writes no files")
+    finally dirs.close()
+  }
+
+  test("a merge with upserts and deletes runs three SQL executions: pre-flight, write, stats read-back") {
+    val t = fresh("executions")
+    Snapshot.create(spark, t, seedDf, "id", "part")
+    val (st, jobs) = jobsStarted(commitV2(t))
+    assert(st.version == 2)
+    val executions = jobs.flatMap(j => Option(j.getProperty("spark.sql.execution.id"))).distinct
+    assert(executions.size === 3, s"executions: ${executions.mkString(",")}")
+    assert(rowsOf(Snapshot.readLatest(spark, t)) == v2Expected)
+  }
+
+  test("each merge records the hull of the keys it delivered") {
+    val t = fresh("hull")
+    Snapshot.create(spark, t, seedDf, "id", "part")
+    def mergeBounds(upserts: DataFrame, deletes: DataFrame): Option[Snapshot.KeyBounds] =
+      Snapshot.deliveryBoundsOf(t, Snapshot.merge(spark, t, upserts, deletes).version)
+    // the hull spans both sides: upserts 2..9, deletes 5 and 12
+    val mixed = mergeBounds(
+      Seq((2L, "b", "p1"), (9L, "i", "p2")).toDF("id", "payload", "part"),
+      Seq(5L, 12L).toDF("id"))
+    assert(mixed === Some(Snapshot.KeyBounds(empty = false,
+      Map("id" -> Snapshot.ColStats("num", Some("2"), Some("12"), 0L)))))
+    val noRows = Seq.empty[(Long, String, String)].toDF("id", "payload", "part")
+    assert(mergeBounds(noRows, Seq.empty[Long].toDF("id")) ===
+      Some(Snapshot.KeyBounds(empty = true, Map.empty)))
+    // a NULL key component never equals anything: nothing conflictable
+    assert(mergeBounds(noRows, Seq(Option.empty[Long]).toDF("id")) ===
+      Some(Snapshot.KeyBounds(empty = true, Map.empty)))
+    // a non-deterministic source records no bounds (unknown)
+    assert(mergeBounds(
+      Seq((20L, "p3")).toDF("id", "part")
+        .withColumn("payload", rand().cast("string")).select("id", "payload", "part"),
+      Seq.empty[Long].toDF("id")) === None)
   }
 
   test("compact rewrites only fragmented partitions as a commit; rows identical, files reduced, history intact") {
