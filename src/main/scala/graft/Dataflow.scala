@@ -16,8 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * [[plan]]; Catalyst sees the complete metadata-driven pipeline and
  * optimizes across transformation boundaries (e.g. a `select_columns`
  * late in the flow still prunes the source scan).
+ *
+ * Diagnostics go to log4j (`graft.Dataflow`), as the sinks' do.
  */
 object Dataflow {
+  private lazy val log = org.apache.logging.log4j.LogManager.getLogger("graft.Dataflow")
 
   /** Compile all transformations; returns every named frame. */
   def plan(spark: SparkSession, flow: DataflowSpec,
@@ -61,11 +64,11 @@ object Dataflow {
             // must not fail the pipeline it merely annotates
             try {
               val est = joinSizeHint(spark, lp, rp)
-              println(s"[dataflow] join '${s.name}': estimated join " +
+              log.info(s"[dataflow] join '${s.name}': estimated join " +
                 s"cardinality <= $est (cms_join_size over $lp x $rp)")
             } catch {
               case scala.util.control.NonFatal(e) =>
-                println(s"[dataflow] join '${s.name}': cardinality " +
+                log.warn(s"[dataflow] join '${s.name}': cardinality " +
                   s"pre-flight skipped (${e.getMessage})")
             }
           }

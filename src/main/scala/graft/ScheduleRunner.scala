@@ -22,10 +22,13 @@ import java.time.Instant
  *       [dataflowName] [--now=ISO_INSTANT] [--dry-run]
  *
  * `--now` pins the wall clock (tests/backfill rehearsal); `--dry-run`
- * prints the bound runs without executing. See
- * examples/scheduled_delta.json for the canonical daily-delta flow.
+ * logs the bound runs without executing. Run reports go to log4j
+ * (`graft.ScheduleRunner`, INFO; WARN for stolen locks and failures),
+ * which the CLI keeps at INFO. See examples/scheduled_delta.json for
+ * the canonical daily-delta flow.
  */
 object ScheduleRunner {
+  private lazy val log = org.apache.logging.log4j.LogManager.getLogger("graft.ScheduleRunner")
 
   /** Renders the runs a failing trigger already executed (they are
     * committed in the state file; only the return value is lost to a
@@ -80,13 +83,13 @@ object ScheduleRunner {
       if (ageMin >= StaleLockMinutes) {
         // steal = delete + reclaim; the createNew retry keeps the
         // steal atomic when two triggers race for the same stale lock
-        println(s"[schedule] deleting stale lock $lock (${ageMin}m old — " +
+        log.warn(s"[schedule] deleting stale lock $lock (${ageMin}m old — " +
           "holder presumed crashed)")
         try store.delete(lock) catch { case _: java.io.IOException => () }
         claimed = tryClaim()
       }
       if (!claimed) {
-        println(s"[schedule] another trigger holds $lock — " +
+        log.info(s"[schedule] another trigger holds $lock — " +
           "skipping (max_active_runs=1)")
         return Nil
       }
@@ -121,7 +124,7 @@ object ScheduleRunner {
         // must keep listing, never execute or throw.
         prior.filter(_.attempts > sched.retries).foreach { f =>
           if (dryRun) {
-            println(s"[schedule] run logical=$t is FAILED terminal " +
+            log.warn(s"[schedule] run logical=$t is FAILED terminal " +
               s"(${f.attempts} attempts, retries=${sched.retries}); " +
               s"clear the 'failed' line in $statePath to re-run (dry-run)")
             halted = true
@@ -136,12 +139,12 @@ object ScheduleRunner {
         if (halted) {
           // terminal failure reported above (dry-run): skip execution
         } else if (readyAt.exists(now.isBefore)) {
-          println(s"[schedule] run logical=$t waits for retry_delay " +
+          log.info(s"[schedule] run logical=$t waits for retry_delay " +
             s"(attempt ${prior.get.attempts + 1} ready at ${readyAt.get})")
           halted = true
         } else {
           val bound = Schedule.bind(flow0, t, sched.interval)
-          println(s"[schedule] run logical=$t flow='${bound.name}'" +
+          log.info(s"[schedule] run logical=$t flow='${bound.name}'" +
             prior.map(f => s" retry attempt ${f.attempts + 1}").getOrElse("") +
             (if (dryRun) " (dry-run)" else ""))
           if (!dryRun) {
@@ -159,14 +162,14 @@ object ScheduleRunner {
                 if (attempts > sched.retries)
                   // earlier due runs in this trigger DID execute and
                   // commit state; the rethrow loses the returned Seq,
-                  // so carry them in the message (and stdout) for the
+                  // so carry them in the message (and the log) for the
                   // caller's post-mortem
                   throw new RuntimeException(
                     s"schedule: run $t failed on attempt $attempts with " +
                       s"retries=${sched.retries} exhausted; fix the cause and " +
                       s"clear the 'failed' line in $statePath to re-run" +
                       executedNote(executed.result()), e)
-                println(s"[schedule] run logical=$t failed " +
+                log.warn(s"[schedule] run logical=$t failed " +
                   s"(attempt $attempts of ${sched.retries + 1}): " +
                   s"${e.getMessage}; retrying after " +
                   s"${sched.retryDelayMinutes}m")
@@ -176,7 +179,7 @@ object ScheduleRunner {
         }
       }
     }
-    if (due.isEmpty) println("[schedule] nothing due")
+    if (due.isEmpty) log.info("[schedule] nothing due")
     executed.result()
   }
 
@@ -189,6 +192,8 @@ object ScheduleRunner {
       "usage: ScheduleRunner <metadata.json> <state-file> [dataflowName] [--now=ISO] [--dry-run]")
     val spark = GraftSession.local("graft-schedule")
     spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.ScheduleRunner", org.apache.logging.log4j.Level.INFO)
     try runDue(spark, args(0), args(1), args.lift(2), now, dryRun)
     finally spark.stop()
   }

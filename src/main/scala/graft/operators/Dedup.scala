@@ -189,26 +189,6 @@ object Dedup {
       if (n == 0) 0.0 else m.getDouble(1) / n)
   }
 
-  /**
-   * Shingle document frequencies as a TRAIN-ONCE corpus artifact: the
-   * sorted array of "frequent" shingle hashes (document frequency ≥
-   * `minDf`, top `cap` by df) that [[ngramJaccard]]'s `freqIn` takes.
-   * Same steady-state pattern as [[Similarity]]'s IVF codebook —
-   * corpus-level statistics are computed once and reused across
-   * queries and runs, not re-derived at every plan construction.
-   * Staleness is safe: ANY consistent frequent set preserves
-   * exactness (the order only shapes candidate counts), so a
-   * yesterday's-corpus set is a valid order for today's delta.
-   */
-  def shingleFrequencies(df: DataFrame, content: Column, id: Column,
-                         k: Int = 3, minDf: Int = 4,
-                         cap: Int = 1 << 20): Array[Long] =
-    frequentSet(
-      Scale.ensureParallelism(df)
-        .select(graft.functions.TextHashExprs.shingleHashes(content, k).as("sh"))
-        .filter(col("sh").isNotNull),
-      minDf, cap)
-
   /** The cached (doc_id, sh) signature frame shared by the set-
     * similarity operators. Cached because it is referenced four times
     * (both prefix sides + both rescoring joins); without the cache an

@@ -1319,18 +1319,32 @@ object Snapshot {
     else df.select(df.columns.map(c => col(c).as(columnMap.getOrElse(c, c))): _*)
 
   /** Write `df0` under `dir`, partitioned by `__part`; returns the
-    * physical schema of the data files written. */
+    * physical schema of the data files written.
+    *
+    * `byPartition` (the merge family: [[merge]], [[stageMerge]]) asks
+    * a table with no declared layout to REBALANCE its rows by `__part`
+    * first. Unarranged, every task of the survivor ∪ delivery union
+    * writes one file into every partition it touches, and the next
+    * merge, scan and point read open them all. Rebalanced, AQE coalesces
+    * the small partitions into one file each and splits a partition
+    * above `spark.sql.adaptive.advisoryPartitionSizeInBytes` into
+    * several, so files stay right-sized at scale. Create, overwrite and
+    * replace keep the caller's arrangement; a declared layout's range
+    * or z-order shuffle already arranges the write. */
   private def writeArranged(df0: DataFrame, dir: String,
                             partitionCols: Seq[String], keys: Seq[String],
                             layout: Layout,
-                            columnMap: Map[String, String] = Map.empty): StructType = {
+                            columnMap: Map[String, String] = Map.empty,
+                            byPartition: Boolean = false): StructType = {
     // NB: partition/key/zorder columns are barred from mapping
     // (rename/drop reject them), so the arrange columns below are
     // identity-mapped by construction
     val df = physicalize(df0, columnMap)
     val shadow = df.withColumn("__part", partValueCol(partitionCols, df))
     val arranged =
-      if (layout.fileRanges <= 0) shadow
+      if (layout.fileRanges <= 0)
+        // the hint takes column references only, hence the shadow column
+        if (byPartition) shadow.hint("rebalance", col("__part")) else shadow
       else if (layout.mode == "zorder")
         shadow.repartitionByRange(layout.fileRanges, col("__part"),
           Scale.zOrderKey(shadow, layout.zorderKeys))
@@ -1708,8 +1722,8 @@ object Snapshot {
             delivery = plan.delivery))
           CommitStats(v, Nil, Nil, 0)
         case Some(merged) =>
-          val written = writeCommit(merged, table, v, m.partitionCols, m.keys,
-            m.layout, plan.newMap)
+          val written = writeArranged(merged, commitDir(table, v), m.partitionCols,
+            m.keys, m.layout, plan.newMap, byPartition = true)
           val fresh = commitEntries(spark, table, v, written, m.statsCols,
             m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
           val kept = m.partitions.filterNot(e => plan.affected.contains(e._1))
@@ -1788,7 +1802,7 @@ object Snapshot {
       case Some(merged) =>
         val name = "_staging-" + java.util.UUID.randomUUID().toString.take(13)
         val written = writeArranged(merged, s"$table/files/$name",
-          m.partitionCols, m.keys, m.layout, plan.newMap)
+          m.partitionCols, m.keys, m.layout, plan.newMap, byPartition = true)
         val sub = entriesOf(spark, s"$table/files/$name", s"/$name/", written,
           m.statsCols, m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
         StagedMerge(table, cur, Some(name), sub, plan.affected, plan.newDdl,

@@ -1228,14 +1228,11 @@ class DataflowSpec extends SparkSpecBase {
          |}]}""".stripMargin
     val flow = MetaLoader.loadString(spec).dataflow("j")
 
-    val buf = new java.io.ByteArrayOutputStream()
-    val frames = Console.withOut(new java.io.PrintStream(buf)) {
-      Dataflow.plan(spark, flow)
-    }
-    val logged = buf.toString
+    val (frames, lines) = logged("graft.Dataflow")(Dataflow.plan(spark, flow))
+    val log = lines.mkString("\n")
     val m = """estimated join cardinality <= (\d+) \(cms_join_size""".r
-      .findFirstMatchIn(logged)
-    assert(m.isDefined, s"pre-flight hint line missing in:\n$logged")
+      .findFirstMatchIn(log)
+    assert(m.isDefined, s"pre-flight hint line missing in:\n$log")
     // one-sided estimator: never below the true join size
     assert(m.get.group(1).toLong >= 56L, s"hint under-estimated: ${m.get.group(1)}")
 
@@ -1252,13 +1249,10 @@ class DataflowSpec extends SparkSpecBase {
       case s: graft.meta.JoinSpec => s.copy(leftSketch = Some(s"$dir/nope"))
       case other => other
     })
-    val buf2 = new java.io.ByteArrayOutputStream()
-    val framesB = Console.withOut(new java.io.PrintStream(buf2)) {
-      Dataflow.plan(spark, broken)
-    }
+    val (framesB, linesB) = logged("graft.Dataflow")(Dataflow.plan(spark, broken))
     assert(framesB("out").count() === 56L)
-    assert(buf2.toString.contains("pre-flight skipped"),
-      s"expected the skip line, got:\n${buf2.toString}")
+    assert(linesB.exists(_.contains("pre-flight skipped")),
+      s"expected the skip line, got:\n${linesB.mkString("\n")}")
     def shape(d: org.apache.spark.sql.DataFrame) =
       d.queryExecution.optimizedPlan.toString.replaceAll("#\\d+", "#_")
     assert(shape(frames("out")) === shape(plain("out")),

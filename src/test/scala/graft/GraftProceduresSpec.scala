@@ -23,12 +23,13 @@ class GraftProceduresSpec extends SparkSpecBase {
     p
   }
 
-  /** A fragmented table: create + 3 trickle merges → >1 file per
-    * touched partition, 4 versions of history. */
+  /** A fragmented table: a create from rows spread over 8 tasks (up to
+    * 8 files per partition) + 3 trickle merges into p0 (each rewrites
+    * p0 as one file) → 4 versions of history. */
   private def seedFragmented(name: String): String = {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gproc.ns")
     (0 until 40).map(i => (i.toLong, s"pay_$i", s"p${i / 10}"))
-      .toDF("id", "payload", "part")
+      .toDF("id", "payload", "part").repartition(8)
       .createOrReplaceTempView(s"proc_seed_$name")
     spark.sql(s"DROP TABLE IF EXISTS gproc.ns.$name")
     spark.sql(s"CREATE TABLE gproc.ns.$name USING graft " +

@@ -356,6 +356,93 @@ class SnapshotSpec extends SparkSpecBase {
     assert(rowsOf(Snapshot.readLatest(spark, t)) == v2Expected)
   }
 
+  // ---- a merge's rewrite on a table with no declared layout is
+  // arranged by partition: one file per rewritten partition
+
+  /** A no-layout table created from 400 rows spread over 8 tasks × 4
+    * partitions (32 files at v1), then four merges through `commit`,
+    * each touching all 4 partitions with deliveries spread over 8
+    * tasks; each must write one file per rewritten partition, and the
+    * rows must equal the relational replay. */
+  private def eachMergeWritesOneFilePerPartition(tag: String)(
+      commit: (String, DataFrame, DataFrame) => Snapshot.CommitStats): Unit = {
+    val t = fresh(tag)
+    def frame(rows: Map[Long, String]): DataFrame =
+      rows.toSeq.map { case (k, v) => (k, v, s"p${k % 4}") }
+        .toDF("id", "payload", "part").repartition(8)
+    var model = (0L until 400L).map(k => k -> s"v$k").toMap
+    Snapshot.create(spark, t, frame(model), "id", "part")
+    assert(Snapshot.readManifest(t, 1).files.size == 32,
+      "fixture: 8 tasks × 4 partitions")
+    for (round <- 1L to 4L) {
+      // per partition p: two revisions, one new key and one delete
+      val ups = (0L until 4L).flatMap(p =>
+        Seq(4 * round + p, 4 * (round + 10) + p, 1000 + 4 * round + p))
+        .map(k => k -> s"r$round-$k").toMap
+      val dels = (0L until 4L).map(p => 200 + 4 * round + p)
+      val st = commit(t, frame(ups), dels.toDF("id").repartition(8))
+      model = model -- dels ++ ups
+      assert(st.rewrittenPartitions == Seq("p0", "p1", "p2", "p3"))
+      assert(st.filesWritten == st.rewrittenPartitions.size, s"merge $round")
+      assert(Snapshot.readManifest(t, st.version).files.size == 4, s"merge $round")
+    }
+    assert(rowsOf(Snapshot.readLatest(spark, t)) ==
+      model.map { case (k, v) => (k, v, s"p${k % 4}") }.toSet)
+    assert(Snapshot.fsck(spark, t).isEmpty)
+  }
+
+  test("merge on a table with no declared layout writes one file per rewritten partition") {
+    eachMergeWritesOneFilePerPartition("merge_files")(Snapshot.merge(spark, _, _, _))
+  }
+
+  test("stageMerge + commitStaged on a table with no declared layout writes one file per rewritten partition") {
+    eachMergeWritesOneFilePerPartition("staged_files") { (t, u, d) =>
+      Snapshot.commitStaged(spark, Snapshot.stageMerge(spark, t, u, d))
+    }
+  }
+
+  test("a merge splits a rewritten partition above the advisory size into several files") {
+    val t = fresh("merge_split")
+    val rows = spark.range(0, 20000).select(col("id"),
+      concat(lit("payload "), col("id")).as("payload"),
+      concat(lit("p"), col("id") % 2).as("part"))
+    Snapshot.create(spark, t, rows.repartition(8), "id", "part")
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "16k")
+    val st = try Snapshot.merge(spark, t,
+        Seq((1L, "x", "p1"), (2L, "y", "p0")).toDF("id", "payload", "part"),
+        Seq(3L).toDF("id"))
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(st.rewrittenPartitions == Seq("p0", "p1"))
+    val m = Snapshot.readManifest(t, st.version)
+    for (p <- Seq("p0", "p1"))
+      assert(m.partitions(p).size > 1, s"$p: ${m.partitions(p).size} file(s)")
+    assert(Snapshot.readLatest(spark, t).count() == 19999)
+    assert(Snapshot.readLatest(spark, t).filter(col("id") <= 3)
+      .select("id", "payload").as[(Long, String)].collect().toSet ==
+      Set((0L, "payload 0"), (1L, "x"), (2L, "y")))
+    assert(Snapshot.fsck(spark, t).isEmpty)
+  }
+
+  test("a declared fileRanges layout arranges a merge's write itself: one file per key range") {
+    val t = fresh("merge_ranges")
+    val rows = spark.range(0, 300).select(col("id"),
+      concat(lit("v"), col("id")).as("payload"), lit("p1").as("part"))
+    Snapshot.create(spark, t, rows, "id", "part", statsCols = Seq("id"), fileRanges = 3)
+    val st = Snapshot.merge(spark, t,
+      Seq((1L, "x", "p1"), (301L, "y", "p1")).toDF("id", "payload", "part"),
+      Seq(5L).toDF("id"))
+    assert(st.filesWritten == 3)
+    // disjoint ascending id ranges: the range shuffle, not a rebalance
+    val ranges = Snapshot.readManifest(t, st.version).files
+      .map(f => (f.stats("id").min.get.toLong, f.stats("id").max.get.toLong))
+      .sortBy(_._1)
+    assert(ranges.size == 3)
+    ranges.sliding(2).foreach { case Seq(a, b) => assert(a._2 < b._1, ranges) }
+    assert(Snapshot.readLatest(spark, t).count() == 300)
+  }
+
   test("each merge records the hull of the keys it delivered") {
     val t = fresh("hull")
     Snapshot.create(spark, t, seedDf, "id", "part")
@@ -382,11 +469,15 @@ class SnapshotSpec extends SparkSpecBase {
 
   test("compact rewrites only fragmented partitions as a commit; rows identical, files reduced, history intact") {
     val t = fresh("compact")
-    // build fragmentation: create + 4 single-row merges into p1
-    Snapshot.create(spark, t, seedDf, "id", "part")
+    // build fragmentation: a create with one task per row, so p1's
+    // three rows are three files (a merge rewrites each partition it
+    // touches as one file), then 4 single-row merges into p2
+    val spread = spark.createDataFrame(
+      spark.sparkContext.parallelize(seedDf.collect().toSeq, 8), seedDf.schema)
+    Snapshot.create(spark, t, spread, "id", "part")
     (1 to 4).foreach { i =>
       Snapshot.merge(spark, t,
-        upserts = Seq((100L + i, s"extra$i", "p1")).toDF("id", "payload", "part"),
+        upserts = Seq((100L + i, s"extra$i", "p2")).toDF("id", "payload", "part"),
         deleteKeys = spark.emptyDataset[Long].toDF("id"))
     }
     val before = Snapshot.readManifest(t, 5)

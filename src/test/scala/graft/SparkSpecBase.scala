@@ -52,6 +52,40 @@ trait SparkSpecBase extends AnyFunSuite {
       (out, jobs.result())
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Run `body` with log4j logger `name` at INFO; return its result and
+    * every message logged to that logger meanwhile. The capture is a
+    * non-additive config of its own, removed afterwards, so the
+    * session's own levels and appenders are left as they were. */
+  def logged[T](name: String)(body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    import scala.jdk.CollectionConverters._
+    val ctx = org.apache.logging.log4j.LogManager.getLogger(name)
+      .asInstanceOf[Logger].getContext
+    val conf = ctx.getConfiguration
+    assert(!conf.getLoggers.containsKey(name), s"logger $name is already configured")
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(s"capture-$name", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val lc = new LoggerConfig(name, org.apache.logging.log4j.Level.INFO, false)
+    lc.addAppender(appender, null, null)
+    conf.addLogger(name, lc)
+    ctx.updateLoggers()
+    try {
+      val out = body
+      (out, lines.asScala.toSeq)
+    } finally {
+      conf.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
 }
 
 object SparkSpecBase {
