@@ -521,20 +521,11 @@ object Snapshot {
     }
   }
 
-  /** Publish via [[writeManifest]]; if a GUARD rejects the commit,
-    * reclaim its freshly written commit directory first (this writer
-    * holds the commit lock, so the directory is exclusively its own —
-    * deleting it frees the version number for the next attempt
-    * instead of leaving a colliding orphan). */
-  private def writeManifestReclaiming(table: String, m: Manifest): Unit =
-    try writeManifest(table, m)
-    catch {
-      case e: GuardViolationException =>
-        store(table).deleteTree(commitDir(table, m.version))
-        throw e
-    }
-
-  private[graft] def writeManifest(table: String, m: Manifest): Unit = {
+  /** Publish `m` as its version: guards, segments, then the one
+    * conditional put that is the commit point. `putting` runs just
+    * before that put is attempted. */
+  private[graft] def writeManifest(table: String, m: Manifest,
+                                   putting: () => Unit = () => ()): Unit = {
     enforceGuards(table, m)
     val root = mapper.createObjectNode()
     root.put("version", m.version); root.put("parent", m.parent)
@@ -676,6 +667,7 @@ object Snapshot {
     }
     // the store's atomic publish IS the commit point: the manifest
     // appears whole or not at all, and an existing version refuses
+    putting()
     try st.putIfAbsent(manifestPath(table, m.version),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
     catch {
@@ -1094,16 +1086,18 @@ object Snapshot {
 
   // ----------------------------------------------------------------- lock
 
-  /** Claim the commit lock (atomic create-new). A lock older than
-    * `staleMs` is presumed abandoned (crashed writer) and stolen
-    * race-safely: steal = delete + re-claim, and losing the re-claim
-    * race still fails closed. */
+  /** Claim the commit lock (atomic create-new) and run `body`, told
+    * whether the lock was stolen. A lock older than `staleMs` is
+    * presumed abandoned (crashed writer) and stolen race-safely:
+    * steal = delete + re-claim, and losing the re-claim race still
+    * fails closed. */
   private def withCommitLock[A](table: String, staleMs: Long = 6 * 3600 * 1000L)
-                               (body: => A): A = {
+                               (body: Boolean => A): A = {
     val st = store(table)
     st.mkdirs(logDir(table))
     val lf = lockFile(table)
     def claim(): Boolean = st.createNew(lf)
+    var stolen = false
     val got = claim() || {
       // a missing lock means the holder RELEASED between our claim and
       // this check — re-claim without deleting (a delete here could
@@ -1116,14 +1110,91 @@ object Snapshot {
         case None => claim()
         case Some(a) if a > staleMs =>
           try st.delete(lf) catch { case _: Exception => () }
-          claim()
+          stolen = claim()
+          stolen
         case _ => false
       }
     }
     if (!got) throw new ConcurrentCommitException(
       s"snapshot $table: a commit is in flight (lock ${lf} held); retry later")
-    try body finally st.delete(lf)
+    try body(stolen) finally st.delete(lf)
   }
+
+  // --------------------------------------------------------------- commit
+
+  /** A commit in flight under the lock: the version it read (`cur`, 0
+    * for a create), the version it publishes (`v`) and the current
+    * manifest, read on first use. */
+  private final class Commit(val table: String, val cur: Int) {
+    val v: Int = cur + 1
+    lazy val m: Manifest = readManifest(table, cur)
+    var fresh = Map.empty[String, Seq[FileEntry]]
+
+    /** Write `df` as this commit's data files — partitioned, arranged
+      * and tracked as `shape` declares — and return their entries. */
+    def write(spark: SparkSession, df: DataFrame, shape: Manifest,
+              byPartition: Boolean = false): Map[String, Seq[FileEntry]] = {
+      val written = writeArranged(df, commitDir(table, v), shape.partitionCols,
+        shape.keys, shape.layout, shape.columnMap, byPartition)
+      adopt(commitEntries(spark, table, v, written, shape.statsCols,
+        shape.bloomCols, shape.bloomBits, shape.bloomK, shape.hllCols, shape.hllP))
+    }
+
+    /** The entries of files already moved under the commit dir. */
+    def adopt(entries: Map[String, Seq[FileEntry]]): Map[String, Seq[FileEntry]] = {
+      fresh = entries
+      entries
+    }
+  }
+
+  /** What a draft publishes: `next`, stamped with the commit's version,
+    * parent and op (`op` replaces the op when only the draft knows it).
+    * The stats report the written partitions unless `touched` says
+    * otherwise, and the files written. */
+  private final case class Draft(next: Manifest, op: Option[String] = None,
+                                 touched: Option[Seq[String]] = None,
+                                 dropped: Seq[String] = Nil)
+
+  /** The manifest delivery of a commit that delivered no keys. */
+  private val NothingDelivered = Some(KeyBounds(empty = true, Map.empty))
+
+  /** The one commit protocol of every write that publishes a manifest.
+    * Under the lock it reads the current version (a `create` wants
+    * none, every other commit an existing table), runs `draft`, and
+    * publishes what the draft returns as version cur + 1 — or no
+    * version at all for None. The commit dir `files/c<v>` belongs to
+    * the lock holder alone, so:
+    *  - a draft that throws before the manifest put is attempted, a
+    *    rejecting guard included, has the dir reclaimed: `v` stays free;
+    *  - once the put is attempted the dir stays, since a lost
+    *    acknowledgement may already have published `v`;
+    *  - a stolen lock's holder died, maybe between its data write and
+    *    its put: its orphaned dir goes before the draft runs.
+    */
+  private def commit(table: String, op: String, create: Boolean = false)
+                    (draft: Commit => Option[Draft]): CommitStats =
+    withCommitLock(table) { stolen =>
+      val st = store(table)
+      val cur = currentVersion(table)
+      if (create) require(cur == 0, s"snapshot $table already exists (v$cur)")
+      else require(cur > 0, s"snapshot $table does not exist")
+      val c = new Commit(table, cur)
+      val dir = commitDir(table, c.v)
+      if (stolen && !st.exists(manifestPath(table, c.v))) st.deleteTree(dir)
+      var put = false
+      try draft(c) match {
+        case None => CommitStats(cur, Nil, Nil, 0)
+        case Some(d) =>
+          writeManifest(table, d.next.copy(version = c.v, parent = cur,
+            op = d.op.getOrElse(op)), () => put = true)
+          CommitStats(c.v, d.touched.getOrElse(c.fresh.keys.toSeq.sorted),
+            d.dropped, c.fresh.values.map(_.size).sum)
+      } catch {
+        case e: Throwable if !put =>
+          try st.deleteTree(dir) catch { case r: Exception => e.addSuppressed(r) }
+          throw e
+      }
+    }
 
   // ---------------------------------------------------------------- stats
 
@@ -1253,17 +1324,6 @@ object Snapshot {
         bloomCols, bloomBits, bloomK, hllCols, hllP)
       .map { case (p, fs) => p -> fs.map(f => f.copy(path = prefix + f.path)) }
   }
-
-  /** Write `df`'s rows for this commit, arranged per the table
-    * [[Layout]] — the shuffle (when any) is bounded by this COMMIT's
-    * bytes, never the table's (same trade as
-    * [[Scale.writeRangeLayout]]/[[Scale.writeZOrder]], applied
-    * per-commit). */
-  private def writeCommit(df: DataFrame, table: String, v: Int,
-                          partitionCols: Seq[String], keys: Seq[String],
-                          layout: Layout,
-                          columnMap: Map[String, String] = Map.empty): StructType =
-    writeArranged(df, commitDir(table, v), partitionCols, keys, layout, columnMap)
 
   /** The (possibly composite, possibly transformed) partition IDENTITY
     * as a string column: single specs are the bare derived value;
@@ -1464,9 +1524,7 @@ object Snapshot {
                   guards: Map[String, String] = Map.empty,
                   hllCols: Seq[String] = Nil, hllP: Int = 12,
                   expects: Seq[String] = Nil): CommitStats =
-    withCommitLock(table) {
-      require(currentVersion(table) == 0,
-        s"snapshot $table already exists (v${currentVersion(table)})")
+    commit(table, "create", create = true) { c =>
       require(keys.nonEmpty && partitionCols.nonEmpty,
         "snapshot: keys and partitionCols must be non-empty")
       require(keys.distinct == keys,
@@ -1510,16 +1568,10 @@ object Snapshot {
         .filter(df.columns.contains)
       val layout = Layout(fileRanges, layoutMode, zorderKeys)
       val (bBits, bK) = if (bloomCols.isEmpty) (0, 6) else (bloomBits, bloomK)
-      val written = writeCommit(df, table, 1, partitionCols, keys, layout)
-      val parts = commitEntries(spark, table, 1, written, tracked, bloomCols, bBits, bK,
-        hllCols, hllP)
-      // reclaiming publish: if a guard (e.g. min_rows) rejects the
-      // initial load, the freshly written files/c00000001 dir is
-      // deleted so a retried create() doesn't hit path-already-exists
-      writeManifestReclaiming(table, Manifest(1, 0, "create", keys, partitionCols,
-        tracked, parts, layout, df.schema.toDDL, constraints, bloomCols, bBits, bK,
-        guards, hllCols, hllP, expects))
-      CommitStats(1, parts.keys.toSeq.sorted, Nil, parts.values.map(_.size).sum)
+      val shape = Manifest(c.v, c.cur, "create", keys, partitionCols, tracked,
+        Map.empty, layout, df.schema.toDDL, constraints, bloomCols, bBits, bK,
+        guards, hllCols, hllP, expects)
+      Some(Draft(shape.copy(partitions = c.write(spark, df, shape))))
     }
 
   /**
@@ -1659,7 +1711,7 @@ object Snapshot {
       // (or nothing was delivered): no delivered tuple can match on
       // full-key equality
       if (keys.indices.exists(i => pre.isNullAt(pre.fieldIndex(s"__graft_lo$i"))))
-        Some(KeyBounds(empty = true, Map.empty))
+        NothingDelivered
       else Some(KeyBounds(empty = false,
         keys.zipWithIndex.map { case (k, i) =>
           k -> ColStats(kinds(i), Some(pre.getAs[String](s"__graft_lo$i")),
@@ -1710,32 +1762,22 @@ object Snapshot {
 
   def merge(spark: SparkSession, table: String, upserts: DataFrame,
             deleteKeys: DataFrame, op: String = "merge"): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist — create() first")
-      val m = readManifest(table, cur)
+    commit(table, op) { c =>
+      val m = c.m
       val plan = planMerge(spark, table, m, upserts, deleteKeys)
-      val v = cur + 1
       val out = plan.merged match {
         case None => // no-op merge still commits (audit trail)
-          writeManifest(table, m.copy(version = v, parent = cur, op = op,
-            delivery = plan.delivery))
-          CommitStats(v, Nil, Nil, 0)
+          Draft(m.copy(delivery = plan.delivery))
         case Some(merged) =>
-          val written = writeArranged(merged, commitDir(table, v), m.partitionCols,
-            m.keys, m.layout, plan.newMap, byPartition = true)
-          val fresh = commitEntries(spark, table, v, written, m.statsCols,
-            m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
+          val next = m.copy(schemaDdl = plan.newDdl, columnMap = plan.newMap,
+            delivery = plan.delivery)
+          val fresh = c.write(spark, merged, next, byPartition = true)
           val kept = m.partitions.filterNot(e => plan.affected.contains(e._1))
-          val dropped = plan.affected.filterNot(fresh.contains) // emptied
-          writeManifestReclaiming(table, m.copy(version = v, parent = cur, op = op,
-            partitions = kept ++ fresh, schemaDdl = plan.newDdl,
-            columnMap = plan.newMap, delivery = plan.delivery))
-          CommitStats(v, fresh.keys.toSeq.sorted, dropped,
-            fresh.values.map(_.size).sum)
+          Draft(next.copy(partitions = kept ++ fresh),
+            dropped = plan.affected.filterNot(fresh.contains)) // emptied
       }
       plan.caches.foreach(OpCache.unpersistEager)
-      out
+      Some(out)
     }
 
   // ------------------------------------------- optimistic concurrency
@@ -1834,10 +1876,10 @@ object Snapshot {
    */
   def commitStaged(spark: SparkSession, staged: StagedMerge,
                    strict: Boolean = false): CommitStats =
-    withCommitLock(staged.table) {
+    commit(staged.table, "merge") { c =>
       val table = staged.table
-      val curNow = currentVersion(table)
-      val mC = readManifest(table, curNow)
+      val curNow = c.cur
+      val mC = c.m
       if (curNow != staged.readVersion) {
         def conflict(why: String) = throw new CommitConflictException(
           s"snapshot $table: staged merge (read v${staged.readVersion}, " +
@@ -1938,27 +1980,19 @@ object Snapshot {
           }
         }
       }
-      val v = curNow + 1
-      staged.stagingName match {
-        case None =>
-          writeManifest(table, mC.copy(version = v, parent = curNow,
-            op = "merge", delivery = staged.keyBounds))
-          CommitStats(v, Nil, Nil, 0)
+      Some(staged.stagingName match {
+        case None => Draft(mC.copy(delivery = staged.keyBounds))
         case Some(name) =>
-          val prefix = f"files/c$v%08d/"
+          val prefix = f"files/c${c.v}%08d/"
           store(table).rename(s"$table/files/$name",
-            commitDir(table, v)) // atomic: same store
-          val fresh = staged.subEntries.map { case (p, fs) =>
-            p -> fs.map(f => f.copy(path = prefix + f.path)) }
+            commitDir(table, c.v)) // atomic: same store
+          val fresh = c.adopt(staged.subEntries.map { case (p, fs) =>
+            p -> fs.map(f => f.copy(path = prefix + f.path)) })
           val kept = mC.partitions.filterNot(e => staged.affected.contains(e._1))
-          val dropped = staged.affected.filterNot(fresh.contains)
-          writeManifestReclaiming(table, mC.copy(version = v, parent = curNow,
-            op = "merge", partitions = kept ++ fresh,
-            schemaDdl = staged.newDdl, columnMap = staged.newMap,
-            delivery = staged.keyBounds))
-          CommitStats(v, fresh.keys.toSeq.sorted, dropped,
-            fresh.values.map(_.size).sum)
-      }
+          Draft(mC.copy(partitions = kept ++ fresh, schemaDdl = staged.newDdl,
+              columnMap = staged.newMap, delivery = staged.keyBounds),
+            dropped = staged.affected.filterNot(fresh.contains))
+      })
     }
 
   /**
@@ -2081,43 +2115,30 @@ object Snapshot {
    */
   def compact(spark: SparkSession, table: String,
               maxFilesPerPartition: Int = 4): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist")
-      val m = readManifest(table, cur)
+    commit(table, "compact") { c =>
+      val m = c.m
       // rewrite fragmented partitions AND partitions carrying deletion
       // vectors — compact is where merge-on-read deletes MATERIALIZE
       // (rows physically dropped, vectors cleared), resetting the
       // read-side anti-join mass to zero
       val frag = m.partitions.filter { case (_, fs) =>
         fs.size > maxFilesPerPartition || fs.exists(_.dv.isDefined) }
-      val v = cur + 1
-      if (frag.isEmpty) {
-        writeManifest(table, m.copy(version = v, parent = cur, op = "compact",
-          delivery = Some(KeyBounds(empty = true, Map.empty))))
-        CommitStats(v, Nil, Nil, 0)
-      } else {
-        // one task per partition value → one output file per partition
-        // (manifest schema: post-evolution commits hold mixed-schema
-        // files; the compacted file carries the full current schema);
-        // the dv-applied read drops masked rows from the new files
-        val compactBase = physicalize(
-          readManifestFiles(spark, table, m, frag.values.flatten.toSeq),
-          m.columnMap)
-        compactBase
-          .withColumn("__part", partValueCol(m.partitionCols, compactBase))
-          .repartition(col("__part"))
-          .write.mode("error").partitionBy("__part").parquet(commitDir(table, v))
-        val fresh = commitEntries(spark, table, v, compactBase.schema, m.statsCols,
-          m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
-        // carry schemaDdl (kept pre-evolution files still need the
-        // manifest schema authority) and constraints forward — a
-        // layout-only commit changes neither
-        writeManifestReclaiming(table, m.copy(version = v, parent = cur, op = "compact",
-          partitions = m.partitions.filterNot(e => frag.contains(e._1)) ++ fresh,
-          delivery = Some(KeyBounds(empty = true, Map.empty))))
-        CommitStats(v, fresh.keys.toSeq.sorted, Nil, fresh.values.map(_.size).sum)
+      val fresh = if (frag.isEmpty) Map.empty[String, Seq[FileEntry]] else {
+        // one task per partition value → one output file per partition,
+        // whatever the table's layout (manifest schema: post-evolution
+        // commits hold mixed-schema files; the compacted file carries
+        // the full current schema); the dv-applied read drops masked
+        // rows from the new files
+        val base = readManifestFiles(spark, table, m, frag.values.flatten.toSeq)
+        c.write(spark, base.repartition(partValueCol(m.partitionCols, base)),
+          m.copy(layout = Layout()))
       }
+      // carry schemaDdl (kept pre-evolution files still need the
+      // manifest schema authority) and constraints forward — a
+      // layout-only commit changes neither
+      Some(Draft(m.copy(
+        partitions = m.partitions.filterNot(e => frag.contains(e._1)) ++ fresh,
+        delivery = NothingDelivered)))
     }
 
   /**
@@ -2137,16 +2158,16 @@ object Snapshot {
    */
   def relayout(spark: SparkSession, table: String, fileRanges: Int,
                layoutMode: String = "range",
-               zorderKeys: Seq[String] = Nil): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist")
+               zorderKeys: Seq[String] = Nil): CommitStats = {
+    val opName = s"relayout($layoutMode x$fileRanges" +
+      (if (zorderKeys.nonEmpty) s" on ${zorderKeys.mkString(",")})" else ")")
+    commit(table, opName) { c =>
       require(fileRanges > 0, "relayout: fileRanges must be positive")
       require(layoutMode == "range" || layoutMode == "zorder",
         s"relayout: unknown layout mode '$layoutMode'")
       require(layoutMode != "zorder" || zorderKeys.nonEmpty,
         "relayout: layout zorder needs zorderKeys")
-      val m = readManifest(table, cur)
+      val m = c.m
       val schemaCols =
         if (m.schemaDdl.nonEmpty) StructType.fromDDL(m.schemaDdl).fieldNames.toSeq
         else Nil
@@ -2157,21 +2178,20 @@ object Snapshot {
           s"relayout: z-order key '$k' is a renamed column — z-order keys " +
             "must be identity-mapped (compact first, or key on the physical name)")
       }
-      val lay = Layout(fileRanges, layoutMode, zorderKeys)
-      val v = cur + 1
-      val written = writeCommit(readManifestFiles(spark, table, m), table, v,
-        m.partitionCols, m.keys, lay, m.columnMap)
-      val fresh = commitEntries(spark, table, v, written, m.statsCols,
-        m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
-      val opName = s"relayout($layoutMode x$fileRanges" +
-        (if (zorderKeys.nonEmpty) s" on ${zorderKeys.mkString(",")})" else ")")
-      writeManifestReclaiming(table, m.copy(version = v, parent = cur,
-        op = opName, partitions = fresh, layout = lay,
-        delivery = Some(KeyBounds(empty = true, Map.empty))))
-      CommitStats(v, fresh.keys.toSeq.sorted,
-        m.partitions.keySet.filterNot(fresh.contains).toSeq.sorted,
-        fresh.values.map(_.size).sum)
+      rewriteAll(spark, c, readManifestFiles(spark, table, m),
+        m.copy(layout = Layout(fileRanges, layoutMode, zorderKeys),
+          delivery = NothingDelivered))
     }
+  }
+
+  /** The draft of a commit that rewrites every live file: `df` written
+    * as `next` declares becomes the whole table. */
+  private def rewriteAll(spark: SparkSession, c: Commit, df: DataFrame,
+                         next: Manifest): Option[Draft] = {
+    val fresh = c.write(spark, df, next)
+    Some(Draft(next.copy(partitions = fresh),
+      dropped = c.m.partitions.keySet.filterNot(fresh.contains).toSeq.sorted))
+  }
 
   /**
    * REWRITE the table under a NEW PARTITION SPEC as ONE commit — the
@@ -2190,41 +2210,30 @@ object Snapshot {
    */
   def repartitionTable(spark: SparkSession, table: String,
                        newPartitionCols: Seq[String]): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist")
+    commit(table, s"repartition(${newPartitionCols.mkString(",")})") { c =>
       require(newPartitionCols.nonEmpty, "repartitionTable: empty spec")
       require(newPartitionCols.distinct == newPartitionCols,
         s"repartitionTable: duplicate spec entry in ${newPartitionCols.mkString(",")}")
-      val m = readManifest(table, cur)
+      val m = c.m
       require(m.schemaDdl.nonEmpty,
         s"snapshot $table: no manifest schema — pre-schema table cannot repartition")
-      if (newPartitionCols == m.partitionCols)
-        return CommitStats(cur, Nil, Nil, 0) // no-op: spec unchanged
-      val schema = StructType.fromDDL(m.schemaDdl)
-      newPartitionCols.map(PartField.parse).foreach { f =>
-        val sf = schema.fields.find(_.name == f.source).getOrElse(
-          throw new IllegalArgumentException(
-            s"repartitionTable: no column '${f.source}' in the table schema"))
-        require(m.phys(f.source) == f.source,
-          s"repartitionTable: partition source '${f.source}' is a renamed " +
-            "column — sources must be identity-mapped")
-        validateTransformType(f, sf.dataType, "repartitionTable")
+      if (newPartitionCols == m.partitionCols) None // no-op: spec unchanged
+      else {
+        val schema = StructType.fromDDL(m.schemaDdl)
+        newPartitionCols.map(PartField.parse).foreach { f =>
+          val sf = schema.fields.find(_.name == f.source).getOrElse(
+            throw new IllegalArgumentException(
+              s"repartitionTable: no column '${f.source}' in the table schema"))
+          require(m.phys(f.source) == f.source,
+            s"repartitionTable: partition source '${f.source}' is a renamed " +
+              "column — sources must be identity-mapped")
+          validateTransformType(f, sf.dataType, "repartitionTable")
+        }
+        val df = readManifestFiles(spark, table, m)
+        validatePartitionValues(df, newPartitionCols)
+        rewriteAll(spark, c, df, m.copy(partitionCols = newPartitionCols,
+          delivery = NothingDelivered))
       }
-      val df = readManifestFiles(spark, table, m)
-      validatePartitionValues(df, newPartitionCols)
-      val v = cur + 1
-      val written = writeCommit(df, table, v, newPartitionCols, m.keys,
-        m.layout, m.columnMap)
-      val fresh = commitEntries(spark, table, v, written, m.statsCols, m.bloomCols,
-        m.bloomBits, m.bloomK, m.hllCols, m.hllP)
-      writeManifestReclaiming(table, m.copy(version = v, parent = cur,
-        op = s"repartition(${newPartitionCols.mkString(",")})",
-        partitions = fresh, partitionCols = newPartitionCols,
-        delivery = Some(KeyBounds(empty = true, Map.empty))))
-      CommitStats(v, fresh.keys.toSeq.sorted,
-        m.partitions.keySet.filterNot(fresh.contains).toSeq.sorted,
-        fresh.values.map(_.size).sum)
     }
 
   /**
@@ -2246,7 +2255,7 @@ object Snapshot {
    * columns is the additive-evolution path.
    */
   def overwrite(spark: SparkSession, table: String, df: DataFrame): CommitStats =
-    withCommitLock(table) { overwriteLocked(spark, table, Some(df)) }
+    replaceRows(spark, table, Some(df))
 
   /** TRUNCATE: [[overwrite]] with an empty frame of the table's
     * CURRENT schema — resolved under the SAME lock claim as the
@@ -2254,7 +2263,7 @@ object Snapshot {
     * empty frame predates. Guards apply: a `min_rows`-guarded table
     * refuses truncation. */
   def truncate(spark: SparkSession, table: String): CommitStats =
-    withCommitLock(table) { overwriteLocked(spark, table, None) }
+    replaceRows(spark, table, None)
 
   /**
    * PARTITION-SCOPED OVERWRITE — the daily-refresh verb: replace
@@ -2284,10 +2293,8 @@ object Snapshot {
    */
   def overwritePartitions(spark: SparkSession, table: String, df: DataFrame,
                           scope: Option[Set[String]] = None): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist")
-      val m = readManifest(table, cur)
+    commit(table, "overwrite_partitions") { c =>
+      val m = c.m
       val aligned = alignForReplace(spark, table, m, Some(df))
       enforceConstraints(aligned, m.constraints)
       enforceExpectations(aligned, m.expects)
@@ -2305,33 +2312,26 @@ object Snapshot {
               s"the static scope ${s.toSeq.sorted.mkString(",")} — a static " +
               "PARTITION spec is exact, never silently widened")
         }
-        if (scope.isEmpty && dfParts.isEmpty)
-          // dynamic + empty delivery: nothing to replace — do NOT
-          // burn a version on a no-op (an accidentally-empty upstream
-          // should not look like a successful refresh)
-          return CommitStats(cur, Nil, Nil, 0)
-        val affected = scope.getOrElse(dfParts)
-        val v = cur + 1
-        val fresh =
-          if (dfParts.isEmpty) Map.empty[String, Seq[FileEntry]]
-          else {
-            val written = writeCommit(cached, table, v, m.partitionCols,
-              m.keys, m.layout, m.columnMap)
-            commitEntries(spark, table, v, written, m.statsCols, m.bloomCols,
-              m.bloomBits, m.bloomK, m.hllCols, m.hllP)
+        // dynamic + empty delivery: nothing to replace — do NOT burn a
+        // version on a no-op (an accidentally-empty upstream should not
+        // look like a successful refresh)
+        if (scope.isEmpty && dfParts.isEmpty) None
+        else {
+          val affected = scope.getOrElse(dfParts)
+          val fresh =
+            if (dfParts.isEmpty) Map.empty[String, Seq[FileEntry]]
+            else c.write(spark, cached, m)
+          val opScope = {
+            val s = affected.toSeq.sorted
+            if (s.size <= 8) s.mkString(",")
+            else s.take(8).mkString(",") + s",… +${s.size - 8} more"
           }
-        val opScope = {
-          val s = affected.toSeq.sorted
-          if (s.size <= 8) s.mkString(",")
-          else s.take(8).mkString(",") + s",… +${s.size - 8} more"
+          Some(Draft(m.copy(delivery = None,
+              partitions = m.partitions.filterNot(e => affected.contains(e._1))
+                ++ fresh),
+            op = Some(s"overwrite_partitions($opScope)"),
+            dropped = affected.filterNot(fresh.contains).toSeq.sorted))
         }
-        writeManifestReclaiming(table, m.copy(version = v, parent = cur,
-          op = s"overwrite_partitions($opScope)", delivery = None,
-          partitions = m.partitions.filterNot(e => affected.contains(e._1))
-            ++ fresh))
-        CommitStats(v, fresh.keys.toSeq.sorted,
-          affected.filterNot(fresh.contains).toSeq.sorted,
-          fresh.values.map(_.size).sum)
       } finally OpCache.unpersistEager(cached)
     }
 
@@ -2390,10 +2390,8 @@ object Snapshot {
    */
   def replaceTable(spark: SparkSession, table: String,
                    df: DataFrame): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist")
-      val m = readManifest(table, cur)
+    commit(table, "replace") { c =>
+      val m = c.m
       require(m.schemaDdl.nonEmpty,
         s"snapshot $table: no manifest schema — pre-schema table cannot replace")
       val oldSchema = StructType.fromDDL(m.schemaDdl)
@@ -2422,7 +2420,6 @@ object Snapshot {
       enforceConstraints(df, m.constraints)
       enforceExpectations(df, m.expects)
       validatePartitionValues(df, m.partitionCols)
-      val v = cur + 1
       val statsCols = (m.keys ++ m.statsCols.filterNot(m.keys.contains))
         .filter(df.columns.contains)
       // survival is decided by the SOURCE column (a trigram spec
@@ -2431,38 +2428,21 @@ object Snapshot {
       val hllCols = m.hllCols.filter(df.columns.contains)
       // columnMap resets: the replace writes every live byte under the
       // new logical names, so physical == logical again
-      val written = writeCommit(df, table, v, m.partitionCols, m.keys, m.layout)
-      val fresh = commitEntries(spark, table, v, written, statsCols, bloomCols,
-        m.bloomBits, m.bloomK, hllCols, m.hllP)
-      writeManifestReclaiming(table, m.copy(version = v, parent = cur,
-        op = "replace", partitions = fresh, schemaDdl = df.schema.toDDL,
+      rewriteAll(spark, c, df, m.copy(schemaDdl = df.schema.toDDL,
         statsCols = statsCols, bloomCols = bloomCols, hllCols = hllCols,
         columnMap = Map.empty, retiredCols = Nil, delivery = None))
-      CommitStats(v, fresh.keys.toSeq.sorted,
-        m.partitions.keySet.filterNot(fresh.contains).toSeq.sorted,
-        fresh.values.map(_.size).sum)
     }
 
-  private def overwriteLocked(spark: SparkSession, table: String,
-                              dfOpt: Option[DataFrame]): CommitStats = {
-    val cur = currentVersion(table)
-    require(cur > 0, s"snapshot $table does not exist")
-    val m = readManifest(table, cur)
-    val aligned = alignForReplace(spark, table, m, dfOpt)
-    enforceConstraints(aligned, m.constraints)
-    enforceExpectations(aligned, m.expects)
-    validatePartitionValues(aligned, m.partitionCols)
-    val v = cur + 1
-    val written = writeCommit(aligned, table, v, m.partitionCols, m.keys,
-      m.layout, m.columnMap)
-    val fresh = commitEntries(spark, table, v, written, m.statsCols, m.bloomCols,
-      m.bloomBits, m.bloomK, m.hllCols, m.hllP)
-    writeManifestReclaiming(table, m.copy(version = v, parent = cur,
-      op = "overwrite", partitions = fresh, delivery = None))
-    CommitStats(v, fresh.keys.toSeq.sorted,
-      m.partitions.keySet.filterNot(fresh.contains).toSeq.sorted,
-      fresh.values.map(_.size).sum)
-  }
+  private def replaceRows(spark: SparkSession, table: String,
+                          dfOpt: Option[DataFrame]): CommitStats =
+    commit(table, "overwrite") { c =>
+      val m = c.m
+      val aligned = alignForReplace(spark, table, m, dfOpt)
+      enforceConstraints(aligned, m.constraints)
+      enforceExpectations(aligned, m.expects)
+      validatePartitionValues(aligned, m.partitionCols)
+      rewriteAll(spark, c, aligned, m.copy(delivery = None))
+    }
 
   // ------------------------------------- non-additive schema evolution
 
@@ -2524,12 +2504,13 @@ object Snapshot {
     * "validated" and "applied" (the race a validate-then-commit-each
     * split cannot close). The op records every change. */
   private[graft] def evolveSchemaAll(table: String,
-      steps: Seq[(String, Manifest => Manifest)]): CommitStats =
-    withCommitLock(table) {
-      require(steps.nonEmpty, "evolveSchemaAll: no changes")
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist")
-      val m = readManifest(table, cur)
+      steps: Seq[(String, Manifest => Manifest)]): CommitStats = {
+    require(steps.nonEmpty, "evolveSchemaAll: no changes")
+    val op =
+      if (steps.size == 1) steps.head._1
+      else steps.map(_._1).mkString("evolve(", "; ", ")")
+    commit(table, op) { c =>
+      val m = c.m
       require(m.schemaDdl.nonEmpty,
         s"snapshot $table: no manifest schema — pre-schema table cannot evolve")
       val evolved = steps.foldLeft(m) { case (acc, (_, f)) => f(acc) }
@@ -2538,15 +2519,10 @@ object Snapshot {
       // already-tracked bloom) burns no version, matching
       // repartitionTable's same-spec contract; an idempotent
       // deployment script re-running its ALTERs leaves no history noise
-      if (evolved eq m) return CommitStats(cur, Nil, Nil, 0)
-      val op =
-        if (steps.size == 1) steps.head._1
-        else steps.map(_._1).mkString("evolve(", "; ", ")")
-      writeManifest(table,
-        evolved.copy(version = cur + 1, parent = cur, op = op,
-          delivery = Some(KeyBounds(empty = true, Map.empty))))
-      CommitStats(cur + 1, Nil, Nil, 0)
+      if (evolved eq m) None
+      else Some(Draft(evolved.copy(delivery = NothingDelivered)))
     }
+  }
 
   /**
    * RENAME a column — a METADATA-ONLY commit (zero data files
@@ -2927,13 +2903,8 @@ object Snapshot {
     * O(manifest) undo. History is preserved (rollback is itself a
     * commit); the rolled-back-over versions stay readable. */
   def rollback(spark: SparkSession, table: String, toVersion: Int): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      val old = readManifest(table, toVersion)
-      val v = cur + 1
-      writeManifest(table, old.copy(version = v, parent = cur,
-        op = s"rollback($toVersion)", delivery = None))
-      CommitStats(v, Nil, Nil, 0)
+    commit(table, s"rollback($toVersion)") { _ =>
+      Some(Draft(readManifest(table, toVersion).copy(delivery = None)))
     }
 
   /** Delete data files referenced by NO retained version and drop the
@@ -2957,7 +2928,7 @@ object Snapshot {
   def vacuum(spark: SparkSession, table: String, retainLast: Int = 2,
              stagingStaleMs: Long = 6 * 3600 * 1000L,
              retainHours: Double = -1): VacuumStats =
-    withCommitLock(table) {
+    withCommitLock(table) { _ =>
       val cur = currentVersion(table)
       require(cur > 0, s"snapshot $table does not exist")
       val byCount = (math.max(1, cur - math.max(1, retainLast) + 1) to cur).toSeq
@@ -2983,7 +2954,7 @@ object Snapshot {
   def expireSnapshots(spark: SparkSession, table: String,
                       olderThanMillis: Long,
                       stagingStaleMs: Long = 6 * 3600 * 1000L): VacuumStats =
-    withCommitLock(table) {
+    withCommitLock(table) { _ =>
       val cur = currentVersion(table)
       require(cur > 0, s"snapshot $table does not exist")
       val retained = (1 to cur).filter(v => v == cur ||
@@ -3902,25 +3873,23 @@ object Snapshot {
     preds.map(p => coalesce(exactCol(p), lit(false))).reduce(_ && _)
 
   /** Shared commit machinery of [[deleteWhere]] and [[updateWhere]]:
-    * rewrite ONLY the candidate files through `transform`, carry every
-    * other file forward verbatim, publish as one atomic version. */
+    * rewrite ONLY the candidate files through `transform` — given the
+    * manifest read under the lock, which it may validate against —
+    * carry every other file forward verbatim, publish as one atomic
+    * version. */
   private def rewriteFiles(spark: SparkSession, table: String, op: String,
                            preds: Seq[DmlPred],
-                           transform: DataFrame => DataFrame): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist")
-      val m = readManifest(table, cur)
+                           transform: Manifest => DataFrame => DataFrame): CommitStats =
+    commit(table, op) { c =>
+      val m = c.m
+      val rows = transform(m)
       val candidates = keptFiles(table, m, preds)
-      val v = cur + 1
-      if (candidates.isEmpty) { // proven no-match: audit-only commit
-        writeManifest(table, m.copy(version = v, parent = cur, op = op,
-          delivery = Some(KeyBounds(empty = true, Map.empty))))
-        CommitStats(v, Nil, Nil, 0)
-      } else {
+      if (candidates.isEmpty) // proven no-match: audit-only commit
+        Some(Draft(m.copy(delivery = NothingDelivered)))
+      else {
       val candPaths = candidates.map(_.path).toSet
       val base = readManifestFiles(spark, table, m, candidates)
-      val out = transform(base)
+      val out = rows(base)
       require(out.schema.map(f => (f.name, f.dataType)) ==
         base.schema.map(f => (f.name, f.dataType)),
         s"snapshot $op: transform must preserve the table schema")
@@ -3929,10 +3898,7 @@ object Snapshot {
       // miss updated rows; unchanged rows re-pass trivially and the
       // cost is bounded by candidate mass
       enforceConstraints(out, m.constraints)
-      val written = writeCommit(out, table, v, m.partitionCols, m.keys, m.layout,
-        m.columnMap)
-      val fresh = commitEntries(spark, table, v, written, m.statsCols,
-        m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
+      val fresh = c.write(spark, out, m)
       // per partition: carried (non-candidate) files ++ replacement files
       val touched = m.partitions.collect {
         case (p, fs) if fs.exists(f => candPaths.contains(f.path)) => p }.toSet
@@ -3942,12 +3908,9 @@ object Snapshot {
         val files = carried ++ fresh.getOrElse(p, Nil)
         if (files.isEmpty) None else Some(p -> files)
       }.toMap
-      val dropped = m.partitions.keySet.filterNot(parts.contains).toSeq.sorted
-      writeManifestReclaiming(table, m.copy(version = v, parent = cur, op = op,
-        partitions = parts,
-        delivery = Some(KeyBounds(empty = true, Map.empty))))
-      CommitStats(v, touched.toSeq.sorted, dropped,
-        fresh.values.map(_.size).sum)
+      Some(Draft(m.copy(partitions = parts, delivery = NothingDelivered),
+        touched = Some(touched.toSeq.sorted),
+        dropped = m.partitions.keySet.filterNot(parts.contains).toSeq.sorted))
       }
     }
 
@@ -3976,7 +3939,7 @@ object Snapshot {
   def deleteMatching(spark: SparkSession, table: String,
                      preds: Seq[DmlPred]): CommitStats =
     rewriteFiles(spark, table, "delete", preds,
-      df => df.filter(!predCol(preds)))
+      _ => df => df.filter(!predCol(preds)))
 
   /**
    * `UPDATE table SET col = expr, ... WHERE <conjunction of range
@@ -3998,22 +3961,22 @@ object Snapshot {
                      preds: Seq[DmlPred],
                      set: Map[String, Column]): CommitStats = {
     require(set.nonEmpty, "updateWhere: empty SET")
-    val m = readManifest(table, currentVersion(table))
-    set.keys.foreach { c =>
-      require(!m.keys.contains(c) && !m.partSources.contains(c),
-        s"updateWhere: cannot update key/partition column '$c' — use merge")
-    }
-    rewriteFiles(spark, table, "update", preds, { df =>
-      set.keys.foreach(c => require(df.columns.contains(c),
-        s"updateWhere: unknown column '$c'"))
-      val p = predCol(preds)
-      df.select(df.columns.map { c =>
-        set.get(c) match {
-          case Some(e) => when(p, e.cast(df.schema(c).dataType))
-            .otherwise(col(c)).as(c)
-          case None => col(c)
-        }
-      }: _*)
+    rewriteFiles(spark, table, "update", preds, { m =>
+      set.keys.foreach { c =>
+        require(!m.keys.contains(c) && !m.partSources.contains(c),
+          s"updateWhere: cannot update key/partition column '$c' — use merge")
+      }
+      df =>
+        set.keys.foreach(c => require(df.columns.contains(c),
+          s"updateWhere: unknown column '$c'"))
+        val p = predCol(preds)
+        df.select(df.columns.map { c =>
+          set.get(c) match {
+            case Some(e) => when(p, e.cast(df.schema(c).dataType))
+              .otherwise(col(c)).as(c)
+            case None => col(c)
+          }
+        }: _*)
     })
   }
 
@@ -4048,12 +4011,9 @@ object Snapshot {
    */
   def deleteWhereMor(spark: SparkSession, table: String,
                      preds: Seq[(String, Any, Any)]): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist")
-      val m = readManifest(table, cur)
+    commit(table, "delete-mor") { c =>
       val dml = toDml(preds)
-      commitDv(spark, table, m, keptFiles(table, m, dml),
+      dvDraft(spark, c, keptFiles(table, c.m, dml),
         raw => raw.filter(predCol(dml)))
     }
 
@@ -4071,10 +4031,8 @@ object Snapshot {
    */
   def deleteMorKeys(spark: SparkSession, table: String, keys: DataFrame,
                     maxPrunableKeys: Int = 10000): CommitStats =
-    withCommitLock(table) {
-      val cur = currentVersion(table)
-      require(cur > 0, s"snapshot $table does not exist")
-      val m = readManifest(table, cur)
+    commit(table, "delete-mor") { c =>
+      val m = c.m
       m.keys.foreach(kc => require(keys.columns.contains(kc),
         s"snapshot $table: keys frame lacks key column '$kc'"))
       val k = OpCache.cache(keys.select(m.keys.map(col): _*).distinct())
@@ -4089,25 +4047,22 @@ object Snapshot {
           keptFiles(table, m, m.keys.zipWithIndex.map { case (kc, i) =>
             InPred(kc, sample.map(_.get(i)).distinct.toSeq) })
         } else m.files
-      val out = commitDv(spark, table, m, candidates,
+      val out = dvDraft(spark, c, candidates,
         raw => raw.join(k, m.keys, "left_semi"))
       OpCache.unpersistEager(k)
       out
     }
 
-  /** Shared tail of the merge-on-read deletes: write the deletion
+  /** Shared draft of the merge-on-read deletes: write the deletion
     * vector for `matching(candidates)` ∪ the candidates' prior
-    * vectors, re-point the touched entries, publish the commit. */
-  private def commitDv(spark: SparkSession, table: String, m: Manifest,
-                       candidates: Seq[FileEntry],
-                       matching: DataFrame => DataFrame): CommitStats = {
-    val cur = m.version
-    val v = cur + 1
-    if (candidates.isEmpty) { // proven no-match: audit-only commit
-      writeManifest(table, m.copy(version = v, parent = cur, op = "delete-mor",
-        delivery = Some(KeyBounds(empty = true, Map.empty))))
-      CommitStats(v, Nil, Nil, 0)
-    } else {
+    * vectors and re-point the touched entries. */
+  private def dvDraft(spark: SparkSession, c: Commit,
+                      candidates: Seq[FileEntry],
+                      matching: DataFrame => DataFrame): Option[Draft] = {
+    val (table, m) = (c.table, c.m)
+    if (candidates.isEmpty) // proven no-match: audit-only commit
+      Some(Draft(m.copy(delivery = NothingDelivered)))
+    else {
       // raw read (applyDv = false): an already-masked row may match
       // again; the union with the prior vectors dedups it. Project the
       // metadata columns BEFORE `matching` runs — `_metadata` resolves
@@ -4130,7 +4085,7 @@ object Snapshot {
             .join(broadcast(candFrame), Seq("file"), "left_semi")
             .select("file", "pos")
         }
-      val dvDir = f"files/c$v%08d/_dv"
+      val dvDir = f"files/c${c.v}%08d/_dv"
       fresh.unionByName(prior).distinct()
         .write.mode("error").parquet(s"$table/$dvDir")
       // bounded collect: one row per candidate file
@@ -4152,10 +4107,8 @@ object Snapshot {
       }
       val touched = m.partitions.collect {
         case (p, fs) if fs.exists(f => counts.contains(f.path)) => p }
-      writeManifestReclaiming(table, m.copy(version = v, parent = cur,
-        op = "delete-mor", partitions = parts,
-        delivery = Some(KeyBounds(empty = true, Map.empty))))
-      CommitStats(v, touched.toSeq.sorted, Nil, 0)
+      Some(Draft(m.copy(partitions = parts, delivery = NothingDelivered),
+        touched = Some(touched.toSeq.sorted)))
     }
   }
 
@@ -4206,7 +4159,7 @@ object Snapshot {
    * the next vacuum may reclaim the version.
    */
   def tag(table: String, name: String, version: Int = 0): Unit =
-    withCommitLock(table) {
+    withCommitLock(table) { _ =>
       require(name.matches("[A-Za-z0-9._-]+"),
         s"snapshot tag: bad name '$name' (want [A-Za-z0-9._-]+)")
       val v = if (version > 0) version else currentVersion(table)
@@ -4216,7 +4169,7 @@ object Snapshot {
     }
 
   def untag(table: String, name: String): Unit =
-    withCommitLock(table) {
+    withCommitLock(table) { _ =>
       val t = tags(table)
       require(t.contains(name), s"snapshot $table: no tag '$name'")
       writeTags(table, t - name)

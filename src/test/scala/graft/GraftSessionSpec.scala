@@ -47,6 +47,34 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(offenders.isEmpty, s"build sessions through GraftSession.local: $offenders")
   }
 
+  test("only Snapshot's commit primitive publishes manifests and reads back commit files") {
+    // a call's owner is the nearest enclosing member of its object:
+    // the primitive is `commit` with its `Commit` context
+    val member = ("""^  (?:(?:private|protected)(?:\[\w+\])? |final |sealed |implicit |""" +
+      """override |lazy |case )*(?:def|val|var|class|object|trait) +(\w+)""").r.unanchored
+    val call = """\b(writeManifest|commitEntries)\(""".r
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val sources =
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && !p.toString.contains("/dev/"))
+        .toList
+      finally walk.close()
+    val calls = for {
+      p <- sources
+      lines = Files.readAllLines(p).asScala.toVector
+      (line, i) <- lines.zipWithIndex
+      name <- call.findAllMatchIn(line).map(_.group(1))
+      if !line.contains(s"def $name(")
+    } yield (p.getFileName.toString, i + 1, name,
+      (i to 0 by -1).iterator.map(lines(_)).collectFirst { case member(n) => n })
+    val primitive = calls.filter(c => c._1 == "Snapshot.scala" &&
+      c._4.exists(Set("commit", "Commit")))
+    assert(primitive.map(_._3).toSet == Set("writeManifest", "commitEntries"),
+      s"the primitive's calls: $primitive")
+    val offenders = calls.diff(primitive)
+    assert(offenders.isEmpty, s"publish through Snapshot.commit: $offenders")
+  }
+
   test("GraftFunctions.register keeps graft's own registrations and replaces anything else") {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     // a session of its own: same extensions, its own function registry

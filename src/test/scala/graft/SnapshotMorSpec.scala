@@ -140,10 +140,7 @@ class SnapshotMorSpec extends SparkSpecBase {
     val bad = m.copy(version = 3, parent = 2, op = "tamper",
       partitions = m.partitions.map { case (p, fs) => p -> fs.map(f =>
         f.dv.fold(f)(d => f.copy(dv = Some(d.copy(rows = d.rows + 1))))) })
-    val wm = classOf[Snapshot.type].getDeclaredMethods
-      .find(_.getName == "writeManifest").get
-    wm.setAccessible(true)
-    wm.invoke(Snapshot, t, bad)
+    Snapshot.writeManifest(t, bad)
     assert(Snapshot.fsck(spark, t).exists(_.problem.contains("dv position count")))
     Snapshot.rollback(spark, t, 2) // v4: back to the honest manifest
     // compact (v5) materializes; vacuum keeping the tip only must reap
@@ -245,10 +242,7 @@ class SnapshotMorSpec extends SparkSpecBase {
       partitions = m.partitions.map { case (p, fs) => p -> fs.map(f =>
         f.copy(stats = f.stats.map { case (c, cs) =>
           c -> cs.copy(sum = None) })) })
-    val wm = classOf[Snapshot.type].getDeclaredMethods
-      .find(_.getName == "writeManifest").get
-    wm.setAccessible(true)
-    wm.invoke(Snapshot, t, legacy)
+    Snapshot.writeManifest(t, legacy)
     val e2 = intercept[IllegalArgumentException] {
       Snapshot.aggStats(spark, t, Seq("score"), sums = Seq("score")) }
     assert(e2.getMessage.contains("compact"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Snapshot
+import graft.operators.{HadoopLogStore, LogStore, Snapshot}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -1287,4 +1287,204 @@ class SnapshotSpec extends SparkSpecBase {
     assert(issues == Seq(Snapshot.FsckIssue(1, f.path,
       s"size ${Files.size(dst)} != manifest ${f.bytes}")), issues)
   }
+
+  test("every data-writing commit kind rejected by a min_rows guard leaves no commit dir and frees its version") {
+    def guarded(tag: String): String = {
+      val t = fresh(s"guarded_$tag")
+      Snapshot.create(spark, t, seedDf, "id", "part",
+        guards = Map("min_rows" -> "6"))
+      t
+    }
+    // kinds that keep the row count can only be rejected on a table
+    // already below its floor, which only a guard-exempt rollback can
+    // publish: stand one in that raises the floor past the 8 rows
+    def belowFloor(tag: String): String = {
+      val t = guarded(tag)
+      val cur = Snapshot.currentVersion(t)
+      Snapshot.writeManifest(t, Snapshot.readManifest(t, cur).copy(
+        version = cur + 1, parent = cur, op = "rollback(floor)",
+        guards = Map("min_rows" -> "9")))
+      t
+    }
+    def addTwo(t: String): Snapshot.CommitStats =
+      Snapshot.merge(spark, t, Seq((10L, "juliet", "p1"), (11L, "kilo", "p2"))
+        .toDF("id", "payload", "part"), spark.emptyDataset[Long].toDF("id"))
+    def deleting(ids: Long*): DataFrame = ids.toDF("id")
+    def staged(t: String, ids: Long*): Snapshot.CommitStats =
+      Snapshot.commitStaged(spark, Snapshot.stageMerge(spark, t,
+        seedDf.limit(0), deleting(ids: _*)))
+    val one = Seq((1L, "alpha", "p1")).toDF("id", "payload", "part")
+    // (kind, table, rejected commit, permitted retry that must land at
+    // the rejected version, then the kind itself when the retry is not)
+    val kinds: Seq[(String, String, String => Any, String => Snapshot.CommitStats,
+        Option[String => Snapshot.CommitStats])] = Seq(
+      ("create", fresh("guarded_create"),
+        t => Snapshot.create(spark, t, seedDf.filter($"id" <= 3), "id", "part",
+          guards = Map("min_rows" -> "6")),
+        t => Snapshot.create(spark, t, seedDf, "id", "part",
+          guards = Map("min_rows" -> "6")), None),
+      ("merge", guarded("merge"),
+        t => Snapshot.merge(spark, t, seedDf.limit(0), deleting(1, 2, 3, 4)),
+        t => Snapshot.merge(spark, t, seedDf.limit(0), deleting(8)), None),
+      ("stageMerge+commitStaged", guarded("staged"),
+        t => staged(t, 1, 2, 3, 4), t => staged(t, 8), None),
+      ("compact", belowFloor("compact"),
+        t => Snapshot.compact(spark, t, maxFilesPerPartition = 0), addTwo,
+        Some(t => Snapshot.compact(spark, t, maxFilesPerPartition = 0))),
+      ("relayout", belowFloor("relayout"),
+        t => Snapshot.relayout(spark, t, 2), addTwo,
+        Some(t => Snapshot.relayout(spark, t, 2))),
+      ("repartitionTable", belowFloor("repartition"),
+        t => Snapshot.repartitionTable(spark, t, Seq("bucket(2,id)")), addTwo,
+        Some(t => Snapshot.repartitionTable(spark, t, Seq("bucket(2,id)")))),
+      ("overwrite", guarded("overwrite"),
+        t => Snapshot.overwrite(spark, t, seedDf.filter($"id" <= 3)),
+        t => Snapshot.overwrite(spark, t, seedDf.filter($"id" <= 7)), None),
+      ("overwritePartitions", guarded("overwrite_parts"),
+        t => Snapshot.overwritePartitions(spark, t, one, Some(Set("p1", "p2"))),
+        t => Snapshot.overwritePartitions(spark, t, one), None),
+      ("replaceTable", guarded("replace"),
+        t => Snapshot.replaceTable(spark, t, seedDf.filter($"id" <= 3)),
+        t => Snapshot.replaceTable(spark, t, seedDf.filter($"id" <= 7)), None),
+      ("deleteMatching", guarded("delete"),
+        t => Snapshot.deleteMatching(spark, t, Seq(Snapshot.RangePred("id", 1L, 4L))),
+        t => Snapshot.deleteMatching(spark, t, Seq(Snapshot.RangePred("id", 8L, 8L))),
+        None),
+      ("updateMatching", belowFloor("update"),
+        t => Snapshot.updateMatching(spark, t, Seq(Snapshot.RangePred("id", 1L, 2L)),
+          Map("payload" -> lit("x"))), addTwo,
+        Some(t => Snapshot.updateMatching(spark, t, Seq(Snapshot.RangePred("id", 1L, 2L)),
+          Map("payload" -> lit("x"))))),
+      ("deleteWhereMor", guarded("mor"),
+        t => Snapshot.deleteWhereMor(spark, t, Seq(("id", 1, 4))),
+        t => Snapshot.deleteWhereMor(spark, t, Seq(("id", 8, 8))), None))
+    kinds.foreach { case (kind, t, reject, retry, after) =>
+      val v = Snapshot.currentVersion(t) + 1
+      val e = intercept[Snapshot.GuardViolationException](reject(t))
+      assert(e.getMessage.contains("min_rows"), s"$kind: ${e.getMessage}")
+      assert(Snapshot.currentVersion(t) == v - 1, s"$kind published")
+      val files = Paths.get(t, "files")
+      val left = if (!Files.exists(files)) Nil
+        else Files.list(files).iterator().asScala.map(_.getFileName.toString).toList
+      assert(!left.contains(f"c$v%08d") && !left.exists(_.startsWith("_staging-")),
+        s"$kind left $left")
+      assert(retry(t).version == v, s"$kind retry")
+      after.foreach(a => assert(a(t).version == v + 1, s"$kind after the retry"))
+    }
+  }
+
+  test("a writer that died between its data write and its manifest put does not wedge the table") {
+    val t = fresh("dead_writer")
+    Snapshot.create(spark, t, seedDf, "id", "part")
+    // what the dead writer left: data under the next version's commit
+    // dir, no manifest, and its lock, older than the stale window
+    seedDf.write.parquet(s"$t/files/c00000002/__part=p1")
+    val lock = Paths.get(t, "_log", "_commit.lock")
+    Files.createFile(lock)
+    Files.setLastModifiedTime(lock, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() - 7 * 3600 * 1000L))
+    assert(commitV2(t).version == 2)
+    assert(rowsOf(Snapshot.readLatest(spark, t)) == v2Expected)
+    assert(Snapshot.fsck(spark, t).isEmpty)
+    assert(!Files.exists(lock))
+  }
+
+  test("a commit that fails before its manifest put reclaims its dir; one whose put was lost keeps it") {
+    val t = s"file://${fresh("faulty_store")}"
+    val dir = t.stripPrefix("file://")
+    val seg = "graft.manifest.segmentThreshold"
+    Snapshot.create(spark, t, seedDf, "id", "part")
+    try {
+      // segmented manifests put their segments before the manifest
+      sys.props(seg) = "2"
+      spark.conf.set("spark.graft.logstore.file", "graft.FaultyLogStore")
+      FaultyLogStore.failing = "/_log/seg/"
+      intercept[java.io.IOException](commitV2(t))
+      assert(Snapshot.currentVersion(t) == 1)
+      assert(!Files.exists(Paths.get(dir, "files", "c00000002")))
+      FaultyLogStore.failing = ""
+      assert(commitV2(t).version == 2, "the version stays free for a retry")
+      // the manifest put lands but its acknowledgement is lost: v3 may
+      // be published, so its data must stay
+      FaultyLogStore.lostAck = true
+      intercept[java.io.IOException](Snapshot.merge(spark, t,
+        Seq((1L, "alpha3", "p1")).toDF("id", "payload", "part"),
+        spark.emptyDataset[Long].toDF("id")))
+      FaultyLogStore.lostAck = false
+      assert(Snapshot.currentVersion(t) == 3)
+      assert(rowsOf(Snapshot.readLatest(spark, t)) ==
+        v2Expected - ((1L, "alpha", "p1")) + ((1L, "alpha3", "p1")))
+      assert(Snapshot.fsck(spark, t).isEmpty)
+    } finally {
+      FaultyLogStore.failing = ""
+      FaultyLogStore.lostAck = false
+      spark.conf.unset("spark.graft.logstore.file")
+      sys.props -= seg
+    }
+  }
+
+  test("an update reads the manifest under the lock only: as many LogStore calls as a delete") {
+    val preds = Seq(Snapshot.RangePred("id", 2L, 3L))
+    val Seq(td, tu) = Seq("delete", "update").map { k =>
+      val t = s"file://${fresh(s"dml_calls_$k")}"
+      Snapshot.create(spark, t, seedDf, "id", "part")
+      t
+    }
+    val granule = "graft.manifest.mtimeGranularityMs"
+    def calls(body: => Any): Long = {
+      CountingLogStore.calls.set(0)
+      body
+      CountingLogStore.calls.get()
+    }
+    try {
+      sys.props(granule) = "0"
+      spark.conf.set("spark.graft.logstore.file", "graft.CountingLogStore")
+      Seq(td, tu).foreach(Snapshot.readManifest(_, 1)) // both memoized
+      val d = calls(Snapshot.deleteMatching(spark, td, preds))
+      val u = calls(Snapshot.updateMatching(spark, tu, preds, Map("payload" -> lit("x"))))
+      assert(d > 0, "the table's metadata IO must flow through the counting store")
+      assert(u == d, s"update made $u LogStore calls, delete $d")
+    } finally {
+      spark.conf.unset("spark.graft.logstore.file")
+      sys.props -= granule
+    }
+    assert(Snapshot.readLatest(spark, tu).filter($"payload" === "x").count() == 2)
+    // a missing table fails the same way for both
+    val missing = fresh("dml_missing")
+    val ed = intercept[IllegalArgumentException](
+      Snapshot.deleteMatching(spark, missing, preds)).getMessage
+    val eu = intercept[IllegalArgumentException](
+      Snapshot.updateMatching(spark, missing, preds, Map("payload" -> lit("x")))).getMessage
+    assert(ed.contains("does not exist") && eu == ed, s"delete: $ed; update: $eu")
+  }
+}
+
+/** A delegating Hadoop store that fails on demand: a put under a path
+  * containing `failing` throws before it lands, and with `lostAck` a
+  * manifest put lands and then throws, as a lost acknowledgement would. */
+class FaultyLogStore extends LogStore {
+  private val h = HadoopLogStore
+  override def exists(p: String) = h.exists(p)
+  override def isDirectory(p: String) = h.isDirectory(p)
+  override def read(p: String) = h.read(p)
+  override def putIfAbsent(p: String, b: Array[Byte]): Unit = {
+    if (FaultyLogStore.failing.nonEmpty && p.contains(FaultyLogStore.failing))
+      throw new java.io.IOException(s"injected: put $p")
+    h.putIfAbsent(p, b)
+    if (FaultyLogStore.lostAck && p.matches(".*/_log/v\\d{8}\\.json"))
+      throw new java.io.IOException(s"injected: lost acknowledgement of $p")
+  }
+  override def putReplace(p: String, b: Array[Byte]) = h.putReplace(p, b)
+  override def list(p: String) = h.list(p)
+  override def mkdirs(p: String) = h.mkdirs(p)
+  override def createNew(p: String) = h.createNew(p)
+  override def delete(p: String) = h.delete(p)
+  override def deleteTree(p: String) = h.deleteTree(p)
+  override def rename(s: String, d: String) = h.rename(s, d)
+  override def modifiedTime(p: String) = h.modifiedTime(p)
+  override def size(p: String) = h.size(p)
+}
+object FaultyLogStore {
+  @volatile var failing: String = ""
+  @volatile var lostAck: Boolean = false
 }
