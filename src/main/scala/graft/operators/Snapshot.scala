@@ -93,8 +93,8 @@ object Snapshot {
     * filter per bloom column — the point-lookup existence index — and
     * the optional deletion vector masking rows a merge-on-read DELETE
     * removed (logical rows = `rows - dv.rows`). `bytes` is the file's
-    * on-disk size, captured at commit time from `_metadata.file_size`
-    * (zero extra filesystem calls) so PLANNING-time size estimates
+    * on-disk size, captured by the write task as it closes the file
+    * (zero driver-side filesystem calls) so PLANNING-time size estimates
     * and every read's file index ([[ManifestFileIndex]]) come from the
     * manifest instead of stat-ing every file — at 100k files on an
     * object store that walk would be 100k metadata round-trips per
@@ -523,9 +523,12 @@ object Snapshot {
 
   /** Publish `m` as its version: guards, segments, then the one
     * conditional put that is the commit point. `putting` runs just
-    * before that put is attempted. */
+    * before that put is attempted; `commitId` names the attempt
+    * ([[commit]]), so it can recognize its own version after a lost
+    * acknowledgement (manifests written without one parse the same). */
   private[graft] def writeManifest(table: String, m: Manifest,
-                                   putting: () => Unit = () => ()): Unit = {
+                                   putting: () => Unit = () => (),
+                                   commitId: String = ""): Unit = {
     enforceGuards(table, m)
     val root = mapper.createObjectNode()
     root.put("version", m.version); root.put("parent", m.parent)
@@ -533,6 +536,7 @@ object Snapshot {
     // informational for correctness (versions are the ordering)
     root.put("committed_at", System.currentTimeMillis())
     root.put("op", m.op)
+    if (commitId.nonEmpty) root.put("commit_id", commitId)
     // single-column contracts keep the legacy scalar fields (manifests
     // stay byte-identical with every pre-composite version); composite
     // contracts write the array forms
@@ -1132,12 +1136,11 @@ object Snapshot {
 
     /** Write `df` as this commit's data files — partitioned, arranged
       * and tracked as `shape` declares — and return their entries. */
-    def write(spark: SparkSession, df: DataFrame, shape: Manifest,
+    def write(df: DataFrame, shape: Manifest,
               byPartition: Boolean = false): Map[String, Seq[FileEntry]] = {
-      val written = writeArranged(df, commitDir(table, v), shape.partitionCols,
-        shape.keys, shape.layout, shape.columnMap, byPartition)
-      adopt(commitEntries(spark, table, v, written, shape.statsCols,
-        shape.bloomCols, shape.bloomBits, shape.bloomK, shape.hllCols, shape.hllP))
+      val prefix = f"files/c$v%08d/"
+      adopt(writeTracked(df, commitDir(table, v), shape, byPartition)
+        .map { case (p, fs) => p -> fs.map(f => f.copy(path = prefix + f.path)) })
     }
 
     /** The entries of files already moved under the commit dir. */
@@ -1167,7 +1170,9 @@ object Snapshot {
     *  - a draft that throws before the manifest put is attempted, a
     *    rejecting guard included, has the dir reclaimed: `v` stays free;
     *  - once the put is attempted the dir stays, since a lost
-    *    acknowledgement may already have published `v`;
+    *    acknowledgement may already have published `v`: a put that
+    *    throws has `v`'s manifest read once, and if it carries the id
+    *    this attempt stamped, the commit landed and returns normally;
     *  - a stolen lock's holder died, maybe between its data write and
     *    its put: its orphaned dir goes before the draft runs.
     */
@@ -1181,12 +1186,16 @@ object Snapshot {
       val c = new Commit(table, cur)
       val dir = commitDir(table, c.v)
       if (stolen && !st.exists(manifestPath(table, c.v))) st.deleteTree(dir)
+      val id = java.util.UUID.randomUUID().toString
       var put = false
       try draft(c) match {
         case None => CommitStats(cur, Nil, Nil, 0)
         case Some(d) =>
-          writeManifest(table, d.next.copy(version = c.v, parent = cur,
-            op = d.op.getOrElse(op)), () => put = true)
+          try writeManifest(table, d.next.copy(version = c.v, parent = cur,
+            op = d.op.getOrElse(op)), () => put = true, id)
+          catch {
+            case e: Exception if put && publishedBy(table, c.v, id, e) => ()
+          }
           CommitStats(c.v, d.touched.getOrElse(c.fresh.keys.toSeq.sorted),
             d.dropped, c.fresh.values.map(_.size).sum)
       } catch {
@@ -1195,6 +1204,14 @@ object Snapshot {
           throw e
       }
     }
+
+  /** Whether version `v`'s manifest is the one the commit attempt `id`
+    * put, its put having failed with `e` (one read; a read that fails
+    * too is suppressed into `e`). */
+  private def publishedBy(table: String, v: Int, id: String, e: Exception): Boolean =
+    try Option(mapper.readTree(store(table).read(manifestPath(table, v))).get("commit_id"))
+      .exists(_.asText() == id)
+    catch { case r: Exception => e.addSuppressed(r); false }
 
   // ---------------------------------------------------------------- stats
 
@@ -1210,119 +1227,6 @@ object Snapshot {
   private def sumTracked(dt: DataType): Boolean = dt match {
     case _: ByteType | _: ShortType | _: IntegerType | _: LongType => true
     case _ => false
-  }
-
-  /** Read back a just-written data dir (a commit dir or an optimistic
-    * staging dir) and compute manifest entries: per file (one
-    * column-pruned scan of the NEW files only) the row count and
-    * min/max/nulls of each tracked column. Entry paths are relative to
-    * `dir` (the part AFTER `marker`) — callers prefix the final commit
-    * location. `written` is the physical schema the commit wrote
-    * ([[writeArranged]]'s result). */
-  private def entriesOf(spark: SparkSession, dir: String, marker: String,
-                        written: StructType,
-                        statsCols: Seq[String], bloomCols: Seq[String] = Nil,
-                        bloomBits: Int = 0, bloomK: Int = 6,
-                        hllCols: Seq[String] = Nil,
-                        hllP: Int = 12): Map[String, Seq[FileEntry]] = {
-    // the dir's data files, listed on the driver: partition discovery
-    // would list the same, with a Spark listing job above 32 dirs. Only
-    // `__part=*/<file>`, skipping `_`/`.`-prefixed names (`_SUCCESS`,
-    // `.crc`) as Spark does. Plain `listStatus`, never the located
-    // `listFiles`: a `LocatedFileStatus` reads each file's permissions,
-    // which the local FS does by forking a process per file. A
-    // delete-only commit that empties its partitions writes no
-    // partition dirs at all
-    val root0 = new org.apache.hadoop.fs.Path(dir)
-    val fs = root0.getFileSystem(spark.sessionState.newHadoopConf())
-    val root = fs.makeQualified(root0)
-    val files = try fs.listStatus(root).toSeq
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("__part="))
-        .flatMap(d => fs.listStatus(d.getPath))
-        .filter { f =>
-          val name = f.getPath.getName
-          f.isFile && !name.startsWith("_") && !name.startsWith(".")
-        }
-        .map(f => new org.apache.hadoop.fs.FileStatus(f.getLen, false, 0, 0, 0, f.getPath))
-      catch { case _: java.io.FileNotFoundException => Nil }
-    if (files.isEmpty) return Map.empty
-    val df = ManifestFileIndex.frame(spark, root, files, written)
-    val tracked = statsCols.flatMap(c =>
-      statKind(df.schema(c).dataType).map(c -> _))
-    val summed = tracked.collect {
-      case (c, _) if sumTracked(df.schema(c).dataType) => c }.toSet
-    // bloom SPECS ([[bloomSpec]]): bare column = value filter,
-    // `3g:col` = trigram filter — same one-scan agg, different kernel
-    val bloomed = if (bloomBits <= 0) Nil
-      else bloomCols.flatMap { spec =>
-        val (tri, c) = bloomSpec(spec)
-        if (df.columns.contains(c)) Some((spec, c, tri)) else None
-      }
-    val hlled = hllCols.filter(df.columns.contains)
-    val aggs = (count(lit(1)).as("__rows") +:
-      // on-disk size from the scan's own metadata column — constant
-      // per file (the group key), max() only to satisfy the agg shape
-      max(col("_metadata.file_size")).as("__bytes") +:
-      tracked.flatMap { case (c, _) => Seq(
-      min(col(c)).cast("string").as(s"__min_$c"),
-      max(col(c)).cast("string").as(s"__max_$c"),
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c")) ++
-      (if (summed(c)) Seq(sum(col(c)).cast("string").as(s"__sum_$c")) else Nil)
-    }) ++
-      bloomed.map { case (spec, c, tri) =>
-        (if (tri) graft.functions.BloomExprs
-          .triBloomBuild(col(c).cast("string"), bloomBits, bloomK)
-        else graft.functions.BloomExprs
-          .bloomBuild(col(c).cast("string"), bloomBits, bloomK))
-          .as(s"__bloom_$spec")
-      } ++
-      // per-file PORTABLE HLL sketch (md5-prefix hashing): register
-      // max-merge is associative, so the union of per-file sketches is
-      // bit-identical to a whole-table sketch - the manifest-only
-      // distinct-count path of aggStats, replayable by any md5 engine
-      hlled.map(c => graft.functions.HllExprs
-        .hllSketch(col(c).cast("string"), hllP, portable = true).as(s"__hll_$c"))
-    val rows = df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // bounded: one row per data file, manifest cardinality
-    // relativize via the dir marker — robust to file:/ vs file:///
-    // URI renderings of the table root; the partition is the path's
-    // `__part=` segment (values are `[A-Za-z0-9._~-]+` by validation,
-    // so nothing is escaped)
-    rows.map { r =>
-      val full = r.getAs[String]("__file")
-      val at = full.lastIndexOf(marker)
-      require(at >= 0, s"snapshot: unexpected file path $full")
-      full.substring(at + marker.length) -> r
-    }.groupBy(_._1.takeWhile(_ != '/').stripPrefix("__part=")).map { case (p, fs) =>
-      p -> fs.map { case (rel, r) =>
-        FileEntry(rel, r.getAs[Long]("__rows"),
-          tracked.map { case (c, kind) =>
-            c -> ColStats(kind,
-              Option(r.getAs[String](s"__min_$c")),
-              Option(r.getAs[String](s"__max_$c")),
-              r.getAs[Long](s"__nulls_$c"),
-              if (summed(c)) Option(r.getAs[String](s"__sum_$c")) else None)
-          }.toMap,
-          bloomed.map { case (spec, _, _) =>
-            spec -> r.getAs[Array[Byte]](s"__bloom_$spec") }.toMap,
-          None,
-          hlled.map(c => c -> r.getAs[Array[Byte]](s"__hll_$c")).toMap,
-          bytes = r.getAs[Long]("__bytes"))
-      }.toSeq.sortBy(_.path)
-    }
-  }
-
-  private def commitEntries(spark: SparkSession, table: String, v: Int,
-                            written: StructType,
-                            statsCols: Seq[String], bloomCols: Seq[String] = Nil,
-                            bloomBits: Int = 0, bloomK: Int = 6,
-                            hllCols: Seq[String] = Nil,
-                            hllP: Int = 12): Map[String, Seq[FileEntry]] = {
-    val prefix = f"files/c$v%08d/"
-    entriesOf(spark, commitDir(table, v), s"/$prefix", written, statsCols,
-        bloomCols, bloomBits, bloomK, hllCols, hllP)
-      .map { case (p, fs) => p -> fs.map(f => f.copy(path = prefix + f.path)) }
   }
 
   /** The (possibly composite, possibly transformed) partition IDENTITY
@@ -1378,8 +1282,15 @@ object Snapshot {
     if (columnMap.isEmpty) df
     else df.select(df.columns.map(c => col(c).as(columnMap.getOrElse(c, c))): _*)
 
-  /** Write `df0` under `dir`, partitioned by `__part`; returns the
-    * physical schema of the data files written.
+  /** Write `df0` under `dir` as `shape` declares — partitioned by
+    * `__part`, arranged by its layout, under its physical column names
+    * — and return the manifest entries of the files written, paths
+    * relative to `dir`. The write job itself gathers each file's entry
+    * ([[org.apache.spark.sql.graft.TrackedWrite]]): its rows, on-disk
+    * bytes, min/max/nulls (and, for integral columns, the sum) of each
+    * tracked column, its bloom filters and portable HLL sketches — the
+    * same aggregates a scan of the new files grouped by file would
+    * compute, with no second scan.
     *
     * `byPartition` (the merge family: [[merge]], [[stageMerge]]) asks
     * a table with no declared layout to REBALANCE its rows by `__part`
@@ -1391,16 +1302,14 @@ object Snapshot {
     * several, so files stay right-sized at scale. Create, overwrite and
     * replace keep the caller's arrangement; a declared layout's range
     * or z-order shuffle already arranges the write. */
-  private def writeArranged(df0: DataFrame, dir: String,
-                            partitionCols: Seq[String], keys: Seq[String],
-                            layout: Layout,
-                            columnMap: Map[String, String] = Map.empty,
-                            byPartition: Boolean = false): StructType = {
+  private def writeTracked(df0: DataFrame, dir: String, shape: Manifest,
+                           byPartition: Boolean = false): Map[String, Seq[FileEntry]] = {
     // NB: partition/key/zorder columns are barred from mapping
     // (rename/drop reject them), so the arrange columns below are
     // identity-mapped by construction
-    val df = physicalize(df0, columnMap)
-    val shadow = df.withColumn("__part", partValueCol(partitionCols, df))
+    val df = physicalize(df0, shape.columnMap)
+    val shadow = df.withColumn("__part", partValueCol(shape.partitionCols, df))
+    val layout = shape.layout
     val arranged =
       if (layout.fileRanges <= 0)
         // the hint takes column references only, hence the shadow column
@@ -1409,9 +1318,61 @@ object Snapshot {
         shadow.repartitionByRange(layout.fileRanges, col("__part"),
           Scale.zOrderKey(shadow, layout.zorderKeys))
       else shadow.repartitionByRange(layout.fileRanges,
-        col("__part") +: keys.map(col): _*)
-    arranged.write.mode("error").partitionBy("__part").parquet(dir)
-    df.schema
+        col("__part") +: shape.keys.map(col): _*)
+    val schema = df.schema
+    val tracked = shape.statsCols.flatMap(c =>
+      statKind(schema(c).dataType).map(c -> _))
+    val summed = tracked.collect {
+      case (c, _) if sumTracked(schema(c).dataType) => c }.toSet
+    // bloom SPECS ([[bloomSpec]]): bare column = value filter,
+    // `3g:col` = trigram filter — same per-file agg, different kernel
+    val bloomed = if (shape.bloomBits <= 0) Nil
+      else shape.bloomCols.flatMap { spec =>
+        val (tri, c) = bloomSpec(spec)
+        if (df.columns.contains(c)) Some((spec, c, tri)) else None
+      }
+    val hlled = shape.hllCols.filter(df.columns.contains)
+    val aggs = (count(lit(1)).as("__rows") +:
+      tracked.flatMap { case (c, _) => Seq(
+        min(col(c)).cast("string").as(s"__min_$c"),
+        max(col(c)).cast("string").as(s"__max_$c"),
+        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c")) ++
+        (if (summed(c)) Seq(sum(col(c)).cast("string").as(s"__sum_$c")) else Nil)
+      }) ++
+      bloomed.map { case (spec, c, tri) =>
+        (if (tri) graft.functions.BloomExprs
+          .triBloomBuild(col(c).cast("string"), shape.bloomBits, shape.bloomK)
+        else graft.functions.BloomExprs
+          .bloomBuild(col(c).cast("string"), shape.bloomBits, shape.bloomK))
+          .as(s"__bloom_$spec")
+      } ++
+      // per-file PORTABLE HLL sketch (md5-prefix hashing): register
+      // max-merge is associative, so the union of per-file sketches is
+      // bit-identical to a whole-table sketch - the manifest-only
+      // distinct-count path of aggStats, replayable by any md5 engine
+      hlled.map(c => graft.functions.HllExprs
+        .hllSketch(col(c).cast("string"), shape.hllP, portable = true).as(s"__hll_$c"))
+    // the partition is the path's `__part=` segment (values are
+    // `[A-Za-z0-9._~-]+` by validation, so nothing is escaped)
+    org.apache.spark.sql.graft.TrackedWrite.parquet(arranged, dir, "__part", aggs)
+      .groupBy(_.path.takeWhile(_ != '/').stripPrefix("__part=")).map { case (p, fs) =>
+        p -> fs.map { f =>
+          val r = f.stats
+          FileEntry(f.path, r.getAs[Long]("__rows"),
+            tracked.map { case (c, kind) =>
+              c -> ColStats(kind,
+                Option(r.getAs[String](s"__min_$c")),
+                Option(r.getAs[String](s"__max_$c")),
+                r.getAs[Long](s"__nulls_$c"),
+                if (summed(c)) Option(r.getAs[String](s"__sum_$c")) else None)
+            }.toMap,
+            bloomed.map { case (spec, _, _) =>
+              spec -> r.getAs[Array[Byte]](s"__bloom_$spec") }.toMap,
+            None,
+            hlled.map(c => c -> r.getAs[Array[Byte]](s"__hll_$c")).toMap,
+            bytes = f.bytes)
+        }.sortBy(_.path)
+      }
   }
 
   /** Reject the commit if any incoming row violates a table CHECK
@@ -1571,7 +1532,7 @@ object Snapshot {
       val shape = Manifest(c.v, c.cur, "create", keys, partitionCols, tracked,
         Map.empty, layout, df.schema.toDDL, constraints, bloomCols, bBits, bK,
         guards, hllCols, hllP, expects)
-      Some(Draft(shape.copy(partitions = c.write(spark, df, shape))))
+      Some(Draft(shape.copy(partitions = c.write(df, shape))))
     }
 
   /**
@@ -1771,7 +1732,7 @@ object Snapshot {
         case Some(merged) =>
           val next = m.copy(schemaDdl = plan.newDdl, columnMap = plan.newMap,
             delivery = plan.delivery)
-          val fresh = c.write(spark, merged, next, byPartition = true)
+          val fresh = c.write(merged, next, byPartition = true)
           val kept = m.partitions.filterNot(e => plan.affected.contains(e._1))
           Draft(next.copy(partitions = kept ++ fresh),
             dropped = plan.affected.filterNot(fresh.contains)) // emptied
@@ -1843,10 +1804,8 @@ object Snapshot {
           upserts, deleteKeys, plan.newMap, plan.delivery)
       case Some(merged) =>
         val name = "_staging-" + java.util.UUID.randomUUID().toString.take(13)
-        val written = writeArranged(merged, s"$table/files/$name",
-          m.partitionCols, m.keys, m.layout, plan.newMap, byPartition = true)
-        val sub = entriesOf(spark, s"$table/files/$name", s"/$name/", written,
-          m.statsCols, m.bloomCols, m.bloomBits, m.bloomK, m.hllCols, m.hllP)
+        val sub = writeTracked(merged, s"$table/files/$name",
+          m.copy(columnMap = plan.newMap), byPartition = true)
         StagedMerge(table, cur, Some(name), sub, plan.affected, plan.newDdl,
           upserts, deleteKeys, plan.newMap, plan.delivery)
     }
@@ -2130,7 +2089,7 @@ object Snapshot {
         // the full current schema); the dv-applied read drops masked
         // rows from the new files
         val base = readManifestFiles(spark, table, m, frag.values.flatten.toSeq)
-        c.write(spark, base.repartition(partValueCol(m.partitionCols, base)),
+        c.write(base.repartition(partValueCol(m.partitionCols, base)),
           m.copy(layout = Layout()))
       }
       // carry schemaDdl (kept pre-evolution files still need the
@@ -2188,7 +2147,7 @@ object Snapshot {
     * as `next` declares becomes the whole table. */
   private def rewriteAll(spark: SparkSession, c: Commit, df: DataFrame,
                          next: Manifest): Option[Draft] = {
-    val fresh = c.write(spark, df, next)
+    val fresh = c.write(df, next)
     Some(Draft(next.copy(partitions = fresh),
       dropped = c.m.partitions.keySet.filterNot(fresh.contains).toSeq.sorted))
   }
@@ -2320,7 +2279,7 @@ object Snapshot {
           val affected = scope.getOrElse(dfParts)
           val fresh =
             if (dfParts.isEmpty) Map.empty[String, Seq[FileEntry]]
-            else c.write(spark, cached, m)
+            else c.write(cached, m)
           val opScope = {
             val s = affected.toSeq.sorted
             if (s.size <= 8) s.mkString(",")
@@ -3070,8 +3029,8 @@ object Snapshot {
 
   /** A scanned row's manifest-relative file path: the tail of
     * `_metadata.file_path` from its LAST `files/cNNNNNNNN/` segment —
-    * the same relativization [[entriesOf]] does driver-side, expressed
-    * as a Column so deletion vectors can be matched in the plan. */
+    * the table-relative path the manifest records for the file,
+    * expressed as a Column so deletion vectors can be matched in the plan. */
   private def relFileCol: Column =
     regexp_extract(col("_metadata.file_path"),
       "^.*/(files/c[0-9]{8}/.*)$", 1)
@@ -3898,7 +3857,7 @@ object Snapshot {
       // miss updated rows; unchanged rows re-pass trivially and the
       // cost is bounded by candidate mass
       enforceConstraints(out, m.constraints)
-      val fresh = c.write(spark, out, m)
+      val fresh = c.write(out, m)
       // per partition: carried (non-candidate) files ++ replacement files
       val touched = m.partitions.collect {
         case (p, fs) if fs.exists(f => candPaths.contains(f.path)) => p }.toSet

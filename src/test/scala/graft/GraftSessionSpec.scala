@@ -47,12 +47,13 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(offenders.isEmpty, s"build sessions through GraftSession.local: $offenders")
   }
 
-  test("only Snapshot's commit primitive publishes manifests and reads back commit files") {
+  test("only Snapshot's commit primitive publishes manifests; the tracked write is the only write-back of stats") {
     // a call's owner is the nearest enclosing member of its object:
-    // the primitive is `commit` with its `Commit` context
+    // the primitive is `commit` with its `Commit` context, and
+    // `stageMerge` writes its staging dir outside the lock
     val member = ("""^  (?:(?:private|protected)(?:\[\w+\])? |final |sealed |implicit |""" +
       """override |lazy |case )*(?:def|val|var|class|object|trait) +(\w+)""").r.unanchored
-    val call = """\b(writeManifest|commitEntries)\(""".r
+    val call = """\b(writeManifest|writeTracked)\(""".r
     val walk = Files.walk(Paths.get("src/main/scala"))
     val sources =
       try walk.iterator().asScala
@@ -67,12 +68,15 @@ class GraftSessionSpec extends SparkSpecBase {
       if !line.contains(s"def $name(")
     } yield (p.getFileName.toString, i + 1, name,
       (i to 0 by -1).iterator.map(lines(_)).collectFirst { case member(n) => n })
-    val primitive = calls.filter(c => c._1 == "Snapshot.scala" &&
-      c._4.exists(Set("commit", "Commit")))
-    assert(primitive.map(_._3).toSet == Set("writeManifest", "commitEntries"),
-      s"the primitive's calls: $primitive")
-    val offenders = calls.diff(primitive)
-    assert(offenders.isEmpty, s"publish through Snapshot.commit: $offenders")
+    assert(calls.map(c => (c._1, c._3, c._4)).toSet == Set(
+      ("Snapshot.scala", "writeManifest", Some("commit")),
+      ("Snapshot.scala", "writeTracked", Some("Commit")),
+      ("Snapshot.scala", "writeTracked", Some("stageMerge"))),
+      s"publish and write through Snapshot.commit: $calls")
+    // the read-back of a commit's files is gone, not just unused
+    val readBack = sources.filter(p => """\b(entriesOf|commitEntries)\(""".r
+      .findFirstIn(Files.readString(p)).isDefined)
+    assert(readBack.isEmpty, s"stats are gathered by the write job: $readBack")
   }
 
   test("GraftFunctions.register keeps graft's own registrations and replaces anything else") {

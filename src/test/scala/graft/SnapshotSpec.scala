@@ -346,13 +346,32 @@ class SnapshotSpec extends SparkSpecBase {
     finally dirs.close()
   }
 
-  test("a merge with upserts and deletes runs three SQL executions: pre-flight, write, stats read-back") {
+  /** The distinct SQL executions among `jobs`. */
+  private def executionsOf(jobs: Seq[java.util.Properties]): Seq[String] =
+    jobs.flatMap(j => Option(j.getProperty("spark.sql.execution.id"))).distinct
+
+  test("a merge with upserts and deletes runs two SQL executions: pre-flight, write") {
     val t = fresh("executions")
     Snapshot.create(spark, t, seedDf, "id", "part")
     val (st, jobs) = jobsStarted(commitV2(t))
     assert(st.version == 2)
-    val executions = jobs.flatMap(j => Option(j.getProperty("spark.sql.execution.id"))).distinct
-    assert(executions.size === 3, s"executions: ${executions.mkString(",")}")
+    val executions = executionsOf(jobs)
+    assert(executions.size === 2, s"executions: ${executions.mkString(",")}")
+    assert(rowsOf(Snapshot.readLatest(spark, t)) == v2Expected)
+  }
+
+  test("a create runs one SQL execution, its write; a stageMerge two: pre-flight, write") {
+    val t = fresh("executions_create")
+    val (st, created) = jobsStarted(Snapshot.create(spark, t, seedDf, "id", "part",
+      statsCols = Seq("payload"), bloomCols = Seq("payload"), hllCols = Seq("payload")))
+    assert(st.version == 1 && st.filesWritten > 0)
+    assert(executionsOf(created).size === 1, s"create: ${executionsOf(created).mkString(",")}")
+    val (staged, stagedJobs) = jobsStarted(Snapshot.stageMerge(spark, t,
+      Seq((2L, "bravo2", "p1"), (9L, "india", "p2"), (6L, "foxtrot2", "p1"))
+        .toDF("id", "payload", "part"), Seq(5L, 8L).toDF("id")))
+    assert(executionsOf(stagedJobs).size === 2,
+      s"stageMerge: ${executionsOf(stagedJobs).mkString(",")}")
+    assert(Snapshot.commitStaged(spark, staged).version == 2)
     assert(rowsOf(Snapshot.readLatest(spark, t)) == v2Expected)
   }
 
@@ -1404,22 +1423,55 @@ class SnapshotSpec extends SparkSpecBase {
       assert(!Files.exists(Paths.get(dir, "files", "c00000002")))
       FaultyLogStore.failing = ""
       assert(commitV2(t).version == 2, "the version stays free for a retry")
-      // the manifest put lands but its acknowledgement is lost: v3 may
-      // be published, so its data must stay
+      // the manifest put lands but its acknowledgement is lost: v3 is
+      // published, so its data stays and the merge returns it
       FaultyLogStore.lostAck = true
-      intercept[java.io.IOException](Snapshot.merge(spark, t,
+      val v3 = Snapshot.merge(spark, t,
         Seq((1L, "alpha3", "p1")).toDF("id", "payload", "part"),
-        spark.emptyDataset[Long].toDF("id")))
+        spark.emptyDataset[Long].toDF("id"))
       FaultyLogStore.lostAck = false
+      assert(v3.version == 3 && v3.rewrittenPartitions == Seq("p1") && v3.filesWritten == 1)
       assert(Snapshot.currentVersion(t) == 3)
       assert(rowsOf(Snapshot.readLatest(spark, t)) ==
         v2Expected - ((1L, "alpha", "p1")) + ((1L, "alpha3", "p1")))
       assert(Snapshot.fsck(spark, t).isEmpty)
+      // a manifest put that fails without landing still fails the commit
+      FaultyLogStore.failing = "/_log/v00000004"
+      intercept[java.io.IOException](Snapshot.merge(spark, t,
+        Seq((1L, "alpha4", "p1")).toDF("id", "payload", "part"),
+        spark.emptyDataset[Long].toDF("id")))
+      assert(Snapshot.currentVersion(t) == 3)
     } finally {
       FaultyLogStore.failing = ""
       FaultyLogStore.lostAck = false
       spark.conf.unset("spark.graft.logstore.file")
       sys.props -= seg
+    }
+  }
+
+  test("a create and an add column whose manifest acknowledgement is lost return normally and publish once") {
+    val t = s"file://${fresh("lost_ack")}"
+    try {
+      spark.conf.set("spark.graft.logstore.file", "graft.FaultyLogStore")
+      FaultyLogStore.lostAck = true
+      val created = Snapshot.create(spark, t, seedDf, "id", "part")
+      val added = Snapshot.addColumn(spark, t, "note", "string")
+      FaultyLogStore.lostAck = false
+      assert(created.version == 1 &&
+        created.filesWritten == Snapshot.readManifest(t, 1).files.size)
+      assert(added.version == 2)
+      assert(Snapshot.history(t).map(h => (h._1, h._2)) ==
+        Seq((1, "create"), (2, "add_column(note:string)")))
+      assert(Snapshot.readLatest(spark, t).columns.contains("note"))
+      assert(rowsOf(Snapshot.readLatest(spark, t)) == rowsOf(seedDf))
+      // each attempt stamps its own id
+      val ids = Seq(1, 2).map(v => new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(Paths.get(t.stripPrefix("file://"), "_log", f"v$v%08d.json").toFile)
+        .get("commit_id").asText())
+      assert(ids.forall(_.nonEmpty) && ids.distinct.size == 2)
+    } finally {
+      FaultyLogStore.lostAck = false
+      spark.conf.unset("spark.graft.logstore.file")
     }
   }
 
