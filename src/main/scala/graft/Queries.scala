@@ -618,8 +618,7 @@ object Queries {
       statsIn = corpusStats(s, dir))
 
   /** MinHash + LSH near-dup pairs, exactly verified (true Jaccard
-    * ≥ 0.8) — the LSH-then-verify construction, full DuckDB oracle.
-    * The raw-estimate path (`Dedup.minhashLsh`) is spec-covered. */
+    * ≥ 0.8) — the LSH-then-verify construction, full DuckDB oracle. */
   def dedupMinhash(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashLshVerified(t(s, dir, "documents"), col("text"), col("doc_id"))
 
@@ -1407,8 +1406,7 @@ object Queries {
     * frequency ESTIMATES from one 80 KB sketch instead of exact
     * per-key counts: the shape a 100 TB hot-key probe takes when the
     * key space itself is too wide to groupBy (the sketch is the only
-    * aggregate state; candidates here are the distinct keys, at scale
-    * they come from the streaming sink's candidate log). PORTABLE
+    * aggregate state; candidates here are the distinct keys). PORTABLE
     * hashing (md5-prefix double hashing, pure integer row buckets)
     * makes the estimates engine-reproducible, so the DuckDB oracle
     * rebuilds the counters and must match the ESTIMATES exactly —

@@ -82,27 +82,4 @@ object BpeExprs {
 
   def bpeEncode(text: Column, merges: Seq[(String, String)]): Column =
     GraftBridge.column(BpeEncodeExpr(GraftBridge.expression(text), merges))
-
-  /** Apply ONE merge (l, r) to a symbol array — the per-iteration
-    * rewrite of the distributed BPE trainer. Same left-to-right
-    * non-overlapping semantics as [[graft.operators.Bpe.mergePair]]
-    * (it delegates to it). */
-  case class MergePairExpr(child: Expression, l: String, r: String)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullable: Boolean = true
-    override def nullSafeEval(v: Any): Any = {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val syms = new Array[String](arr.numElements())
-      var i = 0
-      while (i < syms.length) { syms(i) = arr.getUTF8String(i).toString; i += 1 }
-      val merged = graft.operators.Bpe.mergePair(syms, l, r)
-      new GenericArrayData(merged.map(s => UTF8String.fromString(s): Any))
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  def mergePairCol(syms: Column, l: String, r: String): Column =
-    GraftBridge.column(MergePairExpr(GraftBridge.expression(syms), l, r))
 }

@@ -232,16 +232,12 @@ object DdSketchExprs {
 
   private def e(c: Column) = GraftBridge.expression(c)
 
-  def ddSketch(c: Column, alpha: Double = 0.01): Column =
-    GraftBridge.column(DdSketchAgg(e(c), alpha).toAggregateExpression())
   /** Portable power-of-two bucket mode (see [[Sketch]] docs):
     * relative error ≤ 2^-(j+1), estimates bit-for-bit reproducible
     * by any IEEE engine — and the bucket index is integer bit math,
     * cheaper than the standard mode's per-value log. */
   def ddSketchPortable(c: Column, j: Int = 6): Column =
     GraftBridge.column(DdSketchAgg(e(c), -j.toDouble).toAggregateExpression())
-  def ddUnion(c: Column): Column =
-    GraftBridge.column(DdUnionAgg(e(c)).toAggregateExpression())
   def ddQuantile(c: Column, q: Column): Column =
     GraftBridge.column(DdQuantile(e(c), e(q)))
 }

@@ -351,17 +351,6 @@ object VectorExprs {
     c
   }
 
-  def countEqLongs(a: ArrayData, b: ArrayData): Int = {
-    val n = math.min(a.numElements(), b.numElements())
-    var eq = 0
-    var i = 0
-    while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) eq += 1
-      i += 1
-    }
-    eq
-  }
-
   /** |A ∩ B| for two ASCENDING-sorted long arrays — O(n+m) merge
     * walk, the rescoring kernel of the prefix-filtered set-similarity
     * join. Codegen: one static call into [[intersectSortedLongs]]
@@ -402,25 +391,6 @@ object VectorExprs {
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (a, b) =>
         s"${ev.value} = graft.functions.VectorExprs.intersectSortedShorts($a, $b);")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** Count of positions where two long arrays are equal (over the
-    * shorter length) — the MinHash signature-agreement kernel. */
-  case class LongVecEqCount(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = IntegerType
-    override def nullable: Boolean = true
-    override def nullSafeEval(l: Any, r: Any): Any =
-      countEqLongs(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    // static-call doGenCode for the same stage-level reason as
-    // [[SortedLongIntersectCount]] — runs on every post-band-join
-    // candidate pair of the minhash family.
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.VectorExprs.countEqLongs($a, $b);")
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
@@ -577,8 +547,6 @@ object VectorExprs {
   def vecNorm(a: Column): Column = GraftBridge.column(VecNorm(e(a)))
   def lshSignatures(vec: Column, tables: Int, bits: Int, seed: Int = 42): Column =
     GraftBridge.column(LshSignatures(e(vec), tables, bits, seed))
-  def longVecEqCount(a: Column, b: Column): Column =
-    GraftBridge.column(LongVecEqCount(e(a), e(b)))
   def sortedIntersectCount(a: Column, b: Column): Column =
     GraftBridge.column(SortedLongIntersectCount(e(a), e(b)))
   def sortedShortIntersectCount(a: Column, b: Column): Column =

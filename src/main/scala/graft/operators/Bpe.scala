@@ -53,14 +53,11 @@ object Bpe {
     trainOnHistogram(hist, numMerges)
   }
 
-  /** Code-point (= UTF-8 byte) lexicographic comparison. The
-    * distributed trainer's argmax tie-break is Spark `orderBy(l, r)`
-    * over UTF8String — binary UTF-8, i.e. code-point order — while
-    * Java's `String` `<` compares UTF-16 code UNITS; the two disagree
-    * for supplementary characters (emoji, CJK extensions), so the
-    * driver loop must compare code points for the documented
-    * "identical merge table by construction" claim to hold beyond
-    * the BMP. */
+  /** Code-point (= UTF-8 byte) lexicographic comparison: the order
+    * Spark sorts UTF8String in. Java's `String` `<` compares UTF-16
+    * code UNITS; the two disagree for supplementary characters
+    * (emoji, CJK extensions), so the tie-break compares code points
+    * to stay one order beyond the BMP. */
   private[operators] def cmpCodePoint(a: String, b: String): Int = {
     var i = 0
     var j = 0
@@ -74,9 +71,8 @@ object Bpe {
     Integer.compare(a.length - i, b.length - j)
   }
 
-  /** Split into code-point symbols — matches the distributed path's
-    * Spark `substring(word, i, 1)`, which counts code points, not
-    * UTF-16 units (a surrogate pair is ONE initial symbol in both). */
+  /** Split into code-point symbols, not UTF-16 units: a surrogate
+    * pair is ONE initial symbol, as in Spark's `substring`. */
   private[graft] def codePointSymbols(w: String): Array[String] =
     w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
 
@@ -114,8 +110,7 @@ object Bpe {
           val k = e.getKey
           val c = e.getValue.longValue()
           // deterministic: count desc, then pair lexicographic by
-          // CODE POINT (matches the distributed trainer's UTF8String
-          // orderBy — see cmpCodePoint)
+          // CODE POINT (see cmpCodePoint)
           if (c > bestC || (c == bestC && {
               val c1 = cmpCodePoint(k._1, best._1)
               c1 < 0 || (c1 == 0 && cmpCodePoint(k._2, best._2) < 0)
@@ -150,66 +145,6 @@ object Bpe {
       }
     }
     out.result()
-  }
-
-  /**
-   * FULLY DISTRIBUTED trainer — for when the word-TYPE table itself
-   * outgrows the driver (beyond `maxWordTypes`: byte-level
-   * multilingual vocabularies, >10M types). The (symbols, count)
-   * frame stays a DataFrame; each iteration runs one distributed
-   * pair-count aggregation (exchanges carry (pair, partial-count)),
-   * collects ONE argmax row, and rewrites symbol arrays scan-side
-   * via [[graft.functions.BpeExprs.MergePairExpr]]. Identical merge
-   * table to [[trainOnHistogram]] by construction (same count-desc /
-   * pair-lexicographic tie rule — spec-asserted equal).
-   *
-   * Cost model: one small Spark job per merge over the TYPE frame
-   * (vocab-sized, ≪ corpus — the corpus is touched exactly once to
-   * build it). The in-memory path is the right call whenever the
-   * types fit; this is the escape hatch, not the default.
-   */
-  def trainMergesDistributed(corpus: DataFrame, content: Column,
-                             numMerges: Int): Seq[(String, String)] = {
-    require(numMerges > 0, "numMerges must be positive")
-    val spark = corpus.sparkSession
-    import org.apache.spark.sql.functions.{col, explode, expr, sum => fsum}
-    var words = corpus.select(explode(LanguageModel.tokens(content)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .select(expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))")
-        .as("syms"), col("cnt"))
-      .persist()
-    words.count() // materialize before the loop
-    val merges = Seq.newBuilder[(String, String)]
-    var iter = 0
-    var done = false
-    while (iter < numMerges && !done) {
-      val top = words
-        .select(col("cnt"), explode(expr(
-          // guard: sequence(1, 0) DESCENDS in Spark, so a fully-merged
-          // single-symbol word must yield an empty pair array explicitly
-          """CASE WHEN size(syms) < 2 THEN array()
-            |ELSE transform(sequence(1, size(syms) - 1),
-            |  i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))
-            |END""".stripMargin)).as("p"))
-        .groupBy(col("p.l"), col("p.r")).agg(fsum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (top.isEmpty || top(0).getAs[Long]("n") < 2) done = true
-      else {
-        val (l, r) = (top(0).getAs[String]("l"), top(0).getAs[String]("r"))
-        merges += ((l, r))
-        val next = words.withColumn("syms",
-            graft.functions.BpeExprs.mergePairCol(col("syms"), l, r))
-          .persist()
-        next.count()
-        words.unpersist()
-        words = next
-      }
-      iter += 1
-    }
-    words.unpersist()
-    merges.result()
   }
 
   /** Encode a text column with a trained merge table — scan-side

@@ -462,46 +462,13 @@ object Dedup {
           graft.functions.TextHashExprs.minhashSig(content, k, numHashes).as("sig"))
       .filter(col("sig").isNotNull)
 
-  /**
-   * MinHash + LSH near-dup: band the signature (`bands` bands of
-   * rows = numHashes/bands), bucket-join on (band index, band hash),
-   * then estimate Jaccard as the fraction of matching signature
-   * positions. Pairs with estimate ≥ threshold, doc_a < doc_b.
-   * The band join is the scale path: candidate generation is a plain
-   * shuffle on band-hash, never a cross join.
-   */
   /** (doc_id, sig, band, band_hash): one row per LSH band of each
-    * (doc_id, sig) row — the banding kernel shared by [[minhashLsh]],
-    * [[minhashLshVerified]] and the streaming near-dup sink
-    * ([[graft.streaming.StreamingIngest.nearDedupSink]]). */
+    * (doc_id, sig) row — the banding kernel shared by the MinHash operators. */
   private[graft] def bandFrame(sig: DataFrame, bands: Int, rows: Int): DataFrame =
     sig.select(col("*"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => hash(slice(col("sig"), b * rows + 1, lit(rows))))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-
-  def minhashLsh(df: DataFrame, content: Column, id: Column,
-                 k: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                 threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    val sig = OpCache.cache(minhashSignatures(df, content, id, k, numHashes))
-    val banded = bandFrame(sig, bands, rows)
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val candidates = a.join(b,
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .distinct()
-    candidates
-      .withColumn("est_jaccard",
-        graft.functions.VectorExprs.longVecEqCount(col("sig_a"), col("sig_b"))
-          .cast("double") / numHashes)
-      .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
-  }
 
   /**
    * MinHash + LSH with EXACT verification: candidates from the band

@@ -142,44 +142,4 @@ object Fuzzy {
   def blockHistogram(df: DataFrame, key: Column,
                      block: Column => Column, topN: Int = 20): DataFrame =
     StatsOp.keyHistogram(df.select(block(key).as("blk")), col("blk"), topN)
-
-  /**
-   * Cross-frame blocked fuzzy join (left records matched to right
-   * candidates): (id_l, id_r, key_l, key_r, dist), dist ≤ maxDist.
-   * The master-data reconciliation shape — `right` is typically the
-   * reference register.
-   */
-  def fuzzyJoin(left: DataFrame, leftId: Column, leftKey: Column,
-                right: DataFrame, rightId: Column, rightKey: Column,
-                block: Column => Column, maxDist: Int,
-                saltBuckets: Int = 1): DataFrame = {
-    require(maxDist >= 0, "maxDist must be >= 0")
-    require(saltBuckets >= 1, "saltBuckets must be >= 1")
-    val l0 = Scale.ensureParallelism(left)
-      .select(leftId.as("id_l"), leftKey.as("key_l"), block(leftKey).as("blk"))
-    val r0 = right
-      .select(rightId.as("id_r"), rightKey.as("key_r"), block(rightKey).as("blk"))
-    // same grid-salting as selfFuzzyPairs: (l, r) meets in exactly one
-    // cell (bucket(l), bucket(r)); hot blocks spread over S² tasks
-    val (l, r, joinKeys) =
-      if (saltBuckets == 1) (l0, r0, Seq("blk"))
-      else {
-        val grid = explode(sequence(lit(0), lit(saltBuckets - 1)))
-        // explicit-count repartition: exempt from AQE byte-coalescing,
-        // which would otherwise re-concentrate the spread compute
-        // (see selfCandidates)
-        val n = left.sparkSession.sessionState.conf.numShufflePartitions
-        (l0.withColumn("sa", pmod(xxhash64(col("id_l")), lit(saltBuckets)).cast("int"))
-           .withColumn("sb", grid)
-           .repartition(n, col("blk"), col("sa"), col("sb")),
-         r0.withColumn("sb", pmod(xxhash64(col("id_r")), lit(saltBuckets)).cast("int"))
-           .withColumn("sa", grid)
-           .repartition(n, col("blk"), col("sa"), col("sb")),
-         Seq("blk", "sa", "sb"))
-      }
-    l.join(r, joinKeys)
-      .select(col("id_l"), col("id_r"), col("key_l"), col("key_r"),
-        levenshtein(col("key_l"), col("key_r")).as("dist"))
-      .filter(col("dist") <= maxDist)
-  }
 }

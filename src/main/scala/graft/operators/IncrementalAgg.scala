@@ -69,8 +69,8 @@ object IncrementalAgg {
    * exists iff it has rows). A group appearing only in the deltas is
    * created. Application is NOT idempotent (applying the same change
    * set twice double-counts — algebra, not a bug): drive it from an
-   * exactly-once context (the scheduler, or [[maintainBatch]]'s
-   * batch-id ledger under at-least-once streaming).
+   * exactly-once context, such as the scheduler, or a caller that
+   * records which change sets it has applied.
    */
   def maintain(spark: SparkSession, aggPath: String, groupCols: Seq[String],
                sumCols: Seq[String], removedRows: DataFrame,
@@ -113,39 +113,5 @@ object IncrementalAgg {
     store.rename(aggPath, tmpOld)
     store.rename(staging, aggPath)
     store.deleteTree(tmpOld)
-  }
-
-  /**
-   * At-least-once-safe wrapper for streaming/retried contexts: a
-   * ledger directory beside the table records every applied batch id;
-   * a replayed id is a no-op. The ledger write happens AFTER the swap,
-   * so a crash between swap and ledger re-applies the batch — close
-   * that window by making the CALLER's batch ids deterministic and
-   * the change sets replay-identical (foreachBatch guarantees both),
-   * then the re-application is detected by the ledger on the retry
-   * that matters (the framework replays the whole batch, which
-   * re-runs this method once, not the inner apply twice).
-   * Exactly-once for idempotently-replayed batches, the standard
-   * foreachBatch transactional-sink recipe.
-   */
-  def maintainBatch(spark: SparkSession, aggPath: String, batchId: Long,
-                    groupCols: Seq[String], sumCols: Seq[String],
-                    removedRows: DataFrame, addedRows: DataFrame): Boolean = {
-    val store = LogStore.forPath(aggPath)
-    val ledger = s"$aggPath.__graft_agg_applied"
-    store.mkdirs(ledger)
-    val mark = s"$ledger/batch-$batchId"
-    if (store.exists(mark)) return false
-    maintain(spark, aggPath, groupCols, sumCols, removedRows, addedRows)
-    // the mark claim must stay LOUD on a lost race: a false here means
-    // another worker applied the same batch concurrently (the delta
-    // just double-counted) — the pre-fabric Files.createFile threw,
-    // and silence would make the corruption undetectable
-    if (!store.createNew(mark)) throw new IllegalStateException(
-      s"incremental agg $aggPath: batch $batchId was applied CONCURRENTLY " +
-        "by another worker (ledger mark already present after this " +
-        "worker's apply) — the aggregate may be double-counted; rebuild " +
-        "it or ensure a single maintainer per aggregate")
-    true
   }
 }

@@ -28,14 +28,19 @@ import org.apache.spark.sql.functions._
  *  - the staging write is a dynamic partitionBy (no shuffle: rows are
  *    written per-task into their partition directories).
  *
- * Consistency: each affected partition directory is swapped in via a
- * filesystem rename after the full staging write succeeds — readers
- * see old-or-new per partition, never a half-written directory. The
- * swap loop itself is NOT transactional across partitions (a crash
- * mid-loop leaves some partitions new, some old — rerunning the same
- * merge is idempotent and completes the swap); cross-partition
- * atomicity is table-format (Delta/Iceberg commit-log) territory, out
- * of scope for a plain-parquet engine.
+ * Consistency: the staging write completes before any partition is
+ * touched. A swap journal in the staging dir then records each
+ * affected partition as rewritten or emptied, and each partition is
+ * swapped by moving its old directory aside and renaming the staged
+ * one in; the aside and staging dirs are deleted only after the last
+ * rename. A merge that finds a journal on entry finishes that swap
+ * before it reads the target, so rerunning a merge interrupted at any
+ * point of its swap loses no rows and converges to the same table.
+ * Readers see old-or-new per partition except between a partition's
+ * two renames, when they see neither (POSIX renames cannot close that
+ * gap), and the loop is not atomic across partitions: cross-partition
+ * atomicity is table-format territory ([[Snapshot]]), out of scope
+ * for a plain-parquet target.
  *
  * Storage: the swap rides [[LogStore.forPath]] — a bare path keeps
  * POSIX rename semantics, a scheme-qualified target (`hdfs://…`)
@@ -45,6 +50,36 @@ import org.apache.spark.sql.functions._
  * readers/writers); this closes the swap itself.
  */
 object Merge {
+
+  private val Journal = "_swap_journal"
+  private def stagingOf(targetPath: String) = s"$targetPath.__graft_merge_staging"
+
+  /** Finish the swap journaled in the staging dir, if there is one:
+    * `+p` renames the staged partition in unless that already
+    * happened (its staged dir is gone), `-p` moves the emptied
+    * partition out. Old dirs go aside first and are deleted with the
+    * staging dir after the last rename, so a failure at any step
+    * leaves a state this method can finish. */
+  private def finishSwap(store: LogStore, targetPath: String,
+                         partitionCol: String): Unit = {
+    val staging = stagingOf(targetPath)
+    val journal = s"$staging/$Journal"
+    if (!store.exists(journal)) return
+    val aside = s"$targetPath.__graft_merge_old"
+    store.mkdirs(aside)
+    new String(store.read(journal), java.nio.charset.StandardCharsets.UTF_8)
+      .split("\n").filter(_.nonEmpty).foreach { entry =>
+        val dir = s"$partitionCol=${entry.tail}"
+        val (src, dst) = (s"$staging/$dir", s"$targetPath/$dir")
+        val staged = entry.head == '+'
+        if (!staged || store.exists(src)) {
+          if (store.exists(dst)) store.rename(dst, s"$aside/$dir")
+          if (staged) store.rename(src, dst)
+        }
+      }
+    store.deleteTree(aside)
+    store.deleteTree(staging)
+  }
 
   /** What a merge did: partition values rewritten (dirs swapped),
     * dropped (emptied by deletes), and the delta row counts. */
@@ -63,6 +98,9 @@ object Merge {
    *   extra columns are ignored. Keys absent from the target are
    *   no-ops. A key must not appear in both `upserts` and
    *   `deleteKeys` (checked — the outcome would be order-dependent).
+   * - duplicate keys in `upserts` are NOT checked, unlike
+   *   [[Snapshot.merge]]: every upsert row is written, so two rows
+   *   with one key both land in the target.
    * - target partitioning is single-column hive layout
    *   (`partitionCol=value` directories), the layout
    *   `DataFrameWriter.partitionBy` produces. Null partition values
@@ -73,6 +111,8 @@ object Merge {
                 upserts: DataFrame, deleteKeys: DataFrame,
                 key: String, partitionCol: String,
                 format: String = "parquet"): MergeStats = {
+    val store = LogStore.forPath(targetPath)
+    finishSwap(store, targetPath, partitionCol)
     val target = spark.read.format(format).load(targetPath)
     require(target.columns.contains(partitionCol),
       s"target at $targetPath has no partition column '$partitionCol' " +
@@ -144,26 +184,19 @@ object Merge {
       .filter(col(partitionCol).cast("string").isin(affected: _*))
       .join(allKeys, Seq(key), "left_anti")
     val merged = survivors.unionByName(ups.select(target.columns.map(col): _*))
-    val store = LogStore.forPath(targetPath)
-    val staging = s"$targetPath.__graft_merge_staging"
-    store.deleteTree(staging)
+    val staging = stagingOf(targetPath)
+    store.deleteTree(staging) // no journal: an unfinished staging write
     merged.write.mode("overwrite").format(format)
       .partitionBy(partitionCol).save(staging)
 
-    val rewritten = Seq.newBuilder[String]
-    val dropped = Seq.newBuilder[String]
-    affected.foreach { p =>
-      val dirName = s"$partitionCol=$p"
-      val dst = s"$targetPath/$dirName"
-      val src = s"$staging/$dirName"
-      store.deleteTree(dst)
-      if (store.exists(src)) {
-        store.rename(src, dst)
-        rewritten += p
-      } else dropped += p // every row of the partition was deleted
-    }
-    store.deleteTree(staging)
+    // partitions with no staged dir had every row deleted
+    val (rewritten, dropped) =
+      affected.partition(p => store.exists(s"$staging/$partitionCol=$p"))
+    store.putReplace(s"$staging/$Journal",
+      (rewritten.map("+" + _) ++ dropped.map("-" + _)).mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finishSwap(store, targetPath, partitionCol)
     Seq(ups, dels, allKeys).foreach(OpCache.unpersistEager)
-    MergeStats(rewritten.result(), dropped.result(), upsertRows, deleteRows)
+    MergeStats(rewritten, dropped, upsertRows, deleteRows)
   }
 }

@@ -715,25 +715,6 @@ object Multimodal {
     })
   }
 
-  /** Metadata BACKFILL from payload probe, video flavor: video-kind
-    * records whose payload parses as a real AVI get format / width /
-    * height / durationMs corrected from the DECODED container headers
-    * (no frame decode — the header walk is the whole cost). Non-video
-    * kinds and undecodable payloads pass through untouched, same
-    * contract as [[probeAudioMeta]]. */
-  def probeVideoMeta(media: Dataset[MediaRecord]): Dataset[MediaRecord] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { m =>
-      if (m.kind != "video") m
-      else AviCodec.videoMeta(m.bytes) match {
-        case Some((fmt, w, h, _, durMs)) =>
-          m.copy(meta = m.meta.copy(format = fmt, width = w, height = h,
-            durationMs = durMs))
-        case None => m
-      }
-    })
-  }
-
   /** Metadata-only summary — the plan reads ONLY the metadata struct
     * (size and fingerprint live there, written at payload creation),
     * so parquet column pruning genuinely drops the binary column. */

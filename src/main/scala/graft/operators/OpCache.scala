@@ -78,5 +78,5 @@ object OpCache {
   }
 
   /** Number of currently tracked cached frames (for tests). */
-  def trackedCount: Int = frames.size() + rdds.size()
+  private[graft] def trackedCount: Int = frames.size() + rdds.size()
 }

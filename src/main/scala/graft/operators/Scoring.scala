@@ -89,40 +89,6 @@ object Scoring {
     w
   }
 
-  /**
-   * TRAIN the quality model: logistic regression (Spark MLlib) over
-   * the same md5-bucket hashed bag-of-words the serving path reads,
-   * then quantize float coefficients to the fixed-point integer
-   * weights [[classifyQuality]] serves. This closes the loop —
-   * label a sample (human ratings, LLM judgments, curated
-   * positives), train here, persist with [[saveWeights]], serve the
-   * 100 TB corpus with the codegen'd integer path. `labeled` needs a
-   * `label` column (0.0/1.0). Quantization at `scale` keeps sign and
-   * relative magnitude; serving thresholds are in the scaled space.
-   */
-  def trainQualityModel(labeled: DataFrame, text: Column, label: Column,
-                        buckets: Int = 4096, scale: Double = 1000.0,
-                        maxIter: Int = 20): (Array[Long], Long) = {
-    import org.apache.spark.ml.classification.LogisticRegression
-    import org.apache.spark.ml.linalg.{Vectors => MlVectors}
-    val spark = labeled.sparkSession
-    import spark.implicits._
-    val toks = graft.TextAnalysisCols.wsTokens(lower(text))
-    val counted = labeled.select(label.cast("double").as("label"),
-        transform(toks, t => tokenBucket(t, buckets)).as("bs"))
-      .as[(Double, Seq[Long])]
-    val assembled = counted.map { case (l, bs) =>
-      val m = scala.collection.mutable.HashMap.empty[Int, Double]
-      bs.foreach(b => m(b.toInt) = m.getOrElse(b.toInt, 0.0) + 1.0)
-      (l, MlVectors.sparse(buckets, m.toSeq.sortBy(_._1)))
-    }.toDF("label", "features")
-    val model = new LogisticRegression()
-      .setMaxIter(maxIter).setRegParam(0.01).setStandardization(false)
-      .fit(assembled)
-    val w = Array.tabulate(buckets)(i => math.round(model.coefficients(i) * scale))
-    (w, math.round(model.intercept * scale))
-  }
-
   /** Persist quantized weights in the (bucket, weight) parquet shape
     * [[loadWeights]] reads — the train-once model artifact. */
   def saveWeights(spark: org.apache.spark.sql.SparkSession, path: String,

@@ -437,18 +437,6 @@ object Similarity {
     Snapshot.merge(spark, table, indexRows(upserts, id, vec, centroids, attrs),
       deleteIds.select(id.as("id")))
 
-  /** RETIREMENT-ONLY index maintenance as a MERGE-ON-READ commit
-    * ([[Snapshot.deleteMorKeys]]): a wave of deleted documents leaves
-    * the index WITHOUT rewriting a single cell file — the deletion
-    * vector masks the retired vectors and every serve path (probed
-    * cells are read dv-applied) stops returning them; the next
-    * [[Snapshot.compact]] materializes. The erasure-request shape for
-    * a 100-TB vector store: [[ivfIndexMerge]] rewrites each retired
-    * doc's whole cell, this writes 16 bytes per retired vector. */
-  def ivfIndexRetire(spark: SparkSession, table: String,
-                     deleteIds: DataFrame, id: Column): Snapshot.CommitStats =
-    Snapshot.deleteMorKeys(spark, table, deleteIds.select(id.as("id")))
-
   private def indexRows(corpus: DataFrame, id: Column, vec: Column,
                         centroids: Array[Array[Double]],
                         attrs: Seq[Column] = Nil): DataFrame = {

@@ -2799,11 +2799,6 @@ object Snapshot {
     evolveSchemaAll(table, Seq(
       s"track_trigram($name)" -> addBloomXform(table, TriPrefix + name, bits, k)))
 
-  /** Stop trigram-tracking `name` (metadata-only commit). */
-  def untrackTrigram(spark: SparkSession, table: String, name: String): CommitStats =
-    evolveSchemaAll(table, Seq(
-      s"untrack_trigram($name)" -> dropBloomXform(table, TriPrefix + name)))
-
   private[graft] def addBloomXform(table: String, name: String,
                                    bits: Int, k: Int)(m: Manifest): Manifest = {
     val (tri, src) = bloomSpec(name)
@@ -4252,10 +4247,6 @@ object Snapshot {
           .map(v => committedAt(table, v)).getOrElse(-1L)})")
     at.max
   }
-
-  /** The table as of a wall-clock instant (epoch millis). */
-  def readAsOf(spark: SparkSession, table: String, tsMillis: Long): DataFrame =
-    readAt(spark, table, versionAtTime(table, tsMillis))
 
   /** Parse a user-supplied commit instant: epoch millis, a
     * zone-qualified ISO-8601 timestamp ("2026-08-15T06:00:00Z",

@@ -380,8 +380,7 @@ object StatsOp {
    * frequency ESTIMATES from one fixed-size (~80 KB) sketch instead of
    * exact per-key counts: the shape a 100 TB hot-key probe takes when
    * the key space itself is too wide to groupBy (the sketch is the
-   * only aggregate state; candidates here are the distinct keys — at
-   * scale they come from the streaming sink's candidate log).
+   * only aggregate state; candidates here are the distinct keys).
    * `portable=true` (default) uses md5-prefix double hashing so the
    * estimates are engine-reproducible (the skew_keys_approx oracle
    * rebuilds the counters in DuckDB and matches exactly).
@@ -473,18 +472,6 @@ object StatsOp {
         countDistinct(md5(content)).as("n_distinct"))
       .withColumn("dup_ratio",
         lit(1.0) - col("n_distinct").cast("double") / col("n_docs"))
-
-  /**
-   * PER-FILE MANIFEST: row count per underlying input file — the
-   * data-debugging view that finds skewed, truncated or runaway files
-   * in a 100 TB layout before they stall a stage. `input_file_name`
-   * is populated at the scan, so the only work is one aggregation
-   * over (file → count); run it on a raw `spark.read` frame (the
-   * column is empty after joins/shuffles re-derive rows).
-   */
-  def fileManifest(df: DataFrame): DataFrame =
-    df.groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"))
 
   private def isComplex(dt: DataType): Boolean = dt match {
     case _: StructType | _: ArrayType | _: MapType | _: BinaryType => true

@@ -164,7 +164,7 @@ object Writers {
     // gets ONE deletion-vector commit — zero data files rewritten,
     // bloom/stats-pruned key scans, the version log as audit trail.
     // The declarative reach for what `SnapshotTool delete-mor` does
-    // imperatively; streaming twin: StreamingIngest.erasureSink.
+    // imperatively.
     if (spec.saveMode == "erase") {
       require(spec.format == "parquet" || spec.format == "snapshot",
         s"sink '${spec.name}': saveMode erase targets snapshot tables " +

@@ -27,13 +27,12 @@ import org.apache.spark.sql.streaming.OutputMode
  * (`key`/`partitionCol` options required then; an existing table
  * reads them from its manifest and the options must not disagree).
  *
- * Delivery: at-least-once WITH CONVERGENCE (the
- * [[graft.streaming.StreamingIngest.cdcSnapshotSink]] contract) — a
- * replayed batch re-merges the same change set and commits a
- * content-identical version, so the table state is exactly-once even
- * when the version count is not. Batches with richer CDC semantics
- * (sequence ordering, delete flags, write-audit-publish) belong to
- * `cdcSnapshotSink`, which exposes those knobs.
+ * Delivery: at-least-once WITH CONVERGENCE — a replayed batch
+ * re-merges the same upserts and commits a content-identical
+ * version, so the table state is exactly-once even when the version
+ * count is not. A batch is upserts only: there is no sequence
+ * ordering, delete flag or write-audit-publish, and the merge's
+ * duplicate-key guard refuses a batch with two rows for one key.
  */
 private[graft] class GraftStreamSink(path: String,
                                      keyOpt: Option[String],

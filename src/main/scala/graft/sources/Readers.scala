@@ -140,27 +140,6 @@ object Readers {
   def orc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
-  /**
-   * Whole-file binary ingest — the entry point for raw multimodal
-   * corpora (images/audio/video as files on distributed storage).
-   * Each file becomes one row: (path, modificationTime, length,
-   * content: binary); `pathGlobFilter` selects extensions and
-   * `maxBytes` (0 = unlimited) guards executors against a stray
-   * multi-GB file (the scan PRUNES `content` when only metadata is
-   * selected, so listing-level stats never read payloads). Feed the
-   * result to [[graft.operators.Multimodal]] for decode/feature
-   * plumbing.
-   */
-  def binaryFiles(spark: SparkSession, path: String,
-                  glob: Option[String] = None,
-                  maxBytes: Long = 0L): DataFrame = {
-    val r = spark.read.format("binaryFile")
-    val withGlob = glob.fold(r)(g => r.option("pathGlobFilter", g))
-    val df = withGlob.load(path)
-    if (maxBytes > 0) df.filter(org.apache.spark.sql.functions.col("length") <= maxBytes)
-    else df
-  }
-
   /** Schema memo for [[table]]: qualified path -> (mtime, size,
     * inferred schema). Path-based parquet reads re-run schema
     * inference — a driver-blocking footer-read JOB — on EVERY

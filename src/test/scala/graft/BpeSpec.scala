@@ -46,22 +46,7 @@ class BpeSpec extends SparkSpecBase {
     assert(Bpe.loadMerges(spark, s"$tmp/merges") === merges)
   }
 
-  test("distributed trainer produces the identical merge table") {
-    val corpus = Seq(
-      "low low low low low lower lower",
-      "newest newest newest newest newest newest",
-      "widest widest widest").toDF("text")
-    val driver = Bpe.trainMerges(corpus, col("text"), numMerges = 4)
-    val dist = Bpe.trainMergesDistributed(corpus, col("text"), numMerges = 4)
-    assert(dist === driver)
-    // and on real data: same first merges either way
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-    val d1 = Bpe.trainMerges(docs, col("text"), numMerges = 3)
-    val d2 = Bpe.trainMergesDistributed(docs, col("text"), numMerges = 3)
-    assert(d2 === d1)
-  }
-
-  test("non-BMP tie-break: driver and distributed trainers agree beyond the BMP") {
+  test("non-BMP tie-break: ties break by code point beyond the BMP") {
     // U+FFEE (BMP) sorts BEFORE U+10000 (supplementary) by code point,
     // but AFTER it by UTF-16 code unit (0xFFEE > 0xD800): a tie between
     // the two pairs distinguishes the orderings
@@ -69,10 +54,8 @@ class BpeSpec extends SparkSpecBase {
     val supp = new String(Character.toChars(0x10000))
     val corpus = (Seq.fill(5)(s"a$supp") ++ Seq.fill(5)(s"a$bmp")).mkString(" ")
     val df = Seq(corpus).toDF("text")
-    val driver = Bpe.trainMerges(df, col("text"), numMerges = 1)
-    val dist = Bpe.trainMergesDistributed(df, col("text"), numMerges = 1)
-    assert(driver === dist, "driver and distributed tie-breaks must agree")
-    assert(driver === Seq("a" -> bmp), "ties must break by CODE POINT order")
+    assert(Bpe.trainMerges(df, col("text"), numMerges = 1) === Seq("a" -> bmp),
+      "ties must break by CODE POINT order")
     // and a surrogate pair is ONE initial symbol, not two half-surrogates
     assert(Bpe.codePointSymbols(s"x$supp").toSeq === Seq("x", supp))
     // encoding applies the merge across the surrogate boundary intact

@@ -12,7 +12,7 @@ class DdSketchSpec extends SparkSpecBase {
       .select(col("l_extendedprice").cast("double").as("v"))
     val qs = Seq(0.1, 0.5, 0.9, 0.99)
     val exact = df.stat.approxQuantile("v", qs.toArray, 0.0) // exact at rel 0
-    val sk = df.agg(DdSketchExprs.ddSketch(col("v"), alpha = 0.01).as("s"))
+    val sk = df.agg(expr("dd_sketch(v)").as("s"))
     val est = qs.zipWithIndex.map { case (q, i) =>
       sk.select(DdSketchExprs.ddQuantile(col("s"), lit(q))).first().getDouble(0) -> exact(i)
     }
@@ -27,7 +27,7 @@ class DdSketchSpec extends SparkSpecBase {
     val df = spark.read.parquet(sf("sf0.01") + "/lineitem.parquet")
       .select(col("l_quantity").cast("double").as("v"))
     def bytes(d: org.apache.spark.sql.DataFrame): Seq[Byte] =
-      d.agg(DdSketchExprs.ddSketch(col("v")).as("s"))
+      d.agg(expr("dd_sketch(v)").as("s"))
         .first().getAs[Array[Byte]]("s").toSeq
     assert(bytes(df) === bytes(df.repartition(17)))
   }
@@ -36,13 +36,13 @@ class DdSketchSpec extends SparkSpecBase {
     val df = spark.read.parquet(sf("sf0.01") + "/orders.parquet")
       .select(col("o_totalprice").cast("double").as("v"),
         (col("o_orderkey") % 7).as("day"))
-    val daily = df.groupBy("day").agg(DdSketchExprs.ddSketch(col("v")).as("sketch"))
+    val daily = df.groupBy("day").agg(expr("dd_sketch(v)").as("sketch"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_dd").toString
     daily.write.mode("overwrite").parquet(tmp)
     val merged = spark.read.parquet(tmp)
-      .agg(DdSketchExprs.ddUnion(col("sketch")).as("s"))
+      .agg(expr("dd_union(sketch)").as("s"))
       .first().getAs[Array[Byte]]("s").toSeq
-    val direct = df.agg(DdSketchExprs.ddSketch(col("v")).as("s"))
+    val direct = df.agg(expr("dd_sketch(v)").as("s"))
       .first().getAs[Array[Byte]]("s").toSeq
     assert(merged === direct, "union of partial sketches must equal the global sketch")
   }
@@ -50,11 +50,11 @@ class DdSketchSpec extends SparkSpecBase {
   test("zeros and loud negatives") {
     import spark.implicits._
     val z = Seq(0.0, 0.0, 5.0).toDF("v")
-      .agg(DdSketchExprs.ddSketch(col("v")).as("s"))
+      .agg(expr("dd_sketch(v)").as("s"))
     val q50 = z.select(DdSketchExprs.ddQuantile(col("s"), lit(0.5))).first().getDouble(0)
     assert(q50 === 0.0, s"median of (0,0,5) is 0, got $q50")
     val err = intercept[Exception] {
-      Seq(-1.0).toDF("v").agg(DdSketchExprs.ddSketch(col("v")).as("s")).collect()
+      Seq(-1.0).toDF("v").agg(expr("dd_sketch(v)").as("s")).collect()
     }
     assert(err.getMessage.contains("mirror negatives") ||
       err.getCause != null && err.getCause.getMessage.contains("mirror negatives"))
@@ -110,10 +110,10 @@ class DdSketchSpec extends SparkSpecBase {
 
   test("portable and standard sketches refuse to union") {
     import spark.implicits._
-    val a = Seq(1.0).toDF("v").agg(DdSketchExprs.ddSketch(col("v"), 0.01).as("s"))
+    val a = Seq(1.0).toDF("v").agg(expr("dd_sketch(v)").as("s"))
     val b = Seq(2.0).toDF("v").agg(DdSketchExprs.ddSketchPortable(col("v"), 6).as("s"))
     val err = intercept[Exception] {
-      a.unionByName(b).agg(DdSketchExprs.ddUnion(col("s"))).collect()
+      a.unionByName(b).agg(expr("dd_union(s)")).collect()
     }
     assert(err.getMessage.contains("accuracies") ||
       err.getCause != null && err.getCause.getMessage.contains("accuracies"))

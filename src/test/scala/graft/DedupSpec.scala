@@ -409,34 +409,6 @@ class DedupSpec extends SparkSpecBase {
     assert(first.nonEmpty)
   }
 
-  test("minhash LSH: catches exact + near dups, estimate within 0.3 of truth") {
-    // fixture near-pair has true j=0.6; 16 bands × 2 rows gives
-    // P(banded) ≈ 0.999 (8×4 was a 0.67 coin flip on the hash)
-    val out = Dedup.minhashLsh(docs, col("text"), col("doc_id"),
-        k = 3, numHashes = 32, bands = 16, threshold = 0.4)
-      .select("doc_a", "doc_b", "est_jaccard").as[(Long, Long, Double)].collect()
-      .map { case (a, b, j) => (a, b) -> j }.toMap
-    assert(out((3L, 4L)) === 1.0)                 // identical docs: exact signature match
-    assert(out.contains((1L, 2L)))                // near pair banded together
-    val truth = jaccard(
-      "the quick brown fox jumps over the lazy dog near the red barn today",
-      "the quick brown fox jumps over the lazy cat near the red barn today")
-    assert(math.abs(out((1L, 2L)) - truth) <= 0.3)
-  }
-
-  test("minhash LSH agrees with exact Jaccard >= threshold on real corpus") {
-    val d = spark.read.parquet(sf() + "/documents.parquet")
-    val exactPairs = Dedup.ngramJaccard(d, col("text"), col("doc_id"), k = 3, threshold = 0.9)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val lshPairs = Dedup.minhashLsh(d, col("text"), col("doc_id"),
-        k = 3, numHashes = 32, bands = 8, threshold = 0.7)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    // every true >=0.9 pair must be recalled by LSH at threshold 0.7
-    assert(exactPairs.nonEmpty)
-    assert(exactPairs.subsetOf(lshPairs),
-      s"missed: ${exactPairs.diff(lshPairs)}")
-  }
-
   test("minhashLshVerified equals the exact prefix-filter join on real corpus") {
     val d = spark.read.parquet(sf() + "/documents.parquet")
     val exact = Dedup.ngramJaccard(d, col("text"), col("doc_id"), k = 3, threshold = 0.8)

@@ -109,17 +109,4 @@ class FuzzySpec extends SparkSpecBase {
     assert(sOnly === Set((3L, 4L)))          // blind to the pos-7 typo
     assert(multi === Set((1L, 2L), (3L, 4L))) // union sees both
   }
-
-  test("salted cross-frame fuzzyJoin matches unsalted") {
-    val right = skewed.select((col("id") + 5000).as("rid"),
-      concat(col("name"), lit("x")).as("rname"))
-    val plain = Fuzzy.fuzzyJoin(skewed, col("id"), col("name"),
-        right, col("rid"), col("rname"), blockFn, maxDist = 3)
-      .select("id_l", "id_r", "dist").collect().map(_.toSeq).toSet
-    val salted = Fuzzy.fuzzyJoin(skewed, col("id"), col("name"),
-        right, col("rid"), col("rname"), blockFn, maxDist = 3, saltBuckets = S)
-      .select("id_l", "id_r", "dist").collect().map(_.toSeq).toSet
-    assert(salted == plain)
-    assert(plain.nonEmpty)
-  }
 }

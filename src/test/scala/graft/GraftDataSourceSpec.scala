@@ -287,8 +287,6 @@ class GraftDataSourceSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       Snapshot.versionAtTime(t, Snapshot.committedAt(t, 1) - 1000)
     }
-    assert(rowsOf(Snapshot.readAsOf(spark, t, afterV1)) ==
-      rowsOf(Snapshot.readAt(spark, t, 1)))
     // the DSv2 option rides the same resolution (epoch-millis form)
     val viaOpt = spark.read.format("graft")
       .option("timestampAsOf", afterV1.toString).load(t)

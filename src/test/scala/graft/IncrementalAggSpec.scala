@@ -79,19 +79,6 @@ class IncrementalAggSpec extends SparkSpecBase {
       "decimal sums make maintenance associative — any split, same bits")
   }
 
-  test("maintainBatch ledger: a replayed batch id is a no-op") {
-    val path = fresh("ledger")
-    IncrementalAgg.build(df(v1), Seq("source"), Seq("tokens")).write.parquet(path)
-    assert(IncrementalAgg.maintainBatch(spark, path, 7L, Seq("source"),
-      Seq("tokens"), df(removed), df(added)))
-    val once = readAgg(path)
-    assert(!IncrementalAgg.maintainBatch(spark, path, 7L, Seq("source"),
-      Seq("tokens"), df(removed), df(added)),
-      "the same batch id must not apply twice")
-    assert(readAgg(path) === once)
-    assert(once === recompute(v2))
-  }
-
   test("schema guard: a table missing a tracked sum column is rejected") {
     val path = fresh("guard")
     IncrementalAgg.build(df(v1), Seq("source"), Seq.empty).write.parquet(path)

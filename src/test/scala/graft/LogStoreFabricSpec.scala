@@ -62,7 +62,7 @@ class LogStoreFabricSpec extends SparkSpecBase {
     assert(spark.read.parquet(target).count() == 29)
   }
 
-  test("IncrementalAgg maintains through the Hadoop store: swap + ledger on a file:// aggPath") {
+  test("IncrementalAgg maintains through the Hadoop store: swap on a file:// aggPath") {
     val dir = freshCreated("iagg")
     val aggPath = s"file://$dir/agg"
     def corpus(rows: Seq[(String, Long)]) = rows.toDF("source", "tokens")
@@ -84,14 +84,6 @@ class LogStoreFabricSpec extends SparkSpecBase {
     val st = LogStore.forPath(aggPath)
     assert(!st.exists(s"$aggPath.__graft_agg_staging") &&
       !st.exists(s"$aggPath.__graft_agg_old"))
-
-    // the batch ledger claims through the store: replay is a no-op
-    assert(IncrementalAgg.maintainBatch(spark, aggPath, 7L, Seq("source"),
-      Seq("tokens"), corpus(Nil), corpus(Seq(("b", 1L)))))
-    assert(!IncrementalAgg.maintainBatch(spark, aggPath, 7L, Seq("source"),
-      Seq("tokens"), corpus(Nil), corpus(Seq(("b", 1L)))),
-      "replayed batch id must not re-apply")
-    assert(st.exists(s"$aggPath.__graft_agg_applied/batch-7"))
   }
 
   test("Schedule state + runner lock ride the store: file:// state path end-to-end") {
@@ -140,23 +132,6 @@ class LogStoreFabricSpec extends SparkSpecBase {
     assert(Schedule.readState(statePath)
       .contains(Instant.parse("2026-08-02T00:00:00Z")))
     assert(!store.exists(s"$statePath.lock"), "lock released after the run")
-  }
-
-  test("streaming label store lists and vacuums through the store on a file:// outPath") {
-    val dir = freshCreated("labels")
-    val outPath = s"file://$dir/log"
-    Seq(1L, 2L, 3L).foreach { b =>
-      Seq((s"doc$b", b)).toDF("doc_id", "cluster")
-        .coalesce(1).write.parquet(s"$outPath/labels/b$b")
-    }
-    assert(graft.streaming.StreamingIngest.clusterLabels(spark, outPath)
-      .select("doc_id").as[String].collect().toSeq == Seq("doc3"),
-      "the tip batch is the live label table")
-    val removed = graft.streaming.StreamingIngest
-      .clusterLabelsVacuum(outPath, retainLast = 2)
-    assert(removed == 1)
-    val st = LogStore.forPath(outPath)
-    assert(st.list(s"$outPath/labels").map(_._1).toSet == Set("b2", "b3"))
   }
 
   test("putReplace is reader-atomic on the Hadoop store: a concurrent reader never sees a missing path") {

@@ -136,68 +136,61 @@ class MergeSpec extends SparkSpecBase {
   private def before2Partitions(path: String): Int =
     fileState(path).keys.count(k => k.startsWith("part=p1") || k.startsWith("part=p2"))
 
-  test("cdcMergeSink: streamed CDC batches == one batch merge of the " +
-    "collapsed change set; untouched partitions not rewritten; replay idempotent") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-
-    val streamed = freshTarget("cdc_stream")
-    val batched = freshTarget("cdc_batch")
-    seed(streamed); seed(batched)
-    val beforeP4 = fileState(streamed).filter(_._1.startsWith("part=p4"))
-
-    // CDC rows: (id, payload, part, seq, __deleted)
-    val stream = MemoryStream[(Long, String, String, Long, Boolean)]
-    val cp = freshTarget("cdc_cp")
-    val q = graft.streaming.StreamingIngest.cdcMergeSink(
-      stream.toDF().toDF("id", "payload", "part", "seq", "__deleted"),
-      streamed, cp, key = "id", partitionCol = "part", seqCol = "seq")
-    // batch 1: update id 2 twice (seq order decides), insert id 9
-    stream.addData((2L, "bravo-old", "p1", 10L, false),
-      (2L, "bravo-new", "p1", 11L, false), (9L, "india", "p5", 12L, false))
-    q.processAllAvailable()
-    // batch 2: delete id 6, move id 4 p2→p5, then delete id 9 after
-    // an update in the SAME batch (collapse keeps the delete, seq 22)
-    stream.addData((6L, null, "p3", 20L, true),
-      (4L, "delta-moved", "p5", 21L, false),
-      (9L, "india-v2", "p5", 21L, false), (9L, null, "p5", 22L, true))
-    q.processAllAvailable(); q.stop()
-
-    // equivalent single batch merge: last change per key across it all
-    Merge.mergeInto(spark, batched,
+  test("replay of the same change set is idempotent; untouched partition p4 not rewritten") {
+    val path = freshTarget("replay")
+    seed(path)
+    val beforeP4 = fileState(path).filter(_._1.startsWith("part=p4"))
+    // update id 2, move id 4 p2→p5, delete id 6 and the absent id 9
+    def apply() = Merge.mergeInto(spark, path,
       Seq((2L, "bravo-new", "p1"), (4L, "delta-moved", "p5")).toDF("id", "payload", "part"),
       Seq(Tuple1(6L), Tuple1(9L)).toDF("id"), "id", "part")
-    assert(readBack(streamed) === readBack(batched),
-      "streamed CDC application must equal the batch merge")
-
-    assert(fileState(streamed).filter(_._1.startsWith("part=p4")) === beforeP4,
-      "partition p4 saw no change in any batch — files must not be rewritten")
-
-    // at-least-once replay of the LAST batch converges to the same state
-    val replay = Seq((6L, null.asInstanceOf[String], "p3", 20L, true),
-      (4L, "delta-moved", "p5", 21L, false),
-      (9L, "india-v2", "p5", 21L, false), (9L, null.asInstanceOf[String], "p5", 22L, true))
-      .toDF("id", "payload", "part", "seq", "__deleted")
-    graft.streaming.StreamingIngest.applyCdcBatch(replay, streamed,
-      "id", "part", "seq", "__deleted", "parquet")
-    assert(readBack(streamed) === readBack(batched),
-      "replaying the last micro-batch must be idempotent")
+    apply()
+    val once = readBack(path)
+    assert(once === Set((1L, "alpha", "p1"), (2L, "bravo-new", "p1"),
+      (3L, "charlie", "p1"), (5L, "echo", "p2"), (7L, "golf", "p3"),
+      (8L, "hotel", "p4"), (4L, "delta-moved", "p5")))
+    apply()
+    assert(readBack(path) === once, "replaying the change set must be idempotent")
+    assert(fileState(path).filter(_._1.startsWith("part=p4")) === beforeP4,
+      "partition p4 saw no change in either merge — files must not be rewritten")
   }
 
-  test("cdcMergeSink bootstraps a missing target from the first batch") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val path = freshTarget("cdc_boot")
-    val stream = MemoryStream[(Long, String, String, Long, Boolean)]
-    val q = graft.streaming.StreamingIngest.cdcMergeSink(
-      stream.toDF().toDF("id", "payload", "part", "seq", "__deleted"),
-      path, freshTarget("cdc_boot_cp"), "id", "part", "seq")
-    stream.addData((1L, "a", "p1", 1L, false), (2L, "b", "p2", 2L, false),
-      (3L, "dead-on-arrival", "p1", 3L, true))
-    q.processAllAvailable()
-    stream.addData((2L, "b-v2", "p2", 4L, false))
-    q.processAllAvailable(); q.stop()
-    assert(readBack(path) === Set((1L, "a", "p1"), (2L, "b-v2", "p2")))
+  test("a merge that fails at any delete or rename of its swap completes on rerun") {
+    // p1 rewritten, p2 loses a key to the new p5, p4 emptied
+    val expected = Set((1L, "alpha", "p1"), (2L, "bravo-v2", "p1"),
+      (3L, "charlie", "p1"), (5L, "echo", "p2"), (6L, "foxtrot", "p3"),
+      (7L, "golf", "p3"), (4L, "delta-moved", "p5"))
+    def merge(path: String) = Merge.mergeInto(spark, s"file://$path",
+      Seq((2L, "bravo-v2", "p1"), (4L, "delta-moved", "p5")).toDF("id", "payload", "part"),
+      Seq(Tuple1(8L)).toDF("id"), "id", "part")
+    def leftovers(path: String) = {
+      val f = new java.io.File(path)
+      f.getParentFile.list().filter(_.startsWith(f.getName + ".__graft_merge")).toSeq
+    }
+    try {
+      spark.conf.set("spark.graft.logstore.file", "graft.FaultyLogStore")
+      val clean = freshTarget("swap_clean")
+      seed(clean)
+      FaultyLogStore.mutations.set(0)
+      merge(clean)
+      val steps = FaultyLogStore.mutations.get()
+      assert(readBack(clean) === expected)
+      assert(steps >= 7, s"only $steps deletes and renames counted")
+      (0 until steps).foreach { i =>
+        val path = freshTarget(s"swap_fault$i")
+        seed(path)
+        FaultyLogStore.mutations.set(0)
+        FaultyLogStore.failMutation = i
+        intercept[java.io.IOException](merge(path))
+        FaultyLogStore.failMutation = -1
+        merge(path)
+        assert(readBack(path) === expected, s"rerun after a failure at step $i")
+        assert(leftovers(path).isEmpty, s"step $i left ${leftovers(path)}")
+      }
+    } finally {
+      FaultyLogStore.failMutation = -1
+      spark.conf.unset("spark.graft.logstore.file")
+    }
   }
 
   test("metadata sink saveMode=merge applies __deleted rows as deletes") {

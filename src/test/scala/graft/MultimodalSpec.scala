@@ -272,47 +272,4 @@ class MultimodalSpec extends SparkSpecBase {
     val fake = mk(8L, "video", "0123456789", 640, 480, 0, 3500L)
     assert(sampleFrames(Seq(fake).toDS(), 1000L).count() === 4)
   }
-
-  test("probeVideoMeta backfills decoded container metadata, leaves others untouched") {
-    val avi = AviCodec.encodeAvi(Seq(solidJpeg(128)), 48, 32, fps = 4)
-    val real = MediaRecord(40L, "video", avi,
-      MediaMeta("raw", 0, 0, 0, 9999L, avi.length.toLong, FakeCodec.md5Hex(avi)))
-    val recs = Seq(real,
-      mk(41L, "video", "notavideo", 640, 480, 0, 2500L), // undecodable
-      mk(42L, "audio", "abytes", 0, 0, 16000, 3500L)     // wrong kind
-    ).toDS()
-    val out = probeVideoMeta(recs).collect().sortBy(_.mediaId)
-    assert(out(0).meta.format === "avi/mjpg" && out(0).meta.width === 48 &&
-      out(0).meta.height === 32 && out(0).meta.durationMs === 250L)
-    assert(out(0).bytes.toSeq === avi.toSeq, "payload must be untouched")
-    assert(out(1).meta.width === 640 && out(1).meta.durationMs === 2500L,
-      "failed probe must not clobber declared metadata")
-    assert(out(2).meta.durationMs === 3500L, "non-video kinds pass through")
-  }
-
-  test("binaryFiles source: glob filter, size guard, metadata-only prunes content") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bin").toFile
-    try {
-      java.nio.file.Files.write(new java.io.File(dir, "a.img").toPath,
-        Array.fill[Byte](100)(1))
-      java.nio.file.Files.write(new java.io.File(dir, "b.img").toPath,
-        Array.fill[Byte](5000)(2))
-      java.nio.file.Files.write(new java.io.File(dir, "c.txt").toPath,
-        Array.fill[Byte](10)(3))
-      val all = graft.sources.Readers.binaryFiles(spark, dir.getAbsolutePath,
-        glob = Some("*.img"))
-      assert(all.count() === 2, "glob must exclude c.txt")
-      val guarded = graft.sources.Readers.binaryFiles(spark, dir.getAbsolutePath,
-        glob = Some("*.img"), maxBytes = 1000)
-      val rows = guarded.select("length", "content").collect()
-      assert(rows.length === 1 && rows.head.getAs[Array[Byte]]("content").length === 100)
-      // metadata-only projection prunes the payload from the read schema
-      val metaPlan = all.select("path", "length")
-        .queryExecution.executedPlan.toString
-      assert(!metaPlan.contains("content"),
-        s"metadata projection must not read payloads:\n$metaPlan")
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
-  }
 }

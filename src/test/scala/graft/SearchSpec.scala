@@ -294,22 +294,6 @@ class SearchSpec extends SparkSpecBase {
       .queryExecution.executedPlan.toString.contains("Exchange"))
   }
 
-  test("fileManifest: per-file row counts over a multi-file layout") {
-    import graft.operators.StatsOp
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest").toFile
-    try {
-      spark.range(100).repartition(4)
-        .write.mode("overwrite").parquet(dir.getAbsolutePath)
-      val manifest = StatsOp.fileManifest(spark.read.parquet(dir.getAbsolutePath))
-        .as[(String, Long)].collect()
-      assert(manifest.length === 4)
-      assert(manifest.map(_._2).sum === 100L)
-      assert(manifest.forall(_._1.endsWith(".parquet")))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir)
-    }
-  }
-
   test("keyHistogram: ranks by count desc with exact shares") {
     val df = (Seq.fill(6)("a") ++ Seq.fill(3)("b") ++ Seq.fill(1)("c"))
       .toDF("k")

@@ -326,8 +326,8 @@ class SimilaritySpec extends SparkSpecBase {
     // only); serve parity with a physically-rebuilt reference, and the
     // pre-retire version still serves
     val preFiles = Snapshot.readManifest(table, 2).files.map(_.path).toSet
-    val st = Similarity.ivfIndexRetire(spark, table,
-      corpus.filter(col("vec_id") > 80).select("vec_id"), col("vec_id"))
+    val st = Snapshot.deleteMorKeys(spark, table,
+      corpus.filter(col("vec_id") > 80).select(col("vec_id").as("id")))
     assert(st.filesWritten == 0)
     assert(Snapshot.readManifest(table, st.version).files.map(_.path).toSet
       == preFiles, "retirement must not add or rewrite a single file")

@@ -310,29 +310,20 @@ class SnapshotMorSpec extends SparkSpecBase {
     assert(c3 == 0 && Snapshot.tags(t).isEmpty)
   }
 
-  test("erasureSink: streamed key batches become MoR commits — zero rewrites, replay is visible-state idempotent") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  test("deleteMorKeys: each key batch is one MoR commit — zero rewrites, replay is visible-state idempotent") {
     val t = build("erasure")
-    val cp = fresh("erasure_cp")
     val before = dataFileDigest(t)
-    val stream = MemoryStream[Long]
-    val q = graft.streaming.StreamingIngest.erasureSink(
-      stream.toDF().toDF("id"), t, cp)
-    stream.addData(3L, 17L)
-    q.processAllAvailable()
-    stream.addData(24L, 999L) // 999 absent
-    q.processAllAvailable(); q.stop()
+    Snapshot.deleteMorKeys(spark, t, Seq(3L, 17L).toDF("id"))
+    Snapshot.deleteMorKeys(spark, t, Seq(24L, 999L).toDF("id")) // 999 absent
     assert(Snapshot.currentVersion(t) == 3, "one commit per key batch")
     assert(dataFileDigest(t) == before, "erasure rewrites nothing")
-    assert(rowsOf(Snapshot.readLatest(spark, t)) ==
-      rowsOf(seedDf.filter(!col("id").isin(3L, 17L, 24L))))
-    // replay: re-applying batch 2's keys commits a superset-identical
+    val erased = rowsOf(seedDf.filter(!col("id").isin(3L, 17L, 24L)))
+    assert(rowsOf(Snapshot.readLatest(spark, t)) == erased)
+    // replay: re-applying the second batch commits a superset-identical
     // vector — visible state unchanged (positions only accumulate)
-    graft.streaming.StreamingIngest.applyErasureBatch(
-      Seq(24L, 999L).toDF("id"), t)
-    assert(rowsOf(Snapshot.readLatest(spark, t)) ==
-      rowsOf(seedDf.filter(!col("id").isin(3L, 17L, 24L))))
+    Snapshot.deleteMorKeys(spark, t, Seq(24L, 999L).toDF("id"))
+    assert(dataFileDigest(t) == before, "the replay rewrites nothing")
+    assert(rowsOf(Snapshot.readLatest(spark, t)) == erased)
     assert(Snapshot.fsck(spark, t).isEmpty)
   }
 

@@ -665,69 +665,20 @@ class SnapshotSpec extends SparkSpecBase {
     assert(compacted.count() == latest.count())
   }
 
-  test("cdcSnapshotSink: each micro-batch is one atomic commit; history audit-readable; replay converges") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val t = fresh("cdc")
-    val cp = fresh("cdc_cp")
-    val stream = MemoryStream[(Long, String, String, Long, Boolean)]
-    val q = graft.streaming.StreamingIngest.cdcSnapshotSink(
-      stream.toDF().toDF("id", "payload", "part", "seq", "__deleted"),
-      t, cp, key = "id", partitionCol = "part", seqCol = "seq",
-      statsCols = Seq("id"))
-    // batch 0 bootstraps v1
-    stream.addData((1L, "a", "p1", 1L, false), (2L, "b", "p1", 2L, false),
-      (3L, "c", "p2", 3L, false))
-    q.processAllAvailable()
-    // batch 1: update id 2 (seq order within batch), delete id 3
-    stream.addData((2L, "b-old", "p1", 10L, false),
-      (2L, "b-new", "p1", 11L, false), (3L, null, "p2", 12L, true))
-    q.processAllAvailable()
-    // batch 2: insert id 4
-    stream.addData((4L, "d", "p2", 20L, false))
-    q.processAllAvailable(); q.stop()
-
-    assert(Snapshot.currentVersion(t) == 3, "one version per micro-batch")
-    def rows(v: Int) = Snapshot.readAt(spark, t, v)
-      .select("id", "payload", "part").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    assert(rows(1) == Set((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p2")))
-    assert(rows(2) == Set((1L, "a", "p1"), (2L, "b-new", "p1")))
-    assert(rows(3) == Set((1L, "a", "p1"), (2L, "b-new", "p1"), (4L, "d", "p2")))
-
-    // at-least-once replay of the last batch: converges (one more
-    // version, content identical)
-    graft.streaming.StreamingIngest.applyCdcSnapshotBatch(
-      Seq((4L, "d", "p2", 20L, false)).toDF("id", "payload", "part", "seq", "__deleted"),
-      t, "id", "part", "seq", "__deleted", Seq("id"))
-    assert(rows(Snapshot.currentVersion(t)) == rows(3),
-      "replayed batch must commit a content-identical version")
-
-    // a bad batch is one rollback away — the audit-trail payoff
-    Snapshot.rollback(spark, t, 2)
-    assert(rows(Snapshot.currentVersion(t)) == rows(2))
-  }
-
-  test("cdcSnapshotSink audit: a poison batch fails while staged; the table keeps its last good version") {
+  test("wapMerge audit: a poison delete batch fails while staged; the table keeps its last good version") {
     val t = fresh("cdcwap")
-    def apply(batch: Seq[(Long, String, String, Long, Boolean)]): Unit =
-      graft.streaming.StreamingIngest.applyCdcSnapshotBatch(
-        batch.toDF("id", "payload", "part", "seq", "__deleted"),
-        t, "id", "part", "seq", "__deleted", Seq("id"),
-        audit = Seq("row_count:2-1000000"))
-    // bootstrap (create path is not audited — the floor gates merges)
-    apply(Seq((1L, "a", "p1", 1L, false), (2L, "b", "p1", 2L, false),
-      (3L, "c", "p2", 3L, false)))
-    assert(Snapshot.currentVersion(t) == 1)
+    val audit = Seq("row_count:2-1000000")
+    def rows(rs: (Long, String, String)*) = rs.toDF("id", "payload", "part")
+    def keys(ks: Long*) = ks.toDF("id")
+    Snapshot.create(spark, t, rows((1L, "a", "p1"), (2L, "b", "p1"),
+      (3L, "c", "p2")), "id", "part", statsCols = Seq("id"))
     // healthy batch publishes
-    apply(Seq((4L, "d", "p2", 10L, false)))
+    Snapshot.wapMerge(spark, t, rows((4L, "d", "p2")), keys(), audit)
     assert(Snapshot.currentVersion(t) == 2)
     // poison batch: a delete storm leaving 1 < 2 rows — the post-state
-    // audit rejects while staged, the batch THROWS (streaming would
-    // fail the query), and the table keeps v2
+    // audit rejects while staged, the merge THROWS, and the table keeps v2
     val e = intercept[Snapshot.ExpectationViolationException] {
-      apply(Seq((1L, null, "p1", 20L, true), (2L, null, "p1", 21L, true),
-        (4L, null, "p2", 22L, true)))
+      Snapshot.wapMerge(spark, t, rows(), keys(1L, 2L, 4L), audit)
     }
     assert(e.getMessage.contains("row_count_between(2,1000000)"))
     assert(Snapshot.currentVersion(t) == 2, "no torn version from the poison batch")
@@ -1531,12 +1482,23 @@ class FaultyLogStore extends LogStore {
   override def mkdirs(p: String) = h.mkdirs(p)
   override def createNew(p: String) = h.createNew(p)
   override def delete(p: String) = h.delete(p)
-  override def deleteTree(p: String) = h.deleteTree(p)
-  override def rename(s: String, d: String) = h.rename(s, d)
+  override def deleteTree(p: String) = {
+    FaultyLogStore.mutating(s"deleteTree $p"); h.deleteTree(p)
+  }
+  override def rename(s: String, d: String) = {
+    FaultyLogStore.mutating(s"rename $s"); h.rename(s, d)
+  }
   override def modifiedTime(p: String) = h.modifiedTime(p)
   override def size(p: String) = h.size(p)
 }
 object FaultyLogStore {
   @volatile var failing: String = ""
   @volatile var lostAck: Boolean = false
+  /** Every deleteTree and rename call takes the next number of
+    * `mutations`; the one numbered `failMutation` throws instead. */
+  @volatile var failMutation: Int = -1
+  val mutations = new java.util.concurrent.atomic.AtomicInteger()
+  def mutating(what: String): Unit =
+    if (mutations.getAndIncrement() == failMutation)
+      throw new java.io.IOException(s"injected: $what")
 }

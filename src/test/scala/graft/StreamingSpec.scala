@@ -1,427 +1,10 @@
 package graft
 
-import graft.meta.ValidationRule
-import graft.operators.Validate
-import graft.streaming.StreamingIngest
-import graft.streaming.StreamingIngest.{SessionEvent, SessionOut}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.sql.Timestamp
 
 class StreamingSpec extends SparkSpecBase {
   import spark.implicits._
-
-  test("validated stream output == batch Validate.tagged (same Column tree)") {
-    implicit val sq = spark.sqlContext
-    val rules = Seq(ValidationRule("name", Seq("notEmpty")),
-      ValidationRule("age", Seq("min:18")))
-    val rows = Seq(("a", 20), ("", 30), ("c", 5))
-    val stream = MemoryStream[(String, Int)]
-    stream.addData(rows: _*)
-    val q = StreamingIngest.validated(stream.toDF().toDF("name", "age"), rules)
-      .writeStream.format("memory").queryName("validated_out").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("validated_out")
-      .select("name", "age", Validate.ErrorsCol, Validate.ValidCol)
-      .as[(String, Int, Seq[String], Boolean)].collect().toSet
-    val batch = Validate.tagged(rows.toDF("name", "age"), rules)
-      .as[(String, Int, Seq[String], Boolean)].collect().toSet
-    assert(streamed === batch)
-  }
-
-  test("streaming exact dedup drops re-delivered content, keeps first-seen") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(Timestamp, Long, String)]
-    stream.addData(
-      (Timestamp.valueOf("2026-01-01 10:00:00"), 1L, "doc one text"),
-      (Timestamp.valueOf("2026-01-01 10:01:00"), 2L, "doc two text"),
-      (Timestamp.valueOf("2026-01-01 10:02:00"), 3L, "doc one text"), // re-delivery
-      (Timestamp.valueOf("2026-01-01 10:03:00"), 4L, "doc three text"))
-    val q = StreamingIngest.dedupStream(
-        stream.toDF().toDF("ts", "doc_id", "text"), "text", "ts")
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("dedup_out").select("doc_id").as[Long].collect().toSet
-    assert(out === Set(1L, 2L, 4L), s"got $out")
-  }
-
-  test("stream-static enrichment joins each batch against a broadcast dim") {
-    implicit val sq = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
-    val stream = MemoryStream[(Long, Double)]
-    stream.addData((1L, 10.0), (2L, 20.0), (9L, 30.0)) // 9 has no dim row
-    val q = StreamingIngest.enrichStream(
-        stream.toDF().toDF("user_id", "value"), broadcast(dim), Seq("user_id"))
-      .writeStream.format("memory").queryName("enriched_out").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("enriched_out")
-      .select("user_id", "value", "tier")
-      .as[(Long, Double, Option[String])].collect().toSet
-    // left join: unmatched rows pass through with null tier
-    assert(out === Set((1L, 10.0, Some("gold")), (2L, 20.0, Some("silver")),
-      (9L, 30.0, None)))
-  }
-
-  test("streaming decontamination drops benchmark matches incl. paraphrases") {
-    implicit val sq = spark.sqlContext
-    val bench = Seq("the quick brown fox").toDF("text")
-    val stream = MemoryStream[(Long, String)]
-    stream.addData(
-      (1L, "the quick brown fox"),   // exact benchmark copy
-      (2L, "fox brown quick the"),   // token permutation — same fingerprint
-      (3L, "completely different text"))
-    val q = StreamingIngest.decontaminateStream(
-        stream.toDF().toDF("doc_id", "text"), "text", bench, "text")
-      .writeStream.format("memory").queryName("decon_out").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    assert(spark.table("decon_out").select("doc_id").as[Long].collect().toSet
-      === Set(3L))
-  }
-
-  test("stream-stream interval join pairs events within the time bound") {
-    implicit val sq = spark.sqlContext
-    def ts(min: Int) = new Timestamp(3600_000L + min * 60_000L)
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val views = MemoryStream[(Long, Timestamp)]
-    clicks.addData((1L, ts(0)), (2L, ts(0)), (3L, ts(0)))
-    views.addData(
-      (1L, ts(5)),    // within 10 min → joins
-      (2L, ts(40)),   // outside the bound → dropped
-      (9L, ts(1)))    // no matching click key
-    val out = StreamingIngest.joinStreams(
-        clicks.toDF().toDF("user_id", "click_ts"),
-        views.toDF().toDF("user_id", "view_ts"),
-        key = "user_id", leftTs = "click_ts", rightTs = "view_ts")
-      .writeStream.format("memory").queryName("ss_join_out").outputMode("append").start()
-    out.processAllAvailable(); out.stop()
-    val rows = spark.table("ss_join_out").collect()
-    assert(rows.length === 1, s"expected exactly the in-window pair, got ${rows.toSeq}")
-    assert(rows.head.getLong(0) === 1L)
-  }
-
-  test("watermarked windowed counts aggregate by hour") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(Timestamp, String, Double)]
-    stream.addData(
-      (Timestamp.valueOf("2026-01-01 10:05:00"), "click", 1.0),
-      (Timestamp.valueOf("2026-01-01 10:55:00"), "click", 2.0),
-      (Timestamp.valueOf("2026-01-01 11:05:00"), "view", 5.0))
-    val q = StreamingIngest.windowedCounts(
-        stream.toDF().toDF("ts", "event_type", "value"))
-      .writeStream.format("memory").queryName("win_out").outputMode("append").start()
-    stream.addData((Timestamp.valueOf("2026-01-01 13:00:00"), "late-trigger", 0.0))
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("win_out")
-      .select(col("window.start").cast("string"), col("event_type"), col("n"), col("sum_value"))
-      .as[(String, String, Long, Double)].collect().toSet
-    assert(out.contains(("2026-01-01 10:00:00", "click", 2L, 3.0)))
-    assert(out.contains(("2026-01-01 11:00:00", "view", 1L, 5.0)))
-  }
-
-  test("native session_window: gap-merged sessions emit once the watermark passes") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(Long, Timestamp)]
-    // user 1: two events 5 min apart (one session), then 40 min idle
-    // -> second session; user 2: one event
-    stream.addData(
-      (1L, Timestamp.valueOf("2026-01-01 10:00:00")),
-      (1L, Timestamp.valueOf("2026-01-01 10:05:00")),
-      (1L, Timestamp.valueOf("2026-01-01 10:45:00")),
-      (2L, Timestamp.valueOf("2026-01-01 10:10:00")))
-    val q = StreamingIngest.sessionWindowCounts(
-        stream.toDF().toDF("user_id", "ts"), gap = "30 minutes")
-      .writeStream.format("memory").queryName("sw_out").outputMode("append").start()
-    // advance the watermark far past every session end
-    stream.addData((99L, Timestamp.valueOf("2026-01-01 14:00:00")))
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("sw_out")
-      .select(col("user_id"), col("sess_start").cast("string"),
-        col("sess_end").cast("string"), col("sess_events"))
-      .as[(Long, String, String, Long)].collect().toSet
-    // session end = last event + gap
-    assert(out.contains((1L, "2026-01-01 10:00:00", "2026-01-01 10:35:00", 2L)))
-    assert(out.contains((1L, "2026-01-01 10:45:00", "2026-01-01 11:15:00", 1L)))
-    assert(out.contains((2L, "2026-01-01 10:10:00", "2026-01-01 10:40:00", 1L)))
-  }
-
-  test("flatMapGroupsWithState sessionizer closes sessions on gap") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[SessionEvent]
-    // user 7: events at t=0s,10s then a new session at t=100s (gap 30s)
-    stream.addData(SessionEvent(7L, 0L), SessionEvent(7L, 10000L), SessionEvent(7L, 100000L))
-    val q = StreamingIngest.sessionize(stream.toDS(), gapMs = 30000L,
-        timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    q.processAllAvailable()
-    val closed = spark.table("sess_out").as[SessionOut].collect().toSeq
-    q.stop()
-    assert(closed === Seq(SessionOut(7L, 0L, 10000L, 2L))) // first session closed by gap
-  }
-
-  test("jsonStream: file-source stream with explicit schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonstream").toString
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/batch1.json"),
-      """{"name":"a","age":20}
-        |{"name":"","age":30}""".stripMargin)
-    val q = StreamingIngest.jsonStream(spark, dir, "name STRING, age INT")
-      .writeStream.format("memory").queryName("js_out").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table("js_out").as[(String, Int)].collect().toSet
-    assert(rows === Set(("a", 20), ("", 30)))
-  }
-
-  test("ok/ko writer lands one partitioned parquet per validity") {
-    implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val rules = Seq(ValidationRule("name", Seq("notEmpty")))
-    val stream = MemoryStream[(String, Int)]
-    stream.addData(("a", 1), ("", 2))
-    val q = StreamingIngest.okKoWriter(stream.toDF().toDF("name", "age"), rules,
-      s"$dir/out", s"$dir/ckpt").start()
-    q.processAllAvailable(); q.stop()
-    val written = spark.read.parquet(s"$dir/out")
-    assert(written.filter(col(Validate.ValidCol) === true).count() === 1)
-    assert(written.filter(col(Validate.ValidCol) === false).count() === 1)
-  }
-
-  test("cms heavy-hitters sink: persisted sketches union to eps*N-exact top-k") {
-    implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms_hh").toString
-    val stream = MemoryStream[Long]
-    // three micro-batches, zipf-ish: five hot keys + a long unique tail
-    def batchData(b: Int): Seq[Long] =
-      (1 to 300).map(_ => 1L) ++ (1 to 150).map(_ => 2L) ++
-        (1 to 80).map(_ => 3L) ++ (1 to 40).map(_ => 4L) ++
-        (1 to 20).map(_ => 5L) ++
-        (1 to 200).map(i => 1000L + b * 1000 + i)
-    val q = StreamingIngest.cmsHeavyHittersSink(stream.toDF().toDF("k"),
-      "k", s"$dir/out", s"$dir/ckpt", candidatesPerBatch = 16,
-      depth = 5, width = 1024)
-    (1 to 3).foreach { b => stream.addData(batchData(b): _*); q.processAllAvailable() }
-    q.stop()
-
-    // the log holds per-batch sketch rows + bounded candidate sets,
-    // not events: that IS the state the 100 TB path persists
-    assert(spark.read.parquet(s"$dir/out/sketches").count() >= 3)
-    assert(spark.read.parquet(s"$dir/out/candidates")
-      .groupBy("batch_id").count().agg(max("count")).first().getLong(0) <= 16)
-
-    val top = StreamingIngest.cmsTopHotKeys(spark, s"$dir/out", 5)
-      .as[(Long, Long)].collect()
-    val all = (1 to 3).flatMap(batchData)
-    val exact = all.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val epsN = math.ceil(math.E / 1024 * all.size).toLong
-    assert(top.map(_._1).toSet === Set(1L, 2L, 3L, 4L, 5L),
-      s"hot keys must rank above the tail, got ${top.toSeq}")
-    top.foreach { case (key, est) =>
-      val ex = exact(key)
-      assert(est >= ex, s"CMS must never underestimate: key $key est $est < $ex")
-      assert(est <= ex + epsN, s"key $key: est $est exceeds exact $ex + epsN $epsN")
-    }
-  }
-
-  test("CMS sink survives an EMPTY first batch (rate streams start with one)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms_empty").toString
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[Long]
-    // negative keys are filtered out, so a batch of them reaches the
-    // sink as ZERO rows — the shape a rate stream's batch 0 has
-    val q = StreamingIngest.cmsHeavyHittersSink(
-      stream.toDF().toDF("k").filter(col("k") >= 0),
-      "k", s"$dir/out", s"$dir/ckpt", candidatesPerBatch = 4,
-      depth = 5, width = 1024)
-    // batch 0 EMPTY: writes a zero-row heap — the regression was an
-    // unguarded max(batch_id).getLong over it killing batch 1
-    stream.addData(-1L, -2L)
-    q.processAllAvailable()
-    stream.addData((1 to 20).map(_ => 7L) ++ (1 to 3).map(_ => 8L): _*)
-    q.processAllAvailable()
-    stream.addData((1 to 5).map(_ => 7L): _*)
-    q.processAllAvailable()
-    assert(q.exception.isEmpty, s"sink died: ${q.exception}")
-    q.stop()
-    val top = StreamingIngest.cmsTopHotKeys(spark, s"$dir/out", 1)
-      .as[(Long, Long)].collect()
-    assert(top.map(_._1).toSeq === Seq(7L))
-    assert(top.head._2 >= 25L)
-  }
-
-  test("CMS sink cumulative heap finds a key hot overall but never per-batch top-m") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms_adv").toString
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[Long]
-    // adversary vs candidatesPerBatch = 2: every batch has two FRESH
-    // decoys × 10 that outrank key 9 × 9 locally, so 9 is NEVER a
-    // per-batch top-2 candidate — but its 27 total beats every decoy's
-    // 10. The per-batch candidate log alone cannot surface it; the
-    // cumulative heap rescores it each batch at its growing cumulative
-    // estimate and must rank it first overall.
-    def batchData(b: Int): Seq[Long] =
-      (1 to 10).map(_ => 100L + b * 10) ++ (1 to 10).map(_ => 100L + b * 10 + 1) ++
-        (1 to 9).map(_ => 9L)
-    val q = StreamingIngest.cmsHeavyHittersSink(stream.toDF().toDF("k"),
-      "k", s"$dir/out", s"$dir/ckpt", candidatesPerBatch = 2,
-      depth = 5, width = 1024)
-    (1 to 3).foreach { b => stream.addData(batchData(b): _*); q.processAllAvailable() }
-    q.stop()
-
-    // the candidate log proves the adversary worked: key 9 never made
-    // a per-batch top-2
-    val candKeys = spark.read.parquet(s"$dir/out/candidates")
-      .select("k").as[Long].collect().toSet
-    assert(!candKeys.contains(9L),
-      s"fixture broken: 9 must never be a per-batch candidate, got $candKeys")
-
-    val top = StreamingIngest.cmsTopHotKeys(spark, s"$dir/out", 1)
-      .as[(Long, Long)].collect()
-    assert(top.map(_._1).toSeq === Seq(9L),
-      s"the cumulative heap must surface key 9 (27 total), got ${top.toSeq}")
-    assert(top.head._2 >= 27L)
-  }
-
-  test("HLL distinct sink: per-group cardinality from the sketch log, replay-idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_sink").toString
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamingIngest.hllDistinctSink(
-      stream.toDF().toDF("user_id", "event_type"),
-      "user_id", "event_type", s"$dir/out", s"$dir/ckpt", p = 12)
-    // users overlap across batches: the union must NOT double-count
-    def batchData(b: Int): Seq[(Long, String)] =
-      (1 to 400).map(i => ((i % 250).toLong, "click")) ++      // 250 distinct, every batch
-        (1 to 100).map(i => ((b * 1000 + i).toLong, "view"))   // 100 FRESH per batch
-    (1 to 3).foreach { b => stream.addData(batchData(b): _*); q.processAllAvailable() }
-    q.stop()
-
-    // the log is sketch rows (one per group per batch), never events
-    val log = spark.read.parquet(s"$dir/out/sketches")
-    assert(log.count() === 6) // 2 groups × 3 batches
-    val got = StreamingIngest.hllDistinctByGroup(spark, s"$dir/out")
-      .as[(String, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(got("click")._2 === 1200L) // exact row counts ride along
-    assert(got("view")._2 === 300L)
-    // HLL p=12 → ~1.6% relative error envelope; assert within 5%
-    assert(math.abs(got("click")._1 - 250L) <= 13, s"click est ${got("click")._1}")
-    assert(math.abs(got("view")._1 - 300L) <= 15, s"view est ${got("view")._1}")
-
-    // at-least-once replay: duplicating a batch's sketch rows changes
-    // nothing — readers dedup on (g, batch_id) before the union
-    val dup = log.filter(col("batch_id") === 1)
-    dup.write.mode("append").parquet(s"$dir/out/sketches")
-    val replayed = StreamingIngest.hllDistinctByGroup(spark, s"$dir/out")
-      .as[(String, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(replayed === got, "replayed sketch rows must be invisible")
-  }
-
-  test("near-dup dedup sink: cross-batch + within-batch drops, pairwise-free corpus, replay idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardedup").toString
-    implicit val sq = spark.sqlContext
-    // 40-word base text; the near-dup variants change one word
-    // (true 3-shingle Jaccard ≈ 0.86 — comfortably above the 0.7
-    // threshold, and banding at 16 bands × 2 rows makes the candidate
-    // miss probability negligible)
-    val base = (1 to 40).map(i => s"w$i").mkString(" ")
-    def variant(slot: Int, tag: String): String =
-      (1 to 40).map(i => if (i == slot) tag else s"w$i").mkString(" ")
-    val distinct1 = (1 to 40).map(i => s"x$i").mkString(" ")
-    val distinct2 = (1 to 40).map(i => s"y$i").mkString(" ")
-
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamingIngest.nearDedupSink(
-      stream.toDF().toDF("doc_id", "text"),
-      "text", "doc_id", s"$dir/out", s"$dir/ckpt")
-    // batch 0: 1=base, 2=near-dup of 1 (within-batch drop, 2 > 1),
-    //          3=distinct
-    stream.addData((1L, base), (2L, variant(40, "changed")), (3L, distinct1))
-    q.processAllAvailable()
-    // batch 1: 4=near-dup of the ADMITTED 1 (cross-batch drop),
-    //          5=distinct, 6=shingle-less (< 3 tokens — admitted as-is)
-    stream.addData((4L, variant(1, "other")), (5L, distinct2), (6L, "ab"))
-    q.processAllAvailable(); q.stop()
-
-    def corpusIds(): Set[Long] =
-      StreamingIngest.nearDedupCorpus(spark, s"$dir/out", "doc_id")
-        .select("doc_id").as[Long].collect().toSet
-    assert(corpusIds() === Set(1L, 3L, 5L, 6L))
-
-    // the admitted corpus is pairwise near-dup-free under the SAME
-    // detector (the batch operator)
-    val corpus = StreamingIngest.nearDedupCorpus(spark, s"$dir/out", "doc_id")
-    val pairs = graft.operators.Dedup.minhashLsh(
-      corpus, col("text"), col("doc_id"),
-      k = 3, numHashes = 32, bands = 16, threshold = 0.7)
-    assert(pairs.count() === 0L, "admitted corpus must be pairwise near-dup-free")
-
-    // state is store-sized: sigs hold one row per admitted SHINGLED doc
-    val sigRows = spark.read.parquet(s"$dir/out/store/sigs")
-    assert(sigRows.count() === 3L) // docs 1, 3, 5 (6 has no shingles)
-
-    // at-least-once replay of batch 1: the batch_id guard makes the
-    // recompute identical, and the reader collapses the duplicate rows
-    StreamingIngest.applyNearDedupBatch(
-      Seq((4L, variant(1, "other")), (5L, distinct2), (6L, "ab"))
-        .toDF("doc_id", "text"),
-      1L, "text", "doc_id", s"$dir/out", 3, 32, 16, 0.7)
-    assert(corpusIds() === Set(1L, 3L, 5L, 6L),
-      "replaying a micro-batch must not change the visible corpus")
-  }
-
-  test("clusterLabelsSink: online labels grow per batch, bridge across batches, replay idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_clabels").toString
-    implicit val sq = spark.sqlContext
-    val base = (1 to 40).map(i => s"w$i").mkString(" ")
-    def variant(slot: Int, tag: String): String =
-      (1 to 40).map(i => if (i == slot) tag else s"w$i").mkString(" ")
-    val distinct1 = (1 to 40).map(i => s"x$i").mkString(" ")
-
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamingIngest.clusterLabelsSink(
-      stream.toDF().toDF("doc_id", "text"),
-      "text", "doc_id", s"$dir/out", s"$dir/ckpt")
-    // batch 0: 1≈2 within-batch pair; 3 distinct (unlabeled)
-    stream.addData((1L, base), (2L, variant(40, "changed")), (3L, distinct1))
-    q.processAllAvailable()
-    def labels(): Map[Long, Long] =
-      StreamingIngest.clusterLabels(spark, s"$dir/out")
-        .as[(Long, Long)].collect().toMap
-    assert(labels() === Map(1L -> 1L, 2L -> 1L))
-    // batch 1: 4 ≈ the stored 1 (cross-batch edge joins the component)
-    stream.addData((4L, variant(1, "other")))
-    q.processAllAvailable(); q.stop()
-    assert(labels() === Map(1L -> 1L, 2L -> 1L, 4L -> 1L))
-    // matches the batch operator over the union corpus
-    val all = Seq((1L, base), (2L, variant(40, "changed")),
-      (3L, distinct1), (4L, variant(1, "other"))).toDF("doc_id", "text")
-    val oneShot = graft.operators.Dedup.nearDupClusters(
-        all, col("text"), col("doc_id"), threshold = 0.7)
-      .as[(Long, Long)].collect().toMap
-    assert(labels() === oneShot, "online labels must equal the batch recompute")
-    // at-least-once replay of batch 1: labels content-identical
-    StreamingIngest.applyClusterLabelsBatch(
-      Seq((4L, variant(1, "other"))).toDF("doc_id", "text"),
-      1L, "text", "doc_id", s"$dir/out", 3, 32, 16, 0.7)
-    assert(labels() === oneShot, "replayed batch must rewrite identical labels")
-    // retainLast=1 would leave a tip replay with no predecessor dir
-    // to fold from (it would rebuild from the batch delta alone and
-    // drop every earlier component) — rejected outright
-    intercept[IllegalArgumentException] {
-      StreamingIngest.clusterLabelsVacuum(s"$dir/out", retainLast = 1)
-    }
-    // a third batch supersedes b0; vacuum (default retainLast=2)
-    // drops it while keeping the tip AND its replay predecessor
-    StreamingIngest.applyClusterLabelsBatch(
-      Seq((5L, variant(2, "third"))).toDF("doc_id", "text"),
-      2L, "text", "doc_id", s"$dir/out", 3, 32, 16, 0.7)
-    assert(StreamingIngest.clusterLabelsVacuum(s"$dir/out") === 1)
-    assert(labels() === oneShot + (5L -> 1L), "the tip must survive the vacuum")
-    // and the tip batch is still replayable post-vacuum (the window
-    // the retainLast >= 2 floor exists to preserve)
-    StreamingIngest.applyClusterLabelsBatch(
-      Seq((5L, variant(2, "third"))).toDF("doc_id", "text"),
-      2L, "text", "doc_id", s"$dir/out", 3, 32, 16, 0.7)
-    assert(labels() === oneShot + (5L -> 1L),
-      "tip replay after vacuum must rewrite identical labels")
-  }
 
   test("writeStream.format(graft): each micro-batch is one transactional merge commit; replay converges") {
     import graft.operators.Snapshot
@@ -488,12 +71,13 @@ class StreamingSpec extends SparkSpecBase {
       deleteKeys = spark.range(0, 20).select(col("id")))
 
     val seenVersions = scala.collection.mutable.ArrayBuffer.empty[Int]
+    // versions already folded into the view: a replayed one is skipped
+    val applied = scala.collection.mutable.Set.empty[Int]
     def runStream(): Unit = {
       val q = spark.readStream.format("graft").load(table)
         .writeStream.option("checkpointLocation", ck)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // one micro-batch may span several versions — apply each in
-          // order, exactly like the follower (ledger keyed on version)
+          // one micro-batch may span several versions — apply each in order
           val cached = batch.cache()
           try {
             val vs = cached.select("_version").distinct()
@@ -508,8 +92,9 @@ class StreamingSpec extends SparkSpecBase {
               if (!new java.io.File(agg).exists())
                 IncrementalAgg.build(added.limit(0), Seq("part"), Seq("score"))
                   .write.parquet(agg)
-              IncrementalAgg.maintainBatch(spark, agg, v.toLong,
-                Seq("part"), Seq("score"), removed, added)
+              if (applied.add(v))
+                IncrementalAgg.maintain(spark, agg, Seq("part"), Seq("score"),
+                  removed, added)
             }
           } finally cached.unpersist()
           ()
@@ -678,80 +263,6 @@ class StreamingSpec extends SparkSpecBase {
       assert(gross <= budget,
         s"multi-version batch $vs grosses $gross rows > budget $budget")
     }
-  }
-
-  test("incrementalViewSink follows the snapshot commit log: view == one-shot recompute across merge/DML/compact/rollback; re-delivery is a no-op") {
-    import graft.operators.{IncrementalAgg, Snapshot}
-    val dir = java.nio.file.Files.createTempDirectory("graft_follow").toString
-    val (table, ck, agg) = (s"$dir/tbl", s"$dir/ck", s"$dir/agg")
-
-    val seed = spark.range(0, 400).select(col("id"),
-      (col("id") % 7).as("score"), (col("id") % 4).cast("string").as("part"),
-      concat(lit("n"), col("id")).as("note"))
-    Snapshot.create(spark, table, seed, "id", "part", fileRanges = 4)
-    Snapshot.merge(spark, table,
-      upserts = spark.range(380, 420).select(col("id"),
-        (col("id") * 2).as("score"), (col("id") % 4).cast("string").as("part"),
-        concat(lit("n"), col("id")).as("note")),
-      deleteKeys = spark.range(0, 20).select(col("id")))
-
-    def runFollow(): Unit = {
-      val q = StreamingIngest.incrementalViewSink(
-        spark, table, ck, agg, Seq("part"), Seq("score")).start()
-      q.processAllAvailable()
-      assert(q.exception.isEmpty, s"follower died: ${q.exception}")
-      q.stop()
-    }
-    def viewRows: Set[(String, Long, String)] =
-      spark.read.parquet(agg).collect()
-        .map(r => (r.getString(r.fieldIndex("part")),
-          r.getLong(r.fieldIndex("n")),
-          r.getDecimal(r.fieldIndex("sum_score")).toPlainString)).toSet
-    def expect: Set[(String, Long, String)] =
-      IncrementalAgg.build(Snapshot.readLatest(spark, table),
-        Seq("part"), Seq("score")).collect()
-        .map(r => (r.getString(0), r.getLong(1),
-          r.getDecimal(2).toPlainString)).toSet
-
-    runFollow() // v1 (create) + v2 (merge) consumed in order
-    assert(viewRows == expect)
-
-    // more commits of every flavor land while the follower is down
-    Snapshot.deleteWhere(spark, table, Seq(("id", 100, 149)))
-    Snapshot.updateWhere(spark, table, Seq(("id", 200, 259)),
-      Map("score" -> (col("score") + 1000)))
-    Snapshot.compact(spark, table, maxFilesPerPartition = 1) // net-zero, skipped by op
-    runFollow() // same checkpoint: only the new versions replay
-    assert(viewRows == expect)
-
-    // rollback is just another commit: the view follows BACK
-    Snapshot.rollback(spark, table, 2)
-    runFollow()
-    assert(viewRows == expect)
-
-    // NON-ADDITIVE evolution of a column the view does not use: the
-    // rename commit is metadata-only (empty change set — a no-op
-    // version for the follower) and the next merge flows through the
-    // column mapping; the view must keep tracking the recompute
-    Snapshot.renameColumn(spark, table, "note", "comment")
-    Snapshot.merge(spark, table,
-      upserts = spark.range(500, 520).select(col("id"),
-        (col("id") % 5).as("score"), (col("id") % 4).cast("string").as("part"),
-        concat(lit("c"), col("id")).as("comment")),
-      deleteKeys = spark.range(30, 40).select(col("id")))
-    runFollow()
-    assert(viewRows == expect,
-      "view must follow across an evolution commit + post-rename merge")
-
-    // checkpoint loss: every manifest re-delivers, but maintainBatch's
-    // ledger is keyed on the VERSION — the view must not double-count
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(ck))
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-    } finally walk.close()
-    runFollow()
-    assert(viewRows == expect, "re-delivered versions must be no-ops")
   }
 
   test("change-feed schema evolution: identity alignment carries renames losslessly; add/drop/widen fail once with a restart remedy; allowAdditive and nullFill opt-outs") {

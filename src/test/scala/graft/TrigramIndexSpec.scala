@@ -70,8 +70,11 @@ class TrigramIndexSpec extends SparkSpecBase {
       .count() == (1L to 290L).count(_ % 7 == 0))
   }
 
-  test("lifecycle: trackTrigram is conservative until compact backfills, exact after; untrackTrigram stops; non-string and renamed columns refuse") {
-    val t = fresh("life")
+  test("lifecycle: trackTrigram is conservative until compact backfills, exact after; UNSET TBLPROPERTIES stops; non-string and renamed columns refuse") {
+    val root = fresh("life")
+    spark.conf.set("spark.sql.catalog.trilife", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.trilife.root", root)
+    val t = s"$root/db/docs"
     Snapshot.create(spark, t, docsDf, key = "id", partitionCol = "part")
     // not yet tracked: a ContainsPred prune refuses with the pointer
     val e0 = intercept[IllegalArgumentException] {
@@ -95,7 +98,7 @@ class TrigramIndexSpec extends SparkSpecBase {
     // history records the verbs
     val ops = Snapshot.history(t).map(_._2)
     assert(ops.exists(_.contains("track_trigram(text)")))
-    Snapshot.untrackTrigram(spark, t, "text")
+    spark.sql("ALTER TABLE trilife.db.docs UNSET TBLPROPERTIES ('trigram.text')")
     intercept[IllegalArgumentException] {
       Snapshot.prune(t, Seq(Snapshot.ContainsPred("text", "ipsum")))
     }

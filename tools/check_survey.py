@@ -18,6 +18,13 @@ prose can never drift again:
   arguments between driver runs — the last drift channel (r15 VERDICT
   ask #6).
 
+- code pointers = every backticked `pkg.Object.member` in a §2 row's
+                implementation column (also `Object.a/b` and
+                `Object.{a,b}` lists) must name an object, class or
+                trait `Object` and a def/val/object/class `member` in
+                src/main, unless the row's status says **retired**;
+                JVM names (`java.…`, `scala.…`, `org.…`) are skipped.
+
 Exit 0 iff every cross-check passes.
 """
 import json
@@ -55,6 +62,54 @@ def section2(text):
     start = text.index("## §2")
     end = text.index("## §3")
     return text[start:end]
+
+def cells(line):
+    """A table row's cells; a `|` inside backticks or escaped as `\\|`
+    does not split."""
+    out, cur, code, prev = [], [], False, ""
+    for ch in line.strip():
+        if ch == "`":
+            code = not code
+        if ch == "|" and not code and prev != "\\":
+            out.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+        prev = ch
+    out.append("".join(cur))
+    return out[1:-1]
+
+
+src = "\n".join(f.read_text() for f in (repo / "src" / "main").rglob("*.scala"))
+pointer = re.compile(r"^(?:graft\.)?((?:[a-z]\w*\.)*)([A-Z]\w*)\."
+                     r"(\w+(?:/\w+)*|\{\w+(?:,\s*\w+)*\})$")
+
+
+def defined(kinds, name):
+    return re.search(rf"\b(?:{kinds})\s+{re.escape(name)}\b", src) is not None
+
+
+stale = []
+for line in section2(text).splitlines():
+    if not re.match(r"^\| (\d+b?|[—-]) \|", line):
+        continue
+    row = cells(line)
+    if len(row) < 4 or "**retired**" in row[-1]:
+        continue
+    for span in re.findall(r"`([^`]+)`", row[2]):
+        m = pointer.match(span.strip())
+        if not m or m.group(1).split(".")[0] in ("java", "javax", "scala", "org"):
+            continue
+        missing = [] if defined("object|class|trait", m.group(2)) else [m.group(2)]
+        missing += [n for n in re.split(r"[/{},\s]+", m.group(3))
+                    if n and not defined("def|val|var|object|class", n)]
+        if missing:
+            stale.append(f"#{row[0].strip()} `{span.strip()}` ({', '.join(missing)})")
+if stale:
+    print(f"FAIL: §2 code pointers with no definition in src/main: {stale}")
+    ok = False
+else:
+    print("OK  every §2 code pointer names a definition in src/main")
 
 keys_file = repo / "tools" / "catalog_keys.txt"
 if len(sys.argv) > 1:
