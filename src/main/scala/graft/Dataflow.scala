@@ -4,6 +4,7 @@ import graft.meta._
 import graft.operators._
 import graft.sinks.Writers
 import graft.sources.Readers
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -24,7 +25,22 @@ object Dataflow {
 
   /** Compile all transformations; returns every named frame. */
   def plan(spark: SparkSession, flow: DataflowSpec,
-           inputs: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] = {
+           inputs: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] =
+    compile(spark, flow, inputs)._1
+
+  /** The frames a compute_stats report's validation sections come from,
+    * when its OK and KO inputs are a validate_fields step's outputs. */
+  private final case class Validated(rules: Seq[ValidationRule], ok: DataFrame,
+                                     ko: DataFrame, validationStats: DataFrame,
+                                     topErrors: DataFrame)
+
+  /** [[plan]], plus each compute_stats report's [[Validated]] frames by
+    * report name. */
+  private def compile(spark: SparkSession, flow: DataflowSpec,
+                      inputs: Map[String, DataFrame])
+      : (Map[String, DataFrame], Map[String, Validated]) = {
+    var splits = Vector.empty[(Seq[ValidationRule], DataFrame, DataFrame)]
+    val validated = Map.newBuilder[String, Validated]
     // the graft SQL kernels (hll_sketch/dd_sketch/… — mergeable sketch
     // aggregates in particular) must resolve inside `aggregate`/`sql`/
     // `filter` expressions of a JSON-declared flow; registration is
@@ -33,7 +49,7 @@ object Dataflow {
     val sourceFrames: Map[String, DataFrame] =
       flow.sources.map(s => s.name -> Readers.read(spark, s)).toMap
 
-    flow.transformations.foldLeft(inputs ++ sourceFrames) { (frames, t) =>
+    val frames = flow.transformations.foldLeft(inputs ++ sourceFrames) { (frames, t) =>
       def in = frames.getOrElse(t.input,
         throw new IllegalArgumentException(s"transformation '${t.name}': unknown input '${t.input}'"))
       t match {
@@ -47,6 +63,7 @@ object Dataflow {
           frames + (s.output -> Projection.addFields(in, s.fields))
         case s: ValidateSpec =>
           val (ok, ko) = Validate.split(in, s.rules)
+          splits :+= ((s.rules, ok, ko))
           frames + (s.okOutput -> ok) + (s.koOutput -> ko)
         case s: FilterSpec =>
           frames + (s.output -> in.filter(org.apache.spark.sql.functions.expr(s.condition)))
@@ -507,13 +524,16 @@ object Dataflow {
           val withField = frames + (s"${s.name}_fields" -> stats) + (s.name -> in)
           (s.okInput.flatMap(frames.get), s.koInput.flatMap(frames.get)) match {
             case (Some(ok), Some(ko)) if s.includeValidationStats =>
-              withField +
-                (s"${s.name}_validation" -> StatsOp.validationStatsFromSplit(ok, ko)) +
-                (s"${s.name}_top_errors" -> StatsOp.topErrors(ko))
+              val (vs, te) = (StatsOp.validationStatsFromSplit(ok, ko), StatsOp.topErrors(ko))
+              splits.find { case (_, o, k) => (o eq ok) && (k eq ko) }
+                .foreach { case (rules, _, _) =>
+                  validated += s.name -> Validated(rules, ok, ko, vs, te) }
+              withField + (s"${s.name}_validation" -> vs) + (s"${s.name}_top_errors" -> te)
             case _ => withField
           }
       }
     }
+    (frames, validated.result())
   }
 
   /** Union every sketch row at `path` (parquet with a binary `sketch`
@@ -540,6 +560,19 @@ object Dataflow {
    * report with an `output_path`, then every sink. Returns the frames
    * for inspection.
    *
+   * A report's validation summary and top errors ride its sinks when
+   * its OK and KO inputs are a validate_fields step's outputs, and each
+   * of the two is written by exactly one plain sink (saveMode
+   * overwrite, one path, layout none) whose path overlaps no other
+   * action's. The two sink writes observe the OK and KO row counts and
+   * each error label's failure count (`Dataset.observe`), and run side
+   * by side with the report's field-stats collect, in the report's
+   * place. The report renders the two sections from those counts: one
+   * SQL execution of its own instead of three, and the same JSON. Any
+   * other shape collects the sections as [[StatsOp.writeStatsJson]]
+   * does. If a ridden sink fails, the run throws and the report is not
+   * written. A ridden report logs one INFO line with the counts.
+   *
    * The actions run side by side in LANES ([[operators.Concurrently]]).
    * An action whose target paths overlap an earlier action's — the same
    * qualified path, or one an ancestor directory of the other — runs
@@ -549,8 +582,9 @@ object Dataflow {
    * its rows twice, an errorifexists would fail for good, a snapshot or
    * erase commit would add a version) runs after EVERY earlier lane, so
    * only once everything declared before it has succeeded, as in a
-   * serial run. The lanes it waits for still run side by side; the
-   * other lanes run at the same time.
+   * serial run — and after the sinks a report declared before it rides.
+   * The lanes it waits for still run side by side; the other lanes run
+   * at the same time.
    *
    * Failures: a failing action stops only what runs after it in its
    * lane. Every other lane runs to completion, then the failure of the
@@ -563,16 +597,23 @@ object Dataflow {
    */
   def run(spark: SparkSession, flow: DataflowSpec,
           inputs: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] = {
-    val frames = plan(spark, flow, inputs)
+    val (frames, validated) = compile(spark, flow, inputs)
+    val rides = ridden(spark, flow, frames, validated)
     val reports = flow.transformations.collect {
-      case s: ComputeStatsSpec if s.outputPath.isDefined =>
-        (Seq(s.outputPath.get), false, () =>
-          StatsOp.writeStatsJson(s.name, s.outputPath.get,
-            frames(s"${s.name}_fields"),
-            frames.get(s"${s.name}_validation"),
-            frames.get(s"${s.name}_top_errors")))
+      case s: ComputeStatsSpec if s.outputPath.isDefined => rides.get(s.name) match {
+        case Some(r) =>
+          (s.outputPath.get +: (r.ok.paths ++ r.ko.paths), false, () =>
+            writeRiding(s.name, s.outputPath.get, frames(s"${s.name}_fields"), r))
+        case None =>
+          (Seq(s.outputPath.get), false, () =>
+            StatsOp.writeStatsJson(s.name, s.outputPath.get,
+              frames(s"${s.name}_fields"),
+              frames.get(s"${s.name}_validation"),
+              frames.get(s"${s.name}_top_errors")))
+      }
     }
-    val sinks = flow.sinks.map { sink =>
+    val riddenSinks = rides.values.flatMap(r => Seq(r.ok, r.ko)).toSet
+    val sinks = flow.sinks.filterNot(riddenSinks).map { sink =>
       (sink.paths, !RerunSafeModes(sink.saveMode.toLowerCase), () => {
         val df = frames.getOrElse(sink.input,
           throw new IllegalArgumentException(s"sink '${sink.name}': unknown input '${sink.input}'"))
@@ -586,6 +627,105 @@ object Dataflow {
   /** Sink saveModes whose write a retry may repeat with the same result. */
   private val RerunSafeModes = Set("overwrite", "ignore", "merge")
 
+  /** A report whose validation sections ride the sinks writing its OK
+    * and KO frames. */
+  private final case class Ride(validated: Validated, ok: SinkSpec, ko: SinkSpec)
+
+  /** The reports whose validation sections can ride their sinks (see
+    * [[run]]), by report name. A sink carries at most one report. */
+  private def ridden(spark: SparkSession, flow: DataflowSpec,
+                     frames: Map[String, DataFrame],
+                     validated: Map[String, Validated]): Map[String, Ride] = {
+    val qualified = qualifier(spark)
+    val reports = flow.transformations.collect {
+      case s: ComputeStatsSpec if s.outputPath.isDefined => s }
+    def plain(k: SinkSpec) =
+      k.saveMode.equalsIgnoreCase("overwrite") && k.paths.size == 1 && k.layout == "none"
+    def same(name: String, df: DataFrame) = frames.get(name).exists(_ eq df)
+    def writer(input: Option[String]) = flow.sinks.filter(k => input.contains(k.input)) match {
+      case Seq(k) if plain(k) => Some(k)
+      case _ => None
+    }
+    reports.foldLeft(Map.empty[String, Ride]) { (acc, s) =>
+      val ride = for {
+        v <- validated.get(s.name)
+        if s.okInput.exists(same(_, v.ok)) && s.koInput.exists(same(_, v.ko)) &&
+          same(s"${s.name}_validation", v.validationStats) &&
+          same(s"${s.name}_top_errors", v.topErrors)
+        ok <- writer(s.okInput)
+        ko <- writer(s.koInput)
+        if !acc.values.exists(r => r.ok == ok || r.ko == ko)
+        own = Seq(ok, ko).flatMap(_.paths.flatMap(qualified))
+        others = (reports.flatMap(_.outputPath) ++
+          flow.sinks.filterNot(k => k == ok || k == ko).flatMap(_.paths)).flatMap(qualified)
+        if own.size == 2 && !overlaps(own(0), own(1)) &&
+          !own.exists(p => others.exists(overlaps(p, _)))
+      } yield Ride(v, ok, ko)
+      acc ++ ride.map(s.name -> _)
+    }
+  }
+
+  /** How long a ridden report waits for its observed counts once both
+    * sink writes returned. They arrive through the listener bus, within
+    * milliseconds; past this bound the report collects the sections. */
+  private val ObservedWait = scala.concurrent.duration.Duration(10, "s")
+
+  /** Write report `name` whose validation sections ride `r`'s sinks: the
+    * field-stats collect and both sink writes side by side, then the
+    * report from the counts the writes observed. */
+  private def writeRiding(name: String, dir: String, fieldStats: DataFrame,
+                          r: Ride): String = {
+    import org.apache.spark.sql.Observation
+    val labels = Validate.labels(r.validated.rules)
+    // unique per run: concurrent runs in one session read their own counts
+    val id = java.util.UUID.randomUUID().toString.replace("-", "")
+    val (okSeen, koSeen) = (Observation(s"graft_ok_$id"), Observation(s"graft_ko_$id"))
+    def observed(df: DataFrame, o: Observation, metrics: Seq[org.apache.spark.sql.Column]) =
+      df.observe(o, metrics.head, metrics.tail: _*)
+    val Seq(fields: StatsOp.Section, _, _) = Concurrently(Seq[() => Any](
+      () => StatsOp.collected(fieldStats),
+      () => Writers.write(observed(r.validated.ok, okSeen, StatsOp.okMetrics), r.ok),
+      () => Writers.write(observed(r.validated.ko, koSeen, StatsOp.koMetrics(labels)), r.ko)))
+    // both writes returned normally, so both observations are complete
+    // or on their way: wait for them, bounded
+    val counts = scala.util.Try(Seq(okSeen, koSeen).map(o =>
+      scala.concurrent.Await.result(o.future, ObservedWait))).toOption
+    val (validation, top) = counts match {
+      case Some(Seq(ok, ko)) =>
+        val failures = labels.zipWithIndex.map { case (label, i) =>
+          label -> (if (ko.isNullAt(i + 1)) 0L else ko.getLong(i + 1))
+        }
+        log.info(s"[dataflow] stats '$name': ok=${ok.getLong(0)} ko=${ko.getLong(0)}, " +
+          "failures " + failures.map { case (l, n) => s"$l=$n" }.mkString(", ") +
+          s" (observed on sinks '${r.ok.name}' and '${r.ko.name}')")
+        StatsOp.observedSections(r.validated.validationStats, r.validated.topErrors,
+          ok.getLong(0), ko.getLong(0), failures)
+      case _ =>
+        log.warn(s"[dataflow] stats '$name': observed counts did not arrive within " +
+          s"$ObservedWait; collecting the validation sections")
+        val Seq(v, t) = Concurrently(Seq(r.validated.validationStats, r.validated.topErrors)
+          .map(df => () => StatsOp.collected(df)))
+        (v, t)
+    }
+    StatsOp.writeSections(name, dir, fields, Some(validation), Some(top))
+  }
+
+  /** Qualify a path with Hadoop; None for a path it cannot qualify. */
+  private def qualifier(spark: SparkSession): String => Option[Path] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    p => scala.util.Try {
+      val path = new Path(p)
+      path.getFileSystem(conf).makeQualified(path)
+    }.toOption
+  }
+
+  /** The same path, or one an ancestor directory of the other. */
+  private def overlaps(a: Path, b: Path): Boolean = {
+    def within(a: Path, b: Path) =
+      Iterator.iterate(b)(_.getParent).takeWhile(_ != null).contains(a)
+    within(a, b) || within(b, a)
+  }
+
   /** Build lanes from `(target paths, after every earlier action,
     * action)` triples: an action's lane first runs, side by side, every
     * earlier lane one of its targets overlaps — every earlier lane at
@@ -594,15 +734,7 @@ object Dataflow {
     * overlaps nothing — its own write reports the error. */
   private def lanes(spark: SparkSession,
                     actions: Seq[(Seq[String], Boolean, () => Any)]): Seq[() => Any] = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    def qualified(p: String): Option[Path] = scala.util.Try {
-      val path = new Path(p)
-      path.getFileSystem(conf).makeQualified(path)
-    }.toOption
-    def within(a: Path, b: Path): Boolean =
-      Iterator.iterate(b)(_.getParent).takeWhile(_ != null).contains(a)
-    def overlaps(a: Path, b: Path): Boolean = within(a, b) || within(b, a)
+    val qualified = qualifier(spark)
     case class Lane(first: Int, targets: Seq[Path], run: () => Any)
     actions.zipWithIndex.foldLeft(Vector.empty[Lane]) {
       case (acc, ((paths, afterAll, action), i)) =>

@@ -153,10 +153,6 @@ object BloomExprs {
     hashes.forall { case (h1, h2) => b.mightContain(h1, h2) }
   }
 
-  /** One-shot convenience form of the two halves above. */
-  def mightContainSubstring(bytes: Array[Byte], needle: String): Boolean =
-    mightContainHashes(bytes, substringHashes(needle))
-
   /** The shared buffer machinery of the bloom-building aggregates —
     * ONE copy of the sizing gates and the serialization contract; the
     * concrete aggregates differ only in what they ADD per value. */
@@ -202,10 +198,11 @@ object BloomExprs {
   /** Build a filter over the CODE-POINT 3-GRAMS of string values —
     * the substring-search index: `text LIKE '%needle%'` can only
     * match inside a file whose gram filter admits EVERY 3-gram of the
-    * needle ([[mightContainSubstring]]). Same serialized shape as the
-    * value filter, so it rides every manifest path (carry-forward,
-    * compaction backfill, fsck size accounting) unchanged. Duplicate
-    * grams within a row are naturally idempotent; nulls skipped. */
+    * needle ([[substringHashes]], then [[mightContainHashes]]). Same
+    * serialized shape as the value filter, so it rides every manifest
+    * path (carry-forward, compaction backfill, fsck size accounting)
+    * unchanged. Duplicate grams within a row are naturally idempotent;
+    * nulls skipped. */
   case class TrigramBloomAgg(child: Expression, numBits: Int, k: Int,
                              mutableAggBufferOffset: Int = 0,
                              inputAggBufferOffset: Int = 0)

@@ -39,9 +39,9 @@ object Fuzzy {
    * (spec-asserted), but a hot block's pair work spreads over S²
    * shuffle keys, bounding per-task pairs at ~(|block|/S)². The cost
    * is S× replication of the block's rows through the shuffle — the
-   * standard triangle-decomposition trade. Use [[blockHistogram]] to
-   * decide: a top block holding a double-digit share of rows is the
-   * signal to salt.
+   * standard triangle-decomposition trade. Run [[StatsOp.keyHistogram]]
+   * over the blocking key to decide: a top block holding a double-digit
+   * share of rows is the signal to salt.
    */
   def selfFuzzyPairs(df: DataFrame, id: Column, key: Column,
                      block: Column => Column, maxDist: Int,
@@ -133,13 +133,4 @@ object Fuzzy {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.key").as("key_a"), col("b.key").as("key_b"))
   }
-
-  /** Block-key skew diagnostic for sizing [[selfFuzzyPairs]]'
-    * `saltBuckets`: top blocks by row count with their share — a
-    * reuse of [[StatsOp.keyHistogram]] over the blocking key. The
-    * quadratic per-block pair count means a block with share s of n
-    * rows does s²·n² of the work; salt when the top share is large. */
-  def blockHistogram(df: DataFrame, key: Column,
-                     block: Column => Column, topN: Int = 20): DataFrame =
-    StatsOp.keyHistogram(df.select(block(key).as("blk")), col("blk"), topN)
 }

@@ -34,8 +34,33 @@ import org.apache.spark.sql.functions._
  * KB-to-MB-sized at any corpus size). The table itself rewrites
  * atomically via staging-dir swap (readers see old-or-new, never a
  * torn table; same consistency story as [[Merge]]).
+ *
+ * A maintain that throws has applied nothing: its swap is journaled
+ * ([[DirSwap]]), and the next `maintain` or [[exists]] on the table
+ * rolls an interrupted swap back, so rerunning the change set applies
+ * it exactly once.
  */
 object IncrementalAgg {
+  private lazy val log =
+    org.apache.logging.log4j.LogManager.getLogger("graft.operators.IncrementalAgg")
+
+  /** The swap of one maintain: the new table staged beside `aggPath`,
+    * the old one moved aside, the journal next to both. */
+  private def swapOf(aggPath: String): DirSwap = {
+    val staging = s"$aggPath.__graft_agg_staging"
+    DirSwap(LogStore.forPath(aggPath), s"$aggPath.__graft_agg_journal",
+      s"$aggPath.__graft_agg_old", scratch = staging,
+      staged = _ => staging, live = _ => aggPath)
+  }
+
+  /** Whether an aggregate table is at `aggPath` — a dir holding data
+    * files — once a maintain interrupted mid-swap is rolled back (it
+    * may have left the table moved aside). */
+  private[graft] def exists(aggPath: String): Boolean = {
+    swapOf(aggPath).rollBack()
+    LogStore.forPath(aggPath).list(aggPath)
+      .exists { case (n, _) => !n.startsWith(".") && !n.startsWith("_") }
+  }
 
   /** Column names the maintained table uses: `n` plus `sum_<col>` for
     * each tracked numeric column. */
@@ -75,6 +100,8 @@ object IncrementalAgg {
   def maintain(spark: SparkSession, aggPath: String, groupCols: Seq[String],
                sumCols: Seq[String], removedRows: DataFrame,
                addedRows: DataFrame): Unit = {
+    val swap = swapOf(aggPath)
+    swap.rollBack()
     val current = spark.read.parquet(aggPath)
     val sumNames = sumCols.map(sumCol)
     val expect = (groupCols ++ Seq("n") ++ sumNames).sorted
@@ -100,18 +127,20 @@ object IncrementalAgg {
           (z(col(s"a.$c")) + z(col(s"d.$c"))).cast(SumType).as(c)): _*)
       .filter(col("n") > 0)
 
-    // atomic swap: readers see the old or the new table, never a mix
+    // swap: readers see the old or the new table, never a mix
     // (directory renames through the table's LogStore — POSIX for
     // bare paths, Hadoop FS for scheme-qualified ones, the same
-    // old-out/new-in two-step either way)
-    val store = LogStore.forPath(aggPath)
-    val staging = s"$aggPath.__graft_agg_staging"
-    store.deleteTree(staging)
-    merged.write.mode("overwrite").parquet(staging)
-    val tmpOld = s"$aggPath.__graft_agg_old"
-    store.deleteTree(tmpOld)
-    store.rename(aggPath, tmpOld)
-    store.rename(staging, aggPath)
-    store.deleteTree(tmpOld)
+    // old-out/new-in two-step either way). Deleting the journal
+    // commits; a failed cleanup after that must not throw, or a rerun
+    // would apply the change set twice — the next rollBack clears it.
+    merged.write.mode("overwrite").parquet(swap.scratch)
+    swap.journalAndMove(Seq(true -> "table"))
+    swap.store.delete(swap.journal)
+    try swap.clear()
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        log.warn(s"aggregate table $aggPath maintained; cleanup left for the next " +
+          s"maintain (${e.getMessage})")
+    }
   }
 }

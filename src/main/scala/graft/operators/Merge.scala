@@ -33,9 +33,10 @@ import org.apache.spark.sql.functions._
  * affected partition as rewritten or emptied, and each partition is
  * swapped by moving its old directory aside and renaming the staged
  * one in; the aside and staging dirs are deleted only after the last
- * rename. A merge that finds a journal on entry finishes that swap
- * before it reads the target, so rerunning a merge interrupted at any
- * point of its swap loses no rows and converges to the same table.
+ * rename ([[DirSwap]]). A merge that finds a journal on entry
+ * finishes that swap before it reads the target, so rerunning a merge
+ * interrupted at any point of its swap loses no rows and converges to
+ * the same table.
  * Readers see old-or-new per partition except between a partition's
  * two renames, when they see neither (POSIX renames cannot close that
  * gap), and the loop is not atomic across partitions: cross-partition
@@ -51,34 +52,14 @@ import org.apache.spark.sql.functions._
  */
 object Merge {
 
-  private val Journal = "_swap_journal"
-  private def stagingOf(targetPath: String) = s"$targetPath.__graft_merge_staging"
-
-  /** Finish the swap journaled in the staging dir, if there is one:
-    * `+p` renames the staged partition in unless that already
-    * happened (its staged dir is gone), `-p` moves the emptied
-    * partition out. Old dirs go aside first and are deleted with the
-    * staging dir after the last rename, so a failure at any step
-    * leaves a state this method can finish. */
-  private def finishSwap(store: LogStore, targetPath: String,
-                         partitionCol: String): Unit = {
-    val staging = stagingOf(targetPath)
-    val journal = s"$staging/$Journal"
-    if (!store.exists(journal)) return
-    val aside = s"$targetPath.__graft_merge_old"
-    store.mkdirs(aside)
-    new String(store.read(journal), java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").filter(_.nonEmpty).foreach { entry =>
-        val dir = s"$partitionCol=${entry.tail}"
-        val (src, dst) = (s"$staging/$dir", s"$targetPath/$dir")
-        val staged = entry.head == '+'
-        if (!staged || store.exists(src)) {
-          if (store.exists(dst)) store.rename(dst, s"$aside/$dir")
-          if (staged) store.rename(src, dst)
-        }
-      }
-    store.deleteTree(aside)
-    store.deleteTree(staging)
+  /** The swap of one merge into `targetPath`: journal and staged
+    * partitions in the staging dir, old partitions aside. */
+  private def swapOf(store: LogStore, targetPath: String,
+                     partitionCol: String): DirSwap = {
+    val staging = s"$targetPath.__graft_merge_staging"
+    DirSwap(store, s"$staging/_swap_journal", s"$targetPath.__graft_merge_old",
+      scratch = staging, staged = p => s"$staging/$partitionCol=$p",
+      live = p => s"$targetPath/$partitionCol=$p")
   }
 
   /** What a merge did: partition values rewritten (dirs swapped),
@@ -112,7 +93,8 @@ object Merge {
                 key: String, partitionCol: String,
                 format: String = "parquet"): MergeStats = {
     val store = LogStore.forPath(targetPath)
-    finishSwap(store, targetPath, partitionCol)
+    val swap = swapOf(store, targetPath, partitionCol)
+    swap.rollForward()
     val target = spark.read.format(format).load(targetPath)
     require(target.columns.contains(partitionCol),
       s"target at $targetPath has no partition column '$partitionCol' " +
@@ -184,18 +166,14 @@ object Merge {
       .filter(col(partitionCol).cast("string").isin(affected: _*))
       .join(allKeys, Seq(key), "left_anti")
     val merged = survivors.unionByName(ups.select(target.columns.map(col): _*))
-    val staging = stagingOf(targetPath)
-    store.deleteTree(staging) // no journal: an unfinished staging write
+    store.deleteTree(swap.scratch) // no journal: an unfinished staging write
     merged.write.mode("overwrite").format(format)
-      .partitionBy(partitionCol).save(staging)
+      .partitionBy(partitionCol).save(swap.scratch)
 
     // partitions with no staged dir had every row deleted
-    val (rewritten, dropped) =
-      affected.partition(p => store.exists(s"$staging/$partitionCol=$p"))
-    store.putReplace(s"$staging/$Journal",
-      (rewritten.map("+" + _) ++ dropped.map("-" + _)).mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finishSwap(store, targetPath, partitionCol)
+    val (rewritten, dropped) = affected.partition(p => store.exists(swap.staged(p)))
+    swap.journalAndMove(rewritten.map(true -> _) ++ dropped.map(false -> _))
+    swap.clear()
     Seq(ups, dels, allKeys).foreach(OpCache.unpersistEager)
     MergeStats(rewritten, dropped, upsertRows, deleteRows)
   }

@@ -311,20 +311,34 @@ object StatsOp {
   def writeStatsJson(name: String, dir: String, fieldStats: DataFrame,
                      validationStats: Option[DataFrame],
                      topErrors: Option[DataFrame]): String = {
+    // collected in section order; consumed below in the same order
+    val sections = Concurrently(Seq(Some(fieldStats), validationStats, topErrors)
+      .flatten.map(df => () => collected(df))).iterator
+    writeSections(name, dir, sections.next(),
+      validationStats.map(_ => sections.next()), topErrors.map(_ => sections.next()))
+  }
+
+  /** One section of a stats report: its column names and its rows. */
+  private[graft] final case class Section(fields: Seq[String], rows: Seq[Row])
+
+  private[graft] def collected(df: DataFrame): Section =
+    Section(df.schema.fieldNames.toSeq, df.collect().toSeq)
+
+  /** Render and write the report [[writeStatsJson]] writes, from its
+    * sections however they were obtained. */
+  private[graft] def writeSections(name: String, dir: String, fieldStats: Section,
+                                   validationStats: Option[Section],
+                                   topErrors: Option[Section]): String = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
     root.put("stats_name", name)
     root.put("generated_at", java.time.Instant.now().toString)
 
-    // collected in section order; consumed below in the same order
-    val collected = Concurrently(Seq(Some(fieldStats), validationStats, topErrors)
-      .flatten.map(df => () => df.collect())).iterator
-
-    def rowsToArray(df: DataFrame, rows: Array[Row],
+    def rowsToArray(section: Section,
                     target: com.fasterxml.jackson.databind.node.ArrayNode): Unit =
-      rows.foreach { row =>
+      section.rows.foreach { row =>
         val o = target.addObject()
-        df.schema.fieldNames.zipWithIndex.foreach { case (f, i) =>
+        section.fields.zipWithIndex.foreach { case (f, i) =>
           row.get(i) match {
             case null       => o.putNull(f)
             case v: Long    => o.put(f, v)
@@ -336,14 +350,13 @@ object StatsOp {
         }
       }
 
-    rowsToArray(fieldStats, collected.next(), root.putArray("field_stats"))
+    rowsToArray(fieldStats, root.putArray("field_stats"))
     validationStats.foreach { vs =>
       val arr = mapper.createArrayNode()
-      rowsToArray(vs, collected.next(), arr)
+      rowsToArray(vs, arr)
       if (!arr.isEmpty) root.set[com.fasterxml.jackson.databind.JsonNode]("validation_stats", arr.get(0))
     }
-    topErrors.foreach(te =>
-      rowsToArray(te, collected.next(), root.putArray("top_validation_errors")))
+    topErrors.foreach(te => rowsToArray(te, root.putArray("top_validation_errors")))
 
     val store = LogStore.forPath(dir)
     store.mkdirs(dir)
@@ -352,6 +365,48 @@ object StatsOp {
       mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     file
+  }
+
+  /** What a report observes on the OK frame its sink writes: the row
+    * count. */
+  private[graft] def okMetrics: Seq[Column] = Seq(count(lit(1)).as("n"))
+
+  /** What a report observes on the KO frame its sink writes: the row
+    * count, then each label's failure count. A label repeated in one
+    * row's errors counts once per entry, as [[topErrors]]' explode
+    * does. */
+  private[graft] def koMetrics(labels: Seq[String]): Seq[Column] =
+    count(lit(1)).as("n") +: labels.zipWithIndex.map { case (label, i) =>
+      sum(size(filter(col(Validate.ErrorsCol), _ === lit(label)))).as(s"e$i")
+    }
+
+  /**
+   * The validation summary and top errors of a report from counts
+   * observed while its OK and KO frames were written: the rows
+   * `validationStats` and `topErrors` collect for those counts.
+   * `failures` holds each label's failure count, 0 for a label that
+   * never failed. The rates evaluate the expression
+   * [[validationStats]] plans, so a zero total behaves as there: null,
+   * or DIVIDE_BY_ZERO under ANSI. Top errors sort by count, then label
+   * in Spark's string order (UTF-8 bytes).
+   */
+  private[graft] def observedSections(validationStats: DataFrame, topErrors: DataFrame,
+                                      ok: Long, ko: Long,
+                                      failures: Seq[(String, Long)]): (Section, Section) = {
+    import org.apache.spark.sql.catalyst.expressions.{Divide, EvalMode, Literal, Multiply}
+    val ansi = validationStats.sparkSession.conf
+      .get(org.apache.spark.sql.internal.SQLConf.ANSI_ENABLED.key).toBoolean
+    val mode = if (ansi) EvalMode.ANSI else EvalMode.LEGACY
+    val total = ok + ko
+    def rate(n: Long): Any =
+      Divide(Multiply(Literal(n.toDouble), Literal(100.0), mode),
+        Literal(total.toDouble), mode).eval()
+    val utf8 = org.apache.spark.unsafe.types.UTF8String.fromString _
+    val top = failures.filter(_._2 > 0)
+      .sortWith { case ((a, n), (b, m)) => n > m || n == m && utf8(a).compareTo(utf8(b)) < 0 }
+      .map { case (label, n) => Row(label, n) }
+    (Section(validationStats.schema.fieldNames.toSeq, Seq(Row(total, ok, ko, rate(ok), rate(ko)))),
+      Section(topErrors.schema.fieldNames.toSeq, top))
   }
 
   /**

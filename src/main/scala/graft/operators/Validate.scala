@@ -79,13 +79,16 @@ object Validate {
     }
   }
 
+  /** Every check of a rule set, compiled, in declared order. */
+  private def checks(rules: Seq[ValidationRule]): Seq[(Column, String)] =
+    for (rule <- rules; check <- rule.checks) yield checkCondition(rule.field, check)
+
+  /** The error labels a rule set can emit, each once, in declared order. */
+  private[graft] def labels(rules: Seq[ValidationRule]): Seq[String] = checks(rules).map(_._2).distinct
+
   /** The error-array column for a rule set: failed labels only. */
   def errorsColumn(rules: Seq[ValidationRule]): Column = {
-    val entries = for {
-      rule <- rules
-      check <- rule.checks
-    } yield {
-      val (cond, label) = checkCondition(rule.field, check)
+    val entries = checks(rules).map { case (cond, label) =>
       when(!coalesce(cond, lit(false)), lit(label))
     }
     if (entries.isEmpty) array().cast("array<string>")

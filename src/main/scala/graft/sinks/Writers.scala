@@ -142,11 +142,7 @@ object Writers {
           df.filter(!coalesce(col("__removed"), lit(false))).drop("__removed")
         else df
       spec.paths.foreach { path =>
-        val dir = new java.io.File(path)
-        val exists = dir.isDirectory && dir.listFiles() != null &&
-          dir.listFiles().exists(f => !f.getName.startsWith(".") &&
-            !f.getName.startsWith("_"))
-        if (!exists) {
+        if (!graft.operators.IncrementalAgg.exists(path)) {
           graft.operators.IncrementalAgg.build(add, spec.aggGroupBy, spec.aggSums)
             .write.mode("overwrite").parquet(path)
           log.info(s"[sink ${spec.name}] bootstrapped aggregate table at $path")

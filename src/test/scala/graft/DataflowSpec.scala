@@ -1273,36 +1273,65 @@ class DataflowSpec extends SparkSpecBase {
 
   private def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
 
-  test("stats JSON equals the per-section collect() rendering, apart from generated_at") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stats_json").toString
-    Seq(
-      """{"policy_id":1,"driver":{"age":34},"premium":"120.5"}""",
-      """{"policy_id":2,"driver":{"age":15},"premium":"99.0"}""",
-      """{"policy_id":3,"driver":{"age":null},"premium":"oops"}""",
-      """{"policy_id":4,"driver":{"age":40},"premium":"7"}""")
-      .toDS().coalesce(1).write.mode("overwrite").text(s"$dir/in")
-    val spec =
+  // ---- the stats report, collected or riding its OK/KO sinks
+
+  private val policyRows = Seq(
+    """{"policy_id":1,"driver":{"age":34},"premium":"120.5"}""",
+    """{"policy_id":2,"driver":{"age":15},"premium":"99.0"}""",
+    """{"policy_id":3,"driver":{"age":null},"premium":"oops"}""",
+    """{"policy_id":4,"driver":{"age":40},"premium":"7"}""")
+
+  private val policyChecks =
+    """[{"field":"driver_age","validations":["notNull","min:18"]},
+      | {"field":"premium","validations":["isNumeric"]}]""".stripMargin
+
+  /** The motor-shaped flow `motor` over `rows` written to `$dir/in`:
+    * normalize, validate into `ok`/`ko`, then `steps` (JSON transformation
+    * entries, by default the `policy_stats` report over `n`), then
+    * `sinks` (JSON sink entries). */
+  private def statsFlow(dir: String, sinks: String, rows: Seq[String] = policyRows,
+                        checks: String = policyChecks, steps: String = "") = {
+    rows.toDS().coalesce(1).write.mode("overwrite").text(s"$dir/in")
+    val report =
+      s"""{"name":"policy_stats","type":"compute_stats","params":{
+         |  "input":"n","fields":["driver_age","premium"],
+         |  "include_validation_stats":true,"ok_input":"ok","ko_input":"ko",
+         |  "output_path":"$dir/stats"}}""".stripMargin
+    MetaLoader.loadString(
       s"""{"dataflows":[{
          |"name":"motor",
          |"sources":[{"name":"raw","path":"$dir/in","format":"json"}],
          |"transformations":[
          |  {"name":"norm","type":"normalize_fields","params":{"input":"raw","output":"n","fields":[]}},
          |  {"name":"val","type":"validate_fields","params":{"input":"n",
-         |    "validations":[{"field":"driver_age","validations":["notNull","min:18"]},
-         |                   {"field":"premium","validations":["isNumeric"]}],
-         |    "ok_output":"ok","ko_output":"ko"}},
-         |  {"name":"policy_stats","type":"compute_stats","params":{
-         |    "input":"n","fields":["driver_age","premium"],
-         |    "include_validation_stats":true,"ok_input":"ok","ko_input":"ko",
-         |    "output_path":"$dir/stats"}}],
-         |"sinks":[
-         |  {"input":"ok","name":"okSink","paths":["$dir/ok"],"format":"parquet","saveMode":"overwrite"}]
-         |}]}""".stripMargin
-    val frames = Dataflow.run(spark, MetaLoader.loadString(spec).dataflow("motor"))
+         |    "validations":$checks,"ok_output":"ok","ko_output":"ko"}},
+         |  ${if (steps.isEmpty) report else steps}],
+         |"sinks":[$sinks]
+         |}]}""".stripMargin).dataflow("motor")
+  }
 
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** A sink entry; `extra` (and a second path) in JSON with single quotes. */
+  private def sinkJson(input: String, name: String, path: String,
+                       extra: String = "'saveMode':'overwrite'", format: String = "parquet") =
+    s"{'input':'$input','name':'$name','paths':['$path'],'format':'$format',$extra}"
+      .replace('\'', '"')
+
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A report file as printed text, `generated_at` removed. */
+  private def reportText(file: String): String = {
+    val actual = jsonMapper.readTree(new java.io.File(file))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(actual.remove("generated_at") != null)
+    jsonMapper.writerWithDefaultPrettyPrinter().writeValueAsString(actual)
+  }
+
+  /** The report `name` as printed text, rendered from a collect() of each
+    * of its section frames. */
+  private def collectedText(frames: Map[String, org.apache.spark.sql.DataFrame],
+                            name: String): String = {
     def rendered(df: org.apache.spark.sql.DataFrame) = {
-      val arr = mapper.createArrayNode()
+      val arr = jsonMapper.createArrayNode()
       df.collect().foreach { row =>
         val o = arr.addObject()
         df.schema.fieldNames.zipWithIndex.foreach { case (f, i) =>
@@ -1318,23 +1347,198 @@ class DataflowSpec extends SparkSpecBase {
       }
       arr
     }
-    val expected = mapper.createObjectNode()
-    expected.put("stats_name", "policy_stats")
+    val expected = jsonMapper.createObjectNode()
+    expected.put("stats_name", name)
     expected.set[com.fasterxml.jackson.databind.JsonNode]("field_stats",
-      rendered(frames("policy_stats_fields")))
+      rendered(frames(s"${name}_fields")))
     expected.set[com.fasterxml.jackson.databind.JsonNode]("validation_stats",
-      rendered(frames("policy_stats_validation")).get(0))
+      rendered(frames(s"${name}_validation")).get(0))
     expected.set[com.fasterxml.jackson.databind.JsonNode]("top_validation_errors",
-      rendered(frames("policy_stats_top_errors")))
+      rendered(frames(s"${name}_top_errors")))
+    jsonMapper.writerWithDefaultPrettyPrinter().writeValueAsString(expected)
+  }
 
-    val actual = mapper.readTree(new java.io.File(s"$dir/stats/policy_stats.json"))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    assert(actual.remove("generated_at") != null)
+  /** Run `flow`; return its frames and whether its report rode the sinks
+    * (the INFO line only a ridden report logs). */
+  private def runLogged(flow: graft.meta.DataflowSpec) = {
+    val (frames, lines) = logged("graft.Dataflow")(Dataflow.run(spark, flow))
+    (frames, lines.filter(_.contains("stats 'policy_stats': ok=")))
+  }
+
+  test("stats JSON equals the per-section collect() rendering, apart from generated_at") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stats_json").toString
+    // one sink: the KO frame is written by none, so the report collects
+    val (frames, rode) = runLogged(statsFlow(dir, sinkJson("ok", "okSink", s"$dir/ok")))
+    assert(rode.isEmpty)
+    val actual = reportText(s"$dir/stats/policy_stats.json")
     // compared as printed text: same keys, same order, same values
-    val pretty = mapper.writerWithDefaultPrettyPrinter()
-    assert(pretty.writeValueAsString(actual) === pretty.writeValueAsString(expected))
-    assert(actual.get("field_stats").size() === 2)
-    assert(actual.get("top_validation_errors").size() > 0)
+    assert(actual === collectedText(frames, "policy_stats"))
+    val json = jsonMapper.readTree(actual)
+    assert(json.get("field_stats").size() === 2)
+    assert(json.get("top_validation_errors").size() > 0)
+  }
+
+  test("a report riding its OK and KO sinks writes the collect() rendering and logs the counts") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stats_ride").toString
+    val (frames, rode) = runLogged(statsFlow(dir,
+      sinkJson("ok", "okSink", s"$dir/ok") + "," +
+        sinkJson("ko", "koSink", s"$dir/ko", format = "csv")))
+    assert(reportText(s"$dir/stats/policy_stats.json") === collectedText(frames, "policy_stats"))
+    assert(rode === Seq("[dataflow] stats 'policy_stats': ok=2 ko=2, failures " +
+      "driver_age:must_not_be_null=1, driver_age:must_be_at_least_18.0=1, " +
+      "premium:must_be_numeric=1 (observed on sinks 'okSink' and 'koSink')"))
+    // the sinks wrote exactly what they write unobserved
+    assert(spark.read.parquet(s"$dir/ok").count() === 2)
+    assert(spark.read.option("header", "true").csv(s"$dir/ko").count() === 2)
+  }
+
+  test("a report whose sinks or inputs do not qualify collects its sections, with the same JSON") {
+    val base = java.nio.file.Files.createTempDirectory("graft_stats_fallback").toString
+    val ko = (d: String) => sinkJson("ko", "koSink", s"$d/ko")
+    val shapes: Seq[(String, String => graft.meta.DataflowSpec)] = Seq(
+      "ignore" -> (d => statsFlow(d,
+        sinkJson("ok", "okSink", s"$d/ok", "'saveMode':'ignore'") + "," + ko(d))),
+      "append" -> (d => statsFlow(d,
+        sinkJson("ok", "okSink", s"$d/ok", "'saveMode':'append'") + "," + ko(d))),
+      "two paths" -> (d => statsFlow(d,
+        sinkJson("ok", "okSink", s"$d/ok', '$d/ok2") + "," + ko(d))),
+      "layout" -> (d => statsFlow(d, sinkJson("ok", "okSink", s"$d/ok",
+        "'saveMode':'overwrite','layout':'range','layoutKeys':['policy_id'],'layoutPartitions':1") + "," + ko(d))),
+      "no OK sink" -> (d => statsFlow(d, ko(d))),
+      "two OK sinks" -> (d => statsFlow(d, sinkJson("ok", "okSink", s"$d/ok") + "," +
+        sinkJson("ok", "okSink2", s"$d/ok2") + "," + ko(d))),
+      "OK path overlapping another sink's" -> (d => statsFlow(d,
+        sinkJson("ok", "okSink", s"$d/out/ok") + "," + ko(d) + "," +
+          sinkJson("n", "allSink", s"$d/out"))),
+      "inputs not a validate step's outputs" -> (d => statsFlow(d,
+        sinkJson("ok2", "okSink", s"$d/ok") + "," + ko(d),
+        steps = s"""{"name":"again","type":"filter","params":{"input":"ok","output":"ok2",
+                   |  "condition":"true"}},
+                   |{"name":"policy_stats","type":"compute_stats","params":{
+                   |  "input":"n","fields":["driver_age","premium"],
+                   |  "include_validation_stats":true,"ok_input":"ok2","ko_input":"ko",
+                   |  "output_path":"$d/stats"}}""".stripMargin)))
+    shapes.zipWithIndex.foreach { case ((shape, flow), i) =>
+      val dir = s"$base/$i"
+      val (frames, rode) = runLogged(flow(dir))
+      assert(rode.isEmpty, s"$shape: the report rode its sinks")
+      assert(reportText(s"$dir/stats/policy_stats.json") ===
+        collectedText(frames, "policy_stats"), shape)
+    }
+  }
+
+  test("a failing ridden KO sink fails the run and leaves the previous report untouched") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stats_ride_fail").toString
+    val report = java.nio.file.Paths.get(s"$dir/stats/policy_stats.json")
+    java.nio.file.Files.createDirectories(report.getParent)
+    java.nio.file.Files.writeString(report, "previous")
+    // the KO path lies below a regular file: its write fails
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/blocker"), "x")
+    val flow = statsFlow(dir,
+      sinkJson("ok", "okSink", s"$dir/ok") + "," + sinkJson("ko", "koSink", s"$dir/blocker/ko"))
+    intercept[Exception](Dataflow.run(spark, flow))
+    assert(java.nio.file.Files.readString(report) === "previous")
+  }
+
+  test("a flow whose rows are all filtered out reports, or fails, as the collected report does") {
+    // the validated rows filtered out (the rates divide by zero), and the
+    // field-stats input with them (null_pct divides by zero too)
+    Seq("n", "f").foreach { statsInput =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_stats_empty").toString
+      val flow = statsFlow(dir,
+        sinkJson("ok", "okSink", s"$dir/ok") + "," + sinkJson("ko", "koSink", s"$dir/ko"),
+        steps = s"""{"name":"none","type":"filter","params":{"input":"n","output":"f",
+                   |  "condition":"false"}},
+                   |{"name":"val2","type":"validate_fields","params":{"input":"f",
+                   |  "validations":$policyChecks,"ok_output":"ok","ko_output":"ko"}},
+                   |{"name":"policy_stats","type":"compute_stats","params":{
+                   |  "input":"$statsInput","fields":["driver_age","premium"],
+                   |  "include_validation_stats":true,"ok_input":"ok","ko_input":"ko",
+                   |  "output_path":"$dir/stats"}}""".stripMargin)
+      val planned = Dataflow.plan(spark, flow)
+      def outcome(write: => Any, file: String): Either[String, String] =
+        scala.util.Try(write).toEither.map(_ => reportText(file)).left.map { e =>
+          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
+            case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition
+          }.getOrElse(e.toString)
+        }
+      val collected = outcome(graft.operators.StatsOp.writeStatsJson("policy_stats", s"$dir/collected",
+        planned("policy_stats_fields"), planned.get("policy_stats_validation"),
+        planned.get("policy_stats_top_errors")), s"$dir/collected/policy_stats.json")
+      val ridden = outcome(Dataflow.run(spark, flow), s"$dir/stats/policy_stats.json")
+      assert(ridden === collected, s"stats over '$statsInput'")
+    }
+  }
+
+  test("a label repeated inside one row's errors counts once per entry in the ridden report") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stats_repeat").toString
+    val (frames, rode) = runLogged(statsFlow(dir,
+      sinkJson("ok", "okSink", s"$dir/ok") + "," + sinkJson("ko", "koSink", s"$dir/ko"),
+      checks = """[{"field":"driver_age","validations":["notNull","notNull"]},
+                 | {"field":"premium","validations":["isNumeric"]}]""".stripMargin))
+    assert(rode.nonEmpty)
+    val actual = reportText(s"$dir/stats/policy_stats.json")
+    assert(actual === collectedText(frames, "policy_stats"))
+    val top = jsonMapper.readTree(actual).get("top_validation_errors")
+    assert(top.get(0).get("error").asText === "driver_age:must_not_be_null")
+    assert(top.get(0).get("n").asLong === 2L)
+  }
+
+  test("observed top errors break count ties in Spark's string order, as the collect does") {
+    import graft.operators.{StatsOp, Validate}
+    // U+FF21 sorts after U+1F600 in UTF-16 (a surrogate pair) but before
+    // it in UTF-8, Spark's string order
+    val (wide, emoji) = ("\uFF21:fails", "\uD83D\uDE00:fails")
+    val ko = Seq(Seq(wide, emoji), Seq("b:fails", "a:fails"), Seq(wide), Seq(emoji))
+      .toDF(Validate.ErrorsCol)
+    val top = StatsOp.topErrors(ko)
+    val (_, observed) = StatsOp.observedSections(
+      StatsOp.validationStatsFromSplit(ko.limit(0), ko), top, ok = 0L, ko = 4L,
+      failures = Seq(wide -> 2L, emoji -> 2L, "b:fails" -> 1L, "a:fails" -> 1L, "c:fails" -> 0L))
+    assert(observed.fields === top.columns.toSeq)
+    assert(observed.rows === top.collect().toSeq)
+    assert(observed.rows.head.getString(0) === wide)
+  }
+
+  test("two runs riding their sinks at once in one session each report their own counts") {
+    val base = java.nio.file.Files.createTempDirectory("graft_stats_concurrent").toString
+    // run i keeps i + 1 valid rows out of 6
+    val runs = (0 until 2).map { i =>
+      val rows = (0 until 6).map(r =>
+        s"""{"policy_id":$r,"driver":{"age":${if (r <= i) 30 else 10}},"premium":"1"}""")
+      val dir = s"$base/$i"
+      dir -> statsFlow(dir,
+        sinkJson("ok", "okSink", s"$dir/ok") + "," + sinkJson("ko", "koSink", s"$dir/ko"), rows)
+    }
+    graft.operators.Concurrently(runs.map { case (_, flow) => () => Dataflow.run(spark, flow) })
+    runs.zipWithIndex.foreach { case ((dir, _), i) =>
+      val v = jsonMapper.readTree(new java.io.File(s"$dir/stats/policy_stats.json"))
+        .get("validation_stats")
+      assert((v.get("valid_records").asLong, v.get("rejected_records").asLong) === (i + 1L, 5L - i))
+    }
+  }
+
+  test("the motor-shaped flow runs three SQL executions: the two sink writes and one field-stats collect") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stats_executions").toString
+    val flow = statsFlow(dir,
+      sinkJson("ok", "okSink", s"$dir/ok") + "," + sinkJson("ko", "koSink", s"$dir/ko"))
+    val started = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          started.put(s.executionId, s.description)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (_, jobs) =
+      try jobsStarted(Dataflow.run(spark, flow))
+      finally spark.sparkContext.removeSparkListener(listener)
+    val executions = jobs.flatMap(j => Option(j.getProperty("spark.sql.execution.id")))
+      .distinct.map(id => started.get(id.toLong))
+    // each is "<action> at <file>:<line>"
+    assert(executions.map(_.replaceAll(":\\d+$", "")).sorted ===
+      Seq("collect at StatsOp.scala", "save at Writers.scala", "save at Writers.scala"))
   }
 
   test("a failing sink is rethrown only after a slow sink in another lane completed") {

@@ -18,7 +18,8 @@ class IncrementalAggSpec extends SparkSpecBase {
           walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
         } finally walk.close()
       }
-    Seq("", ".__graft_agg_applied", ".__graft_agg_staging", ".__graft_agg_old")
+    Seq("", ".__graft_agg_applied", ".__graft_agg_staging", ".__graft_agg_old",
+        ".__graft_agg_journal")
       .foreach(s => del(Paths.get(p + s)))
     p
   }
@@ -87,6 +88,50 @@ class IncrementalAggSpec extends SparkSpecBase {
         df(removed), df(added))
     }
     assert(ex.getMessage.contains("expected"))
+  }
+
+  test("a maintain that fails at any delete or rename of its swap applies its change set once on rerun") {
+    def leftovers(path: String) = {
+      val f = new java.io.File(path)
+      f.getParentFile.list().filter(_.startsWith(f.getName + ".__graft_agg")).toSeq
+    }
+    def seeded(tag: String) = {
+      val path = fresh(tag)
+      IncrementalAgg.build(df(v1), Seq("source"), Seq("tokens")).write.parquet(path)
+      path
+    }
+    def maintain(path: String) = IncrementalAgg.maintain(spark, s"file://$path",
+      Seq("source"), Seq("tokens"), df(removed), df(added))
+    // the agg_maintain sink must find the table too, not bootstrap over it
+    def sinkMaintain(path: String) = graft.sinks.Writers.write(
+      df(removed).withColumn("__removed", org.apache.spark.sql.functions.lit(true))
+        .unionByName(df(added).withColumn("__removed", org.apache.spark.sql.functions.lit(false))),
+      graft.meta.SinkSpec(input = "in", name = "agg_sink", paths = Seq(s"file://$path"),
+        format = "parquet", saveMode = "agg_maintain",
+        aggGroupBy = Seq("source"), aggSums = Seq("tokens")))
+    try {
+      spark.conf.set("spark.graft.logstore.file", "graft.FaultyLogStore")
+      val clean = seeded("swap_clean")
+      FaultyLogStore.mutations.set(0)
+      maintain(clean)
+      val steps = FaultyLogStore.mutations.get()
+      assert(readAgg(clean) === recompute(v2))
+      assert(steps >= 5, s"only $steps deletes and renames counted")
+      for (i <- 0 until steps; rerun <- Seq[String => Unit](maintain, sinkMaintain)) {
+        val path = seeded(s"swap_fault$i")
+        FaultyLogStore.mutations.set(0)
+        FaultyLogStore.failMutation = i
+        val failed = scala.util.Try(maintain(path)).isFailure
+        FaultyLogStore.failMutation = -1
+        // a failure after the commit point is logged, not thrown
+        if (failed) rerun(path)
+        assert(readAgg(path) === recompute(v2), s"after a failure at step $i")
+        if (failed) assert(leftovers(path).isEmpty, s"step $i left ${leftovers(path)}")
+      }
+    } finally {
+      FaultyLogStore.failMutation = -1
+      spark.conf.unset("spark.graft.logstore.file")
+    }
   }
 
   test("metadata sink saveMode=agg_maintain: bootstrap then delta-maintain") {
